@@ -103,6 +103,29 @@ class StageCatalog:
             )
         return self.spark.read.option("basePath", data).parquet(*paths)
 
+    def read_arrow(self, stage: str, columns: Sequence[str] | None = None):
+        """The committed files of a stage as one ``pyarrow.Table``, read on
+        the driver with no Spark job — for stages small enough to hold there
+        (unpartitioned only: hive partition columns are not recovered)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        import pyspark.sql.types as T
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        m = self.manifest(stage)
+        if m is None:
+            raise ValueError(f"read of uncommitted stage {stage!r}")
+        data = self.data_dir(stage)
+        tables = [
+            pq.read_table(os.path.join(data, f["file"]), columns=columns)
+            for f in m["files"]
+        ]
+        if tables:
+            return pa.concat_tables(tables)
+        schema = to_arrow_schema(T.StructType.fromJson(json.loads(m["schema"])))
+        empty = schema.empty_table()
+        return empty.select(list(columns)) if columns else empty
+
     def reconcile(self, stage: str) -> list[str]:
         """Delete data files not listed in the committed manifest (strays
         from a torn append) so retries never accumulate garbage.  Returns
@@ -163,10 +186,7 @@ class StageCatalog:
             "created_at": time.time(),
             **(meta or {}),
         }
-        mtmp = self.manifest_path(stage) + f".tmp-{uuid.uuid4().hex}"
-        with open(mtmp, "w", encoding="utf-8") as f:
-            json.dump(manifest, f, ensure_ascii=False, indent=1)
-        os.replace(mtmp, self.manifest_path(stage))
+        self._commit_manifest(stage, manifest)
         return manifest
 
     def append(
@@ -233,12 +253,25 @@ class StageCatalog:
             created_at=time.time(),
             **(meta or {}),
         )
+        self._commit_manifest(stage, manifest)
+        self.executed.append(f"{stage}+append")
+        return moved
+
+    def reanchor(self, stage: str, extra_inputs: dict[str, str]) -> None:
+        """Record that a committed stage's unchanged data is also valid for
+        ``extra_inputs`` (merged over its recorded inputs).  Data files and
+        checksum stay as they are, so stages keyed on this one still skip."""
+        m = self.manifest(stage)
+        if m is None:
+            raise ValueError(f"reanchor of uncommitted stage {stage!r}")
+        self._commit_manifest(stage, dict(m, inputs=m["inputs"] | extra_inputs))
+
+    def _commit_manifest(self, stage: str, manifest: dict) -> None:
+        """Atomic manifest replace — the commit point of every write."""
         mtmp = self.manifest_path(stage) + f".tmp-{uuid.uuid4().hex}"
         with open(mtmp, "w", encoding="utf-8") as f:
             json.dump(manifest, f, ensure_ascii=False, indent=1)
         os.replace(mtmp, self.manifest_path(stage))
-        self.executed.append(f"{stage}+append")
-        return moved
 
     @staticmethod
     def _file_lineage(path: str) -> list[dict]:

@@ -31,5 +31,6 @@ LSH_BANDS = 4          # bands (rows per band = NUM_HASHES // LSH_BANDS)
 LINK_JACCARD = 0.5     # verify threshold on exact shingle Jaccard
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1, Mersenne
 SALT_BUCKETS = 8       # salting factor for skewed LSH buckets
+LSH_MAX_BUCKET = 200   # LSH buckets with more members are dropped (non-discriminative)
 
 KEYPHRASE_TOP_K = 5

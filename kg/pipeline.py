@@ -10,8 +10,12 @@ a resumed run recomputes only stages whose inputs changed):
 Shuffle budget at scale (SURVEY.md §4): documents→extract is shuffle-free
 (narrow explode + mapInPandas over input splits); mentions/triples are
 narrow explodes of the extract checkpoint; the first shuffles appear at
-entity linking (distinct + LSH bucket join) and the grouping aggregations of
-nodes/edges — all keyed, AQE-coalesced, skew-join protected.
+entity linking (distinct mentions; the LSH bucket join only above
+``kg.linking.DRIVER_LINK_MAX_MENTIONS`` distinct mentions — below it the
+map is linked on the driver from one Arrow read of the signature table) and
+the grouping aggregations of nodes/edges — all keyed, AQE-coalesced,
+skew-join protected.  An append takes the signature delta from its batch's
+mentions (``_run_linked_stage``), not from the whole mentions table.
 
 Stage scheduling: independent stages of the DAG are submitted CONCURRENTLY
 from driver threads (Spark sessions are thread-safe for job submission and
@@ -57,7 +61,7 @@ from kg.graph import (
 )
 from kg.invariant import passthrough_docs, span_violations
 from kg.keyphrase import keyphrases_table
-from kg.linking import link_from_signatures, signature_base
+from kg.linking import link_committed, signature_base
 from kg.mention import explode_text_spans, extract_sentences, mentions_table, triples_table
 from kg.synth import corpus_vocab
 from kg.tokenizer import Vocab
@@ -130,29 +134,50 @@ def _stage_executor(spark: SparkSession, n_rows: int = 0):
     return ThreadPoolExecutor(max_workers=workers, thread_name_prefix="kg-stage")
 
 
-def _run_linked_stage(cat: StageCatalog, timings: dict[str, float]) -> DataFrame:
+def _run_linked_stage(
+    cat: StageCatalog,
+    timings: dict[str, float],
+    batch: tuple[str, DataFrame] | None = None,
+) -> DataFrame:
     """Refresh the durable signature table, then compute-or-skip the linked
     stage KEYED ON THE SIGNATURE TABLE's fingerprint (r6).
 
     The linked map is a pure function of the distinct-mention set, which
-    the signature table captures exactly (reconciliation in
-    ``signature_base`` appends never-seen mentions and rebuilds on a
-    non-superset corpus).  Keying the stage on the raw mentions table made
-    every append — whose mentions fingerprint always changes — replay
-    bucket join + verify + CC just to rediscover the identical fixed
-    point; keyed on the signature table, a batch that introduces no
-    never-seen mention (the steady-state growth mode of a Zipf corpus)
-    skips the whole replay, and any new or removed mention changes the
-    signature fingerprint and recomputes as before.
+    the signature table captures exactly.  Keyed on the signature table, a
+    batch that introduces no never-seen mention (the steady-state growth
+    mode of a Zipf corpus) skips bucket join + verify + CC outright; any
+    new or removed mention changes the signature fingerprint and
+    recomputes.
+
+    Signature refresh: every commit of ``linked_cc_sigs`` records the
+    mentions fingerprint it covers (``extra_inputs={"mentions": fp}``, the
+    ``nodes_mtc`` pattern).  When it matches the current mentions table
+    nothing is read at all.  On an append, ``batch`` is (pre-append
+    mentions fingerprint, the increment's mentions); when the table is
+    anchored on that pre-append fingerprint, the delta is the batch's
+    distinct mentions left-anti the table — no job scans the full mentions
+    table.  Otherwise (first run, changed corpus, a crash between the two
+    commits) ``signature_base`` reconciles against the full mention set.
+
+    Linking itself runs on the driver while the signature table holds at
+    most ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` rows (one Arrow read, one
+    write of the map, no ``linked_cc_*`` round commits), distributed above
+    (``kg.linking.link_committed``).
     """
     t0 = time.perf_counter()
-    distinct = cat.read("mentions").select("mention").distinct()
-    signature_base(distinct, catalog=cat, stage_name="linked_cc_sigs")
+    anchor = {"mentions": cat.fingerprint("mentions")}
+    if not cat.is_complete("linked_cc_sigs", extra_inputs=anchor):
+        grown = batch is not None and cat.is_complete(
+            "linked_cc_sigs", extra_inputs={"mentions": batch[0]}
+        )
+        mentions = batch[1] if grown else cat.read("mentions")
+        signature_base(
+            mentions.select("mention").distinct(), catalog=cat,
+            stage_name="linked_cc_sigs", anchor=anchor, increment=grown,
+        )
     out = cat.run(
         "linked",
-        lambda: link_from_signatures(
-            cat.read("linked_cc_sigs"), catalog=cat, stage_prefix="linked_cc"
-        ),
+        lambda: link_committed(cat, "linked_cc_sigs", stage_prefix="linked_cc"),
         inputs=["linked_cc_sigs"],
     )
     timings["linked"] = round(time.perf_counter() - t0, 3)
@@ -200,7 +225,14 @@ class _LazyTables(Mapping):
 
 @dataclass
 class PipelineResult:
-    tables: dict[str, DataFrame]
+    """``tables`` maps each of the nine published stages to a reader of its
+    committed checkpoint.  ``run_pipeline`` returns a dict whose readers
+    were all opened during the run; ``run_pipeline_append`` returns a
+    ``_LazyTables`` mapping that opens ``linked``/``nodes``/``edges``
+    during the run and every other stage on first access (one file listing
+    + schema job each), reading whatever that stage has committed then."""
+
+    tables: Mapping[str, DataFrame]
     catalog: StageCatalog
     executed: list[str] = field(default_factory=list)
     invariant_violations: int = 0
@@ -270,11 +302,12 @@ def run_pipeline(
             inputs=["documents"],
         )
         mentions = f_mentions.result()
-        # CC iterations inside linking checkpoint through the same catalog
-        # (stage names linked_cc_iter*/linked_cc_final): a job killed mid-CC
-        # resumes label propagation from the last durable round when the
-        # "linked" stage itself re-runs.  Linking starts as soon as mentions
-        # commits — keyphrases/documents_out may still be in flight.
+        # On the distributed linking path, CC iterations checkpoint through
+        # the same catalog (stage names linked_cc_iter*/linked_cc_final): a
+        # job killed mid-CC resumes label propagation from the last durable
+        # round when the "linked" stage itself re-runs.  Linking starts as
+        # soon as mentions commits — keyphrases/documents_out may still be
+        # in flight.
         linked = _run_linked_stage(cat, timings)
         triples = f_triples.result()
         # Concurrent group 2 — published tables + the invariant proof.
@@ -365,16 +398,17 @@ def run_pipeline_append(
     proof) are pure functions of each document, so the increment is
     computed ONLY for the new batch and appended file-wise through
     ``StageCatalog.append``; only the small shared tail is recomputed —
-    linking (over distinct mention strings, orders of magnitude smaller
-    than the corpus; the CC edge-set fingerprint short-circuits even that
-    when the edge set is unchanged) and the nodes/edges aggregations.
+    linking (signatures only for the batch's never-seen mentions; the map
+    over distinct mention strings, orders of magnitude smaller than the
+    corpus, on the driver while the signature table is small; skipped when
+    the batch adds no mention) and the nodes/edges aggregations.
     A daily 1% batch therefore costs ~1% of extraction plus the tail,
     instead of a full recompute.
 
     Equality contract: append(A then B) produces the same nine tables as a
     fresh run over A∪B (tests/test_incremental.py) — entity ids are
-    content hashes, linking reads the full mention set, and aggregations
-    are order-insensitive.
+    content hashes, linking covers the full distinct-mention set (the
+    signature table), and aggregations are order-insensitive.
 
     ``input_token`` identifies the NEW batch; the documents stage records
     ``old_token+new_token`` so a repeated identical append is a no-op
@@ -510,8 +544,9 @@ def run_pipeline_append(
         )
         inc_mentions = f_mentions.result()
         # shared tail: recomputed over the full (old + increment) inputs;
-        # linking starts as soon as mentions commits
-        linked = _run_linked_stage(cat, timings)
+        # linking starts as soon as mentions commits, its signature delta
+        # taken from the increment when the table is anchored pre-append
+        linked = _run_linked_stage(cat, timings, (pre_mentions_fp, inc_mentions))
         inc_triples = f_triples.result()
 
         # nodes via the durable (mention, tag, cnt) statistic (r6): counts

@@ -40,6 +40,28 @@ def make_pyfiles_zip(dest: str | None = None) -> str:
     return dest
 
 
+def driver_jvm_conf(extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """Driver heap settings: fixed heap + pre-touch.
+
+    Fault the whole heap once at JVM start (outside any measured window)
+    instead of growing it fault-by-fault under load — same rationale as the
+    malloc retention in ``get_spark``.  -Xms is derived from the FINAL
+    resolved spark.driver.memory (ADVICE r5: an extra_conf override below
+    the env default used to yield -Xms8g -Xmx2g and a driver that cannot
+    launch).  A caller's own ``spark.driver.extraJavaOptions`` are kept and
+    placed last, so on a repeated flag (say -Xms) theirs wins.  On a
+    cluster this is spark.executor.extraJavaOptions on long-lived
+    executors."""
+    extra_conf = extra_conf or {}
+    driver_mem = extra_conf.get(
+        "spark.driver.memory", os.environ.get("SPARK_KG_DRIVER_MEM", "8g")
+    )
+    opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
+    if extra_conf.get("spark.driver.extraJavaOptions"):
+        opts = f"{opts} {extra_conf['spark.driver.extraJavaOptions']}"
+    return {"spark.driver.memory": driver_mem, "spark.driver.extraJavaOptions": opts}
+
+
 def get_spark(
     app_name: str = "spark-kg",
     master: str | None = None,
@@ -134,19 +156,8 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    # Fixed heap + pre-touch: fault the whole heap once at JVM start
-    # (outside any measured window) instead of growing it fault-by-fault
-    # under load — same rationale as the malloc retention above.  -Xms is
-    # derived from the FINAL resolved spark.driver.memory (ADVICE r5: an
-    # extra_conf override below the env default used to yield
-    # -Xms8g -Xmx2g and a driver that cannot launch); on a cluster this is
-    # spark.executor.extraJavaOptions on long-lived executors.
-    driver_mem = (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("SPARK_KG_DRIVER_MEM", "8g")
-    )
-    builder = builder.config("spark.driver.memory", driver_mem).config(
-        "spark.driver.extraJavaOptions", f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
-    )
+    for k, v in driver_jvm_conf(extra_conf).items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # ship the package to executor Python workers (spark-submit --py-files
     # equivalent) so kernels unpickle no matter where the driver started

@@ -7,11 +7,13 @@ order-insensitive value hash).  Usage: python tools/check_oracles.py [sf_dir]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so its own __spark_entry__ and kg load
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from kg.session import get_spark  # noqa: E402
