@@ -13,10 +13,12 @@ every hash function:
   Arrow read of (mention, shingles, buckets), bucket grouping, exact
   Jaccard, ``_union_find`` — no Spark job until the map is written, and
   no ``{stage_prefix}_final`` commit.  The pipeline takes it at or below
-  ``DRIVER_LINK_MAX_MENTIONS`` distinct mentions (``link_committed``), a
-  bound set from the driver/distributed crossover measured on a 4-core VM
-  (the table is at the constant); ``link_local`` is the same linker over
-  signatures computed in-process;
+  ``DRIVER_LINK_MAX_MENTIONS`` distinct mentions (``link_committed``).  It
+  used less CPU and wall than the distributed path at every size measured
+  on a 4-core VM (up to 200k, on three mention shapes), so the bound caps
+  the driver process's memory, not a speed crossover (the table is at the
+  constant); ``link_local`` is the same linker over signatures computed
+  in-process;
 - the DISTRIBUTED path (``link_from_signatures``) above the bound: a bucket
   self-equi-join (salted for hot buckets, AQE skew-join as backstop), a
   JVM array_intersect verify, and ``connected_components`` with durable
@@ -32,6 +34,7 @@ All hash functions are explicit modular arithmetic (no engine-dependent
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from itertools import combinations
 
 import numpy as np
@@ -52,19 +55,37 @@ _P = MINHASH_PRIME
 
 # Signature tables with at most this many rows (distinct mentions) are linked
 # on the driver (``link_committed``); larger ones take the distributed path.
-# Measured on a 4-core VM (local[4], 8 shuffle partitions, 2 GB driver heap):
-# the linked stage alone (link + commit of the map) over a committed table
-# of random CJK names, 30% near-variants; median of 3 alternating runs after
-# one warm-up each, wall s / CPU s of the whole process tree:
-#   distinct mentions     driver         distributed
-#     2,000               0.64 / 0.87    3.01 /  7.46
-#    20,000               0.99 / 1.36    3.62 /  7.45
-#   100,000               3.38 / 3.88    3.88 /  9.59
-#   200,000               6.78 / 7.48    6.14 / 15.17
-# The driver grows linearly while the distributed path is mostly fixed cost
-# until then: the walls cross between 100k and 200k (the driver still uses
-# half the CPU at 200k, but holds every signature in Python memory).  The
-# bound sits at the lower end of that crossover.
+# Measured with ``tools/link_crossover.py`` on a 4-core VM (local[4], 8
+# shuffle partitions, 2 GB driver heap): the linked stage alone (link +
+# commit of the map), one path per process, median of 3 runs after one
+# warm-up.  Mention sets: "gen" = the benchmark generator's surfaces
+# (perfbench/corpus.py lexicons, scaled), "prefix" = long shared prefixes,
+# "dense" = the verify's worst case (every mention in a bucket just under
+# LSH_MAX_BUCKET in every band).  pairs = candidate pairs per mention;
+# wall s / CPU s of the process tree; MB = peak resident size of the Python
+# driver process (~130 MB before linking):
+#                          pairs   driver               distributed
+#   gen        2,000        0.2    0.21 /  0.68  132    0.99 /   2.83  154
+#   gen       20,000        0.2    0.43 /  1.14  181    1.45 /   4.21  173
+#   gen      100,000        0.2    1.33 /  1.87  382    2.21 /   5.19  239
+#   gen      200,000        0.2    2.62 /  3.27  638    3.44 /   7.81  343
+#   prefix     2,000       13.7    0.24 /  0.68  134    1.28 /   3.71  158
+#   prefix    20,000       11.2    0.60 /  1.50  193    2.25 /   5.07  199
+#   prefix   100,000       14.3    2.50 /  3.09  434   11.32 /  34.96  238
+#   prefix   200,000       15.1    5.11 /  5.85  671   28.37 /  79.01  354
+#   dense     20,000      194.1    4.08 /  5.07  250   13.21 /  40.84  171
+#   dense    100,000      195.2   20.11 / 20.45  693   72.50 / 203.01  245
+#   dense    200,000      195.2   40.15 / 40.00 1195   (not run)
+# Both paths gave the same map on every row.  CPU decides the path (it is
+# the benchmark's end-to-end metric, op_cpu_s), and the driver uses 2.4-13.5x
+# less of it, and less wall, on every row: there is no speed crossover in
+# this range.  The bound is set by the driver process's memory instead,
+# which Spark neither manages nor spills: it grows 2.5 (gen) to 5.6 (dense)
+# KB per distinct mention, and 100k keeps the worst measured shape at about
+# 0.55 GB over the process's baseline (200k takes it past 1 GB).  No
+# benchmark workload sits above the bound (append_growth links under 2k
+# distinct mentions), so the benchmark measures only the driver side of
+# this selection; the distributed side is covered by tests and this table.
 DRIVER_LINK_MAX_MENTIONS = 100_000
 
 
@@ -354,7 +375,7 @@ def _committed_cc_iters(catalog, stage_prefix: str, token: str) -> list[int]:
     return sorted(out)
 
 
-def _union_find(pairs: list[tuple[str, str]]) -> dict[str, str]:
+def _union_find(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
     """Driver-side union-find with min-label canonicalization — the same
     fixed point as the distributed propagation (component minimum)."""
     parent: dict[str, str] = {}
@@ -627,9 +648,11 @@ def link_signatures(
     share a bucket of at most ``max_bucket`` members; a pair links when its
     exact shingle Jaccard (two empty sets count as identical) is >=
     ``threshold``, computed in the same double division as the JVM verify;
-    the canonical is the component's smallest mention.  A pair met in
-    several bands is verified once per band — cheaper than a pair set
-    sized by the candidates, and the components are the same."""
+    the canonical is the component's smallest mention.  Verified pairs
+    stream into the union-find, so memory stays O(mentions) however many
+    pairs verify; a pair met in several bands is verified once per band —
+    cheaper than a pair set sized by the candidates, and the components
+    are the same."""
     members: dict[str, list[int]] = {}
     for i, keys in enumerate(buckets):
         for key in keys:
@@ -641,18 +664,19 @@ def link_signatures(
             sets[i] = frozenset(shingles[i])
         return sets[i]
 
-    edges: set[tuple[str, str]] = set()
-    for idx in members.values():
-        if len(idx) > max_bucket:
-            continue
-        for i, j in combinations(idx, 2):
-            s1, s2 = shingle_set(i), shingle_set(j)
-            n_common = len(s1 & s2)
-            n_union = len(s1) + len(s2) - n_common
-            sim = 1.0 if n_union == 0 else n_common / n_union
-            if sim >= threshold:
-                edges.add((mentions[i], mentions[j]))
-    labels = _union_find(list(edges))
+    def verified():
+        for idx in members.values():
+            if len(idx) > max_bucket:
+                continue
+            for i, j in combinations(idx, 2):
+                s1, s2 = shingle_set(i), shingle_set(j)
+                n_common = len(s1 & s2)
+                n_union = len(s1) + len(s2) - n_common
+                sim = 1.0 if n_union == 0 else n_common / n_union
+                if sim >= threshold:
+                    yield mentions[i], mentions[j]
+
+    labels = _union_find(verified())
     return {m: labels.get(m, m) for m in mentions}
 
 

@@ -92,7 +92,7 @@ EDGE_TEXTS = [
 ]
 
 
-def test_driver_linker_equals_distributed(spark, tmp_path, monkeypatch):
+def test_driver_linker_equals_distributed(spark, tmp_path, monkeypatch, reference_link):
     df = spark.createDataFrame([(t,) for t in EDGE_TEXTS], "mention string")
     cat = StageCatalog(spark, str(tmp_path / "edge"))
     L.signature_base(df, catalog=cat, stage_name="sigs")
@@ -101,7 +101,7 @@ def test_driver_linker_equals_distributed(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(L, "DRIVER_LINK_MAX_MENTIONS", 0)
     distributed = _map(L.link_committed(cat, "sigs", stage_prefix="cc"))
     assert "cc_final" in cat.executed
-    assert driver == distributed == L.link_local(EDGE_TEXTS)
+    assert driver == distributed == L.link_local(EDGE_TEXTS) == reference_link(EDGE_TEXTS)
     assert all(driver[t] == t for t in MEGA)  # the capped bucket links nothing
     assert driver["中国人民解放军总政治部门"] == "中国人民解放军总政治部"
     assert driver["中华人民共和国国务院办公厅"] == "中华人民共和国国务院"
@@ -132,7 +132,7 @@ def test_shingle_hashes_match_the_fold_up_to_k7():
 
 
 def test_append_equals_fresh_on_both_paths(
-    spark, tmp_path, monkeypatch, corpus, local_vocab
+    spark, tmp_path, monkeypatch, corpus, local_vocab, reference_link
 ):
     old, new = corpus
     linked = {}
@@ -154,7 +154,7 @@ def test_append_equals_fresh_on_both_paths(
         assert ("linked_cc_final" in fresh.executed) == (bound == 0)
         linked[bound] = _map(res.tables["linked"])
     driver, distributed = linked.values()
-    assert driver == distributed
+    assert driver == distributed == reference_link(driver)
     # a batch variant joined an old component
     assert driver["中国致公党第十一次全国代表大会代表"] == "中国致公党第十一次全国代表大会"
 

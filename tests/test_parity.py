@@ -11,7 +11,7 @@ import shutil
 import pytest
 
 from kg import oracle
-from kg.linking import link_local
+from kg.linking import link_local, link_mentions
 from kg.oracle import micro_prf
 from kg.pipeline import run_pipeline
 from kg.synth import corpus_vocab, docs_to_df, synth_docs
@@ -69,11 +69,17 @@ def test_triples_exact_parity(result, golden):
     assert got == want
 
 
-def test_linking_parity(result, golden):
+def test_linking_parity(spark, result, golden, reference_link):
     om, _ = golden
-    want = link_local(sorted({m["mention"] for m in om}))
+    texts = sorted({m["mention"] for m in om})
+    want = reference_link(texts)
     got = {r.mention: r.canonical for r in result.tables["linked"].collect()}
     assert got == want
+    assert link_local(texts) == want
+    # the distributed path (no catalog: always link_from_signatures)
+    mentions = spark.createDataFrame([(t,) for t in texts], "mention string")
+    distributed = {r.mention: r.canonical for r in link_mentions(mentions).collect()}
+    assert distributed == want
 
 
 def test_invariant_zero_violations(result):
