@@ -14,5 +14,3 @@ See SURVEY.md for the blueprint, BASELINE.md for targets.
 """
 
 __version__ = "0.1.0"
-
-MAX_LEN = 512  # reference ner/dataset.py:15

@@ -1,11 +1,30 @@
 """End-to-end KG-construction pipeline with checkpointed, resumable stages.
 
-Stage DAG (each stage is a committed parquet checkpoint via kg/catalog.py;
-a resumed run recomputes only stages whose inputs changed):
+``STAGES`` is the stage DAG; each stage is a committed parquet checkpoint
+via kg/catalog.py:
 
     documents ──> extract ──> mentions ──> linked ──> nodes
         │            └──────> triples ───────┴─────> edges
+        ├──────> keyphrases
         └──────> documents_out (span-sequence invariant proof)
+
+One function, ``_fold``, runs the table for a fresh run, an append and a
+resume, and takes one path per stage:
+
+1. skip the stage if it is complete for its current inputs;
+2. otherwise take its increment if the call has a batch, the stage's
+   manifest records its inputs' pre-batch fingerprints, and every input
+   took its increment in this call (``documents`` always does: it is the
+   batch);
+3. otherwise rebuild it from the committed inputs.
+
+The increments: the per-document stages file-append the batch's rows,
+``linked`` refreshes its signature table from the batch's mentions
+(``_run_linked_stage``), ``nodes`` merges the batch's counts into
+``nodes_mtc``, and ``edges`` appends the batch's edges when its doc_ids are
+new and no old canonical moved.  A fresh run is ``_fold`` with no batch, and
+so is an append whose batch is already folded in (a retried or interrupted
+append): every stage left stale by an interrupted append is rebuilt.
 
 Shuffle budget at scale (SURVEY.md §4): documents→extract is shuffle-free
 (narrow explode + mapInPandas over input splits); mentions/triples are
@@ -14,39 +33,19 @@ entity linking (distinct mentions; the LSH bucket join only above
 ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` distinct mentions — below it the
 map is linked on the driver from one Arrow read of the signature table) and
 the grouping aggregations of nodes/edges — all keyed, AQE-coalesced,
-skew-join protected.  An append takes the signature delta from its batch's
-mentions (``_run_linked_stage``), not from the whole mentions table.
+skew-join protected.
 
-Stage scheduling: independent stages of the DAG are submitted CONCURRENTLY
-from driver threads (Spark sessions are thread-safe for job submission and
-the task scheduler interleaves them across the executor pool).  Serial
-execution leaves executors idle during each stage's driver-side tail
-(manifest commit, parquet-footer lineage scan) and never overlaps two small
-stages that each use a fraction of the cluster — on a 1000-executor cluster
-the four post-extract stages and the three post-linking stages are pure
-wins.  Concurrency width is GRADUATED on data-per-slot (r6).  4-way pays only
-in the MICRO-STAGE regime — single stages cannot saturate the pool and
-per-stage fixed costs dominate (measured: local[32]/100k docs 4-way wins
-21s vs 38s; it loses by 31k docs/slot).  TWO jobs in flight keep winning
-far past that — the second job back-fills the first's commit tails and
-stage gaps without 4-way's thrash (measured r6, every interleaved pair:
-local[32]/1M 17-18s vs 23-26s serial; local[32]/4M 48-50 vs 59-61;
-pinned local[8]/4M 86-88 vs 103-114).  Beyond the measured 512k-docs/slot
-win boundary serial remains the default: 4-way collapsed outright at 2M
-docs/slot (local[2]/4M 615s vs 390s serial; pinned local[8]/16M pair
-efficiency 0.54 vs ~0.84 in round 5) and 2-way is unmeasured there —
-conservative wins at 100 TB scale (override:
-``SPARK_KG_STAGE_WORKERS``; 0 = serial).
-``PipelineResult.executed`` stays deterministic either way: completion
-order is canonicalized to DAG order.
+Scheduling: each stage is submitted as soon as its inputs commit, to the
+executor ``_stage_executor`` sizes from the committed corpus.
+``PipelineResult.executed`` is canonical DAG order whatever the completion
+order.
 """
 
 from __future__ import annotations
 
-import os
 import time
-from collections.abc import Mapping
-from concurrent.futures import Future, ThreadPoolExecutor
+from collections.abc import Callable, Mapping
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -100,44 +99,26 @@ STAGE_OVERLAP_MAX_ROWS_PER_SLOT = 24_000
 # vs 2-way [17.9,16.4,16.8]s; local[32]/4M (125k/slot) [61.4,59.1] vs
 # [48.4,49.9]; PINNED local[8]/4M (500k/slot) [102.6,114.2] vs
 # [88.4,86.0].  Above the measured 512k-docs/slot win boundary the r5
-# evidence (4-way collapse at 2M docs/slot; no 2-way measurement there)
-# makes serial the conservative 100-TB default.
+# evidence (4-way collapse at 2M docs/slot, every overlapped stage's wall
+# grew to the group total at pinned local[8]/16M; no 2-way measurement
+# there) makes serial the conservative 100-TB default.
 STAGE_OVERLAP2_MAX_ROWS_PER_SLOT = 512_000
 
 
 def _stage_executor(spark: SparkSession, n_rows: int = 0):
-    """4-way concurrent stage submission ONLY in the micro-stage regime —
-    small per-stage work relative to the pool, where per-stage fixed costs
-    (driver commit tails, job-scheduling gaps) dominate and overlapping
-    hides them.  When any single stage has enough rows to saturate every
-    task slot on its own (the 100-TB regime), concurrent heavy jobs just
-    time-slice the same cores — thrash, spill, and GC pressure; measured
-    at pinned local[8]/16M docs every overlapped tail stage's wall grew to
-    ~the group total.  Serial is the scale default; overlap is the
-    small-corpus/giant-pool optimization."""
-    env = os.environ.get("SPARK_KG_STAGE_WORKERS")
-    if env is not None:
-        workers = int(env)
-    else:
-        slots = spark.sparkContext.defaultParallelism
-        per_slot = n_rows / max(slots, 1)
-        if slots < 8:
-            workers = 0
-        elif per_slot <= STAGE_OVERLAP_MAX_ROWS_PER_SLOT:
-            workers = 4
-        elif per_slot <= STAGE_OVERLAP2_MAX_ROWS_PER_SLOT:
-            workers = 2
-        else:
-            workers = 0
-    if workers <= 0:
+    """How many stages run at once, from the corpus rows per task slot:
+    serial below 8 slots and above ``STAGE_OVERLAP2_MAX_ROWS_PER_SLOT``,
+    4 up to ``STAGE_OVERLAP_MAX_ROWS_PER_SLOT``, 2 between."""
+    slots = spark.sparkContext.defaultParallelism
+    per_slot = n_rows / max(slots, 1)
+    if slots < 8 or per_slot > STAGE_OVERLAP2_MAX_ROWS_PER_SLOT:
         return _SerialExecutor()
+    workers = 4 if per_slot <= STAGE_OVERLAP_MAX_ROWS_PER_SLOT else 2
     return ThreadPoolExecutor(max_workers=workers, thread_name_prefix="kg-stage")
 
 
 def _run_linked_stage(
-    cat: StageCatalog,
-    timings: dict[str, float],
-    batch: tuple[str, DataFrame] | None = None,
+    cat: StageCatalog, batch: tuple[str, DataFrame] | None = None
 ) -> DataFrame:
     """Refresh the durable signature table, then compute-or-skip the linked
     stage KEYED ON THE SIGNATURE TABLE's fingerprint (r6).
@@ -166,7 +147,6 @@ def _run_linked_stage(
     the driver path used less CPU and wall at every measured size (the
     table is at the constant).
     """
-    t0 = time.perf_counter()
     anchor = {"mentions": cat.fingerprint("mentions")}
     if not cat.is_complete("linked_cc_sigs", extra_inputs=anchor):
         grown = batch is not None and cat.is_complete(
@@ -177,13 +157,209 @@ def _run_linked_stage(
             mentions.select("mention").distinct(), catalog=cat,
             stage_name="linked_cc_sigs", anchor=anchor, increment=grown,
         )
-    out = cat.run(
+    return cat.run(
         "linked",
         lambda: link_committed(cat, "linked_cc_sigs", stage_prefix="linked_cc"),
         inputs=["linked_cc_sigs"],
     )
-    timings["linked"] = round(time.perf_counter() - t0, 3)
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One node of the DAG.  ``build`` returns the stage's rows from the
+    committed inputs; ``increment`` returns the batch's rows to file-append,
+    or None when a precondition of its own fails (the stage then rebuilds).
+    A stage with ``own_commit`` keys and commits its checkpoint itself, and
+    ``build`` returns the committed reader."""
+
+    name: str
+    inputs: tuple[str, ...]
+    build: Callable[[_Fold], DataFrame]
+    increment: Callable[[_Fold], DataFrame | None] | None = None
+    partition_by: tuple[str, ...] | None = None
+    own_commit: bool = False
+
+
+def _per_document(name: str, source: str, rows: Callable) -> Stage:
+    """A stage whose rows are a function of each document: ``rows(f, df)``
+    over the committed ``source``, or over the rows the batch appended to
+    it."""
+    return Stage(
+        name, (source,),
+        lambda f: rows(f, f.read(source)),
+        lambda f: rows(f, f.incs[source]),
+    )
+
+
+def _linked(f: _Fold) -> DataFrame:
+    """linked's signature delta needs the batch's mentions, so it is handed
+    the batch only when mentions took its increment; ``_run_linked_stage``
+    checks the anchor itself.  linked then counts as incremented."""
+    batch = None
+    if "mentions" in f.incs:
+        batch = (f.pre["mentions"], f.incs["mentions"])
+    out = _run_linked_stage(f.cat, batch)
+    if batch is not None:
+        f.incs["linked"] = out
     return out
+
+
+def _nodes(f: _Fold) -> DataFrame:
+    """nodes from the additive (mention, tag, cnt) statistic.  A call with a
+    batch keeps it as ``nodes_mtc`` for the next append: the batch's counts
+    merged in when rule 2 holds for it, rebuilt from all mentions
+    otherwise.  A call without one builds nodes straight from mentions."""
+    if f.batch is None:
+        return build_nodes(f.read("mentions"), f.read("linked"))
+    if f.incremental("nodes_mtc", ("mentions",)):
+        counts = (
+            f.cat.read("nodes_mtc")
+            .unionByName(mention_tag_counts(f.incs["mentions"]))
+            .groupBy("mention", "tag")
+            .agg(F.sum("cnt").cast("long").alias("cnt"))
+        )
+    else:
+        counts = mention_tag_counts(f.read("mentions"))
+    f.cat.write("nodes_mtc", counts, inputs=["mentions"])
+    f.cat.executed.append("nodes_mtc")
+    return build_nodes_from_counts(f.cat.read("nodes_mtc"), f.read("linked"))
+
+
+def _edges_delta(f: _Fold) -> DataFrame | None:
+    """The batch's edges, when appending them equals a rebuild: edges group
+    by (subj, pred, obj, doc_id), so a batch whose doc_ids are all new
+    touches no old group, and when no old mention's canonical moved (a new
+    mention joining an old component can rename it) every old row is
+    unchanged."""
+    linked = f.read("linked")
+    stable = (
+        f.batch.select("doc_id").join(f.old_doc_ids, "doc_id", "left_semi").isEmpty()
+        and f.old_linked.withColumnRenamed("canonical", "old_canonical")
+        .join(linked, "mention")
+        .where(F.col("old_canonical") != F.col("canonical"))
+        .isEmpty()
+    )
+    return build_edges(f.incs["triples"], linked) if stable else None
+
+
+# Published hive-partitioned on their dominant access key (VERDICT r2 item
+# 6): nodes by entity kind, edges by predicate — low-cardinality columns, so
+# file counts stay bounded while kind-/pred-selective readers prune at the
+# scan (tests/test_plans.py::test_published_tables_prune_partitions).
+STAGES = (
+    Stage("documents", (), lambda f: f.docs, lambda f: f.batch),
+    _per_document(
+        "extract", "documents",
+        lambda f, d: extract_sentences(explode_text_spans(d), f.vocab),
+    ),
+    _per_document("mentions", "extract", lambda f, d: mentions_table(d)),
+    _per_document("triples", "extract", lambda f, d: triples_table(d)),
+    Stage("linked", ("mentions",), _linked, own_commit=True),
+    Stage("nodes", ("mentions", "linked"), _nodes, partition_by=("kind",)),
+    Stage(
+        "edges", ("triples", "linked"),
+        lambda f: build_edges(f.read("triples"), f.read("linked")),
+        _edges_delta, partition_by=("pred",),
+    ),
+    _per_document("keyphrases", "documents", lambda f, d: keyphrases_table(d)),
+    _per_document("documents_out", "documents", lambda f, d: passthrough_docs(d)),
+)
+_NAMES = tuple(st.name for st in STAGES)
+
+
+class _Fold:
+    """One call's state: the batch (None for a fresh run or resume), every
+    stage input's fingerprint before the call, the increments taken, and
+    the checkpoint readers opened."""
+
+    def __init__(self, cat, vocab, docs, token, tokens, batch):
+        self.cat, self.vocab, self.docs, self.batch = cat, vocab, docs, batch
+        self.extra = {"documents": {"__input__": token}}
+        self.meta = {"documents": {"batch_tokens": tokens}}
+        self.pre = {i: cat.fingerprint(i) for st in STAGES for i in st.inputs}
+        self.incs: dict[str, DataFrame] = {}  # stage -> rows it appended
+        self.tables: dict[str, DataFrame] = {}
+        self.timings: dict[str, float] = {}
+        self.old_linked = self.old_doc_ids = None
+        if batch is not None and self.anchored("edges", ("triples", "linked")):
+            # edges' increment compares against the pre-batch map and doc_ids;
+            # the linked dir is overwritten below, documents grows
+            self.old_linked = cat.read("linked").localCheckpoint()
+            self.old_doc_ids = cat.read("documents").select("doc_id")
+
+    def read(self, stage: str) -> DataFrame:
+        if stage not in self.tables:
+            self.tables[stage] = self.cat.read(stage)
+        return self.tables[stage]
+
+    def anchored(self, stage: str, inputs) -> bool:
+        """The stage's manifest records its inputs' pre-batch fingerprints."""
+        return self.cat.is_complete(stage, extra_inputs={i: self.pre[i] for i in inputs})
+
+    def incremental(self, stage: str, inputs) -> bool:
+        """Rule 2 (module docstring) for ``stage``."""
+        return (
+            self.batch is not None
+            and all(i in self.incs for i in inputs)
+            and self.anchored(stage, inputs)
+        )
+
+    def step(self, st: Stage) -> None:
+        t0 = time.perf_counter()
+        cat, name = self.cat, st.name
+        kw = {
+            "inputs": st.inputs, "partition_by": st.partition_by,
+            "extra_inputs": self.extra.get(name), "meta": self.meta.get(name),
+        }
+        if st.own_commit:
+            self.tables[name] = st.build(self)
+        elif cat.is_complete(name, st.inputs, kw["extra_inputs"]):
+            self.tables[name] = cat.read(name)
+        else:
+            rows = None
+            if st.increment and self.incremental(name, st.inputs):
+                rows = st.increment(self)
+            if rows is None:
+                self.tables[name] = cat.run(name, lambda: st.build(self), **kw)
+            else:
+                self.incs[name] = cat.spark.read.parquet(*cat.append(name, rows, **kw))
+                name += "+append"
+        self.timings[name] = round(time.perf_counter() - t0, 3)
+
+    def check(self) -> int:
+        """Span invariant over what this call wrote: the batch when
+        documents_out took its increment, the whole table otherwise (the
+        property is per document, so the proofs compose)."""
+        t0 = time.perf_counter()
+        if "documents_out" in self.incs:
+            docs, out = self.incs["documents"], self.incs["documents_out"]
+        else:
+            docs, out = self.read("documents"), self.read("documents_out")
+        n = span_violations(docs, out).count()
+        self.timings["invariant_check"] = round(time.perf_counter() - t0, 3)
+        return n
+
+
+def _task(name: str, fn, *args):
+    """``fn(*args)`` under ``name``: a stage's task is ``_<stage>_stage``, the
+    name a tracer attributes its whole run by (perfbench/trace.py spans
+    nodes and edges that way)."""
+    def task():
+        return fn(*args)
+
+    task.__name__ = name
+    return task
+
+
+def _ledger(executed: list[str]) -> list[str]:
+    """``executed`` in canonical DAG order: appended stages, then the rest.
+    Stages outside the table (signature table, CC rounds, ``nodes_mtc``)
+    keep their commit order, placed before linked."""
+    aux = [s for s in executed if s.removesuffix("+append") not in _NAMES]
+    return [f"{s}+append" for s in _NAMES if f"{s}+append" in executed] + [
+        x for s in _NAMES
+        for x in (aux if s == "linked" else []) + ([s] if s in executed else [])
+    ]
 
 
 def input_fingerprint(docs: DataFrame) -> str:
@@ -228,11 +404,9 @@ class _LazyTables(Mapping):
 @dataclass
 class PipelineResult:
     """``tables`` maps each of the nine published stages to a reader of its
-    committed checkpoint.  ``run_pipeline`` returns a dict whose readers
-    were all opened during the run; ``run_pipeline_append`` returns a
-    ``_LazyTables`` mapping that opens ``linked``/``nodes``/``edges``
-    during the run and every other stage on first access (one file listing
-    + schema job each), reading whatever that stage has committed then."""
+    committed checkpoint: the readers opened during the run, and for the
+    stages the run appended to, a reader opened on first access (one file
+    listing + schema job each) of whatever that stage has committed then."""
 
     tables: Mapping[str, DataFrame]
     catalog: StageCatalog
@@ -242,6 +416,41 @@ class PipelineResult:
 
     def counts(self) -> dict[str, int]:
         return {name: self.catalog.manifest(name)["rows"] for name in self.tables}
+
+
+def _fold(cat, vocab, check_invariant, docs, token, tokens, batch=None) -> PipelineResult:
+    """Run ``STAGES`` over ``cat`` by the rule in the module docstring.
+    ``docs`` is the input a rebuilt documents stage commits, ``token`` its
+    ``__input__`` version, ``tokens`` its batch ledger."""
+    f = _Fold(cat, vocab or corpus_vocab(), docs, token, tokens, batch)
+    f.step(STAGES[0])  # documents first: the width is sized on the committed corpus
+    tasks = [(st.name, st.inputs, _task(f"_{st.name}_stage", f.step, st)) for st in STAGES[1:]]
+    if check_invariant:
+        tasks.append(("invariant", ("documents_out",), _task("_check", f.check)))
+    done = {"documents": None}
+    running: dict[Future, str] = {}
+    with _stage_executor(cat.spark, cat.manifest("documents")["rows"]) as ex:
+        while tasks or running:
+            for t in [t for t in tasks if set(t[1]) <= done.keys()]:
+                tasks.remove(t)
+                fut = ex.submit(t[2])
+                if fut.done():  # serial: a failed stage stops the fold here
+                    done[t[0]] = fut.result()
+                else:
+                    running[fut] = t[0]
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                done[running.pop(fut)] = fut.result()
+    violations = done.get("invariant", 0)
+    if violations:
+        raise AssertionError(f"span-sequence invariant violated for {violations} docs")
+    return PipelineResult(
+        tables=_LazyTables(cat, _NAMES, f.tables),
+        catalog=cat,
+        executed=_ledger(cat.executed),
+        invariant_violations=violations,
+        timings=f.timings,
+    )
 
 
 def run_pipeline(
@@ -256,133 +465,11 @@ def run_pipeline(
     synth parameters, ...).  When given, the change-detection scan of the
     input is skipped — the token is the fingerprint."""
     cat = StageCatalog(spark, base_dir)
-    if vocab is None:
-        vocab = corpus_vocab()
-
-    timings: dict[str, float] = {}
-
-    def timed(name: str, fn, **kw):
-        t0 = time.perf_counter()
-        out = cat.run(name, fn, **kw)
-        timings[name] = round(time.perf_counter() - t0, 3)
-        return out
-
     token = input_token or input_fingerprint(docs)
-    documents = timed(
-        "documents",
-        lambda: docs,
-        extra_inputs={"__input__": token},
-        # explicit folded-batch ledger (ADVICE r3): appended batch identity
-        # is tested by list membership, never by substring games on tokens
-        # that may themselves contain '+'
-        meta={"batch_tokens": [token]},
-    )
-
-    extract = timed(
-        "extract",
-        lambda: extract_sentences(explode_text_spans(cat.read("documents")), vocab),
-        inputs=["documents"],
-    )
-    # Concurrent group 1 — four independent children of documents/extract
-    # (module docstring: driver-thread job submission, deterministic ledger).
-    # Width decided from the committed corpus size (manifest rows — free).
-    with _stage_executor(spark, cat.manifest("documents")["rows"]) as ex:
-        f_mentions = ex.submit(
-            timed, "mentions", lambda: mentions_table(cat.read("extract")),
-            inputs=["extract"],
-        )
-        f_triples = ex.submit(
-            timed, "triples", lambda: triples_table(cat.read("extract")),
-            inputs=["extract"],
-        )
-        f_keyphrases = ex.submit(
-            timed, "keyphrases", lambda: keyphrases_table(cat.read("documents")),
-            inputs=["documents"],
-        )
-        f_documents_out = ex.submit(
-            timed, "documents_out", lambda: passthrough_docs(cat.read("documents")),
-            inputs=["documents"],
-        )
-        mentions = f_mentions.result()
-        # On the distributed linking path, CC iterations checkpoint through
-        # the same catalog (stage names linked_cc_iter*/linked_cc_final): a
-        # job killed mid-CC resumes label propagation from the last durable
-        # round when the "linked" stage itself re-runs.  Linking starts as
-        # soon as mentions commits — keyphrases/documents_out may still be
-        # in flight.
-        linked = _run_linked_stage(cat, timings)
-        triples = f_triples.result()
-        # Concurrent group 2 — published tables + the invariant proof.
-        # Published tables are hive-partitioned on their dominant access key
-        # (VERDICT r2 item 6): nodes by entity kind, edges by predicate —
-        # low-cardinality columns (|TAGS| and |TAGS|^2), so file counts stay
-        # bounded while kind-/pred-selective readers get partition pruning at
-        # the scan (tests/test_plans.py::test_published_tables_prune_partitions).
-        # At the 10^12-doc design point: ~4*10^12 mention rows -> 3 kinds x
-        # O(10k) files per kind for nodes; 9 preds for edges — pruning cuts a
-        # one-pred consumer's scan 9x before a single row is read.
-        f_nodes = ex.submit(
-            timed, "nodes",
-            lambda: build_nodes(cat.read("mentions"), cat.read("linked")),
-            inputs=["mentions", "linked"],
-            partition_by=["kind"],
-        )
-        f_edges = ex.submit(
-            timed, "edges",
-            lambda: build_edges(cat.read("triples"), cat.read("linked")),
-            inputs=["triples", "linked"],
-            partition_by=["pred"],
-        )
-        keyphrases = f_keyphrases.result()
-        documents_out = f_documents_out.result()
-
-        f_violations = None
-        if check_invariant:
-            def _check() -> int:
-                t0 = time.perf_counter()
-                n = span_violations(documents, documents_out).count()
-                timings["invariant_check"] = round(time.perf_counter() - t0, 3)
-                return n
-            f_violations = ex.submit(_check)
-
-        nodes = f_nodes.result()
-        edges = f_edges.result()
-        violations = f_violations.result() if f_violations is not None else 0
-
-    if violations:
-        raise AssertionError(
-            f"span-sequence invariant violated for {violations} docs"
-        )
-
-    tables = {
-        "documents": documents,
-        "extract": extract,
-        "mentions": mentions,
-        "triples": triples,
-        "linked": linked,
-        "nodes": nodes,
-        "edges": edges,
-        "keyphrases": keyphrases,
-        "documents_out": documents_out,
-    }
-    # Completion order is nondeterministic under concurrent stage groups;
-    # the reported ledger is canonical DAG order (CC-internal rounds, which
-    # commit serially inside 'linked', keep their own order, placed before it).
-    done = set(cat.executed)
-    aux = [s for s in cat.executed if s not in tables]
-    executed: list[str] = []
-    for s in tables:
-        if s == "linked":
-            executed.extend(aux)
-        if s in done:
-            executed.append(s)
-    return PipelineResult(
-        tables=tables,
-        catalog=cat,
-        executed=executed,
-        invariant_violations=violations,
-        timings=timings,
-    )
+    # explicit folded-batch ledger (ADVICE r3): appended batch identity is
+    # tested by list membership, never by substring games on tokens that
+    # may themselves contain '+'
+    return _fold(cat, vocab, check_invariant, docs, token, [token])
 
 
 def run_pipeline_append(
@@ -413,8 +500,9 @@ def run_pipeline_append(
     signature table), and aggregations are order-insensitive.
 
     ``input_token`` identifies the NEW batch; the documents stage records
-    ``old_token+new_token`` so a repeated identical append is a no-op
-    (idempotent) and resume semantics stay exact.
+    ``old_token+new_token`` and appends it to its ``batch_tokens`` ledger,
+    so re-submitting ANY folded batch is a no-op that resumes whatever an
+    interrupted append left stale.
     """
     cat = StageCatalog(spark, base_dir)
     for required in ("documents", "extract", "mentions", "triples"):
@@ -423,38 +511,19 @@ def run_pipeline_append(
                 f"run_pipeline_append requires a completed prior run; "
                 f"stage {required!r} is not committed"
             )
-    if vocab is None:
-        vocab = corpus_vocab()
-
-    timings: dict[str, float] = {}
     docs_manifest = cat.manifest("documents")
     old_token = docs_manifest["inputs"]["__input__"]
-    new_token = input_token or input_fingerprint(new_docs)
-    combined = f"{old_token}+{new_token}"
-    # Explicit folded-batch ledger (ADVICE r3): membership in the recorded
-    # token list, so re-submission of ANY prior batch — not just the latest —
-    # is a no-op, and tokens containing '+' can never false-positive.
     folded = docs_manifest.get("batch_tokens")
     if folded is None:
-        # Legacy manifest (pre-ledger release): __input__ is the
-        # '+'-concatenated batch history (e.g. "base+b1+b2"), so membership
-        # must be checked against its SPLIT — treating the whole string as
-        # one token would silently double-fold a crash-retried batch into
-        # every per-document table (ADVICE r4).
-        folded = old_token.split("+")
-    if new_token in folded:
-        # identical batch already folded in — idempotent no-op
-        return run_pipeline(
-            spark, cat.read("documents"), base_dir, vocab=vocab,
-            check_invariant=check_invariant, input_token=old_token,
+        raise ValueError(
+            f"documents manifest in {base_dir!r} has no batch_tokens ledger, "
+            f"so the batches it holds are unknown"
         )
-
-    def timed_append(stage: str, df: DataFrame, **kw) -> DataFrame:
-        t0 = time.perf_counter()
-        paths = cat.append(stage, df, **kw)
-        timings[f"{stage}+append"] = round(time.perf_counter() - t0, 3)
-        return spark.read.parquet(*paths)
-
+    new_token = input_token or input_fingerprint(new_docs)
+    if new_token in folded:
+        return _fold(
+            cat, vocab, check_invariant, cat.read("documents"), old_token, folded
+        )
     new_docs = new_docs.localCheckpoint()
     # Data-sized increment width (r6, guide §6 small-files): the batch DF
     # arrives at driver parallelism (32 partitions for a 5k-doc batch), so
@@ -469,212 +538,9 @@ def run_pipeline_append(
     ))
     if width < new_docs.rdd.getNumPartitions():
         new_docs = new_docs.repartition(width).localCheckpoint()
-    # Incremental-edges preconditions, part 1 (r6): the edges table groups
-    # by (subj_c, pred, obj_c, doc_id) — doc_id partitions the groups, so
-    # if the batch's doc_ids are DISJOINT from the old corpus, no old group
-    # can be touched by new rows and the canonicalized delta can be
-    # file-appended instead of recomputing + rewriting the whole table.
-    # The check must read the PRE-append documents table (one columnar
-    # doc_id scan); non-disjoint batches fall back to the full recompute.
-    t0 = time.perf_counter()
-    # The overlap scan itself is DEFERRED into the edges stage (it runs
-    # overlapped with the tail): cat.read captures the pre-append file
-    # list now, append only ever adds files, so the lazy evaluation still
-    # sees exactly the old corpus.
-    batch_overlap = new_docs.select("doc_id").join(
-        cat.read("documents").select("doc_id"), "doc_id", "left_semi"
-    )
-    # part 2: capture the pre-append mention->canonical map NOW — the
-    # linked stage dir is overwritten (old files deleted) by the recompute
-    # below.  Bounded by distinct mentions (orders of magnitude below the
-    # corpus).
-    old_linked = (
-        cat.read("linked").localCheckpoint()
-        if cat.manifest("linked") is not None
-        and cat.manifest("edges") is not None
-        else None
-    )
-    # nodes_mtc incrementality anchor: the (mention, tag, cnt) sufficient
-    # statistic is valid for merging iff it matches the PRE-append mentions
-    # table (its fingerprint is captured here, before the append commits).
-    pre_mentions_fp = cat.fingerprint("mentions")
-    timings["edges_precheck"] = round(time.perf_counter() - t0, 3)
-    # documents then extract commit SERIALLY: each downstream append records
-    # its input stage's manifest fingerprint, which must be the post-append
-    # one for resume coherence (a plain re-run must skip everything).
-    timed_append(
-        "documents", new_docs,
-        extra_inputs={"__input__": combined},
-        meta={"batch_tokens": folded + [new_token]},
-    )
-    inc_extract = timed_append(
-        "extract",
-        extract_sentences(explode_text_spans(new_docs), vocab),
-        inputs=["documents"],
-    )
-
-    def timed(name: str, fn, **kw):
-        t0 = time.perf_counter()
-        out = cat.run(name, fn, **kw)
-        timings[name] = round(time.perf_counter() - t0, 3)
-        return out
-
-    # Same pool-adaptive concurrency as run_pipeline (module docstring): the
-    # four sibling increments after extract, and nodes ∥ edges ∥ invariant
-    # after linking — without this the append tail ran serial and its fixed
-    # cost swamped the per-doc savings at small batch sizes (BENCH_r04).
-    # Width decided from the POST-APPEND corpus size, not the batch: the
-    # sibling increments are batch-sized, but the recomputed tail
-    # (nodes ∥ edges ∥ invariant) scans the full mention/triple tables —
-    # at scale those saturate the pool alone and must not be overlapped.
-    with _stage_executor(spark, cat.manifest("documents")["rows"]) as ex:
-        f_mentions = ex.submit(
-            timed_append, "mentions", mentions_table(inc_extract),
-            inputs=["extract"],
-        )
-        f_triples = ex.submit(
-            timed_append, "triples", triples_table(inc_extract),
-            inputs=["extract"],
-        )
-        f_keyphrases = ex.submit(
-            timed_append, "keyphrases", keyphrases_table(new_docs),
-            inputs=["documents"],
-        )
-        f_docs_out = ex.submit(
-            timed_append, "documents_out", passthrough_docs(new_docs),
-            inputs=["documents"],
-        )
-        inc_mentions = f_mentions.result()
-        # shared tail: recomputed over the full (old + increment) inputs;
-        # linking starts as soon as mentions commits, its signature delta
-        # taken from the increment when the table is anchored pre-append
-        linked = _run_linked_stage(cat, timings, (pre_mentions_fp, inc_mentions))
-        inc_triples = f_triples.result()
-
-        # nodes via the durable (mention, tag, cnt) statistic (r6): counts
-        # are additive under growth, so when the committed nodes_mtc stage
-        # matches the pre-append mentions table the increment's counts
-        # merge into it (vocabulary-sized job) — the O(corpus) mentions
-        # re-scan every append paid is gone.  A missing/stale statistic is
-        # rebuilt from the full table (same scan nodes always paid).
-        def _nodes_stage():
-            post_fp = cat.fingerprint("mentions")
-            if cat.is_complete("nodes_mtc", extra_inputs={"mentions": pre_mentions_fp}):
-                merged = (
-                    cat.read("nodes_mtc")
-                    .unionByName(mention_tag_counts(inc_mentions))
-                    .groupBy("mention", "tag")
-                    .agg(F.sum("cnt").cast("long").alias("cnt"))
-                )
-            else:
-                merged = mention_tag_counts(cat.read("mentions"))
-            cat.write("nodes_mtc", merged, extra_inputs={"mentions": post_fp})
-            cat.executed.append("nodes_mtc")
-            return timed(
-                "nodes",
-                lambda: build_nodes_from_counts(
-                    cat.read("nodes_mtc"), cat.read("linked")
-                ),
-                inputs=["mentions", "linked"],
-                partition_by=["kind"],
-            )
-
-        f_nodes = ex.submit(_nodes_stage)
-        # Incremental edges (r6), part 3 — stability: if no OLD mention's
-        # canonical changed (a new mention joining an old component can
-        # rename it), every old edges row is byte-identical in a fresh
-        # recompute, so only the canonicalized delta (batch triples, whose
-        # doc_ids are disjoint — part 1) needs computing, appended
-        # file-wise into the pred partitions.  Any failed precondition
-        # falls back to the full recompute (equality contract unchanged —
-        # tests/test_incremental.py compares against fresh runs either way).
-        def _edges_stage():
-            if old_linked is not None:
-                stable = (
-                    batch_overlap.isEmpty()
-                    and old_linked.withColumnRenamed("canonical", "old_canonical")
-                    .join(cat.read("linked"), "mention")
-                    .where(F.col("old_canonical") != F.col("canonical"))
-                    .isEmpty()
-                )
-                if stable:
-                    t0 = time.perf_counter()
-                    cat.append(
-                        "edges",
-                        build_edges(inc_triples, cat.read("linked")),
-                        inputs=["triples", "linked"],
-                        partition_by=["pred"],
-                    )
-                    timings["edges+append"] = round(time.perf_counter() - t0, 3)
-                    return cat.read("edges")
-            return timed(
-                "edges",
-                lambda: build_edges(cat.read("triples"), cat.read("linked")),
-                inputs=["triples", "linked"],
-                partition_by=["pred"],
-            )
-
-        f_edges = ex.submit(_edges_stage)
-        f_keyphrases.result()
-        inc_docs_out = f_docs_out.result()
-
-        f_violations = None
-        if check_invariant:
-            # increment-only: the prior run proved the old docs, and the
-            # span-sequence property is per-document, so the proofs compose
-            # — the append never pays a full-corpus scan for it
-            def _check() -> int:
-                t0 = time.perf_counter()
-                n = span_violations(new_docs, inc_docs_out).count()
-                timings["invariant_check"] = round(time.perf_counter() - t0, 3)
-                return n
-
-            f_violations = ex.submit(_check)
-
-        nodes = f_nodes.result()
-        edges = f_edges.result()
-        violations = f_violations.result() if f_violations is not None else 0
-
-    if violations:
-        raise AssertionError(
-            f"span-sequence invariant violated for {violations} docs"
-        )
-
-    # Lazy committed-stage readers (r6): each cat.read costs a file-listing
-    # + schema job; the append path built all nine eagerly (~1s of fixed
-    # overhead per append) though callers like the bench touch none of
-    # them.  Stages already read this run are seeded; the rest resolve on
-    # first access.
-    tables = _LazyTables(
-        cat,
-        ("documents", "extract", "mentions", "triples", "linked",
-         "nodes", "edges", "keyphrases", "documents_out"),
-        {"linked": linked, "nodes": nodes, "edges": edges},
-    )
-    done = set(cat.executed)
-    # non-table (CC/signature) stages stay in the ledger whether computed or
-    # appended — e.g. linked_cc_sigs+append is the proof the signature table
-    # grew incrementally; table-stage appends are reported via `appended`
-    aux = [
-        s for s in cat.executed
-        if (s[: -len("+append")] if s.endswith("+append") else s) not in tables
-    ]
-    # concurrent appends complete in nondeterministic order; report them in
-    # canonical DAG order (same rule as run_pipeline)
-    appended = [
-        f"{s}+append" for s in tables if f"{s}+append" in set(cat.executed)
-    ]
-    executed = appended + [
-        x
-        for s in tables
-        for x in ((aux if s == "linked" else []) + ([s] if s in done else []))
-    ]
-    return PipelineResult(
-        tables=tables,
-        catalog=cat,
-        executed=executed,
-        invariant_violations=violations,
-        timings=timings,
+    return _fold(
+        cat, vocab, check_invariant, None, f"{old_token}+{new_token}",
+        folded + [new_token], new_docs,
     )
 
 

@@ -12,8 +12,8 @@ def _rows(df):
 
 
 @pytest.fixture(scope="module")
-def split_corpus():
-    docs = synth_docs(150)
+def split_corpus(sentences):
+    docs = synth_docs(150, sentences=sentences)
     return docs[:100], docs[100:], docs
 
 
@@ -137,11 +137,51 @@ def test_torn_append_invisible_to_readers_and_retry_safe(
     assert not [p for p in strays if os.path.exists(p)]
 
 
-def test_reappending_an_older_batch_is_noop(spark, vocab, tmp_path):
+@pytest.mark.parametrize("stage", ["extract", "mentions", "edges"])
+def test_append_after_interrupted_append_equals_fresh(
+    spark, vocab, sentences, tmp_path, monkeypatch, stage
+):
+    """An append interrupted before ``<stage>+append`` leaves that stage
+    current with the catalog before the append.  The next append, of a
+    DIFFERENT batch, must not add only its own rows on top: every table
+    must equal a fresh run over the committed documents."""
+    from kg.catalog import StageCatalog
+
+    docs = synth_docs(100, sentences=sentences)
+    base = str(tmp_path / stage)
+    run_pipeline(
+        spark, docs_to_df(spark, docs[:60]), base, vocab=vocab, input_token="base"
+    )
+    real_append = StageCatalog.append
+
+    def interrupted(cat, name, *a, **kw):
+        if name == stage:
+            raise RuntimeError(f"interrupted before {stage}+append")
+        return real_append(cat, name, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(StageCatalog, "append", interrupted)
+        with pytest.raises(RuntimeError, match="interrupted"):
+            run_pipeline_append(
+                spark, docs_to_df(spark, docs[60:80]), base, vocab=vocab,
+                input_token="A",
+            )
+    res = run_pipeline_append(
+        spark, docs_to_df(spark, docs[80:]), base, vocab=vocab, input_token="B"
+    )
+    fresh = run_pipeline(
+        spark, res.tables["documents"], str(tmp_path / f"{stage}_fresh"),
+        vocab=vocab, input_token="all",
+    )
+    for name in fresh.tables:
+        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+
+
+def test_reappending_an_older_batch_is_noop(spark, vocab, sentences, tmp_path):
     """Membership in the explicit batch_tokens ledger (ADVICE r3): ANY
     previously folded batch — not just the most recent — is a no-op, and a
     token containing '+' does not false-positive the suffix of another."""
-    docs = synth_docs(100)
+    docs = synth_docs(100, sentences=sentences)
     b0, b1, b2 = docs[:50], docs[50:70], docs[70:90]
     base = str(tmp_path / "ledger")
     run_pipeline(
@@ -169,42 +209,7 @@ def test_reappending_an_older_batch_is_noop(spark, vocab, tmp_path):
     assert "documents+append" in res4.executed
 
 
-def test_legacy_manifest_retry_is_noop(spark, vocab, tmp_path):
-    """ADVICE r4 (medium): catalogs written by the pre-ledger release carry
-    no batch_tokens and record __input__ as the '+'-joined history — a
-    crash-retried latest batch against such a base_dir must fall back to
-    membership in the split history, not double-fold."""
-    import json
-    import os
-
-    docs = synth_docs(120)
-    base = str(tmp_path / "legacy")
-    run_pipeline(
-        spark, docs_to_df(spark, docs[:100]), base, vocab=vocab,
-        input_token="base",
-    )
-    run_pipeline_append(
-        spark, docs_to_df(spark, docs[100:]), base, vocab=vocab,
-        input_token="b1",
-    )
-    # simulate the legacy on-disk format: strip the explicit ledger
-    mp = os.path.join(base, "documents", "manifest.json")
-    with open(mp) as f:
-        m = json.load(f)
-    assert m["inputs"]["__input__"] == "base+b1"
-    del m["batch_tokens"]
-    with open(mp, "w") as f:
-        json.dump(m, f)
-    # crash-retry of the already-folded latest batch: must be a no-op
-    res = run_pipeline_append(
-        spark, docs_to_df(spark, docs[100:]), base, vocab=vocab,
-        input_token="b1",
-    )
-    assert res.executed == []
-    assert res.tables["documents"].count() == 120
-
-
-def test_append_soak_chain_stays_equal_to_fresh(spark, vocab, tmp_path):
+def test_append_soak_chain_stays_equal_to_fresh(spark, vocab, sentences, tmp_path):
     """VERDICT r4 item 8: corpus growth at 100 TB is a LONG chain of small
     folds, not one or two — soak 8 sequential ~2% appends, asserting after
     EVERY fold that the nine tables equal a fresh run over the union, that
@@ -213,7 +218,7 @@ def test_append_soak_chain_stays_equal_to_fresh(spark, vocab, tmp_path):
     import time as _time
 
     n_base, n_batch, n_folds = 400, 8, 8
-    docs = synth_docs(n_base + n_batch * n_folds)
+    docs = synth_docs(n_base + n_batch * n_folds, sentences=sentences)
     base = str(tmp_path / "soak")
     run_pipeline(
         spark, docs_to_df(spark, docs[:n_base]), base, vocab=vocab,
@@ -254,6 +259,30 @@ def test_append_requires_completed_run(spark, vocab, tmp_path, split_corpus):
         run_pipeline_append(
             spark, docs_to_df(spark, new), str(tmp_path / "empty"),
             vocab=vocab, input_token="b2",
+        )
+
+
+def test_append_without_batch_ledger_fails(spark, vocab, sentences, tmp_path):
+    """A documents manifest without the batch_tokens ledger cannot tell
+    which batches it holds: the append refuses instead of risking folding a
+    batch twice."""
+    import json
+    import os
+
+    docs = synth_docs(30, sentences=sentences)
+    base = str(tmp_path / "noledger")
+    run_pipeline(
+        spark, docs_to_df(spark, docs[:20]), base, vocab=vocab, input_token="base"
+    )
+    mp = os.path.join(base, "documents", "manifest.json")
+    with open(mp) as f:
+        m = json.load(f)
+    del m["batch_tokens"]
+    with open(mp, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="batch_tokens"):
+        run_pipeline_append(
+            spark, docs_to_df(spark, docs[20:]), base, vocab=vocab, input_token="b1"
         )
 
 

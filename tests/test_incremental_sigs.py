@@ -34,9 +34,9 @@ def kernel_spy(monkeypatch):
 
 
 def test_append_kernel_runs_only_on_new_mentions(
-    spark, vocab, tmp_path, kernel_spy
+    spark, vocab, sentences, tmp_path, kernel_spy
 ):
-    docs = synth_docs(160)
+    docs = synth_docs(160, sentences=sentences)
     old, new = docs[:120], docs[120:]
     base = str(tmp_path / "inc")
     res_old = run_pipeline(
@@ -65,11 +65,11 @@ def test_append_kernel_runs_only_on_new_mentions(
     assert res.catalog.manifest("linked_cc_sigs")["rows"] == len(m_all)
 
 
-def test_changed_corpus_rebuilds_stale_signature_table(spark, vocab, tmp_path):
+def test_changed_corpus_rebuilds_stale_signature_table(spark, vocab, sentences, tmp_path):
     """A fresh run over a DIFFERENT, non-superset corpus into the same
     base_dir must not let stale signature rows leak into linking: stale
     mentions could bridge CC components and change canonical labels."""
-    docs = synth_docs(140)
+    docs = synth_docs(140, sentences=sentences)
     base = str(tmp_path / "reused")
     run_pipeline(
         spark, docs_to_df(spark, docs[:120]), base, vocab=vocab, input_token="a"
@@ -92,9 +92,9 @@ def test_changed_corpus_rebuilds_stale_signature_table(spark, vocab, tmp_path):
 
 
 def test_noop_reappend_never_touches_kernel(
-    spark, vocab, tmp_path, kernel_spy
+    spark, vocab, sentences, tmp_path, kernel_spy
 ):
-    docs = synth_docs(130)
+    docs = synth_docs(130, sentences=sentences)
     base = str(tmp_path / "idem")
     run_pipeline(
         spark, docs_to_df(spark, docs[:100]), base, vocab=vocab, input_token="a"

@@ -6,8 +6,6 @@ with near-variants, a few Latin ones), so it needs no reference corpus
 file.
 """
 
-import random
-
 import pytest
 
 import kg.linking as L
@@ -16,6 +14,8 @@ from kg.catalog import StageCatalog
 from kg.config import LSH_MAX_BUCKET, MINHASH_PRIME
 from kg.pipeline import run_pipeline, run_pipeline_append
 from kg.synth import corpus_vocab, docs_to_df, synth_docs
+
+from conftest import tagged_lines
 
 BASE_ENTITIES = {
     "ns": ["北京市", "北京市区", "上海市", "上海市区", "南京市", "广州市", "深圳市"],
@@ -34,25 +34,8 @@ NEW_ENTITIES = {
     "nt": ["中国致公党第十一次全国代表大会代表", "国家统计局办公室", "acme corp"],
     "nr": ["王晓明同志"],
 }
-FILLER = ["今天", "在", "召开", "会议", "表示", "访问", "合作", "的", "，", "发展"]
-
-
-def _lines(entities: dict[str, list[str]], n: int, seed: int) -> list[str]:
-    """``n`` tagged lines; line i carries entity i (every surface occurs)."""
-    rng = random.Random(seed)
-    pool = [(s, tag) for tag, surfaces in sorted(entities.items()) for s in surfaces]
-    lines = []
-    for i in range(n):
-        picks = [pool[i % len(pool)]] + rng.sample(pool, rng.randint(0, 2))
-        segs = [f"{rng.choice(FILLER)}/o"]
-        for surface, tag in picks:
-            segs += [f"{surface}/{tag}", f"{rng.choice(FILLER)}/o"]
-        lines.append(" ".join(segs))
-    return lines
-
-
-BASE_LINES = _lines(BASE_ENTITIES, 40, seed=1)
-BATCH_LINES = _lines(NEW_ENTITIES, 8, seed=2) + BASE_LINES[:16]
+BASE_LINES = tagged_lines(BASE_ENTITIES, 40, seed=1)
+BATCH_LINES = tagged_lines(NEW_ENTITIES, 8, seed=2) + BASE_LINES[:16]
 
 
 def _batch(lines: list[str], n: int, seed: int, prefix: str) -> list[dict]:

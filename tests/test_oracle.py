@@ -5,11 +5,11 @@ from kg.config import MAX_LEN
 from kg.oracle import build_example, build_tag2query, decode_example, encode_sentence
 
 
-def test_gold_mention_count_matches_reference_corpus(sentences, vocab):
+def test_gold_mention_count_matches_reference_corpus(real_sentences, real_vocab):
     # 6181 gold mentions over data/test.txt (SURVEY.md §6 / BASELINE.md)
     total = 0
-    for s in sentences:
-        enc = encode_sentence(s, vocab)
+    for s in real_sentences:
+        enc = encode_sentence(s, real_vocab)
         total += sum(len(v) for v in enc.offsets.values())
     assert total == 6181
 

@@ -20,8 +20,8 @@ N_DOCS = 80
 
 
 @pytest.fixture(scope="module")
-def docs():
-    return synth_docs(N_DOCS)
+def docs(sentences):
+    return synth_docs(N_DOCS, sentences=sentences)
 
 
 @pytest.fixture(scope="module")

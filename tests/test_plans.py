@@ -49,11 +49,11 @@ def test_whole_stage_codegen_covers_agg(spark):
     assert "*(" in plan
 
 
-def test_extract_stage_has_no_shuffle(spark, vocab):
+def test_extract_stage_has_no_shuffle(spark, vocab, sentences):
     from kg.mention import explode_text_spans, extract_sentences
     from kg.synth import docs_to_df, synth_docs
 
-    docs = docs_to_df(spark, synth_docs(20))
+    docs = docs_to_df(spark, synth_docs(20, sentences=sentences))
     df = extract_sentences(explode_text_spans(docs), vocab)
     plan = _plan(df)
     assert "Exchange" not in plan  # documents -> extract is shuffle-free
@@ -85,7 +85,7 @@ def test_passthrough_single_shuffle(spark, tmp_path):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_published_tables_prune_partitions(spark, tmp_path, vocab):
+def test_published_tables_prune_partitions(spark, tmp_path, vocab, sentences):
     """VERDICT r2 item 6: nodes/edges are published hive-partitioned
     (kind/pred); a selective reader's filter must become a PartitionFilter
     at the scan — pruned BEFORE any data file is opened — and the data
@@ -97,7 +97,7 @@ def test_published_tables_prune_partitions(spark, tmp_path, vocab):
 
     res = run_pipeline(
         spark,
-        docs_to_df(spark, synth_docs(80)),
+        docs_to_df(spark, synth_docs(80, sentences=sentences)),
         str(tmp_path / "pp"),
         vocab=vocab,
         input_token="synth:80:42",

@@ -14,24 +14,24 @@ from kg.synth import REFERENCE_CORPUS
 
 
 @pytest.fixture(scope="module")
-def spark_tables(spark, vocab):
+def spark_tables(spark, real_vocab):
     docs = read_tagged_corpus(spark, REFERENCE_CORPUS)
-    extracted = extract_sentences(explode_text_spans(docs), vocab).localCheckpoint()
+    extracted = extract_sentences(explode_text_spans(docs), real_vocab).localCheckpoint()
     return docs, extracted
 
 
 @pytest.fixture(scope="module")
-def oracle_by_text(sentences, vocab):
-    t2q = build_tag2query(vocab)
+def oracle_by_text(real_sentences, real_vocab):
+    t2q = build_tag2query(real_vocab)
     mentions, triples = {}, {}
-    for line in sentences:
-        ms = sentence_mentions(line, vocab, t2q)
+    for line in real_sentences:
+        ms = sentence_mentions(line, real_vocab, t2q)
         mentions[line] = {(m["tag"], m["start"], m["end"], m["mention"]) for m in ms}
         triples[line] = sorted(sentence_triples(ms))
     return mentions, triples
 
 
-def test_full_reference_corpus_pr_gate(spark, spark_tables, oracle_by_text, sentences):
+def test_full_reference_corpus_pr_gate(spark, spark_tables, oracle_by_text, real_sentences):
     docs, extracted = spark_tables
     want_mentions, want_triples = oracle_by_text
 
@@ -49,7 +49,7 @@ def test_full_reference_corpus_pr_gate(spark, spark_tables, oracle_by_text, sent
             (t.subj, t.pred, t.obj) for t in r.triples
         )
 
-    texts = {line.strip() for line in sentences}
+    texts = {line.strip() for line in real_sentences}
     tp = fp = fn = 0
     for text in texts:
         got = got_mentions.get(text, set())
@@ -72,12 +72,12 @@ def test_full_reference_corpus_pr_gate(spark, spark_tables, oracle_by_text, sent
         assert sorted(got_triples.get(text, [])) == want_triples.get(text, [])
 
 
-def test_reference_corpus_gold_mention_total(sentences, vocab):
+def test_reference_corpus_gold_mention_total(real_sentences, real_vocab):
     # 6181 gold mentions over the raw 4365 lines (BASELINE.md)
     from kg.oracle import encode_sentence
 
     assert sum(
         len(v)
-        for line in sentences
-        for v in encode_sentence(line, vocab).offsets.values()
+        for line in real_sentences
+        for v in encode_sentence(line, real_vocab).offsets.values()
     ) == 6181

@@ -30,9 +30,9 @@ def _main_stages(executed):
     return [s for s in executed if not s.startswith("linked_cc")]
 
 
-def test_resume_skips_completed_and_recomputes_suffix(spark, vocab, tmp_path):
+def test_resume_skips_completed_and_recomputes_suffix(spark, vocab, sentences, tmp_path):
     base = str(tmp_path / "run")
-    docs = docs_to_df(spark, synth_docs(30))
+    docs = docs_to_df(spark, synth_docs(30, sentences=sentences))
 
     res1 = run_pipeline(spark, docs, base, vocab=vocab)
     assert _main_stages(res1.executed) == ALL_STAGES
@@ -53,21 +53,21 @@ def test_resume_skips_completed_and_recomputes_suffix(spark, vocab, tmp_path):
         assert _table_rows(res3.tables[n]) == rows
 
 
-def test_input_change_invalidates_downstream(spark, vocab, tmp_path):
+def test_input_change_invalidates_downstream(spark, vocab, sentences, tmp_path):
     base = str(tmp_path / "run2")
-    run_pipeline(spark, docs_to_df(spark, synth_docs(20)), base, vocab=vocab)
+    run_pipeline(spark, docs_to_df(spark, synth_docs(20, sentences=sentences)), base, vocab=vocab)
     # new input: documents checkpoint is rewritten -> full recompute
-    res = run_pipeline(spark, docs_to_df(spark, synth_docs(25)), base, vocab=vocab)
+    res = run_pipeline(spark, docs_to_df(spark, synth_docs(25, sentences=sentences)), base, vocab=vocab)
     assert _main_stages(res.executed) == ALL_STAGES
 
 
-def test_uncommitted_stage_is_recomputed(spark, vocab, tmp_path):
+def test_uncommitted_stage_is_recomputed(spark, vocab, sentences, tmp_path):
     base = str(tmp_path / "run3")
-    res1 = run_pipeline(spark, docs_to_df(spark, synth_docs(20)), base, vocab=vocab)
+    res1 = run_pipeline(spark, docs_to_df(spark, synth_docs(20, sentences=sentences)), base, vocab=vocab)
     golden = _table_rows(res1.tables["triples"])
     # corrupt a manifest mid-DAG (simulates kill between data write and commit)
     os.remove(os.path.join(base, "triples", "manifest.json"))
-    res2 = run_pipeline(spark, docs_to_df(spark, synth_docs(20)), base, vocab=vocab)
+    res2 = run_pipeline(spark, docs_to_df(spark, synth_docs(20, sentences=sentences)), base, vocab=vocab)
     assert "triples" in res2.executed
     assert "extract" not in res2.executed
     assert _table_rows(res2.tables["triples"]) == golden

@@ -162,7 +162,7 @@ def test_stateful_sessionize_stream_matches_batch(spark, tmp_path, gap_minutes):
         assert first_keys & later_keys, "no session crossed the trigger boundary"
 
 
-def test_stream_extract_kill_resume_exactly_once(spark, tmp_path, vocab):
+def test_stream_extract_kill_resume_exactly_once(spark, tmp_path, vocab, sentences):
     """VERDICT r2 item 5: the file-source extract stream, stopped after a
     checkpointed trigger and restarted from the same checkpoint over new
     files, must produce each sentence's extraction EXACTLY once, equal to
@@ -174,7 +174,7 @@ def test_stream_extract_kill_resume_exactly_once(spark, tmp_path, vocab):
     from kg.streaming import stream_extract
     from kg.synth import docs_to_df, synth_docs
 
-    docs = synth_docs(60)
+    docs = synth_docs(60, sentences=sentences)
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
     in_dir.mkdir()
 
@@ -225,7 +225,7 @@ def test_stream_extract_kill_resume_exactly_once(spark, tmp_path, vocab):
     assert len(got) > rows_after_kill  # the restart genuinely added work
 
 
-def test_stream_extract_midbatch_failure_idempotent_replay(spark, tmp_path, vocab):
+def test_stream_extract_midbatch_failure_idempotent_replay(spark, tmp_path, vocab, sentences):
     """VERDICT r3 item 8: kill DURING a micro-batch, not between them — a
     poisoned partition fails the trigger after sibling tasks may already
     have written sink part-files.  The parquet sink's manifest commit log
@@ -239,7 +239,7 @@ def test_stream_extract_midbatch_failure_idempotent_replay(spark, tmp_path, voca
     from kg.mention import EXTRACT_SCHEMA, explode_text_spans, extract_sentences
     from kg.synth import docs_to_df, synth_docs
 
-    docs = synth_docs(60)
+    docs = synth_docs(60, sentences=sentences)
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
     in_dir.mkdir()
     flag = str(tmp_path / "poison.flag")
