@@ -103,6 +103,13 @@ STAGE_OVERLAP_MAX_ROWS_PER_SLOT = 24_000
 # grew to the group total at pinned local[8]/16M; no 2-way measurement
 # there) makes serial the conservative 100-TB default.
 STAGE_OVERLAP2_MAX_ROWS_PER_SLOT = 512_000
+# The r6 figures above were measured with fixed stage groups: extract and
+# linked on the calling thread, the four per-document siblings as one pooled
+# group, then nodes, edges and the invariant check as another.  ``_fold``
+# submits each stage when its inputs commit, so above 8 slots extract and
+# linked take pool workers, keyphrases and documents_out may start before
+# mentions, and the invariant check can overlap linking.  Those overlap sets
+# are unmeasured at these widths (ROADMAP item 3).
 
 
 def _stage_executor(spark: SparkSession, n_rows: int = 0):
@@ -187,7 +194,7 @@ def _per_document(name: str, source: str, rows: Callable) -> Stage:
     return Stage(
         name, (source,),
         lambda f: rows(f, f.read(source)),
-        lambda f: rows(f, f.incs[source]),
+        lambda f: rows(f, f.inc(source)),
     )
 
 
@@ -197,10 +204,10 @@ def _linked(f: _Fold) -> DataFrame:
     checks the anchor itself.  linked then counts as incremented."""
     batch = None
     if "mentions" in f.incs:
-        batch = (f.pre["mentions"], f.incs["mentions"])
+        batch = (f.pre["mentions"], f.inc("mentions"))
     out = _run_linked_stage(f.cat, batch)
     if batch is not None:
-        f.incs["linked"] = out
+        f.incs["linked"] = []
     return out
 
 
@@ -214,7 +221,7 @@ def _nodes(f: _Fold) -> DataFrame:
     if f.incremental("nodes_mtc", ("mentions",)):
         counts = (
             f.cat.read("nodes_mtc")
-            .unionByName(mention_tag_counts(f.incs["mentions"]))
+            .unionByName(mention_tag_counts(f.inc("mentions")))
             .groupBy("mention", "tag")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
         )
@@ -239,7 +246,7 @@ def _edges_delta(f: _Fold) -> DataFrame | None:
         .where(F.col("old_canonical") != F.col("canonical"))
         .isEmpty()
     )
-    return build_edges(f.incs["triples"], linked) if stable else None
+    return build_edges(f.inc("triples"), linked) if stable else None
 
 
 # Published hive-partitioned on their dominant access key (VERDICT r2 item
@@ -277,7 +284,8 @@ class _Fold:
         self.extra = {"documents": {"__input__": token}}
         self.meta = {"documents": {"batch_tokens": tokens}}
         self.pre = {i: cat.fingerprint(i) for st in STAGES for i in st.inputs}
-        self.incs: dict[str, DataFrame] = {}  # stage -> rows it appended
+        self.incs: dict[str, list[str]] = {}  # increments taken -> files appended
+        self.inc_tables: dict[str, DataFrame] = {}
         self.tables: dict[str, DataFrame] = {}
         self.timings: dict[str, float] = {}
         self.old_linked = self.old_doc_ids = None
@@ -292,6 +300,18 @@ class _Fold:
             self.tables[stage] = self.cat.read(stage)
         return self.tables[stage]
 
+    def inc(self, stage: str) -> DataFrame:
+        """Reader of the rows ``stage`` appended in this call, opened on first
+        use.  An append that wrote no file (a partitioned write of no rows)
+        reads as the stage's schema with no rows."""
+        if stage not in self.inc_tables:
+            paths = self.incs[stage]
+            self.inc_tables[stage] = (
+                self.cat.spark.read.parquet(*paths) if paths
+                else self.read(stage).limit(0)
+            )
+        return self.inc_tables[stage]
+
     def anchored(self, stage: str, inputs) -> bool:
         """The stage's manifest records its inputs' pre-batch fingerprints."""
         return self.cat.is_complete(stage, extra_inputs={i: self.pre[i] for i in inputs})
@@ -305,25 +325,25 @@ class _Fold:
         )
 
     def step(self, st: Stage) -> None:
-        t0 = time.perf_counter()
+        """Run one stage by the rule; its timing covers the commit (a
+        precondition an increment checks runs before the clock starts)."""
         cat, name = self.cat, st.name
         kw = {
             "inputs": st.inputs, "partition_by": st.partition_by,
             "extra_inputs": self.extra.get(name), "meta": self.meta.get(name),
         }
-        if st.own_commit:
-            self.tables[name] = st.build(self)
-        elif cat.is_complete(name, st.inputs, kw["extra_inputs"]):
-            self.tables[name] = cat.read(name)
-        else:
-            rows = None
-            if st.increment and self.incremental(name, st.inputs):
+        rows = None
+        if st.increment and self.incremental(name, st.inputs):
+            if not cat.is_complete(name, st.inputs, kw["extra_inputs"]):
                 rows = st.increment(self)
-            if rows is None:
-                self.tables[name] = cat.run(name, lambda: st.build(self), **kw)
-            else:
-                self.incs[name] = cat.spark.read.parquet(*cat.append(name, rows, **kw))
-                name += "+append"
+        t0 = time.perf_counter()
+        if rows is not None:
+            self.incs[name] = cat.append(name, rows, **kw)
+            name += "+append"
+        elif st.own_commit:
+            self.tables[name] = st.build(self)
+        else:
+            self.tables[name] = cat.run(name, lambda: st.build(self), **kw)
         self.timings[name] = round(time.perf_counter() - t0, 3)
 
     def check(self) -> int:
@@ -332,7 +352,7 @@ class _Fold:
         property is per document, so the proofs compose)."""
         t0 = time.perf_counter()
         if "documents_out" in self.incs:
-            docs, out = self.incs["documents"], self.incs["documents_out"]
+            docs, out = self.inc("documents"), self.inc("documents_out")
         else:
             docs, out = self.read("documents"), self.read("documents_out")
         n = span_violations(docs, out).count()

@@ -137,14 +137,10 @@ def test_torn_append_invisible_to_readers_and_retry_safe(
     assert not [p for p in strays if os.path.exists(p)]
 
 
-@pytest.mark.parametrize("stage", ["extract", "mentions", "edges"])
-def test_append_after_interrupted_append_equals_fresh(
-    spark, vocab, sentences, tmp_path, monkeypatch, stage
-):
-    """An append interrupted before ``<stage>+append`` leaves that stage
-    current with the catalog before the append.  The next append, of a
-    DIFFERENT batch, must not add only its own rows on top: every table
-    must equal a fresh run over the committed documents."""
+def _interrupted_then_append(spark, vocab, sentences, tmp_path, monkeypatch, stage):
+    """Append batch A interrupted before ``<stage>+append``, then append a
+    different batch B; returns B's result and a fresh run over the
+    committed documents."""
     from kg.catalog import StageCatalog
 
     docs = synth_docs(100, sentences=sentences)
@@ -172,6 +168,104 @@ def test_append_after_interrupted_append_equals_fresh(
     fresh = run_pipeline(
         spark, res.tables["documents"], str(tmp_path / f"{stage}_fresh"),
         vocab=vocab, input_token="all",
+    )
+    return res, fresh
+
+
+@pytest.mark.parametrize("stage", ["extract", "mentions", "edges"])
+def test_append_after_interrupted_append_equals_fresh(
+    spark, vocab, sentences, tmp_path, monkeypatch, stage
+):
+    """An append interrupted before ``<stage>+append`` leaves that stage
+    current with the catalog before the append.  The next append, of a
+    DIFFERENT batch, must not add only its own rows on top: every table
+    must equal a fresh run over the committed documents."""
+    res, fresh = _interrupted_then_append(
+        spark, vocab, sentences, tmp_path, monkeypatch, stage
+    )
+    for name in fresh.tables:
+        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+
+
+def _fresh_and_append(spark, vocab, base, split_corpus):
+    """A fresh run over the whole corpus and a run over its first part
+    with the rest appended."""
+    old, new, full = split_corpus
+    fresh = run_pipeline(
+        spark, docs_to_df(spark, full), f"{base}/fresh", vocab=vocab,
+        input_token="t150",
+    )
+    run_pipeline(
+        spark, docs_to_df(spark, old), f"{base}/inc", vocab=vocab,
+        input_token="t100",
+    )
+    res = run_pipeline_append(
+        spark, docs_to_df(spark, new), f"{base}/inc", vocab=vocab,
+        input_token="b2",
+    )
+    return fresh, res
+
+
+@pytest.mark.parametrize("width", [2, 4])
+def test_threaded_scheduler_matches_serial(
+    spark, vocab, sentences, tmp_path, monkeypatch, split_corpus, width
+):
+    """The pool branch of the scheduler (chosen from 8 slots up): stages
+    submitted as their inputs commit and finishing in any order give the
+    serial run's tables and ``executed`` ledgers, and an interrupted append
+    followed by another batch still equals a fresh run."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import kg.pipeline
+
+    serial_fresh, serial_res = _fresh_and_append(
+        spark, vocab, str(tmp_path / "serial"), split_corpus
+    )
+    monkeypatch.setattr(
+        kg.pipeline, "_stage_executor",
+        lambda spark, n_rows=0: ThreadPoolExecutor(max_workers=width),
+    )
+    fresh, res = _fresh_and_append(spark, vocab, str(tmp_path / "pool"), split_corpus)
+    assert fresh.executed == serial_fresh.executed
+    assert res.executed == serial_res.executed
+    for name in fresh.tables:
+        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+        assert _rows(fresh.tables[name]) == _rows(serial_fresh.tables[name]), name
+    res, fresh = _interrupted_then_append(
+        spark, vocab, sentences, tmp_path, monkeypatch, "mentions"
+    )
+    for name in fresh.tables:
+        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+
+
+def test_append_of_a_batch_without_triples_equals_fresh(
+    spark, vocab, tmp_path, split_corpus
+):
+    """A batch whose sentences hold at most one entity adds no triple, so
+    the incremental edges path appends no row and its partitioned write
+    leaves no file.  The append must still commit and equal a fresh run."""
+    old, _, _ = split_corpus
+    base = str(tmp_path / "notriples")
+    run_pipeline(
+        spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
+    )
+    from kg.catalog import StageCatalog
+
+    cat = StageCatalog(spark, base)
+    known = cat.read("mentions").select("mention", "tag").first()
+    n_triples = cat.manifest("triples")["rows"]
+    new = [
+        _text_doc("doc-solo0", f"{known['mention']}/{known['tag']} 会议/o"),
+        _text_doc("doc-solo1", "今天/o 召开/o 会议/o"),
+    ]
+    res = run_pipeline_append(
+        spark, docs_to_df(spark, new), base, vocab=vocab, input_token="solo"
+    )
+    assert res.catalog.manifest("triples")["rows"] == n_triples
+    assert "edges+append" in res.executed
+    fresh = run_pipeline(
+        spark, docs_to_df(spark, old + new), str(tmp_path / "notriples_f"),
+        vocab=vocab, input_token="tf",
     )
     for name in fresh.tables:
         assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
