@@ -7,7 +7,9 @@ stage/partition granularity.  No Iceberg runtime jars exist in this sandbox
 exercises behind a thin catalog layer:
 
 - atomic committed writes (write to a temp dir, ``os.replace`` into place,
-  then commit a JSON manifest — readers only trust manifested data);
+  then commit a JSON manifest — readers only trust manifested data), from a
+  DataFrame or, for tables small enough to hold on the driver, from a
+  ``pyarrow.Table`` with no Spark job (same files, same commit);
 - per-file (= per output partition) row counts and byte sizes recorded in
   the manifest from parquet footers (metadata-only, no data scan — this is
   what keeps the ledger O(files) at 100 TB);
@@ -32,6 +34,34 @@ import uuid
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# the characters Spark escapes in a hive partition directory name
+# (ExternalCatalogUtils.escapePathName, non-Windows)
+_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list('"#%\'*/:=?\\\x7f{[]^')
+)
+
+
+def _escape(s: str) -> str:
+    return "".join(f"%{ord(ch):02X}" if ch in _ESCAPED else ch for ch in s)
+
+
+def _spark_files(df: DataFrame, path: str, partition_by: Sequence[str] | None) -> None:
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+
+
+def _schema_json(data) -> str:
+    """Spark's schema JSON of a DataFrame or a ``pyarrow.Table``."""
+    if isinstance(data, DataFrame):
+        return data.schema.json()
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(data.schema).json()
 
 
 class StageCatalog:
@@ -80,33 +110,41 @@ class StageCatalog:
         return True
 
     # -- io ---------------------------------------------------------------
-    def read(self, stage: str) -> DataFrame:
-        """Read ONLY the files listed in the committed manifest.
+    def read(self, stage: str, files: Sequence[str] | None = None) -> DataFrame:
+        """Read ONLY the files listed in the committed manifest — or
+        ``files``, absolute paths of some of them (what ``append``
+        returned).
 
         A directory scan would also return stray part-files left by a crash
         between ``append``'s file moves and its manifest commit (ADVICE r3):
         the manifest is the commit point, so readers must not trust the
         directory listing.  Explicit paths + ``basePath`` keep hive-partition
-        column recovery for partitioned stages.
+        column recovery for partitioned stages.  The manifest's schema is
+        handed to the reader, so opening a stage runs no schema-inference
+        job (partition columns still come last).
         """
+        import pyspark.sql.types as T
+
         m = self.manifest(stage)
         data = self.data_dir(stage)
         if m is None:
             # uncommitted stage: no committed files to trust
             raise ValueError(f"read of uncommitted stage {stage!r}")
-        paths = [os.path.join(data, f["file"]) for f in m["files"]]
-        if not paths:
-            import pyspark.sql.types as T
+        if files is None:
+            files = [os.path.join(data, f["file"]) for f in m["files"]]
+        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).option("basePath", data).parquet(*files)
 
-            return self.spark.createDataFrame(
-                [], T.StructType.fromJson(json.loads(m["schema"]))
-            )
-        return self.spark.read.option("basePath", data).parquet(*paths)
-
-    def read_arrow(self, stage: str, columns: Sequence[str] | None = None):
-        """The committed files of a stage as one ``pyarrow.Table``, read on
-        the driver with no Spark job — for stages small enough to hold there
-        (unpartitioned only: hive partition columns are not recovered)."""
+    def read_arrow(
+        self, stage: str, columns: Sequence[str] | None = None, files: Sequence[str] | None = None
+    ):
+        """The committed files of a stage — or ``files``, absolute paths of
+        some of them (what ``append`` returned) — as one ``pyarrow.Table``,
+        read on the driver with no Spark job, for tables small enough to
+        hold there (unpartitioned only: hive partition columns are not
+        recovered)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         import pyspark.sql.types as T
@@ -115,11 +153,9 @@ class StageCatalog:
         m = self.manifest(stage)
         if m is None:
             raise ValueError(f"read of uncommitted stage {stage!r}")
-        data = self.data_dir(stage)
-        tables = [
-            pq.read_table(os.path.join(data, f["file"]), columns=columns)
-            for f in m["files"]
-        ]
+        if files is None:
+            files = [os.path.join(self.data_dir(stage), f["file"]) for f in m["files"]]
+        tables = [pq.read_table(path, columns=columns) for path in files]
         if tables:
             return pa.concat_tables(tables)
         schema = to_arrow_schema(T.StructType.fromJson(json.loads(m["schema"])))
@@ -149,56 +185,31 @@ class StageCatalog:
     def write(
         self,
         stage: str,
-        df: DataFrame,
+        data,
         inputs: Sequence[str] = (),
         partition_by: Sequence[str] | None = None,
         extra_inputs: dict[str, str] | None = None,
         meta: dict | None = None,
     ) -> dict:
-        stage_dir = os.path.join(self.base_dir, stage)
-        os.makedirs(stage_dir, exist_ok=True)
-        tmp = os.path.join(stage_dir, f".tmp-{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-
-        files = self._file_lineage(tmp)
-        checksum = hashlib.sha256(
-            json.dumps(files, sort_keys=True).encode()
-        ).hexdigest()[:16]
-
-        final = self.data_dir(stage)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(tmp, final)
-
-        manifest = {
-            "stage": stage,
-            "status": "committed",
-            "rows": sum(f["rows"] for f in files),
-            "n_files": len(files),
-            "files": files,
-            "checksum": checksum,
-            "schema": df.schema.json(),
-            "inputs": {dep: self.fingerprint(dep) for dep in inputs}
-            | (extra_inputs or {}),
-            "created_at": time.time(),
-            **(meta or {}),
-        }
-        self._commit_manifest(stage, manifest)
-        return manifest
+        """Replace the stage's data with ``data`` and commit its manifest.
+        ``data`` is a DataFrame, or a ``pyarrow.Table`` held on the driver,
+        written with no Spark job as the files Spark would write for the
+        same rows (``_arrow_files``)."""
+        return self._commit(
+            stage, data, partition_by, inputs, extra_inputs, meta, append=False
+        )
 
     def append(
         self,
         stage: str,
-        df: DataFrame,
+        data,
         inputs: Sequence[str] = (),
         extra_inputs: dict[str, str] | None = None,
         meta: dict | None = None,
         partition_by: Sequence[str] | None = None,
     ) -> list[str]:
-        """Append ``df``'s rows to a committed stage as NEW parquet files,
+        """Append ``data``'s rows (a DataFrame or a ``pyarrow.Table``, as in
+        ``write``) to a committed stage as NEW parquet files,
         recording them in the manifest alongside the existing lineage.
         Returns the absolute paths of the appended files (callers use them
         to derive downstream increments without rescanning the stage).
@@ -217,29 +228,60 @@ class StageCatalog:
         ``read``'s basePath recovery is unchanged.  Must match the stage's
         original partitioning.
         """
-        m = self.manifest(stage)
-        if m is None:
-            raise ValueError(f"append to uncommitted stage {stage!r}")
-        self.reconcile(stage)
+        return self._commit(
+            stage, data, partition_by, inputs, extra_inputs, meta, append=True
+        )
+
+    def _commit(
+        self,
+        stage: str,
+        data,
+        partition_by: Sequence[str] | None,
+        inputs: Sequence[str],
+        extra_inputs: dict[str, str] | None,
+        meta: dict | None,
+        append: bool,
+    ):
+        """The one commit of ``write`` and ``append``: ``data``'s files fill a
+        temp dir (written by Spark from a DataFrame, by ``_arrow_files`` from
+        a ``pyarrow.Table``), whose parquet footers give the per-file
+        lineage; the files replace the stage's data (write) or are moved in
+        beside it (append); then the manifest commits.  An append reconciles
+        first, keeps the stage's schema, logs ``<stage>+append`` in
+        ``executed`` and returns the moved files; a write returns the
+        manifest."""
+        m = self.manifest(stage) if append else None
+        if append:
+            if m is None:
+                raise ValueError(f"append to uncommitted stage {stage!r}")
+            self.reconcile(stage)
         stage_dir = os.path.join(self.base_dir, stage)
+        os.makedirs(stage_dir, exist_ok=True)
         tmp = os.path.join(stage_dir, f".tmp-{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        if isinstance(data, DataFrame):
+            _spark_files(data, tmp, partition_by)
+        else:
+            self._arrow_files(data, tmp, partition_by)
         new_files = self._file_lineage(tmp)
 
         final = self.data_dir(stage)
         moved: list[str] = []
-        for f in new_files:
-            # Spark part-file names embed a fresh job UUID — collision-free
-            dst = os.path.join(final, f["file"])
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(os.path.join(tmp, f["file"]), dst)
-            moved.append(dst)
-        shutil.rmtree(tmp, ignore_errors=True)
+        if append:
+            for f in new_files:
+                # part-file names embed a fresh write UUID — collision-free
+                dst = os.path.join(final, f["file"])
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(os.path.join(tmp, f["file"]), dst)
+                moved.append(dst)
+            shutil.rmtree(tmp, ignore_errors=True)
+            files = m["files"] + new_files
+        else:
+            if os.path.exists(final):
+                shutil.rmtree(final)
+            os.replace(tmp, final)
+            files = new_files
+            m = {"stage": stage, "status": "committed"}
 
-        files = m["files"] + new_files
         manifest = dict(
             m,
             rows=sum(f["rows"] for f in files),
@@ -248,14 +290,53 @@ class StageCatalog:
             checksum=hashlib.sha256(
                 json.dumps(files, sort_keys=True).encode()
             ).hexdigest()[:16],
+            schema=m["schema"] if append else _schema_json(data),
             inputs={dep: self.fingerprint(dep) for dep in inputs}
             | (extra_inputs or {}),
             created_at=time.time(),
             **(meta or {}),
         )
         self._commit_manifest(stage, manifest)
+        if not append:
+            return manifest
         self.executed.append(f"{stage}+append")
         return moved
+
+    def _arrow_files(self, table, path: str, partition_by: Sequence[str] | None) -> None:
+        """Write ``table`` under ``path`` as Spark writes a DataFrame: the
+        session's parquet codec, Spark's part-file names, one file per
+        partition value in hive directories (``kind=<escaped value>``,
+        ``__HIVE_DEFAULT_PARTITION__`` for null) without the partition
+        columns, and one empty file for an unpartitioned table of no rows
+        (a partitioned one leaves none)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        codec = self.spark.conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
+        codec = {"uncompressed": "none", "lz4_raw": "lz4"}.get(codec, codec)
+        ext = "" if codec == "none" else f".{codec}"
+        job = uuid.uuid4()
+        os.makedirs(path)
+        if not partition_by:
+            pq.write_table(table, os.path.join(path, f"part-00000-{job}-c000{ext}.parquet"),
+                           compression=codec)
+            return
+        keys = list(zip(*(
+            pc.cast(table.column(c), pa.string()).to_pylist() for c in partition_by
+        )))
+        rows: dict[tuple, list[int]] = {}
+        for i, key in enumerate(keys):
+            rows.setdefault(key, []).append(i)
+        data = table.select([c for c in table.column_names if c not in partition_by])
+        for key, idx in rows.items():
+            sub = os.path.join(path, *(
+                f"{_escape(c)}={_HIVE_NULL if v is None else _escape(v)}"
+                for c, v in zip(partition_by, key)
+            ))
+            os.makedirs(sub, exist_ok=True)
+            pq.write_table(data.take(idx), os.path.join(sub, f"part-00000-{job}.c000{ext}.parquet"),
+                           compression=codec)
 
     def reanchor(self, stage: str, extra_inputs: dict[str, str]) -> None:
         """Record that a committed stage's unchanged data is also valid for
@@ -293,13 +374,15 @@ class StageCatalog:
     def run(
         self,
         stage: str,
-        fn: Callable[[], DataFrame],
+        fn: Callable[[], object],
         inputs: Sequence[str] = (),
         partition_by: Sequence[str] | None = None,
         extra_inputs: dict[str, str] | None = None,
         meta: dict | None = None,
     ) -> DataFrame:
-        """Compute-or-skip; always returns the committed checkpoint reader."""
+        """Compute-or-skip; ``fn`` returns what ``write`` takes (a DataFrame or
+        a ``pyarrow.Table``).  Always returns the committed checkpoint
+        reader."""
         if self.is_complete(stage, inputs, extra_inputs):
             return self.read(stage)
         self.write(

@@ -7,9 +7,17 @@ entity_id is a content hash of the canonical surface (sha2/256, 16 hex) so
 ids are stable across runs and cluster sizes (no monotonically_increasing_id,
 which is partition-layout-dependent and would break resume byte-identity).
 ``kind`` is the modal mention tag with deterministic ties (count desc, tag asc).
+
+Nodes have two builders over the same (mention, tag, cnt) statistic: the
+Spark one (``build_nodes_from_counts``) and a driver one
+(``nodes_from_counts_local``, pandas in, ``pyarrow.Table`` out; the
+statistic merged by ``merge_counts_local``) for vocabularies small enough
+to link on the driver.  They give the same rows.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -19,22 +27,15 @@ def entity_id(col):
     return F.substring(F.sha2(col, 256), 1, 16)
 
 
-def build_nodes(mentions: DataFrame, mention_map: DataFrame) -> DataFrame:
-    # ONE scan of the mentions table (r6; guide §1.2 "don't compute things
-    # twice"): every mention row carries exactly one tag, so n_mentions per
-    # canonical is the sum of its per-tag counts — the counts aggregation
-    # derives from by_tag instead of re-scanning + re-joining mentions.
-    # Shuffle payload is also pre-collapsed map-side: groupBy(mention, tag)
-    # reduces the explode-scale mention rows to the (surface x tag)
-    # vocabulary BEFORE the (broadcast) map join and the canonical agg.
-    return build_nodes_from_counts(mention_tag_counts(mentions), mention_map)
-
-
 def mention_tag_counts(mentions: DataFrame) -> DataFrame:
     """(mention, tag, cnt) — the vocabulary-sized sufficient statistic the
-    nodes table derives from.  Additive under corpus growth, so the append
-    path maintains it incrementally (run_pipeline_append's nodes_mtc
-    stage) instead of re-scanning all mentions per append."""
+    nodes table derives from, in ONE scan of the mentions table (r6): every
+    mention row carries exactly one tag, so n_mentions per canonical is the
+    sum of its per-tag counts, and the groupBy collapses explode-scale rows
+    to the (surface x tag) vocabulary before the map join.  Additive under
+    corpus growth, so the append path maintains it incrementally
+    (run_pipeline_append's nodes_mtc stage) instead of re-scanning all
+    mentions per append."""
     return mentions.groupBy("mention", "tag").agg(
         F.count("*").cast("long").alias("cnt")
     )
@@ -61,6 +62,48 @@ def build_nodes_from_counts(counts: DataFrame, mention_map: DataFrame) -> DataFr
             "n_mentions",
         )
     )
+
+
+def merge_counts_local(counts, mention_rows):
+    """``mention_tag_counts`` of ``mention_rows`` (mention, tag) added into
+    ``counts`` (mention, tag, cnt) on the driver: both are
+    ``pyarrow.Table``s, summed in pandas; returns the merged statistic as a
+    ``pyarrow.Table``."""
+    import pandas as pd
+    import pyarrow as pa
+
+    merged = (
+        pd.concat([counts.to_pandas(), mention_rows.to_pandas().assign(cnt=1)])
+        .groupby(["mention", "tag"], as_index=False, dropna=False)["cnt"].sum()
+    )
+    schema = pa.schema([("mention", pa.string()), ("tag", pa.string()), ("cnt", pa.int64())])
+    return pa.Table.from_pandas(merged, schema, preserve_index=False)
+
+
+def nodes_from_counts_local(counts, mention_map):
+    """``build_nodes_from_counts`` on the driver: ``counts`` (mention, tag,
+    cnt) and ``mention_map`` (mention, canonical) are pandas frames; returns
+    the nodes as a ``pyarrow.Table`` in the Spark builder's column order.
+    Same rules: inner join on mention, ``kind`` the modal tag with ties to
+    the smaller tag (a null tag first, as Spark sorts it), ``entity_id`` the
+    first 16 hex digits of sha256(canonical)."""
+    import pyarrow as pa
+
+    m = counts.merge(mention_map, on="mention")
+    by_tag = m.groupby(["canonical", "tag"], as_index=False, dropna=False)["cnt"].sum()
+    modal = by_tag.sort_values(
+        ["canonical", "cnt", "tag"], ascending=[True, False, True], na_position="first"
+    ).drop_duplicates("canonical")
+    n = by_tag.groupby("canonical")["cnt"].sum()
+    canonical = modal["canonical"].tolist()
+    return pa.table({
+        "entity_id": pa.array(
+            [hashlib.sha256(c.encode()).hexdigest()[:16] for c in canonical], pa.string()
+        ),
+        "canonical_text": pa.array(canonical, pa.string()),
+        "kind": pa.array(modal["tag"].tolist(), pa.string(), from_pandas=True),
+        "n_mentions": pa.array(n.loc[canonical].tolist(), pa.int64()),
+    })
 
 
 def build_edges(triples: DataFrame, mention_map: DataFrame) -> DataFrame:

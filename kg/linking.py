@@ -11,9 +11,11 @@ every hash function:
 
 - the DRIVER linker (``link_signatures``) for small signature tables: one
   Arrow read of (mention, shingles, buckets), bucket grouping, exact
-  Jaccard, ``_union_find`` — no Spark job until the map is written, and
-  no ``{stage_prefix}_final`` commit.  The pipeline takes it at or below
-  ``DRIVER_LINK_MAX_MENTIONS`` distinct mentions (``link_committed``).  It
+  Jaccard, ``_union_find``, the map committed from a ``pyarrow.Table`` — no
+  Spark job, and no ``{stage_prefix}_final`` commit.  The pipeline takes it
+  at or below ``DRIVER_LINK_MAX_MENTIONS`` distinct mentions
+  (``links_on_driver``), and keeps the signature delta and the nodes build
+  on the driver under the same rule.  It
   used less CPU and wall than the distributed path at every size measured
   on a 4-core VM (up to 200k, on three mention shapes), so the bound caps
   the driver process's memory, not a speed crossover (the table is at the
@@ -86,6 +88,19 @@ _P = MINHASH_PRIME
 # benchmark workload sits above the bound (append_growth links under 2k
 # distinct mentions), so the benchmark measures only the driver side of
 # this selection; the distributed side is covered by tests and this table.
+# (Measured when the driver path still committed its map through Spark;
+# committing it from a ``pyarrow.Table`` only lowers the driver column.)
+# The same bound keeps the rest of an append's vocabulary-sized tail on the
+# driver.  ``tools/link_crossover.py 100000 <shape> tail`` runs it step by
+# step at the bound (1% never-seen mentions, the pre-batch map held
+# throughout, as the pipeline holds it for the edges check); peak resident
+# MB of the Python driver in each step, same VM:
+#              before  old map  sig delta  link  nodes_mtc  nodes  map compare
+#   gen          180      200        210   355        281    341          324
+#   prefix       215      230        240   397        300    342          326
+#   dense        202      249        269   663        364    376          342
+# Linking sets the tail's peak on every shape; the pandas nodes_mtc merge,
+# the nodes build and the map comparison stay under it.
 DRIVER_LINK_MAX_MENTIONS = 100_000
 
 
@@ -146,6 +161,21 @@ def _signature_row(text: str, a: np.ndarray, b: np.ndarray) -> tuple[list[int], 
     return x.tolist(), band_keys(_minhash(x, a, b))
 
 
+def signature_rows(mentions: list[str]):
+    """The signature table's rows for ``mentions``, computed in-process as a
+    ``pyarrow.Table`` (mention, shingles, buckets) — the kernel's rows
+    without a Spark job, for deltas small enough to hold on the driver."""
+    import pyarrow as pa
+
+    a, b = _hash_params()
+    rows = [_signature_row(m, a, b) for m in mentions]
+    return pa.table({
+        "mention": pa.array(mentions, pa.string()),
+        "shingles": pa.array([x for x, _ in rows], pa.list_(pa.int64())),
+        "buckets": pa.array([keys for _, keys in rows], pa.list_(pa.string())),
+    })
+
+
 def band_keys(sig: np.ndarray, bands: int = LSH_BANDS) -> list[str]:
     rows = sig.shape[0] // bands
     keys = []
@@ -193,7 +223,7 @@ def mention_shingle_buckets(mention_texts: DataFrame) -> DataFrame:
 
 
 def signature_base(
-    distinct: DataFrame,
+    distinct,
     catalog=None,
     stage_name: str = "cc_sigs",
     anchor: dict[str, str] | None = None,
@@ -205,8 +235,7 @@ def signature_base(
     mention string, so when the corpus grows, the Arrow kernel only needs
     to run over never-before-seen mentions — the anti-join delta — and the
     new rows are appended file-wise through ``StageCatalog.append``
-    (tests/test_incremental_sigs.py pins that the kernel sees exactly the
-    delta).
+    (tests/test_incremental_sigs.py pins that only the delta is signed).
 
     Reconciliation (``increment=False``): ``distinct`` is the FULL current
     mention set.  Rows whose mention is NOT in it mean the catalog dir was
@@ -218,7 +247,11 @@ def signature_base(
     Delta (``increment=True``): the caller has proven the table covers
     exactly the mentions before a batch, and ``distinct`` holds only the
     batch's mentions.  Nothing can be stale, so the delta is ``distinct``
-    left-anti the table — O(batch) instead of O(corpus).
+    left-anti the table — O(batch) instead of O(corpus).  When the table is
+    small enough to link on the driver (``links_on_driver``) the caller
+    passes the batch's mentions as a list of strings: the delta is taken
+    against one Arrow read of the table's mention column, signed in-process
+    (``signature_rows``) and appended as a ``pyarrow.Table`` — no Spark job.
 
     ``anchor`` (extra manifest inputs, e.g. ``{"mentions": fingerprint}``)
     is recorded on every commit, and re-recorded when nothing changed, so a
@@ -231,20 +264,26 @@ def signature_base(
         return catalog.run(
             stage_name, lambda: mention_shingle_buckets(distinct), extra_inputs=anchor
         )
-    existing = catalog.read(stage_name).select("mention")
-    if increment:
+    n_stale, delta = 0, None
+    if isinstance(distinct, list):
+        known = set(catalog.read_arrow(stage_name, ["mention"]).column("mention").to_pylist())
+        fresh = sorted(set(distinct) - known)
+        if fresh:
+            delta = signature_rows(fresh)
+    elif increment:
         # batch-sized: collect the delta's strings so emptiness costs no extra
         # job; from pandas the kernel input is a local relation (a row list
         # would start a Python worker per partition just to unpickle it)
         import pandas as pd
 
+        existing = catalog.read(stage_name).select("mention")
         fresh = [r["mention"] for r in distinct.join(existing, "mention", "left_anti").collect()]
-        n_stale, delta = 0, None
         if fresh:
-            delta = catalog.spark.createDataFrame(
+            delta = mention_shingle_buckets(catalog.spark.createDataFrame(
                 pd.DataFrame({"mention": fresh}), "mention string"
-            )
+            ))
     else:
+        existing = catalog.read(stage_name).select("mention")
         distinct = distinct.localCheckpoint()  # scanned by reconcile + delta
         counts = (
             distinct.withColumn("_new", F.lit(1))
@@ -256,14 +295,13 @@ def signature_base(
             .collect()[0]
         )
         n_stale = counts["n_stale"]
-        delta = (
-            distinct.join(existing, "mention", "left_anti") if counts["n_delta"] else None
-        )
+        if counts["n_delta"] and not n_stale:
+            delta = mention_shingle_buckets(distinct.join(existing, "mention", "left_anti"))
     if n_stale:
         catalog.write(stage_name, mention_shingle_buckets(distinct), extra_inputs=anchor)
         catalog.executed.append(stage_name)
     elif delta is not None:
-        catalog.append(stage_name, mention_shingle_buckets(delta), extra_inputs=anchor)
+        catalog.append(stage_name, delta, extra_inputs=anchor)
     elif anchor:
         catalog.reanchor(stage_name, anchor)
     return catalog.read(stage_name)
@@ -680,18 +718,28 @@ def link_signatures(
     return {m: labels.get(m, m) for m in mentions}
 
 
-def link_committed(catalog, sig_stage: str, stage_prefix: str = "cc") -> DataFrame:
-    """(mention, canonical) over a committed signature stage, choosing the
-    path from its manifest row count (free): at or below
-    ``DRIVER_LINK_MAX_MENTIONS`` the table is read once through Arrow and
-    linked on the driver, and the map is the only thing Spark sees (no
-    surrogate ids, bucket join, verify join or ``{stage_prefix}_final``
-    commit); above it, ``link_from_signatures``."""
-    if catalog.manifest(sig_stage)["rows"] > DRIVER_LINK_MAX_MENTIONS:
+def links_on_driver(catalog, sig_stage: str) -> bool:
+    """Whether the committed signature table is small enough to link on the
+    driver: at most ``DRIVER_LINK_MAX_MENTIONS`` rows, read from its
+    manifest (free).  The pipeline keeps the whole vocabulary-sized tail —
+    signature delta, linked map, ``nodes_mtc`` and nodes — on the driver
+    under the same rule, evaluated once per call (``kg.pipeline._Fold``)."""
+    m = catalog.manifest(sig_stage)
+    return m is not None and m["rows"] <= DRIVER_LINK_MAX_MENTIONS
+
+
+def link_committed(catalog, sig_stage: str, on_driver: bool, stage_prefix: str = "cc"):
+    """(mention, canonical) over a committed signature stage.  ``on_driver``
+    (``links_on_driver``): the table is read once through Arrow and linked
+    on the driver, and the map is returned as a ``pyarrow.Table`` that
+    ``StageCatalog.write`` commits with no Spark job (no surrogate ids,
+    bucket join, verify join or ``{stage_prefix}_final`` commit); otherwise
+    ``link_from_signatures``."""
+    if not on_driver:
         return link_from_signatures(
             catalog.read(sig_stage), catalog=catalog, stage_prefix=stage_prefix
         )
-    import pandas as pd
+    import pyarrow as pa
 
     table = catalog.read_arrow(sig_stage, ["mention", "shingles", "buckets"])
     labels = link_signatures(
@@ -700,10 +748,10 @@ def link_committed(catalog, sig_stage: str, stage_prefix: str = "cc") -> DataFra
         table.column("buckets").to_pylist(),
     )
     items = sorted(labels.items())
-    return catalog.spark.createDataFrame(
-        pd.DataFrame({"mention": [k for k, _ in items], "canonical": [v for _, v in items]}),
-        "mention string, canonical string",
-    )
+    return pa.table({
+        "mention": pa.array([k for k, _ in items], pa.string()),
+        "canonical": pa.array([v for _, v in items], pa.string()),
+    })
 
 
 def link_local(

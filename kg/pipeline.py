@@ -21,19 +21,32 @@ resume, and takes one path per stage:
 The increments: the per-document stages file-append the batch's rows,
 ``linked`` refreshes its signature table from the batch's mentions
 (``_run_linked_stage``), ``nodes`` merges the batch's counts into
-``nodes_mtc``, and ``edges`` appends the batch's edges when its doc_ids are
-new and no old canonical moved.  A fresh run is ``_fold`` with no batch, and
-so is an append whose batch is already folded in (a retried or interrupted
-append): every stage left stale by an interrupted append is rebuilt.
+``nodes_mtc``, and ``edges`` appends the batch's edges when no old
+canonical moved and its doc_ids are new.  A fresh run is ``_fold`` with no
+batch, and so is an append whose batch is already folded in (a retried or
+interrupted append): every stage left stale by an interrupted append is
+rebuilt.
+
+The vocabulary-sized tail — the signature delta, the linked map,
+``nodes_mtc`` and nodes, whose inputs are sized by the distinct mentions,
+not the corpus — runs on the driver while the signature table holds at
+most ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` rows (``links_on_driver``):
+the increments are read through Arrow, merged in pandas and committed
+from ``pyarrow.Table``s by ``StageCatalog.write``/``append``, so an append
+runs no Spark job in linked or nodes.  The side is decided once per call,
+from the signature table's manifest: an append reads it before the batch
+(so the driver may hold up to the bound plus one batch's new mentions),
+a fresh run or resume after the table is refreshed.  A fresh run below
+the bound counts mentions in one Spark aggregation and builds nodes from
+it on the driver too.  Above the bound all of it is Spark.
 
 Shuffle budget at scale (SURVEY.md §4): documents→extract is shuffle-free
 (narrow explode + mapInPandas over input splits); mentions/triples are
 narrow explodes of the extract checkpoint; the first shuffles appear at
-entity linking (distinct mentions; the LSH bucket join only above
-``kg.linking.DRIVER_LINK_MAX_MENTIONS`` distinct mentions — below it the
-map is linked on the driver from one Arrow read of the signature table) and
-the grouping aggregations of nodes/edges — all keyed, AQE-coalesced,
-skew-join protected.
+entity linking (distinct mentions; the LSH bucket join only above the
+bound) and the grouping aggregations of edges, and of nodes above the bound
+(below it, the one mention-count aggregation of a rebuild) — all keyed,
+AQE-coalesced, skew-join protected.
 
 Scheduling: each stage is submitted as soon as its inputs commit, to the
 executor ``_stage_executor`` sizes from the committed corpus.
@@ -43,6 +56,7 @@ order.
 
 from __future__ import annotations
 
+import os
 import time
 from collections.abc import Callable, Mapping
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
@@ -54,13 +68,14 @@ from pyspark.sql import functions as F
 from kg.catalog import StageCatalog
 from kg.graph import (
     build_edges,
-    build_nodes,
     build_nodes_from_counts,
     mention_tag_counts,
+    merge_counts_local,
+    nodes_from_counts_local,
 )
 from kg.invariant import passthrough_docs, span_violations
 from kg.keyphrase import keyphrases_table
-from kg.linking import link_committed, signature_base
+from kg.linking import link_committed, links_on_driver, signature_base
 from kg.mention import explode_text_spans, extract_sentences, mentions_table, triples_table
 from kg.synth import corpus_vocab
 from kg.tokenizer import Vocab
@@ -125,10 +140,16 @@ def _stage_executor(spark: SparkSession, n_rows: int = 0):
 
 
 def _run_linked_stage(
-    cat: StageCatalog, batch: tuple[str, DataFrame] | None = None
-) -> DataFrame:
+    cat: StageCatalog,
+    batch: tuple[str, list[str]] | None = None,
+    on_driver: bool | None = None,
+) -> bool:
     """Refresh the durable signature table, then compute-or-skip the linked
-    stage KEYED ON THE SIGNATURE TABLE's fingerprint (r6).
+    stage KEYED ON THE SIGNATURE TABLE's fingerprint (r6).  Returns
+    ``on_driver``: whether the vocabulary-sized tail (signature delta,
+    linked, ``nodes_mtc``, nodes) runs on the driver.  The caller decides it
+    once per call (``_Fold``: an append from the pre-batch signature table);
+    None decides it here, from the refreshed table (a fresh run or resume).
 
     The linked map is a pure function of the distinct-mention set, which
     the signature table captures exactly.  Keyed on the signature table, a
@@ -141,15 +162,18 @@ def _run_linked_stage(
     mentions fingerprint it covers (``extra_inputs={"mentions": fp}``, the
     ``nodes_mtc`` pattern).  When it matches the current mentions table
     nothing is read at all.  On an append, ``batch`` is (pre-append
-    mentions fingerprint, the increment's mentions); when the table is
-    anchored on that pre-append fingerprint, the delta is the batch's
-    distinct mentions left-anti the table — no job scans the full mentions
-    table.  Otherwise (first run, changed corpus, a crash between the two
-    commits) ``signature_base`` reconciles against the full mention set.
+    mentions fingerprint, the files of the mentions increment); when the
+    table is anchored on that pre-append fingerprint, the delta is the
+    batch's distinct mentions left-anti the table — no job scans the full
+    mentions table, and on the driver none runs at all: the increment's
+    mention column is read through Arrow and the delta signed and appended
+    in-process.  Otherwise (first run, changed corpus, a crash between the
+    two commits) ``signature_base`` reconciles against the full mention set.
 
-    Linking itself runs on the driver while the signature table holds at
-    most ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` rows (one Arrow read, one
-    write of the map, no ``linked_cc_*`` round commits), distributed above
+    Linking runs on the driver (one Arrow read, the map committed from a
+    ``pyarrow.Table``, no Spark job and no ``linked_cc_*`` round commits)
+    while the signature table holds at most
+    ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` rows, distributed above
     (``kg.linking.link_committed``).  The bound caps the driver's memory:
     the driver path used less CPU and wall at every measured size (the
     table is at the constant).
@@ -159,29 +183,38 @@ def _run_linked_stage(
         grown = batch is not None and cat.is_complete(
             "linked_cc_sigs", extra_inputs={"mentions": batch[0]}
         )
-        mentions = batch[1] if grown else cat.read("mentions")
+        if not grown:
+            mentions = cat.read("mentions").select("mention").distinct()
+        elif on_driver:
+            batch_mentions = cat.read_arrow("mentions", ["mention"], files=batch[1])
+            mentions = batch_mentions.column("mention").unique().to_pylist()
+        else:
+            mentions = cat.read("mentions", files=batch[1]).select("mention").distinct()
         signature_base(
-            mentions.select("mention").distinct(), catalog=cat,
-            stage_name="linked_cc_sigs", anchor=anchor, increment=grown,
+            mentions, catalog=cat, stage_name="linked_cc_sigs", anchor=anchor, increment=grown,
         )
-    return cat.run(
+    if on_driver is None:
+        on_driver = links_on_driver(cat, "linked_cc_sigs")
+    cat.run(
         "linked",
-        lambda: link_committed(cat, "linked_cc_sigs", stage_prefix="linked_cc"),
+        lambda: link_committed(cat, "linked_cc_sigs", on_driver, stage_prefix="linked_cc"),
         inputs=["linked_cc_sigs"],
     )
+    return on_driver
 
 
 @dataclass(frozen=True)
 class Stage:
     """One node of the DAG.  ``build`` returns the stage's rows from the
-    committed inputs; ``increment`` returns the batch's rows to file-append,
-    or None when a precondition of its own fails (the stage then rebuilds).
-    A stage with ``own_commit`` keys and commits its checkpoint itself, and
-    ``build`` returns the committed reader."""
+    committed inputs (a DataFrame, or a ``pyarrow.Table`` built on the
+    driver); ``increment`` returns the batch's rows to file-append, or None
+    when a precondition of its own fails (the stage then rebuilds).  A
+    stage with ``own_commit`` keys and commits its checkpoint itself, and
+    ``build`` returns nothing (its reader opens on first use)."""
 
     name: str
     inputs: tuple[str, ...]
-    build: Callable[[_Fold], DataFrame]
+    build: Callable[[_Fold], object]
     increment: Callable[[_Fold], DataFrame | None] | None = None
     partition_by: tuple[str, ...] | None = None
     own_commit: bool = False
@@ -198,38 +231,66 @@ def _per_document(name: str, source: str, rows: Callable) -> Stage:
     )
 
 
-def _linked(f: _Fold) -> DataFrame:
+def _linked(f: _Fold) -> None:
     """linked's signature delta needs the batch's mentions, so it is handed
     the batch only when mentions took its increment; ``_run_linked_stage``
     checks the anchor itself.  linked then counts as incremented."""
     batch = None
     if "mentions" in f.incs:
-        batch = (f.pre["mentions"], f.inc("mentions"))
-    out = _run_linked_stage(f.cat, batch)
+        batch = (f.pre["mentions"], f.incs["mentions"])
+    f.on_driver = _run_linked_stage(f.cat, batch, f.on_driver)
     if batch is not None:
         f.incs["linked"] = []
-    return out
 
 
-def _nodes(f: _Fold) -> DataFrame:
-    """nodes from the additive (mention, tag, cnt) statistic.  A call with a
-    batch keeps it as ``nodes_mtc`` for the next append: the batch's counts
-    merged in when rule 2 holds for it, rebuilt from all mentions
-    otherwise.  A call without one builds nodes straight from mentions."""
-    if f.batch is None:
-        return build_nodes(f.read("mentions"), f.read("linked"))
-    if f.incremental("nodes_mtc", ("mentions",)):
-        counts = (
-            f.cat.read("nodes_mtc")
-            .unionByName(mention_tag_counts(f.inc("mentions")))
-            .groupBy("mention", "tag")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
-    else:
+def _counts(f: _Fold):
+    """The (mention, tag, cnt) statistic nodes derive from: a
+    ``pyarrow.Table`` on the driver side of the bound (``f.on_driver``), a
+    DataFrame otherwise.  A call without a batch counts all mentions in one
+    Spark aggregation (pulled through Arrow on the driver side).  A call
+    with one keeps the statistic as ``nodes_mtc`` for the next append: the
+    batch's counts merged in when rule 2 holds for it (on the driver, the
+    committed counts and the increment's mention rows are read through
+    Arrow and summed in pandas), counted from all mentions otherwise."""
+    cat = f.cat
+
+    def all_counts():
         counts = mention_tag_counts(f.read("mentions"))
-    f.cat.write("nodes_mtc", counts, inputs=["mentions"])
-    f.cat.executed.append("nodes_mtc")
-    return build_nodes_from_counts(f.cat.read("nodes_mtc"), f.read("linked"))
+        return counts.toArrow() if f.on_driver else counts
+
+    def merged():
+        if not f.incremental("nodes_mtc", ("mentions",)):
+            return all_counts()
+        if not f.on_driver:
+            return (
+                cat.read("nodes_mtc")
+                .unionByName(mention_tag_counts(f.inc("mentions")))
+                .groupBy("mention", "tag")
+                .agg(F.sum("cnt").cast("long").alias("cnt"))
+            )
+        rows = cat.read_arrow("mentions", ["mention", "tag"], files=f.incs["mentions"])
+        return merge_counts_local(cat.read_arrow("nodes_mtc"), rows)
+
+    if f.batch is None:
+        return all_counts()
+    counts = cat.run("nodes_mtc", merged, inputs=["mentions"])
+    return cat.read_arrow("nodes_mtc") if f.on_driver else counts
+
+
+def _nodes(f: _Fold):
+    """nodes from the additive (mention, tag, cnt) statistic (``_counts``):
+    built on the driver as a ``pyarrow.Table`` below the bound, by Spark
+    above it — one nodes path on each side."""
+    counts = _counts(f)
+    if f.on_driver:
+        linked = f.cat.read_arrow("linked").to_pandas()
+        return nodes_from_counts_local(counts.to_pandas(), linked)
+    return build_nodes_from_counts(counts, f.read("linked"))
+
+
+def _linked_map(cat: StageCatalog) -> dict[str, str]:
+    table = cat.read_arrow("linked")
+    return dict(zip(table.column("mention").to_pylist(), table.column("canonical").to_pylist()))
 
 
 def _edges_delta(f: _Fold) -> DataFrame | None:
@@ -237,16 +298,26 @@ def _edges_delta(f: _Fold) -> DataFrame | None:
     by (subj, pred, obj, doc_id), so a batch whose doc_ids are all new
     touches no old group, and when no old mention's canonical moved (a new
     mention joining an old component can rename it) every old row is
-    unchanged."""
-    linked = f.read("linked")
-    stable = (
-        f.batch.select("doc_id").join(f.old_doc_ids, "doc_id", "left_semi").isEmpty()
-        and f.old_linked.withColumnRenamed("canonical", "old_canonical")
-        .join(linked, "mention")
-        .where(F.col("old_canonical") != F.col("canonical"))
-        .isEmpty()
-    )
-    return build_edges(f.inc("triples"), linked) if stable else None
+    unchanged.  Canonical stability is checked first — on the driver side
+    of the bound from the old and new maps read through Arrow — so a batch
+    that renames a component (the common case) never scans the documents
+    table for its doc_ids."""
+    if f.on_driver:
+        new = _linked_map(f.cat)
+        moved = any(new.get(m) != c for m, c in f.old_map.items())
+    else:
+        moved = not (
+            f.old_linked.withColumnRenamed("canonical", "old_canonical")
+            .join(f.read("linked"), "mention")
+            .where(F.col("old_canonical") != F.col("canonical"))
+            .isEmpty()
+        )
+    if moved:
+        return None
+    old_doc_ids = f.cat.read("documents", files=f.old_docs).select("doc_id")
+    if not f.batch.select("doc_id").join(old_doc_ids, "doc_id", "left_semi").isEmpty():
+        return None
+    return build_edges(f.inc("triples"), f.read("linked"))
 
 
 # Published hive-partitioned on their dominant access key (VERDICT r2 item
@@ -288,12 +359,24 @@ class _Fold:
         self.inc_tables: dict[str, DataFrame] = {}
         self.tables: dict[str, DataFrame] = {}
         self.timings: dict[str, float] = {}
-        self.old_linked = self.old_doc_ids = None
+        # which side of the bound the vocabulary-sized tail runs on, decided
+        # once per call: for an append, here, from the pre-batch signature
+        # table; otherwise by the linked stage, from the refreshed one
+        self.on_driver = links_on_driver(cat, "linked_cc_sigs") if batch is not None else None
+        self.old_map = self.old_linked = self.old_docs = None
         if batch is not None and self.anchored("edges", ("triples", "linked")):
-            # edges' increment compares against the pre-batch map and doc_ids;
-            # the linked dir is overwritten below, documents grows
-            self.old_linked = cat.read("linked").localCheckpoint()
-            self.old_doc_ids = cat.read("documents").select("doc_id")
+            # edges' increment compares against the pre-batch map (a driver
+            # dict on the driver side) and doc_ids (read only if no
+            # canonical moved); the linked dir is overwritten below,
+            # documents grows
+            docs_dir = cat.data_dir("documents")
+            self.old_docs = [
+                os.path.join(docs_dir, x["file"]) for x in cat.manifest("documents")["files"]
+            ]
+            if self.on_driver:
+                self.old_map = _linked_map(cat)
+            else:
+                self.old_linked = cat.read("linked").localCheckpoint()
 
     def read(self, stage: str) -> DataFrame:
         if stage not in self.tables:
@@ -305,11 +388,7 @@ class _Fold:
         use.  An append that wrote no file (a partitioned write of no rows)
         reads as the stage's schema with no rows."""
         if stage not in self.inc_tables:
-            paths = self.incs[stage]
-            self.inc_tables[stage] = (
-                self.cat.spark.read.parquet(*paths) if paths
-                else self.read(stage).limit(0)
-            )
+            self.inc_tables[stage] = self.cat.read(stage, files=self.incs[stage])
         return self.inc_tables[stage]
 
     def anchored(self, stage: str, inputs) -> bool:
@@ -341,7 +420,7 @@ class _Fold:
             self.incs[name] = cat.append(name, rows, **kw)
             name += "+append"
         elif st.own_commit:
-            self.tables[name] = st.build(self)
+            st.build(self)
         else:
             self.tables[name] = cat.run(name, lambda: st.build(self), **kw)
         self.timings[name] = round(time.perf_counter() - t0, 3)
@@ -509,10 +588,13 @@ def run_pipeline_append(
     ``StageCatalog.append``; only the small shared tail is recomputed —
     linking (signatures only for the batch's never-seen mentions; the map
     over distinct mention strings, orders of magnitude smaller than the
-    corpus, on the driver while the signature table is small; skipped when
-    the batch adds no mention) and the nodes/edges aggregations.
-    A daily 1% batch therefore costs ~1% of extraction plus the tail,
-    instead of a full recompute.
+    corpus; skipped when the batch adds no mention), nodes from the
+    maintained ``nodes_mtc`` counts, and edges.  While the signature table
+    holds at most ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` rows, the
+    signature delta, the map, ``nodes_mtc`` and nodes are computed and
+    committed on the driver through Arrow, with no Spark job; above it they
+    run on Spark.  A daily 1% batch therefore costs ~1% of extraction plus
+    the tail, instead of a full recompute.
 
     Equality contract: append(A then B) produces the same nine tables as a
     fresh run over A∪B (tests/test_incremental.py) — entity ids are

@@ -57,6 +57,19 @@ def generated_sentences(n_stems: int = 40, n_lines: int = 600, seed: int = 5) ->
     return lines
 
 
+def at_both_bounds(monkeypatch):
+    """Force ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` to each side in turn and
+    yield it: 10**12 (the vocabulary-sized tail on the driver), then 0 (on
+    Spark).  Looped over in a test body rather than parametrized, so the
+    test's id stays the same; ``monkeypatch`` restores the bound at
+    teardown."""
+    import kg.linking
+
+    for bound in (10**12, 0):
+        monkeypatch.setattr(kg.linking, "DRIVER_LINK_MAX_MENTIONS", bound)
+        yield bound
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="kg-tests", master="local[4]", shuffle_partitions=8)

@@ -1,10 +1,12 @@
 """entity_pagerank: distributed power iteration vs a pure-Python twin,
-stochastic-completion invariant (total rank 1.0), self-loop exclusion."""
+stochastic-completion invariant (total rank 1.0), self-loop exclusion; the
+driver nodes builder against the Spark one."""
 
+import pandas as pd
 import pytest
 from pyspark.sql import Row
 
-from kg.graph import entity_pagerank
+from kg.graph import build_nodes_from_counts, entity_pagerank, nodes_from_counts_local
 
 
 def pagerank_local(links, damping=0.85, n_iters=3):
@@ -123,3 +125,28 @@ def test_pagerank_resumes_from_durable_iteration(spark, tmp_path):
     }
     assert got4 != got1
     assert "pagerank_final" in cat4.executed
+
+
+def test_driver_nodes_equal_spark_nodes(spark):
+    """Same rows from both builders: a component whose modal kind is a
+    count tie (the smaller tag wins), one whose members disagree, a
+    singleton, and a mention the map does not hold (dropped)."""
+    counts = pd.DataFrame({
+        "mention": ["北京", "北京市", "北京市", "上海", "上海", "李", "外"],
+        "tag": ["ns", "ns", "nt", "nt", "ns", "nr", "ns"],
+        "cnt": [2, 1, 4, 2, 2, 5, 1],
+    })
+    mention_map = pd.DataFrame({
+        "mention": ["北京", "北京市", "上海", "李"],
+        "canonical": ["北京", "北京", "上海", "李"],
+    })
+    local = nodes_from_counts_local(counts, mention_map).to_pylist()
+    distributed = build_nodes_from_counts(
+        spark.createDataFrame(counts, "mention string, tag string, cnt long"),
+        spark.createDataFrame(mention_map),
+    )
+    assert sorted(map(tuple, (r.values() for r in local))) == sorted(
+        map(tuple, distributed.collect())
+    )
+    kinds = {r["canonical_text"]: (r["kind"], r["n_mentions"]) for r in local}
+    assert kinds == {"北京": ("nt", 7), "上海": ("ns", 4), "李": ("nr", 5)}

@@ -6,6 +6,8 @@ import pytest
 from kg.pipeline import run_pipeline, run_pipeline_append
 from kg.synth import docs_to_df, synth_docs
 
+from conftest import at_both_bounds
+
 
 def _rows(df):
     return sorted(map(str, df.collect()))
@@ -82,59 +84,59 @@ def test_plain_rerun_after_append_skips_everything(
 
 
 def test_torn_append_invisible_to_readers_and_retry_safe(
-    spark, vocab, tmp_path, split_corpus
+    spark, vocab, tmp_path, split_corpus, monkeypatch
 ):
     """Crash between append's file moves and its manifest commit (ADVICE r3):
     readers must still see exactly the pre-append rows (read is
     manifest-driven, not a directory scan), and a retried append must fold
     the batch exactly once — the stray files are reconciled away, never
     double-counted."""
-    from kg.catalog import StageCatalog
-    from kg.pipeline import input_fingerprint
-
-    old, new, full = split_corpus
-    base = str(tmp_path / "torn")
-    run_pipeline(
-        spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
-    )
-    cat = StageCatalog(spark, base)
-    n_before = cat.read("documents").count()
-
-    # simulate the torn append: move the batch's part-files into data/ but
-    # crash before the manifest rewrite (monkeypatch-free: do the moves the
-    # same way append does, then stop)
     import os
     import uuid
 
-    new_df = docs_to_df(spark, new)
-    stage_dir = os.path.join(base, "documents")
-    tmp = os.path.join(stage_dir, f".tmp-{uuid.uuid4().hex}")
-    new_df.write.mode("overwrite").parquet(tmp)
-    strays = []
-    for name in os.listdir(tmp):
-        if name.endswith(".parquet"):
-            dst = os.path.join(cat.data_dir("documents"), name)
-            os.replace(os.path.join(tmp, name), dst)
-            strays.append(dst)
-    assert strays, "torn-append simulation moved no files"
+    from kg.catalog import StageCatalog
 
-    # 1. readers see the OLD committed contents only
-    cat2 = StageCatalog(spark, base)
-    assert cat2.read("documents").count() == n_before
-    assert cat2.is_complete("documents")
+    for bound in at_both_bounds(monkeypatch):
+        old, new, full = split_corpus
+        base = str(tmp_path / str(bound) / "torn")
+        run_pipeline(
+            spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
+        )
+        cat = StageCatalog(spark, base)
+        n_before = cat.read("documents").count()
 
-    # 2. a retried append folds the batch exactly once and equals fresh
-    res = run_pipeline_append(
-        spark, new_df, base, vocab=vocab, input_token="b2"
-    )
-    fresh = run_pipeline(
-        spark, docs_to_df(spark, full), str(tmp_path / "torn_fresh"),
-        vocab=vocab, input_token="t150",
-    )
-    assert _rows(res.tables["documents"]) == _rows(fresh.tables["documents"])
-    assert _rows(res.tables["edges"]) == _rows(fresh.tables["edges"])
-    # 3. the stray files were reconciled off disk
-    assert not [p for p in strays if os.path.exists(p)]
+        # simulate the torn append: move the batch's part-files into data/ but
+        # crash before the manifest rewrite (monkeypatch-free: do the moves the
+        # same way append does, then stop)
+        new_df = docs_to_df(spark, new)
+        stage_dir = os.path.join(base, "documents")
+        tmp = os.path.join(stage_dir, f".tmp-{uuid.uuid4().hex}")
+        new_df.write.mode("overwrite").parquet(tmp)
+        strays = []
+        for name in os.listdir(tmp):
+            if name.endswith(".parquet"):
+                dst = os.path.join(cat.data_dir("documents"), name)
+                os.replace(os.path.join(tmp, name), dst)
+                strays.append(dst)
+        assert strays, "torn-append simulation moved no files"
+
+        # 1. readers see the OLD committed contents only
+        cat2 = StageCatalog(spark, base)
+        assert cat2.read("documents").count() == n_before
+        assert cat2.is_complete("documents")
+
+        # 2. a retried append folds the batch exactly once and equals fresh
+        res = run_pipeline_append(
+            spark, new_df, base, vocab=vocab, input_token="b2"
+        )
+        fresh = run_pipeline(
+            spark, docs_to_df(spark, full), str(tmp_path / str(bound) / "torn_fresh"),
+            vocab=vocab, input_token="t150",
+        )
+        assert _rows(res.tables["documents"]) == _rows(fresh.tables["documents"])
+        assert _rows(res.tables["edges"]) == _rows(fresh.tables["edges"])
+        # 3. the stray files were reconciled off disk
+        assert not [p for p in strays if os.path.exists(p)]
 
 
 def _interrupted_then_append(spark, vocab, sentences, tmp_path, monkeypatch, stage):
@@ -239,36 +241,37 @@ def test_threaded_scheduler_matches_serial(
 
 
 def test_append_of_a_batch_without_triples_equals_fresh(
-    spark, vocab, tmp_path, split_corpus
+    spark, vocab, tmp_path, split_corpus, monkeypatch
 ):
     """A batch whose sentences hold at most one entity adds no triple, so
     the incremental edges path appends no row and its partitioned write
     leaves no file.  The append must still commit and equal a fresh run."""
-    old, _, _ = split_corpus
-    base = str(tmp_path / "notriples")
-    run_pipeline(
-        spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
-    )
     from kg.catalog import StageCatalog
 
-    cat = StageCatalog(spark, base)
-    known = cat.read("mentions").select("mention", "tag").first()
-    n_triples = cat.manifest("triples")["rows"]
-    new = [
-        _text_doc("doc-solo0", f"{known['mention']}/{known['tag']} 会议/o"),
-        _text_doc("doc-solo1", "今天/o 召开/o 会议/o"),
-    ]
-    res = run_pipeline_append(
-        spark, docs_to_df(spark, new), base, vocab=vocab, input_token="solo"
-    )
-    assert res.catalog.manifest("triples")["rows"] == n_triples
-    assert "edges+append" in res.executed
-    fresh = run_pipeline(
-        spark, docs_to_df(spark, old + new), str(tmp_path / "notriples_f"),
-        vocab=vocab, input_token="tf",
-    )
-    for name in fresh.tables:
-        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+    for bound in at_both_bounds(monkeypatch):
+        old, _, _ = split_corpus
+        base = str(tmp_path / str(bound) / "notriples")
+        run_pipeline(
+            spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
+        )
+        cat = StageCatalog(spark, base)
+        known = cat.read("mentions").select("mention", "tag").first()
+        n_triples = cat.manifest("triples")["rows"]
+        new = [
+            _text_doc("doc-solo0", f"{known['mention']}/{known['tag']} 会议/o"),
+            _text_doc("doc-solo1", "今天/o 召开/o 会议/o"),
+        ]
+        res = run_pipeline_append(
+            spark, docs_to_df(spark, new), base, vocab=vocab, input_token="solo"
+        )
+        assert res.catalog.manifest("triples")["rows"] == n_triples
+        assert "edges+append" in res.executed
+        fresh = run_pipeline(
+            spark, docs_to_df(spark, old + new), str(tmp_path / str(bound) / "notriples_f"),
+            vocab=vocab, input_token="tf",
+        )
+        for name in fresh.tables:
+            assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
 
 
 def test_reappending_an_older_batch_is_noop(spark, vocab, sentences, tmp_path):
@@ -303,19 +306,21 @@ def test_reappending_an_older_batch_is_noop(spark, vocab, sentences, tmp_path):
     assert "documents+append" in res4.executed
 
 
-def test_append_soak_chain_stays_equal_to_fresh(spark, vocab, sentences, tmp_path):
+def _soak_chain(spark, vocab, sentences, base, on_driver):
     """VERDICT r4 item 8: corpus growth at 100 TB is a LONG chain of small
     folds, not one or two — soak 8 sequential ~2% appends, asserting after
     EVERY fold that the nine tables equal a fresh run over the union, that
     the batch ledger grows monotonically, and recording per-fold wall
-    times to catch tail creep."""
+    times to catch tail creep.  ``on_driver``: the side of
+    ``DRIVER_LINK_MAX_MENTIONS`` the vocabulary-sized tail runs on."""
     import time as _time
+
+    from kg.linking import links_on_driver
 
     n_base, n_batch, n_folds = 400, 8, 8
     docs = synth_docs(n_base + n_batch * n_folds, sentences=sentences)
-    base = str(tmp_path / "soak")
     run_pipeline(
-        spark, docs_to_df(spark, docs[:n_base]), base, vocab=vocab,
+        spark, docs_to_df(spark, docs[:n_base]), f"{base}/soak", vocab=vocab,
         input_token="base",
     )
     fold_secs = []
@@ -323,15 +328,16 @@ def test_append_soak_chain_stays_equal_to_fresh(spark, vocab, sentences, tmp_pat
     for k in range(n_folds):
         t0 = _time.perf_counter()
         res = run_pipeline_append(
-            spark, docs_to_df(spark, docs[off : off + n_batch]), base,
+            spark, docs_to_df(spark, docs[off : off + n_batch]), f"{base}/soak",
             vocab=vocab, input_token=f"fold{k}",
         )
         fold_secs.append(round(_time.perf_counter() - t0, 2))
         off += n_batch
+        assert links_on_driver(res.catalog, "linked_cc_sigs") == on_driver
         ledger = res.catalog.manifest("documents")["batch_tokens"]
         assert ledger == ["base"] + [f"fold{i}" for i in range(k + 1)]
         fresh = run_pipeline(
-            spark, docs_to_df(spark, docs[:off]), str(tmp_path / f"fresh{k}"),
+            spark, docs_to_df(spark, docs[:off]), f"{base}/fresh{k}",
             vocab=vocab, input_token=f"t{off}",
         )
         for name in fresh.tables:
@@ -345,6 +351,26 @@ def test_append_soak_chain_stays_equal_to_fresh(spark, vocab, sentences, tmp_pat
     med = sorted(fold_secs)[len(fold_secs) // 2]
     print(f"soak fold_secs={fold_secs} median={med}")
     assert fold_secs[-1] < max(4 * med, med + 10)
+
+
+def test_append_soak_chain_stays_equal_to_fresh(
+    spark, vocab, sentences, tmp_path, monkeypatch
+):
+    """The soak chain with the vocabulary-sized tail on the driver."""
+    import kg.linking
+
+    monkeypatch.setattr(kg.linking, "DRIVER_LINK_MAX_MENTIONS", 10**12)
+    _soak_chain(spark, vocab, sentences, str(tmp_path), on_driver=True)
+
+
+def test_append_soak_chain_distributed_tail_stays_equal_to_fresh(
+    spark, vocab, sentences, tmp_path, monkeypatch
+):
+    """The soak chain with the bound at 0: the distributed tail."""
+    import kg.linking
+
+    monkeypatch.setattr(kg.linking, "DRIVER_LINK_MAX_MENTIONS", 0)
+    _soak_chain(spark, vocab, sentences, str(tmp_path), on_driver=False)
 
 
 def test_append_requires_completed_run(spark, vocab, tmp_path, split_corpus):
@@ -388,7 +414,7 @@ def _text_doc(doc_id: str, text: str) -> dict:
 
 
 def test_append_nondisjoint_doc_ids_falls_back_and_stays_equal(
-    spark, vocab, tmp_path, split_corpus
+    spark, vocab, tmp_path, split_corpus, monkeypatch
 ):
     """A batch that REUSES an old doc_id breaks the doc-partitioned-groups
     argument of the incremental edges path (r6): a fresh run MERGES the
@@ -400,54 +426,56 @@ def test_append_nondisjoint_doc_ids_falls_back_and_stays_equal(
     — both runs use check_invariant=False — and per-doc appended tables
     like keyphrases are out of contract for such input; the edge/node/link
     tail is what the fallback guarantees.)"""
-    old, new, _ = split_corpus
-    reused = [dict(new[0], doc_id=old[5]["doc_id"])] + new[1:3]
-    base = str(tmp_path / "nondisj")
-    run_pipeline(
-        spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100",
-        check_invariant=False,
-    )
-    res = run_pipeline_append(
-        spark, docs_to_df(spark, reused), base, vocab=vocab, input_token="bx",
-        check_invariant=False,
-    )
-    assert "edges" in res.executed
-    assert "edges+append" not in res.executed
-    fresh = run_pipeline(
-        spark, docs_to_df(spark, old + reused), str(tmp_path / "nondisj_f"),
-        vocab=vocab, input_token="tf", check_invariant=False,
-    )
-    for name in ("documents", "mentions", "triples", "linked", "nodes", "edges"):
-        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+    for bound in at_both_bounds(monkeypatch):
+        old, new, _ = split_corpus
+        reused = [dict(new[0], doc_id=old[5]["doc_id"])] + new[1:3]
+        base = str(tmp_path / str(bound) / "nondisj")
+        run_pipeline(
+            spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100",
+            check_invariant=False,
+        )
+        res = run_pipeline_append(
+            spark, docs_to_df(spark, reused), base, vocab=vocab, input_token="bx",
+            check_invariant=False,
+        )
+        assert "edges" in res.executed
+        assert "edges+append" not in res.executed
+        fresh = run_pipeline(
+            spark, docs_to_df(spark, old + reused), str(tmp_path / str(bound) / "nondisj_f"),
+            vocab=vocab, input_token="tf", check_invariant=False,
+        )
+        for name in ("documents", "mentions", "triples", "linked", "nodes", "edges"):
+            assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
 
 
 def test_append_canonical_rename_falls_back_and_stays_equal(
-    spark, vocab, tmp_path
+    spark, vocab, tmp_path, monkeypatch
 ):
     """A new mention that joins an old component AND becomes its new
     (lexicographically smaller) canonical renames every old edge touching
     the component — the stability check must force the full recompute and
     the appended result must equal a fresh run over the union."""
-    old = [
-        _text_doc("doc-a0", "中国致公党/ns 中国致公党人/ns"),
-        _text_doc("doc-a1", "中国致公党/ns 北京/ns"),
-    ]
-    new = [_text_doc("doc-b0", "中国致公/ns 北京/ns")]
-    base = str(tmp_path / "rename")
-    run_pipeline(
-        spark, docs_to_df(spark, old), base, vocab=vocab, input_token="tA"
-    )
-    res = run_pipeline_append(
-        spark, docs_to_df(spark, new), base, vocab=vocab, input_token="tB"
-    )
-    # precondition of the scenario: the canonical actually moved
-    linked = {r["mention"]: r["canonical"] for r in res.tables["linked"].collect()}
-    assert linked["中国致公党"] == "中国致公"
-    assert "edges" in res.executed
-    assert "edges+append" not in res.executed
-    fresh = run_pipeline(
-        spark, docs_to_df(spark, old + new), str(tmp_path / "rename_f"),
-        vocab=vocab, input_token="tF",
-    )
-    for name in fresh.tables:
-        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+    for bound in at_both_bounds(monkeypatch):
+        old = [
+            _text_doc("doc-a0", "中国致公党/ns 中国致公党人/ns"),
+            _text_doc("doc-a1", "中国致公党/ns 北京/ns"),
+        ]
+        new = [_text_doc("doc-b0", "中国致公/ns 北京/ns")]
+        base = str(tmp_path / str(bound) / "rename")
+        run_pipeline(
+            spark, docs_to_df(spark, old), base, vocab=vocab, input_token="tA"
+        )
+        res = run_pipeline_append(
+            spark, docs_to_df(spark, new), base, vocab=vocab, input_token="tB"
+        )
+        # precondition of the scenario: the canonical actually moved
+        linked = {r["mention"]: r["canonical"] for r in res.tables["linked"].collect()}
+        assert linked["中国致公党"] == "中国致公"
+        assert "edges" in res.executed
+        assert "edges+append" not in res.executed
+        fresh = run_pipeline(
+            spark, docs_to_df(spark, old + new), str(tmp_path / str(bound) / "rename_f"),
+            vocab=vocab, input_token="tF",
+        )
+        for name in fresh.tables:
+            assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name

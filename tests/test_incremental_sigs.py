@@ -14,6 +14,8 @@ import kg.linking as L
 from kg.pipeline import run_pipeline, run_pipeline_append
 from kg.synth import docs_to_df, synth_docs
 
+from conftest import at_both_bounds
+
 
 def _rows(df):
     return sorted(map(str, df.collect()))
@@ -21,48 +23,56 @@ def _rows(df):
 
 @pytest.fixture()
 def kernel_spy(monkeypatch):
-    """Record the input row count of every signature-kernel invocation."""
+    """Record how many mentions each signature computation signs, on either
+    path: the Spark kernel's input rows, or the mentions signed on the
+    driver."""
     calls = []
-    real = L.mention_shingle_buckets
+    real_kernel, real_rows = L.mention_shingle_buckets, L.signature_rows
 
-    def spy(df):
+    def kernel(df):
         calls.append(df.count())
-        return real(df)
+        return real_kernel(df)
 
-    monkeypatch.setattr(L, "mention_shingle_buckets", spy)
+    def rows(mentions):
+        calls.append(len(mentions))
+        return real_rows(mentions)
+
+    monkeypatch.setattr(L, "mention_shingle_buckets", kernel)
+    monkeypatch.setattr(L, "signature_rows", rows)
     return calls
 
 
 def test_append_kernel_runs_only_on_new_mentions(
-    spark, vocab, sentences, tmp_path, kernel_spy
+    spark, vocab, sentences, tmp_path, kernel_spy, monkeypatch
 ):
-    docs = synth_docs(160, sentences=sentences)
-    old, new = docs[:120], docs[120:]
-    base = str(tmp_path / "inc")
-    res_old = run_pipeline(
-        spark, docs_to_df(spark, old), base, vocab=vocab, input_token="a"
-    )
-    m_old = {
-        r["mention"]
-        for r in res_old.tables["mentions"].select("mention").distinct().collect()
-    }
-    n_fresh_calls = len(kernel_spy)
-    res = run_pipeline_append(
-        spark, docs_to_df(spark, new), base, vocab=vocab, input_token="b"
-    )
-    m_all = {
-        r["mention"]
-        for r in res.tables["mentions"].select("mention").distinct().collect()
-    }
-    expected_new = len(m_all) - len(m_old)
-    assert expected_new > 0, "fixture must introduce new mentions"
-    appended_kernel_rows = sum(kernel_spy[n_fresh_calls:])
-    assert appended_kernel_rows == expected_new  # kernel saw ONLY the delta
-    # the signature stage was appended, not rebuilt, and says so
-    assert "linked_cc_sigs+append" in res.executed
-    assert "linked_cc_sigs" not in res.executed
-    # persisted signature table covers exactly the full distinct mention set
-    assert res.catalog.manifest("linked_cc_sigs")["rows"] == len(m_all)
+    for bound in at_both_bounds(monkeypatch):
+        docs = synth_docs(160, sentences=sentences)
+        old, new = docs[:120], docs[120:]
+        base = str(tmp_path / str(bound) / "inc")
+        res_old = run_pipeline(
+            spark, docs_to_df(spark, old), base, vocab=vocab, input_token="a"
+        )
+        m_old = {
+            r["mention"]
+            for r in res_old.tables["mentions"].select("mention").distinct().collect()
+        }
+        n_fresh_calls = len(kernel_spy)
+        res = run_pipeline_append(
+            spark, docs_to_df(spark, new), base, vocab=vocab, input_token="b"
+        )
+        m_all = {
+            r["mention"]
+            for r in res.tables["mentions"].select("mention").distinct().collect()
+        }
+        expected_new = len(m_all) - len(m_old)
+        assert expected_new > 0, "fixture must introduce new mentions"
+        appended_kernel_rows = sum(kernel_spy[n_fresh_calls:])
+        assert appended_kernel_rows == expected_new  # signed ONLY the delta
+        # the signature stage was appended, not rebuilt, and says so
+        assert "linked_cc_sigs+append" in res.executed
+        assert "linked_cc_sigs" not in res.executed
+        # persisted signature table covers exactly the full distinct mention set
+        assert res.catalog.manifest("linked_cc_sigs")["rows"] == len(m_all)
 
 
 def test_changed_corpus_rebuilds_stale_signature_table(spark, vocab, sentences, tmp_path):

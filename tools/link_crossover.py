@@ -28,8 +28,13 @@ verify), the largest bucket, and a hash of the linked map (equal across
 paths).  The numbers behind ``DRIVER_LINK_MAX_MENTIONS`` come from this
 script.
 
+``tail`` measures the rest of an append's driver tail at N mentions
+instead (``tail``'s docstring): the driver's peak resident size in each
+step, with the pre-batch map held throughout, as the pipeline holds it.
+
 Usage, from the repository root:
     python tools/link_crossover.py N generator|prefix|dense driver|distributed [rounds]
+    python tools/link_crossover.py N generator|prefix|dense tail
 """
 
 from __future__ import annotations
@@ -50,6 +55,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import kg.linking as L  # noqa: E402
 from kg.catalog import StageCatalog  # noqa: E402
 from kg.config import LSH_MAX_BUCKET  # noqa: E402
+from kg.graph import merge_counts_local, nodes_from_counts_local  # noqa: E402
+from kg.pipeline import _linked_map  # noqa: E402
 from kg.session import get_spark  # noqa: E402
 from perfbench.corpus import _LEXICON_SIZE, Generator  # noqa: E402
 from perfbench.run import RssSampler, tree_cpu_s  # noqa: E402
@@ -102,11 +109,73 @@ def driver_peak_mb(reset: bool = False) -> float:
         return int(re.search(r"VmHWM:\s+(\d+)", f.read()).group(1)) / 1024
 
 
+def tail(cat: StageCatalog, texts: list[str], seed: int = 5) -> None:
+    """An append of 1% never-seen mentions into a base of the other 99%, on
+    the driver side of the bound, step by step as ``kg.pipeline`` runs it:
+    the pre-batch map read for the edges check (and held to the end), the
+    signature delta, linking, the ``nodes_mtc`` merge, the nodes build and
+    the map comparison.  Per step: wall seconds and the Python driver's
+    peak resident size during it.  The base's (mention, tag, cnt) statistic
+    gives each mention one or two of three tags; the batch has 5 mention
+    rows per new mention, 4 of them of base mentions."""
+    import pyarrow as pa
+
+    rng = random.Random(f"link-crossover-tail:{seed}")
+    new = set(rng.sample(texts, max(1, len(texts) // 100)))
+    base = [t for t in texts if t not in new]
+    df = cat.spark.createDataFrame([(m,) for m in base], "mention string")
+    L.signature_base(df, catalog=cat, stage_name="sigs", anchor={"mentions": "pre"})
+    cat.run("linked", lambda: L.link_committed(cat, "sigs", True, "cc"), inputs=["sigs"])
+    tags = ("nr", "ns", "nt")
+    counts = [(m, t, rng.randint(1, 50)) for m in base for t in rng.sample(tags, rng.randint(1, 2))]
+    cat.write("nodes_mtc", pa.table({
+        "mention": [m for m, _, _ in counts], "tag": [t for _, t, _ in counts],
+        "cnt": pa.array([c for _, _, c in counts], pa.int64()),
+    }))
+    batch = sorted(new) + rng.choices(base, k=4 * len(new))
+    rows = pa.table({"mention": batch, "tag": [rng.choice(tags) for _ in batch]})
+    del df, counts, base
+
+    def step(name, fn):
+        driver_peak_mb(reset=True)
+        t0 = time.perf_counter()
+        out = fn()
+        print(f"tail {name}: {time.perf_counter() - t0:.2f} s, driver peak {driver_peak_mb():.0f} MB",
+              flush=True)
+        return out
+
+    driver_peak_mb(reset=True)
+    print(f"tail n={len(texts)}: base {len(texts) - len(new)}, new {len(new)}, "
+          f"batch rows {rows.num_rows}, driver before {driver_peak_mb():.0f} MB", flush=True)
+    old_map = step("old map", lambda: _linked_map(cat))
+    step("signature delta", lambda: L.signature_base(
+        sorted(set(batch)), catalog=cat, stage_name="sigs", anchor={"mentions": "post"},
+        increment=True,
+    ))
+    step("link", lambda: cat.write(
+        "linked", L.link_committed(cat, "sigs", True, "cc"), inputs=["sigs"]
+    ))
+    step("nodes_mtc", lambda: cat.write(
+        "nodes_mtc", merge_counts_local(cat.read_arrow("nodes_mtc"), rows)
+    ))
+    step("nodes", lambda: cat.write("nodes", nodes_from_counts_local(
+        cat.read_arrow("nodes_mtc").to_pandas(), cat.read_arrow("linked").to_pandas()
+    ), partition_by=("kind",)))
+
+    def compare():
+        now = _linked_map(cat)
+        return sum(now.get(m) != c for m, c in old_map.items())
+
+    moved = step("map comparison", compare)
+    print(f"RESULT tail n={len(texts)}: {moved} old mentions moved, "
+          f"nodes {cat.manifest('nodes')['rows']}")
+
+
 def main(n: int, corpus: str, path: str, rounds: int) -> None:
     texts = {
         "generator": generator_mentions, "prefix": prefix_mentions, "dense": dense_mentions,
     }[corpus](n)
-    L.DRIVER_LINK_MAX_MENTIONS = {"driver": 10**12, "distributed": 0}[path]
+    L.DRIVER_LINK_MAX_MENTIONS = {"driver": 10**12, "distributed": 0, "tail": 10**12}[path]
     work = tempfile.mkdtemp(prefix="link_crossover_")
     spark = get_spark(
         app_name="link-crossover", shuffle_partitions=8,
@@ -115,6 +184,8 @@ def main(n: int, corpus: str, path: str, rounds: int) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         cat = StageCatalog(spark, work)
+        if path == "tail":
+            return tail(cat, texts)
         df = spark.createDataFrame([(m,) for m in texts], "mention string")
         L.signature_base(df, catalog=cat, stage_name="sigs")
         per_mention, largest = bucket_load(cat, "sigs")
@@ -128,8 +199,10 @@ def main(n: int, corpus: str, path: str, rounds: int) -> None:
                 driver_peak_mb(reset=True)
                 with RssSampler() as rss:
                     c0, t0 = tree_cpu_s(cpu_sampler), time.perf_counter()
+                    on_driver = L.links_on_driver(cat, "sigs")
                     out = cat.run(
-                        "linked", lambda: L.link_committed(cat, "sigs", "cc"), inputs=["sigs"]
+                        "linked", lambda: L.link_committed(cat, "sigs", on_driver, "cc"),
+                        inputs=["sigs"],
                     )
                     wall, cpu = time.perf_counter() - t0, tree_cpu_s(cpu_sampler) - c0
                 peak_mb, own_mb = rss.peak / 2**20, driver_peak_mb()
