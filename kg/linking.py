@@ -20,7 +20,8 @@ every hash function:
   on a 4-core VM (up to 200k, on three mention shapes), so the bound caps
   the driver process's memory, not a speed crossover (the table is at the
   constant); ``link_local`` is the same linker over signatures computed
-  in-process;
+  in-process, and its candidate/verify core (``verified_pairs``) also
+  finishes ``kg.ops.dedup.minhash_clusters`` below that module's bound;
 - the DISTRIBUTED path (``link_from_signatures``) above the bound: a bucket
   self-equi-join (salted for hot buckets, AQE skew-join as backstop), a
   JVM array_intersect verify, and ``connected_components`` with durable
@@ -672,25 +673,21 @@ def link_from_signatures(
 # ---------------------------------------------------------------------------
 
 
-def link_signatures(
-    mentions: list[str],
+def verified_pairs(
+    ids: list,
     shingles: list[list[int]],
     buckets: list[list[str]],
-    threshold: float = LINK_JACCARD,
-    max_bucket: int = LSH_MAX_BUCKET,
-) -> dict[str, str]:
-    """Candidate/verify/CC over signature rows held on the driver ->
-    {mention: canonical} for every mention.
-
-    Same semantics as the distributed path: candidates are the pairs that
-    share a bucket of at most ``max_bucket`` members; a pair links when its
-    exact shingle Jaccard (two empty sets count as identical) is >=
-    ``threshold``, computed in the same double division as the JVM verify;
-    the canonical is the component's smallest mention.  Verified pairs
-    stream into the union-find, so memory stays O(mentions) however many
-    pairs verify; a pair met in several bands is verified once per band —
-    cheaper than a pair set sized by the candidates, and the components
-    are the same."""
+    threshold: float,
+    max_bucket: int,
+):
+    """Candidate and verify over signature rows held on the driver: yields
+    ``(ids[i], ids[j])`` for each pair that shares a bucket of at most
+    ``max_bucket`` members and whose exact shingle Jaccard (two empty sets
+    count as identical) is >= ``threshold``, computed in the same double
+    division as the JVM verify (``verified_edge_ids``).  A pair met in
+    several bands is yielded once per band — cheaper than a pair set sized
+    by the candidates; union-find consumers get the same components.
+    Shared by ``link_signatures`` and ``kg.ops.dedup.minhash_clusters``."""
     members: dict[str, list[int]] = {}
     for i, keys in enumerate(buckets):
         for key in keys:
@@ -702,19 +699,33 @@ def link_signatures(
             sets[i] = frozenset(shingles[i])
         return sets[i]
 
-    def verified():
-        for idx in members.values():
-            if len(idx) > max_bucket:
-                continue
-            for i, j in combinations(idx, 2):
-                s1, s2 = shingle_set(i), shingle_set(j)
-                n_common = len(s1 & s2)
-                n_union = len(s1) + len(s2) - n_common
-                sim = 1.0 if n_union == 0 else n_common / n_union
-                if sim >= threshold:
-                    yield mentions[i], mentions[j]
+    for idx in members.values():
+        if len(idx) > max_bucket:
+            continue
+        for i, j in combinations(idx, 2):
+            s1, s2 = shingle_set(i), shingle_set(j)
+            n_common = len(s1 & s2)
+            n_union = len(s1) + len(s2) - n_common
+            sim = 1.0 if n_union == 0 else n_common / n_union
+            if sim >= threshold:
+                yield ids[i], ids[j]
 
-    labels = _union_find(verified())
+
+def link_signatures(
+    mentions: list[str],
+    shingles: list[list[int]],
+    buckets: list[list[str]],
+    threshold: float = LINK_JACCARD,
+    max_bucket: int = LSH_MAX_BUCKET,
+) -> dict[str, str]:
+    """Candidate/verify/CC over signature rows held on the driver ->
+    {mention: canonical} for every mention.
+
+    Same semantics as the distributed path: ``verified_pairs`` gives the
+    linked pairs, which stream into the union-find, so memory stays
+    O(mentions) however many pairs verify; the canonical is the
+    component's smallest mention."""
+    labels = _union_find(verified_pairs(mentions, shingles, buckets, threshold, max_bucket))
     return {m: labels.get(m, m) for m in mentions}
 
 

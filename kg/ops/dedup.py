@@ -10,6 +10,15 @@
 - SimHash: 64-bit signatures via one shuffle-free Arrow kernel, plus a
   banded hamming near-dup join that consumes them (``simhash_neardup``).
 
+Driver finish: ``minhash_clusters`` and ``simhash_neardup`` checkpoint
+their kernel output once, then pull at most ``DRIVER_DEDUP_MAX_ROWS`` + 1
+rows of it through Arrow.  When it fits (and its shingles or output pairs
+stay under ``DRIVER_DEDUP_MAX_ROWS * DRIVER_ITEMS_PER_ROW``) they finish on
+the driver — the entity linker's bucket verify and union-find, a NumPy
+half-split probe join — and return a DataFrame built from Arrow: below the
+bound each Spark job costs more than the work it would spread (the table at
+the constant).  Above it the Spark plans below run unchanged.
+
 At 100 TB: exact dedup is one shuffle on a 16-byte key; LSH is the standard
 band-bucket equi-join (skew handled by AQE + the mega-bucket cap); the
 Jaccard verify join only touches candidate pairs, never the cross product.
@@ -20,13 +29,93 @@ DISTINCT signatures, so exact-duplicate mass never fans out through it.
 
 from __future__ import annotations
 
+from itertools import combinations
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kg.linking import _hash_params, band_keys, connected_components
+from kg.linking import (
+    _hash_params,
+    _union_find,
+    band_keys,
+    candidate_pairs,
+    connected_components,
+    verified_edge_ids,
+    verified_pairs,
+)
 
 _P = 2_147_483_647
+
+# Signature tables with at most this many rows finish on the driver
+# (``_pull_small``); larger ones take the Spark plans.  Measured with
+# ``tools/leaf_profile.py crossover`` on a 4-core VM (local[4], 1 GB driver
+# heap, as perfbench runs): one leaf call into the noop sink, median of 3
+# after one warm-up, the bound forced to each side.  CPU s of the process
+# tree / wall s / Spark jobs (the parquet schema read not counted), and MB
+# = the Python driver's peak resident size during the call over its size
+# before it.  "gen" = ``perfbench.tables`` documents (10-100 words of a
+# 30-word vocabulary, 5% near-duplicates); "long" = 2,000 words each from a
+# 20,000-word vocabulary (about 2,000 shingles per document):
+#                             driver                 spark
+#   simhash_neardup  gen    1,000    1.95 /  0.79 / 3    1    3.37 / 1.23 /  7
+#                    gen    5,000    1.58 /  0.81 / 3   13    3.46 / 1.51 /  7
+#                    gen   20,000    2.89 /  1.49 / 3   54    4.93 / 3.00 /  7
+#                    gen   40,000    4.34 /  2.95 / 3  151    9.01 / 5.91 /  7
+#                    long     250    3.36 /  1.07 / 3    0    4.78 / 1.74 /  7
+#                    long   1,000    4.04 /  2.53 / 3    0    5.83 / 3.29 /  7
+#                    long   2,000    4.73 /  3.35 / 3    0    7.07 / 4.95 /  7
+#   minhash_clusters gen    1,000    1.31 /  0.82 / 3    0    5.41 / 1.93 / 14
+#                    gen    5,000    2.34 /  1.57 / 3    9    3.99 / 1.91 / 14
+#                    gen   20,000    6.22 /  4.68 / 3   75    8.70 / 4.88 / 14
+#                    gen   40,000   11.56 /  9.50 / 3  183   12.04 / 7.83 / 14
+#                    long     250    3.35 /  1.78 / 4   13    7.07 / 2.72 / 14
+#                    long   1,000    6.71 /  5.12 / 4   57    9.20 / 5.58 / 14
+#                    long   2,000   12.77 / 10.22 / 4  140   10.34 / 6.94 / 14
+# Both sides gave the same rows in every cell.  CPU decides (it is the
+# benchmark's op_cpu_s): simhash_neardup's driver side uses 1.4-2.1x less
+# at every size, and its memory (54 MB at 20k rows, 151 at 40k) sets its
+# bound; minhash_clusters' driver side wins up to about 2M shingles (20k
+# gen rows, 1,000 long documents), draws at 2.2M (40k gen rows) and loses
+# at 4M (2,000 long documents): its cost follows the shingles, not the rows.
+# 20k rows keeps both leaves below that crossover and under 80 MB.
+DRIVER_DEDUP_MAX_ROWS = 20_000
+# Items per row the driver side holds at most on average: shingles pulled
+# for minhash_clusters, document pairs built by simhash_neardup.  The cap,
+# DRIVER_DEDUP_MAX_ROWS * 100 = 2M, sits at the shingle crossover above;
+# the generator's longest document has 100 words (99 shingles), so on its
+# shape the row bound alone decides.
+DRIVER_ITEMS_PER_ROW = 100
+
+
+def _pull_small(df: DataFrame, columns: list[str], items: str | None = None):
+    """``columns`` of ``df`` as a ``pyarrow.Table`` when ``df`` has at most
+    ``DRIVER_DEDUP_MAX_ROWS`` rows, else None, from one pull of at most
+    bound + 1 rows.  ``items`` names an array column whose total length is
+    capped too, at ``DRIVER_DEDUP_MAX_ROWS * DRIVER_ITEMS_PER_ROW``: rows
+    longer than ``DRIVER_ITEMS_PER_ROW`` arrive without their array, so the
+    pull holds at most that many items whatever the rows' lengths, and only
+    a table with such rows that fits under the cap is pulled again whole."""
+    import pyarrow.compute as pc
+
+    cap = DRIVER_DEDUP_MAX_ROWS
+    limit = min(cap, 2**31 - 2) + 1  # DataFrame.limit takes an int32
+    cols = [F.col(c) for c in columns]
+    if items is not None:
+        n = F.size(items)
+        cols = [F.when(n <= DRIVER_ITEMS_PER_ROW, F.col(c)).alias(c) if c == items else F.col(c) for c in columns]
+        cols.append(n.alias("_items"))
+    table = df.select(*cols).limit(limit).toArrow()
+    if table.num_rows == limit:
+        return None
+    if items is None:
+        return table
+    n = table.column("_items")
+    if (pc.sum(n).as_py() or 0) > cap * DRIVER_ITEMS_PER_ROW:
+        return None
+    if (pc.max(n).as_py() or 0) > DRIVER_ITEMS_PER_ROW:
+        return df.select(*columns).toArrow()
+    return table.select(columns)
 
 
 def exact_duplicates(docs: DataFrame, only_dupes: bool = False) -> DataFrame:
@@ -240,41 +329,24 @@ def minhash_edges(
     threshold: float = 0.6,
     max_bucket: int = 100,
 ) -> DataFrame:
-    """Verified near-dup edges (m1, m2): banded LSH bucket join over the
-    one-pass signature table, then a pure-JVM exact-Jaccard verify via
-    ``array_intersect`` on the per-doc shingle-hash arrays — no document
-    text ever crosses a shuffle after the initial scan, and no Python runs
-    past the signature kernel (VERDICT r2 item 2)."""
-    base = doc_shingle_buckets(
-        docs, num_hashes=num_hashes, bands=bands
-    ).localCheckpoint()  # kernel runs once; reused by buckets + verify join
+    """Verified near-dup edges (m1, m2) over the one-pass signature table."""
+    base = doc_shingle_buckets(docs, num_hashes=num_hashes, bands=bands).localCheckpoint()
+    return _verified_edges(base, threshold, max_bucket)
 
-    buckets = base.select("doc_id", F.explode("buckets").alias("bucket"))
-    sized = buckets.join(
-        buckets.groupBy("bucket").agg(F.count("*").alias("bsz")), "bucket"
-    ).where(F.col("bsz") <= max_bucket)
-    left = sized.select("bucket", F.col("doc_id").alias("id_a"))
-    right = sized.select("bucket", F.col("doc_id").alias("id_b"))
-    pairs = (
-        left.join(right, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
-    sh = base.select("doc_id", "shingles")
-    cand = pairs.join(
-        sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")),
-        "id_a",
-    ).join(
-        sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")),
-        "id_b",
+def _verified_edges(base: DataFrame, threshold: float, max_bucket: int) -> DataFrame:
+    """The Spark side of the verify: the linker's banded LSH bucket join
+    (``kg.linking.candidate_pairs``, salted for hot buckets) and its
+    pure-JVM exact-Jaccard verify (``verified_edge_ids``, ``array_intersect``
+    on the per-doc shingle-hash arrays) over the checkpointed signature
+    table — no document text crosses a shuffle after the initial scan, and
+    no Python runs past the signature kernel (VERDICT r2 item 2).  Documents
+    without words have no row, so no shingle set is empty."""
+    core = base.select(F.col("doc_id").alias("mid"), "shingles", "buckets")
+    pairs = candidate_pairs(
+        core.select("mid", F.explode("buckets").alias("bucket")), max_bucket=max_bucket, key="mid"
     )
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = n_common / (F.size("sh_a") + F.size("sh_b") - n_common)
-    return cand.where(jac >= threshold).select(
-        F.col("id_a").alias("m1"), F.col("id_b").alias("m2")
-    )
+    return verified_edge_ids(pairs, core.select("mid", "shingles"), threshold).select("m1", "m2")
 
 
 def minhash_clusters(
@@ -287,17 +359,39 @@ def minhash_clusters(
     """Near-duplicate clusters: (doc_id, cluster_id); singletons excluded.
 
     shingle -> MinHash -> band -> bucket-join -> verify -> CC
-    (SURVEY.md pattern reused from entity linking; word 2-gram shingles).
-    See ``minhash_edges`` for the 100-TB plan shape of the verify stage.
+    (SURVEY.md pattern reused from entity linking; word 2-gram shingles);
+    the cluster id is the cluster's smallest doc_id (as a string).
+
+    The signature kernel runs once, into a ``localCheckpoint``.  When that
+    table has at most ``DRIVER_DEDUP_MAX_ROWS`` rows and
+    ``DRIVER_DEDUP_MAX_ROWS * DRIVER_ITEMS_PER_ROW`` shingles, it is pulled
+    through Arrow and finished on the driver by the entity linker's own
+    bucket verify and union-find (``kg.linking.verified_pairs``,
+    ``_union_find``): same candidates, same double-division verify, same
+    component-minimum labels.  Otherwise the Spark plan runs
+    (``_verified_edges``, then ``connected_components``).
     """
-    edges = minhash_edges(
-        docs,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=threshold,
-        max_bucket=max_bucket,
-    )
-    comp = connected_components(edges)
+    base = doc_shingle_buckets(docs, num_hashes=num_hashes, bands=bands).localCheckpoint()
+    local = _pull_small(base, ["doc_id", "shingles", "buckets"], items="shingles")
+    if local is not None:
+        import pyarrow as pa
+
+        labels = _union_find(verified_pairs(
+            local.column("doc_id").to_pylist(),
+            local.column("shingles").to_pylist(),
+            local.column("buckets").to_pylist(),
+            threshold,
+            max_bucket,
+        ))
+        items = sorted(labels.items())
+        return docs.sparkSession.createDataFrame(
+            pa.table({
+                "doc_id": pa.array([k for k, _ in items], pa.string()),
+                "cluster_id": pa.array([v for _, v in items], pa.string()),
+            }),
+            "doc_id string, cluster_id string",
+        )
+    comp = connected_components(_verified_edges(base, threshold, max_bucket))
     return comp.select(F.col("mention").alias("doc_id"), F.col("canonical").alias("cluster_id"))
 
 
@@ -376,7 +470,18 @@ def simhash64(docs: DataFrame) -> DataFrame:
 def simhash_neardup(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance (VERDICT r2 item 1):
     (doc_id_a, doc_id_b, hamming) for every pair with
-    ``bit_count(sig_a XOR sig_b) <= max_hamming``.
+    ``bit_count(sig_a XOR sig_b) <= max_hamming``, ``doc_id_a < doc_id_b``,
+    in the input's doc_id type.  ``max_hamming`` must lie in 0..3 (the
+    half-split argument below needs it); anything else raises ValueError
+    before any Spark job.
+
+    The signature kernel runs once, into a ``localCheckpoint``.  When that
+    table has at most ``DRIVER_DEDUP_MAX_ROWS`` rows it is pulled through
+    Arrow and paired on the driver (``_near_pairs_local``): the same
+    half-split probe join over distinct signatures in NumPy, then the
+    expansion to document pairs, hamming-0 pairs included.  Should that
+    expansion exceed ``DRIVER_DEDUP_MAX_ROWS * DRIVER_ITEMS_PER_ROW`` pairs
+    (exact-duplicate mass), or the table be larger, the Spark plan runs:
 
     Half-split multi-probe join (round-6 rewrite; guide §2.3 "shuffle
     keys, not payloads" applied to candidate volume): hamming <= 3 over 64
@@ -395,16 +500,27 @@ def simhash_neardup(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     query).  Half-keys live in a 2^32 space, so random collisions are
     ~2000x rarer (O(n^2 * 132 / 2^33)) for 66 generated rows per
     signature — the join streams 66n skinny rows instead of materializing
-    n^2/32768 candidates.  Radius <= 3 asserted (the half-split argument
-    needs it).
+    n^2/32768 candidates.
 
     100-TB shape: the probe join runs over DISTINCT signatures only —
     exact-duplicate mass (millions of docs sharing one signature) never
     fans out through the join; identical-signature doc pairs re-enter at
     the end via a plain self-equi-join on the signature.
     """
-    assert max_hamming <= 3, "half-split probing guarantees recall only to radius 3"
-    sigs = simhash64(docs).localCheckpoint()  # kernel once: reused 3x below
+    if not 0 <= max_hamming <= 3:
+        raise ValueError(
+            f"max_hamming={max_hamming} outside 0..3: half-split probing "
+            "guarantees recall only up to radius 3"
+        )
+    sigs = simhash64(docs).localCheckpoint()  # kernel once: reused below
+    local = _pull_small(sigs, ["doc_id", "simhash"])
+    if local is not None:
+        pairs = _near_pairs_local(local, max_hamming)
+        if pairs is not None:
+            id_type = dict(sigs.dtypes)["doc_id"]
+            return docs.sparkSession.createDataFrame(
+                pairs, f"doc_id_a {id_type}, doc_id_b {id_type}, hamming int"
+            )
 
     dsig = sigs.select("simhash").distinct()
     halves = dsig.select(
@@ -464,6 +580,93 @@ def simhash_neardup(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
         )
     )
     return cross.unionAll(same)
+
+
+_M1, _M2, _M4, _H01 = (
+    np.uint64(c)
+    for c in (0x5555555555555555, 0x3333333333333333, 0x0F0F0F0F0F0F0F0F, 0x0101010101010101)
+)
+
+
+def _popcount(x: np.ndarray) -> np.ndarray:
+    """Set bits of each element of a uint64 array (SWAR; NumPy 1.x has no
+    ``bitwise_count``)."""
+    x = x - ((x >> np.uint64(1)) & _M1)
+    x = (x & _M2) + ((x >> np.uint64(2)) & _M2)
+    x = (x + (x >> np.uint64(4))) & _M4
+    return (x * _H01) >> np.uint64(56)
+
+
+def _near_sig_pairs(sig: np.ndarray, max_hamming: int):
+    """Index pairs (i < j) of the distinct uint64 signatures ``sig`` within
+    ``max_hamming`` bits, and their distances: ``simhash_neardup``'s
+    half-split probe join in NumPy.  Build keys are both 32-bit halves,
+    tagged by half in bit 32; probe keys are each build key and its 32
+    single-bit flips; sorted-array lookups stand in for the equi-join.
+    None when the join would hold more than ``DRIVER_DEDUP_MAX_ROWS *
+    DRIVER_ITEMS_PER_ROW`` candidates (signatures crowding one half;
+    580k at 20k generator documents)."""
+    n = sig.size
+    keys = np.concatenate([sig & np.uint64(0xFFFFFFFF), (sig >> np.uint64(32)) | np.uint64(1 << 32)])
+    owner = np.tile(np.arange(n), 2)
+    order = np.argsort(keys, kind="stable")
+    build, build_owner = keys[order], owner[order]
+    flips = np.concatenate([[0], 1 << np.arange(32)]).astype(np.uint64)
+    probes = (keys[:, None] ^ flips[None, :]).ravel()
+    lo = np.searchsorted(build, probes, "left")
+    hits = np.searchsorted(build, probes, "right") - lo
+    if hits.sum() > DRIVER_DEDUP_MAX_ROWS * DRIVER_ITEMS_PER_ROW:
+        return None
+    a = np.repeat(np.repeat(owner, flips.size), hits)
+    b = build_owner[np.repeat(lo - (np.cumsum(hits) - hits), hits) + np.arange(a.size)]
+    keep = (a < b) & (_popcount(sig[a] ^ sig[b]) <= max_hamming)
+    code = np.unique(a[keep] * n + b[keep])
+    i, j = code // n, code % n
+    return i, j, _popcount(sig[i] ^ sig[j]).astype(np.int32)
+
+
+def _near_pairs_local(local, max_hamming: int):
+    """``simhash_neardup``'s rows from the pulled (doc_id, simhash) table as
+    a ``pyarrow.Table``, or None when they, or the probe join's candidates,
+    would exceed ``DRIVER_DEDUP_MAX_ROWS * DRIVER_ITEMS_PER_ROW``.  Signature pairs
+    come from the distinct signatures; each expands to the cross product of
+    its two document groups, (least, greatest) doc_id, and each group adds
+    its own doc_id_a < doc_id_b pairs at hamming 0 — the Spark side's
+    ``cross`` and ``same``."""
+    import pyarrow as pa
+
+    sig, group, size = np.unique(
+        local.column("simhash").to_numpy(), return_inverse=True, return_counts=True
+    )
+    near = _near_sig_pairs(sig.view(np.uint64), max_hamming)
+    if near is None:
+        return None
+    i, j, ham = near
+    n_out = int((size[i] * size[j]).sum() + (size * (size - 1) // 2).sum())
+    if n_out > DRIVER_DEDUP_MAX_ROWS * DRIVER_ITEMS_PER_ROW:
+        return None
+    members: list[list] = [[] for _ in range(sig.size)]
+    for doc, g in zip(local.column("doc_id").to_pylist(), group.tolist()):
+        members[g].append(doc)
+    out_a, out_b, out_h = [], [], []
+    for x, y, h in zip(i.tolist(), j.tolist(), ham.tolist()):
+        for p in members[x]:
+            for q in members[y]:
+                out_a.append(min(p, q))
+                out_b.append(max(p, q))
+                out_h.append(h)
+    for ids in members:
+        for p, q in combinations(sorted(ids), 2):
+            if p < q:
+                out_a.append(p)
+                out_b.append(q)
+                out_h.append(0)
+    id_type = local.schema.field("doc_id").type
+    return pa.table({
+        "doc_id_a": pa.array(out_a, id_type),
+        "doc_id_b": pa.array(out_b, id_type),
+        "hamming": pa.array(out_h, pa.int32()),
+    })
 
 
 def simhash64_agg(docs: DataFrame) -> DataFrame:

@@ -16,21 +16,53 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
+# Plan size estimates below this many bytes are not spread.  Measured with
+# ``tools/leaf_profile.py spread`` on a 4-core VM (local[4], host steal at
+# most 1.1% in every cell): each consumer of ``spread_small_scan`` on the
+# generator's one-file tables (``perfbench.tables``), round-robin
+# repartitioned to 4 (spread) or not (no spread), interleaved, median of 3
+# calls into the noop sink after one warm-up.  MB = the optimized plan's
+# ``sizeInBytes`` of the consumer's input; CPU s of the process tree / wall s:
+#              MB    simhash                    minhash signature kernel
+#   sf                spread      no spread      spread       no spread
+#   0.1      0.25   2.71 / 0.75  1.62 / 0.58    2.38 / 0.67   1.65 / 1.10
+#   0.5      1.21   2.63 / 0.80  2.19 / 1.03    4.61 / 1.34   4.10 / 3.08
+#   1        2.42   3.91 / 1.25  3.10 / 2.02    7.67 / 2.22   6.91 / 5.78
+#   2        4.84   6.35 / 2.14  5.46 / 4.28   13.71 / 4.09  10.37 / 9.41
+#              MB    cosine_topk
+#   0.1      0.76   0.97 / 0.32  0.84 / 0.29
+#   0.5      3.10   0.94 / 0.39  1.06 / 0.41
+#   1        5.60   0.93 / 0.40  0.71 / 0.41
+#   2       10.62   0.85 / 0.42  0.62 / 0.47
+# The spread costs CPU in every cell but one (11-67% more on the kernels),
+# and buys wall only for the Python kernels.  From 2.4 MB on it saves at
+# least as much wall as it adds CPU on both of them (1.6-2.6x less wall);
+# at 1.2 MB simhash still loses (0.44 CPU-s more for 0.23 s less wall), and
+# at 0.25 MB both lose.  cosine_topk gains nothing at any measured size.
+SPREAD_MIN_BYTES = 2 << 20
+
+
 def spread_small_scan(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a NARROW scan up to the pool's parallelism.
+    """Round-robin repartition a NARROW scan up to the pool's parallelism,
+    when it is large enough to pay for the shuffle.
 
     A small zstd parquet table is one file with one row group — one scan
     task — so a compute-dense consumer (Arrow kernel, big explode) runs on
     a single core no matter the pool (guide §2.5 "input skew: one huge
     unsplittable file ... repartition immediately after the read"; measured
     r6: the minhash shingle kernel over sf1's single-split documents table
-    ran 1-core, 4.4s of its 9.7s total).  Scale-adaptive: when the source
-    already yields at least pool-parallelism splits (every realistic 100-TB
-    table), this is a NO-OP — no shuffle is added.  Round-robin keeps
-    Spark's sort-before-repartition determinism under task retry.
+    ran 1-core, 4.4s of its 9.7s total).  Below ``SPREAD_MIN_BYTES`` of
+    input, read off the optimized plan's ``sizeInBytes`` estimate (no job,
+    no physical planning), the input is returned as is: there the exchange
+    and its extra job cost more CPU than they save wall (table above).
+    Above it, when the source already yields at least pool-parallelism
+    splits (every realistic 100-TB table), this is a NO-OP — no shuffle is
+    added.  Round-robin keeps Spark's sort-before-repartition determinism
+    under task retry.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() < SPREAD_MIN_BYTES:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

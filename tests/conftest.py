@@ -57,17 +57,18 @@ def generated_sentences(n_stems: int = 40, n_lines: int = 600, seed: int = 5) ->
     return lines
 
 
-def at_both_bounds(monkeypatch):
-    """Force ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` to each side in turn and
-    yield it: 10**12 (the vocabulary-sized tail on the driver), then 0 (on
-    Spark).  Looped over in a test body rather than parametrized, so the
-    test's id stays the same; ``monkeypatch`` restores the bound at
-    teardown."""
-    import kg.linking
+def at_both_bounds(monkeypatch, bound: str = "kg.linking.DRIVER_LINK_MAX_MENTIONS"):
+    """Force a driver-vs-Spark bound (a dotted module constant, by default
+    ``kg.linking.DRIVER_LINK_MAX_MENTIONS``) to each side in turn and yield
+    it: 10**12 (the driver side), then 0 (the Spark side).  Looped over in
+    a test body rather than parametrized, so the test's id stays the same;
+    ``monkeypatch`` restores the bound at teardown."""
+    for value in (10**12, 0):
+        monkeypatch.setattr(bound, value)
+        yield value
 
-    for bound in (10**12, 0):
-        monkeypatch.setattr(kg.linking, "DRIVER_LINK_MAX_MENTIONS", bound)
-        yield bound
+
+DEDUP_BOUND = "kg.ops.dedup.DRIVER_DEDUP_MAX_ROWS"
 
 
 @pytest.fixture(scope="session")

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from conftest import DEDUP_BOUND, at_both_bounds
 from pyspark.sql import functions as F
 
 from kg.ops.dedup import (
@@ -41,7 +42,7 @@ def test_exact_dedup_removes_planted_duplicates(spark):
     assert sorted(r.doc_id for r in kept) == [1, 3]
 
 
-def test_minhash_clusters_near_duplicates(spark):
+def test_minhash_clusters_near_duplicates(spark, monkeypatch):
     base = "the quick brown fox jumps over the lazy dog again and again today"
     rows = [
         (1, base),
@@ -49,9 +50,10 @@ def test_minhash_clusters_near_duplicates(spark):
         (3, "completely different words about spark clusters and shuffles here"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    clusters = {r.doc_id: r.cluster_id for r in minhash_clusters(df, threshold=0.5).collect()}
-    assert clusters.get("1") == clusters.get("2")
-    assert clusters.get("3", None) != clusters.get("1", "absent")
+    for _ in at_both_bounds(monkeypatch, DEDUP_BOUND):
+        clusters = {r.doc_id: r.cluster_id for r in minhash_clusters(df, threshold=0.5).collect()}
+        assert clusters.get("1") == clusters.get("2")
+        assert clusters.get("3", None) != clusters.get("1", "absent")
 
 
 def test_simhash_similar_docs_have_close_hashes(spark):
@@ -85,11 +87,13 @@ def test_simhash_matches_explode_twin(spark, docs):
 
 def test_simhash_plan_is_shuffle_free(spark, docs):
     """The Arrow simhash is a scan -> kernel plan: no Exchange anywhere —
-    when the input is already split at least pool-wide.  (On an
-    under-split source — one small parquet file — spread_small_scan adds
-    exactly one round-robin exchange of the compact input BELOW the
-    kernel, r6 input-skew fix; with enough input splits it is a no-op and
-    the plan stays exchange-free, which is the 100-TB shape.)"""
+    when the input is already split at least pool-wide.  (An under-split
+    source — one small parquet file — gets exactly one round-robin
+    exchange of the compact input BELOW the kernel from spread_small_scan,
+    r6 input-skew fix, but only when its plan estimates at least
+    ``SPREAD_MIN_BYTES``; below that, as for this table, and with enough
+    input splits it is a no-op and the plan stays exchange-free, which is
+    the 100-TB shape.)"""
     wide = docs.repartition(spark.sparkContext.defaultParallelism)
     n_in = wide._jdf.queryExecution().executedPlan().toString().count("Exchange")
     plan = simhash64(wide)._jdf.queryExecution().executedPlan().toString()
@@ -102,7 +106,7 @@ def test_simhash_plan_is_shuffle_free(spark, docs):
     assert plan2.count("Exchange") <= 1
 
 
-def test_simhash_neardup_equals_bruteforce(spark, docs):
+def test_simhash_neardup_equals_bruteforce(spark, docs, monkeypatch):
     """The 4x16-bit banded hamming join has PERFECT recall at radius <= 3
     (pigeonhole), so its output must equal the brute-force all-pairs
     predicate over the signatures — on real testdata (which contains
@@ -117,15 +121,16 @@ def test_simhash_neardup_equals_bruteforce(spark, docs):
             h = bin((sigs[a] ^ sigs[b]) & 0xFFFFFFFFFFFFFFFF).count("1")
             if h <= 3:
                 expect[(a, b)] = h
-    got = {
-        (r.doc_id_a, r.doc_id_b): r.hamming
-        for r in simhash_neardup(docs, max_hamming=3).collect()
-    }
-    assert got == expect
-    assert any(h == 0 for h in got.values())  # exact dupes present in testdata
+    for _ in at_both_bounds(monkeypatch, DEDUP_BOUND):
+        got = {
+            (r.doc_id_a, r.doc_id_b): r.hamming
+            for r in simhash_neardup(docs, max_hamming=3).collect()
+        }
+        assert got == expect
+        assert any(h == 0 for h in got.values())  # exact dupes present in testdata
 
 
-def test_simhash_neardup_planted_near_duplicate(spark):
+def test_simhash_neardup_planted_near_duplicate(spark, monkeypatch):
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
         (2, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -134,8 +139,83 @@ def test_simhash_neardup_planted_near_duplicate(spark):
     from kg.ops.dedup import simhash_neardup
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.doc_id_a, r.doc_id_b): r.hamming for r in simhash_neardup(df).collect()}
-    assert got == {(1, 2): 0}
+    for _ in at_both_bounds(monkeypatch, DEDUP_BOUND):
+        got = {(r.doc_id_a, r.doc_id_b): r.hamming for r in simhash_neardup(df).collect()}
+        assert got == {(1, 2): 0}
+
+
+@pytest.mark.parametrize("max_hamming", [4, -1])
+def test_simhash_neardup_rejects_radius_outside_0_to_3(spark, max_hamming):
+    """The half-split probe join is exact only up to radius 3: a radius
+    outside 0..3 raises (also under ``python -O``) before any Spark job."""
+    from kg.ops.dedup import simhash_neardup
+
+    df = spark.createDataFrame([(1, "a b"), (2, "a c")], "doc_id long, text string")
+    sc = spark.sparkContext
+    group = f"radius{max_hamming}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="max_hamming"):
+            simhash_neardup(df, max_hamming=max_hamming)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_dedup_driver_side_equals_spark_side(spark, monkeypatch, id_type):
+    """Below and above ``DRIVER_DEDUP_MAX_ROWS``, ``simhash_neardup`` and
+    ``minhash_clusters`` give identical rows and schema on sf0.01's
+    documents, with the input's doc_id type, and with a batch of exact
+    duplicates (identical texts under new ids: one signature, many docs)."""
+    from kg.ops.dedup import simhash_neardup
+
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
+        F.col("doc_id").cast(id_type).alias("doc_id"), "text"
+    )
+    copies = docs.orderBy("doc_id").limit(5).select(
+        F.concat(F.col("doc_id").cast("string"), F.lit("0000")).cast(id_type).alias("doc_id"), "text"
+    )
+    for df in (docs, docs.unionAll(copies).unionAll(copies.select(
+        F.concat(F.col("doc_id").cast("string"), F.lit("1")).cast(id_type).alias("doc_id"), "text"
+    ))):
+        for leaf in (simhash_neardup, minhash_clusters):
+            sides = []
+            for _ in at_both_bounds(monkeypatch, DEDUP_BOUND):
+                out = leaf(df)
+                sides.append((out.schema, sorted(out.collect())))
+            assert sides[0] == sides[1]
+            assert sides[0][1]  # both leaves find pairs / clusters here
+
+
+def test_dedup_driver_caps_fall_back_to_spark(spark, monkeypatch):
+    """Below the row bound the driver side still caps what it holds.
+    minhash: rows with more than ``DRIVER_ITEMS_PER_ROW`` shingles arrive
+    without them in the bounded pull; a table whose shingles fit the total
+    cap is pulled again whole and finishes on the driver, one over the cap
+    goes to Spark.  simhash: a probe join or pair expansion over the cap
+    goes to Spark.  The rows are the same on every path."""
+    import kg.ops.dedup as D
+
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    want = sorted(minhash_clusters(docs).collect())
+    sizes = [r.n for r in D.doc_shingle_buckets(docs).select(F.size("shingles").alias("n")).collect()]
+    on_spark = []
+    real_cc = D.connected_components
+    monkeypatch.setattr(D, "connected_components", lambda e: on_spark.append(1) or real_cc(e))
+    monkeypatch.setattr(D, "DRIVER_ITEMS_PER_ROW", max(sizes) - 1)
+    assert sorted(minhash_clusters(docs).collect()) == want and not on_spark
+    monkeypatch.setattr(D, "DRIVER_DEDUP_MAX_ROWS", len(sizes))
+    monkeypatch.setattr(D, "DRIVER_ITEMS_PER_ROW", sum(sizes) // len(sizes) - 1)
+    assert sorted(minhash_clusters(docs).collect()) == want and on_spark
+
+    monkeypatch.undo()
+    want = sorted(D.simhash_neardup(docs).collect())
+    local = []
+    real_local = D._near_pairs_local
+    monkeypatch.setattr(D, "_near_pairs_local", lambda *a: local.append(real_local(*a)) or local[-1])
+    monkeypatch.setattr(D, "DRIVER_ITEMS_PER_ROW", 0)
+    assert sorted(D.simhash_neardup(docs).collect()) == want and local == [None]
 
 
 def test_minhash_verify_join_carries_no_text(spark, docs):
