@@ -203,7 +203,9 @@ def test_dedup_driver_caps_fall_back_to_spark(spark, monkeypatch):
     on_spark = []
     real_cc = D.connected_components
     monkeypatch.setattr(D, "connected_components", lambda e: on_spark.append(1) or real_cc(e))
-    monkeypatch.setattr(D, "DRIVER_ITEMS_PER_ROW", max(sizes) - 1)
+    # every row but the shortest arrives without its shingles; the total fits
+    monkeypatch.setattr(D, "DRIVER_DEDUP_MAX_ROWS", sum(sizes))
+    monkeypatch.setattr(D, "DRIVER_ITEMS_PER_ROW", min(sizes))
     assert sorted(minhash_clusters(docs).collect()) == want and not on_spark
     monkeypatch.setattr(D, "DRIVER_DEDUP_MAX_ROWS", len(sizes))
     monkeypatch.setattr(D, "DRIVER_ITEMS_PER_ROW", sum(sizes) // len(sizes) - 1)
