@@ -38,7 +38,7 @@ from kg.ops import textstats as TS
 from kg.ops.multimodal import extract_features, media_table
 from kg.graph import entity_pagerank
 from kg.pipeline import run_pipeline, top_entity_pairs
-from kg.synth import corpus_vocab, sf_to_n_docs, synth_docs_df
+from kg.synth import corpus_digest, corpus_vocab, sf_to_n_docs, synth_docs_df
 
 # ---------------------------------------------------------------------------
 # KG pipeline memo: one checkpointed run per scale, shared by all kg_* queries
@@ -89,14 +89,17 @@ def _code_fingerprint() -> str:
 def _kg_result(spark: SparkSession, sf_dir: str):
     sf = _sf_of(sf_dir)
     n_docs = sf_to_n_docs(sf)
-    base = os.path.join("/tmp", f"kg_ckpt_sf{sf}_{_code_fingerprint()}")
+    # the corpus digest keys both: a catalog built from one default sentence
+    # source must not satisfy a run on the other
+    digest = corpus_digest()
+    base = os.path.join("/tmp", f"kg_ckpt_sf{sf}_{_code_fingerprint()}_{digest}")
     docs = synth_docs_df(spark, n_docs)
     return run_pipeline(
         spark,
         docs,
         base,
         vocab=_vocab(),
-        input_token=f"synth:{n_docs}:42",
+        input_token=f"synth:{n_docs}:42:{digest}",
         check_invariant=False,  # kg_span_invariant exposes the check itself
     )
 

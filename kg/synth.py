@@ -3,10 +3,16 @@
 Produces the input table mandated by BASELINE.json input_hint:
 ``(doc_id: string, spans: array<struct<kind, text, media_ref, offset:int>>)``
 (FIXTURES.md §1), seeded and fully deterministic.  Text payloads are tagged
-sentences in the reference corpus format sampled Zipf-skewed from
-/root/reference/data/test.txt (duplicate mentions across docs exercise
-entity linking; skewed surface forms exercise the salted LSH join); media
-spans interleave arbitrarily and must be carried through untouched.
+sentences in the reference corpus format, sampled Zipf-skewed from a list
+of ``word/tag`` lines (duplicate mentions across docs exercise entity
+linking; skewed surface forms exercise the salted LSH join); media spans
+interleave arbitrarily and must be carried through untouched.
+
+The sentence list is the caller's ``sentences=`` when given, else
+``default_sentences()``: the reference eval corpus ``REFERENCE_CORPUS``
+(``data/test.txt``) where that file exists, and otherwise
+``generated_sentences()``, a seeded corpus in the same format built here,
+so the library runs on a machine without the reference checkout.
 
 Each doc is generated from its own RNG seeded by (seed, doc index), so the
 corpus is order- and partitioning-independent: the driver-side and
@@ -20,6 +26,8 @@ and a >512-token sentence exercising truncation (ner/dataset.py:57,65-66,74-75).
 
 from __future__ import annotations
 
+import hashlib
+import os
 import random
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,12 +63,77 @@ def load_reference_sentences(path: str = REFERENCE_CORPUS) -> list[str]:
         return [line.strip() for line in f if line.strip()]
 
 
+FILLER = ["今天", "在", "召开", "会议", "表示", "访问", "合作", "的", "，", "发展"]
+
+
+def tagged_lines(entities: dict[str, list[str]], n: int, seed: int) -> list[str]:
+    """``n`` tagged ``word/tag`` lines; line i carries entity i (every
+    surface occurs) plus up to two random ones, between filler words."""
+    rng = random.Random(seed)
+    pool = [(s, tag) for tag, surfaces in sorted(entities.items()) for s in surfaces]
+    lines = []
+    for i in range(n):
+        picks = [pool[i % len(pool)]] + rng.sample(pool, rng.randint(0, 2))
+        segs = [f"{rng.choice(FILLER)}/o"]
+        for surface, tag in picks:
+            segs += [f"{surface}/{tag}", f"{rng.choice(FILLER)}/o"]
+        lines.append(" ".join(segs))
+    return lines
+
+
+# holds every character of the surfaces the test suite spells out (the
+# canonical rename case in test_incremental.py, 中共中央 in
+# test_tokenizer.py), so a vocab built from the generated corpus covers them
+CJK = "中国北京上海广州南京杭州深圳天津人民政府共产党中央委员会致公民主大学市区省县江河山东西南"
+
+
+def generated_sentences(n_stems: int = 40, n_lines: int = 600, seed: int = 5) -> list[str]:
+    """Seeded stand-in for the reference corpus: ``tagged_lines`` over CJK
+    stems drawn per tag.  Every other stem has a one-character-longer
+    variant that links to it, and a variant only ever follows its stem in
+    a line, so no prefix of a corpus holds a variant without its stem."""
+    rng = random.Random(seed)
+    entities, variants = {}, {}
+    for tag in ("nr", "ns", "nt"):
+        entities[tag] = ["".join(rng.choices(CJK, k=rng.randint(3, 5))) for _ in range(n_stems)]
+        variants.update((s, s + rng.choice(CJK)) for s in entities[tag][::2])
+    entities["nt"].append("中共中央")
+    lines = []
+    for line in tagged_lines(entities, n_lines, seed):
+        segs = []
+        for seg in line.split(" "):
+            segs.append(seg)
+            surface, tag = seg.rsplit("/", 1)
+            if surface in variants and rng.random() < 0.5:
+                segs.append(f"{variants[surface]}/{tag}")
+        lines.append(" ".join(segs))
+    return lines
+
+
+def default_sentences() -> list[str]:
+    """The sentence source used wherever ``sentences`` is not given: the
+    lines of the reference eval corpus ``REFERENCE_CORPUS`` when that file
+    exists, else ``generated_sentences()`` (no file, no network)."""
+    if os.path.exists(REFERENCE_CORPUS):
+        return load_reference_sentences()
+    return generated_sentences()
+
+
+def corpus_digest(sentences: list[str] | None = None) -> str:
+    """Short content digest of a sentence list (``default_sentences()``
+    when None), for cache keys of anything built from it: a table built
+    from one corpus must not satisfy a run on another."""
+    if sentences is None:
+        sentences = default_sentences()
+    return hashlib.sha256("\n".join(sentences).encode("utf-8")).hexdigest()[:10]
+
+
 def corpus_vocab(sentences: list[str] | None = None) -> Vocab:
     """Deterministic vocab over corpus text + MRC queries (SURVEY.md §7.0)."""
     from kg.config import TAG_QUERIES
 
     if sentences is None:
-        sentences = load_reference_sentences()
+        sentences = default_sentences()
     texts = [s.replace("/", " ") for s in sentences] + list(TAG_QUERIES.values())
     return build_vocab(texts)
 
@@ -120,7 +193,7 @@ def _synth_one(d: int, seed: int, sentences: list[str]) -> dict:
 def synth_docs(n_docs: int, seed: int = 42, sentences: list[str] | None = None) -> list[dict]:
     """Driver-side corpus (tests / oracle goldens)."""
     if sentences is None:
-        sentences = load_reference_sentences()
+        sentences = default_sentences()
     return [_synth_one(d, seed, sentences) for d in range(n_docs)]
 
 
@@ -168,10 +241,11 @@ def docs_to_df(spark: SparkSession, docs: list[dict]) -> DataFrame:
 def synth_docs_df(
     spark: SparkSession, n_docs: int, seed: int = 42, n_partitions: int | None = None
 ) -> DataFrame:
-    """Distributed synthesis: each partition generates its own doc range."""
+    """Distributed synthesis: each partition generates its own doc range
+    from ``default_sentences()``."""
     if n_partitions is None:
         n_partitions = max(4, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-    sent_bc = spark.sparkContext.broadcast(load_reference_sentences())
+    sent_bc = spark.sparkContext.broadcast(default_sentences())
 
     def gen(it):
         sentences = sent_bc.value

@@ -1,60 +1,19 @@
 from __future__ import annotations
 
 import os
-import random
 
 import pytest
 
 from kg.config import LINK_JACCARD, LSH_MAX_BUCKET, MINHASH_PRIME, SHINGLE_K
 from kg.linking import _hash_params, band_keys, minhash_signature
 from kg.session import get_spark
-from kg.synth import REFERENCE_CORPUS, corpus_vocab, load_reference_sentences
-
-FILLER = ["今天", "在", "召开", "会议", "表示", "访问", "合作", "的", "，", "发展"]
-
-
-def tagged_lines(entities: dict[str, list[str]], n: int, seed: int) -> list[str]:
-    """``n`` tagged ``word/tag`` lines; line i carries entity i (every
-    surface occurs) plus up to two random ones, between filler words."""
-    rng = random.Random(seed)
-    pool = [(s, tag) for tag, surfaces in sorted(entities.items()) for s in surfaces]
-    lines = []
-    for i in range(n):
-        picks = [pool[i % len(pool)]] + rng.sample(pool, rng.randint(0, 2))
-        segs = [f"{rng.choice(FILLER)}/o"]
-        for surface, tag in picks:
-            segs += [f"{surface}/{tag}", f"{rng.choice(FILLER)}/o"]
-        lines.append(" ".join(segs))
-    return lines
-
-
-# holds every character of the surfaces tests spell out (the canonical
-# rename case in test_incremental.py, 中共中央 in test_tokenizer.py), so
-# a vocab built from the generated corpus covers them
-CJK = "中国北京上海广州南京杭州深圳天津人民政府共产党中央委员会致公民主大学市区省县江河山东西南"
-
-
-def generated_sentences(n_stems: int = 40, n_lines: int = 600, seed: int = 5) -> list[str]:
-    """Seeded stand-in for the reference corpus: ``tagged_lines`` over CJK
-    stems drawn per tag.  Every other stem has a one-character-longer
-    variant that links to it, and a variant only ever follows its stem in
-    a line, so no prefix of a corpus holds a variant without its stem."""
-    rng = random.Random(seed)
-    entities, variants = {}, {}
-    for tag in ("nr", "ns", "nt"):
-        entities[tag] = ["".join(rng.choices(CJK, k=rng.randint(3, 5))) for _ in range(n_stems)]
-        variants.update((s, s + rng.choice(CJK)) for s in entities[tag][::2])
-    entities["nt"].append("中共中央")
-    lines = []
-    for line in tagged_lines(entities, n_lines, seed):
-        segs = []
-        for seg in line.split(" "):
-            segs.append(seg)
-            surface, tag = seg.rsplit("/", 1)
-            if surface in variants and rng.random() < 0.5:
-                segs.append(f"{variants[surface]}/{tag}")
-        lines.append(" ".join(segs))
-    return lines
+from kg.synth import (  # noqa: F401  (tagged_lines: imported by tests from here)
+    REFERENCE_CORPUS,
+    corpus_vocab,
+    default_sentences,
+    load_reference_sentences,
+    tagged_lines,
+)
 
 
 def at_both_bounds(monkeypatch, bound: str = "kg.linking.DRIVER_LINK_MAX_MENTIONS"):
@@ -79,10 +38,9 @@ def spark():
 
 @pytest.fixture(scope="session")
 def sentences():
-    """The reference corpus when present, else ``generated_sentences()``."""
-    if os.path.exists(REFERENCE_CORPUS):
-        return load_reference_sentences()
-    return generated_sentences()
+    """The library's default corpus: the reference corpus when present,
+    else ``kg.synth.generated_sentences()``."""
+    return default_sentences()
 
 
 @pytest.fixture(scope="session")
@@ -92,7 +50,10 @@ def vocab(sentences):
 
 @pytest.fixture(scope="session")
 def real_sentences():
-    """The reference corpus itself, for tests of facts about it."""
+    """The reference corpus itself, for tests of facts about it; those
+    tests are skipped where the file is absent."""
+    if not os.path.exists(REFERENCE_CORPUS):
+        pytest.skip(f"{REFERENCE_CORPUS} not present")
     return load_reference_sentences()
 
 
