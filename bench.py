@@ -12,8 +12,8 @@ claims; interleaving decorrelates the reps from slow VM phases).  The full
 output is also written to bench_queries.json so the scaling run folds the
 medians into BENCH.md.
 
-``--kg-only``: run only the end-to-end KG pipeline and print its JSON
-(used by --scaling subprocesses).
+``--kg-only``: run only the end-to-end KG pipeline and print its JSON;
+bench_queries.json is left as it is.
 
 ``--scaling``: evidence the north rule's N→4N scaling criterion in-sandbox:
 run the same KG pipeline job at local[N] and local[4N] (default N=2; the
@@ -267,11 +267,12 @@ def main() -> None:
         "kg_append": append_med,
         "cpus": int(cpus),
     }
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_queries.json"),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
+    if qs is not None:  # the query bench ran: it is the latest one
+        with open(
+            os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_queries.json"),
+            "w",
+        ) as f:
+            json.dump(out, f, indent=1)
     print(json.dumps(out))
 
 

@@ -6,6 +6,8 @@ in place.  The pipeline proves this non-trivially: ``passthrough_docs``
 re-assembles each document from the *exploded* span representation (the same
 explode the extract stage consumes), re-sorting by offset, and
 ``span_violations`` diffs the reassembly against the input table.
+``passthrough_local`` and ``span_violations_local`` do the same on the
+driver for an append batch held there (kg/pipeline.py).
 """
 
 from __future__ import annotations
@@ -54,6 +56,31 @@ def passthrough_docs(docs: DataFrame) -> DataFrame:
     )
 
 
+def passthrough_local(docs):
+    """``passthrough_docs`` on the driver: a ``pyarrow.Table`` of documents
+    -> the reassembled documents as a ``pyarrow.Table``.  Same rules: spans
+    grouped by doc_id, null elements dropped, a null span list comes out
+    as ``[]``, and spans sorted as Spark sorts the (offset, kind, text,
+    media_ref) structs, a null field first."""
+    import pyarrow as pa
+
+    spans: dict = {}
+    for doc_id, ss in zip(docs.column("doc_id").to_pylist(), docs.column("spans").to_pylist()):
+        spans.setdefault(doc_id, []).extend(s for s in ss or () if s is not None)
+
+    def key(s):
+        return [(s[k] is not None, s[k]) for k in ("offset", "kind", "text", "media_ref")]
+
+    struct = docs.schema.field("spans").type.value_type
+    return pa.table({
+        "doc_id": pa.array(list(spans), pa.string()),
+        "spans": pa.array(
+            [sorted(ss, key=key) for ss in spans.values()],
+            pa.list_(pa.struct([struct.field(k) for k in ("kind", "text", "media_ref", "offset")])),
+        ),
+    })
+
+
 def span_violations(input_docs: DataFrame, output_docs: DataFrame) -> DataFrame:
     """Docs whose output span sequence differs from the input's.
 
@@ -92,3 +119,23 @@ def span_violations(input_docs: DataFrame, output_docs: DataFrame) -> DataFrame:
         & (F.col("h_in") == F.col("h_out"))
     )
     return joined.where(~ok)
+
+
+def span_violations_local(input_docs, output_docs) -> int:
+    """``span_violations(...).count()`` on the driver, of two
+    ``pyarrow.Table``s: the rows the full outer join on doc_id gives that
+    are not a present-on-both-sides pair with equal span lists (a null list
+    equal to an empty one).  The lists are compared exactly, so unlike the
+    Spark checksum there is no collision bound."""
+    sides: tuple[dict, dict] = ({}, {})
+    for side, docs in zip(sides, (input_docs, output_docs)):
+        for doc_id, spans in zip(docs.column("doc_id").to_pylist(), docs.column("spans").to_pylist()):
+            side.setdefault(doc_id, []).append(spans or [])
+    n = 0
+    for doc_id in sides[0].keys() | sides[1].keys():
+        a, b = sides[0].get(doc_id, []), sides[1].get(doc_id, [])
+        if doc_id is None or not a or not b:  # a null key joins nothing
+            n += len(a) + len(b)
+        else:
+            n += sum(x != y for x in a for y in b)
+    return n

@@ -27,6 +27,12 @@ Scale notes (100 TB): the kernel is embarrassingly parallel over input
 splits; no shuffle, no driver collection.  Arrow batch size is bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` (kg/session.py); per-batch
 memory is O(batch * sentence_len), not O(L^2).
+
+Each Spark function has a ``*_local`` twin beside it that computes the same
+rows from a ``pyarrow.Table`` on the driver, for an append batch small
+enough to hold there (kg/pipeline.py ``DRIVER_BATCH_MAX_DOCS``): the span
+explode with Spark's ``trim``, the extractor through the same kernel body
+(``extract_batch``), and the mention/triple explodes as Arrow list flattens.
 """
 
 from __future__ import annotations
@@ -88,6 +94,41 @@ def explode_text_spans(docs: DataFrame) -> DataFrame:
     )
 
 
+def _explode_local(table, column: str):
+    """``F.explode(column)`` of a ``pyarrow.Table`` on the driver: (each
+    element's row index in ``table``, the elements' struct fields by name).
+    A null or empty list gives no element; a null element gives all-null
+    fields."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    lists = table.column(column).combine_chunks()
+    lengths = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+    parents = np.repeat(np.arange(len(lists)), lengths)
+    items = lists.flatten()
+    return parents, dict(zip((f.name for f in items.type), items.flatten()))
+
+
+def text_spans_local(docs):
+    """``explode_text_spans`` on the driver: a ``pyarrow.Table`` of documents
+    -> a ``pyarrow.RecordBatch`` (doc_id, sent_offset, text).  Spark's
+    ``trim`` strips only U+0020, so a text of tabs or U+3000 is kept, as
+    there."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    parents, s = _explode_local(docs, "spans")
+    keep = pc.fill_null(pc.and_(
+        pc.equal(s["kind"], "text"),
+        pc.not_equal(pc.utf8_trim(s["text"], characters=" "), ""),
+    ), False)
+    doc_ids = docs.column("doc_id").combine_chunks().take(parents)
+    return pa.RecordBatch.from_arrays(
+        [doc_ids.filter(keep), s["offset"].filter(keep), s["text"].filter(keep)],
+        names=["doc_id", "sent_offset", "text"],
+    )
+
+
 def _extract_sentence(text: str, vocab: Vocab, tag2query: dict, tok_cache: dict) -> tuple[list, list]:
     """Kernel body for one sentence; candidate-pruned decode (module doc)."""
     context_len = 0
@@ -132,6 +173,63 @@ def _extract_sentence(text: str, vocab: Vocab, tag2query: dict, tok_cache: dict)
     return mentions, triples
 
 
+def _memos() -> tuple[dict, dict]:
+    """The extractor's two memos, bounded (kg/cache.py): words -> sub-tokens
+    (distinct words grow without bound on a heterogeneous web corpus,
+    VERDICT r3 missing-item 3), and sentences -> extraction (a pure function
+    of the text, and web-scale corpora are duplicate-heavy — boilerplate,
+    templated sentences; the synthetic corpus is Zipf-skewed the same way —
+    so a repeated sentence costs one dict probe instead of a re-parse)."""
+    from kg.cache import BoundedCache
+
+    return BoundedCache(262_144), BoundedCache(65_536)
+
+
+def extract_batch(batch, vocab: Vocab, tag2query: dict, tok_cache: dict, sent_cache: dict):
+    """One Arrow batch of sentences (doc_id, sent_offset, text) -> one
+    ``pyarrow.RecordBatch`` of extract rows, the mention and triple lists
+    built as ``ListArray(StructArray)`` directly.  The body of
+    ``extract_sentences``' kernel and of ``extract_local``: one extractor on
+    both sides."""
+    import pyarrow as pa
+
+    m_tag: list = []; m_s: list = []; m_e: list = []; m_sur: list = []
+    t_s: list = []; t_p: list = []; t_o: list = []
+    m_off = [0]
+    t_off = [0]
+    for text in batch.column("text").to_pylist():
+        hit = sent_cache.get(text)
+        if hit is None:
+            hit = _extract_sentence(text, vocab, tag2query, tok_cache)
+            sent_cache[text] = hit
+        for tg, s, e, sur in hit[0]:
+            m_tag.append(tg); m_s.append(s); m_e.append(e)
+            m_sur.append(sur)
+        m_off.append(len(m_tag))
+        for a, b, c in hit[1]:
+            t_s.append(a); t_p.append(b); t_o.append(c)
+        t_off.append(len(t_s))
+    m_struct = pa.StructArray.from_arrays(
+        [pa.array(m_tag, pa.string()), pa.array(m_s, pa.int32()),
+         pa.array(m_e, pa.int32()), pa.array(m_sur, pa.string())],
+        names=["tag", "start", "end", "mention"],
+    )
+    t_struct = pa.StructArray.from_arrays(
+        [pa.array(t_s, pa.string()), pa.array(t_p, pa.string()),
+         pa.array(t_o, pa.string())],
+        names=["subj", "pred", "obj"],
+    )
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("doc_id"),
+            batch.column("sent_offset"),
+            pa.ListArray.from_arrays(pa.array(m_off, pa.int32()), m_struct),
+            pa.ListArray.from_arrays(pa.array(t_off, pa.int32()), t_struct),
+        ],
+        names=["doc_id", "sent_offset", "mentions", "triples"],
+    )
+
+
 def extract_sentences(sentences: DataFrame, vocab: Vocab) -> DataFrame:
     """sentences -> nested (doc_id, sent_offset, mentions[], triples[]).
 
@@ -148,59 +246,34 @@ def extract_sentences(sentences: DataFrame, vocab: Vocab) -> DataFrame:
     t2q_bc = spark.sparkContext.broadcast(tag2query)
 
     def kernel(batches):
-        import pyarrow as pa
-
-        from kg.cache import BoundedCache
-
-        v = vocab_bc.value
-        t2q = t2q_bc.value
-        # Both memos are bounded (kg/cache.py): the word memo too, not just
-        # the sentence one — distinct words grow without bound on a
-        # heterogeneous web corpus (VERDICT r3 missing-item 3).
-        tok_cache: dict[str, list[str]] = BoundedCache(262_144)
-        # Sentence-level memo: extraction is a pure function of the text,
-        # and web-scale corpora are duplicate-heavy (boilerplate, templated
-        # sentences — the synthetic corpus is Zipf-skewed the same way), so
-        # repeated sentences cost one dict probe instead of a re-parse.
-        sent_cache: dict[str, tuple[list, list]] = BoundedCache(65_536)
+        v, t2q = vocab_bc.value, t2q_bc.value
+        tok_cache, sent_cache = _memos()
         for batch in batches:
-            m_tag: list = []; m_s: list = []; m_e: list = []; m_sur: list = []
-            t_s: list = []; t_p: list = []; t_o: list = []
-            m_off = [0]
-            t_off = [0]
-            for text in batch.column("text").to_pylist():
-                hit = sent_cache.get(text)
-                if hit is None:
-                    hit = _extract_sentence(text, v, t2q, tok_cache)
-                    sent_cache[text] = hit
-                for tg, s, e, sur in hit[0]:
-                    m_tag.append(tg); m_s.append(s); m_e.append(e)
-                    m_sur.append(sur)
-                m_off.append(len(m_tag))
-                for a, b, c in hit[1]:
-                    t_s.append(a); t_p.append(b); t_o.append(c)
-                t_off.append(len(t_s))
-            m_struct = pa.StructArray.from_arrays(
-                [pa.array(m_tag, pa.string()), pa.array(m_s, pa.int32()),
-                 pa.array(m_e, pa.int32()), pa.array(m_sur, pa.string())],
-                names=["tag", "start", "end", "mention"],
-            )
-            t_struct = pa.StructArray.from_arrays(
-                [pa.array(t_s, pa.string()), pa.array(t_p, pa.string()),
-                 pa.array(t_o, pa.string())],
-                names=["subj", "pred", "obj"],
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    batch.column("sent_offset"),
-                    pa.ListArray.from_arrays(pa.array(m_off, pa.int32()), m_struct),
-                    pa.ListArray.from_arrays(pa.array(t_off, pa.int32()), t_struct),
-                ],
-                names=["doc_id", "sent_offset", "mentions", "triples"],
-            )
+            yield extract_batch(batch, v, t2q, tok_cache, sent_cache)
 
     return sentences.mapInArrow(kernel, EXTRACT_SCHEMA)
+
+
+def extract_local(sentences, vocab: Vocab):
+    """``extract_sentences`` on the driver: the ``pyarrow.RecordBatch`` of
+    ``text_spans_local`` -> the extract rows as a ``pyarrow.Table``."""
+    import pyarrow as pa
+
+    tok_cache, sent_cache = _memos()
+    rows = extract_batch(sentences, vocab, build_tag2query(vocab), tok_cache, sent_cache)
+    return pa.Table.from_batches([rows])
+
+
+def _flatten_local(extracted, column: str, names: list[str]):
+    """``column``'s struct lists of the extract rows, one row per element:
+    ``names`` taken from the element or, for doc_id and sent_offset, from
+    its extract row."""
+    import pyarrow as pa
+
+    parents, fields = _explode_local(extracted, column)
+    for key in ("doc_id", "sent_offset"):
+        fields[key] = extracted.column(key).combine_chunks().take(parents)
+    return pa.table([fields[n] for n in names], names=names)
 
 
 def mentions_table(extracted: DataFrame) -> DataFrame:
@@ -216,6 +289,13 @@ def mentions_table(extracted: DataFrame) -> DataFrame:
     )
 
 
+def mentions_local(extracted):
+    """``mentions_table`` on the driver, of a ``pyarrow.Table``."""
+    return _flatten_local(
+        extracted, "mentions", ["doc_id", "sent_offset", "tag", "start", "end", "mention"]
+    )
+
+
 def triples_table(extracted: DataFrame) -> DataFrame:
     """Narrow explode of the extract checkpoint -> triple rows."""
     t = F.explode("triples").alias("t")
@@ -226,3 +306,8 @@ def triples_table(extracted: DataFrame) -> DataFrame:
         "doc_id",
         "sent_offset",
     )
+
+
+def triples_local(extracted):
+    """``triples_table`` on the driver, of a ``pyarrow.Table``."""
+    return _flatten_local(extracted, "triples", ["subj", "pred", "obj", "doc_id", "sent_offset"])

@@ -40,6 +40,18 @@ a fresh run or resume after the table is refreshed.  A fresh run below
 the bound counts mentions in one Spark aggregation and builds nodes from
 it on the driver too.  Above the bound all of it is Spark.
 
+The batch-sized head — the six per-document increments and the span
+check — runs on the driver when an append's batch holds at most
+``DRIVER_BATCH_MAX_DOCS`` documents: ``run_pipeline_append`` pulls it in one
+Arrow job, and each per-document stage computes its increment from its
+source's increment in memory (``_Fold.held``) with the ``*_local`` twin of
+its Spark function, commits it from the ``pyarrow.Table`` and hands that
+table on; the span check compares the held tables exactly.  Below both
+bounds an append runs the pull and the edges stage's jobs only (4 on an
+``append_growth`` batch, which renames a component, so edges are
+recomputed).  A larger batch is checkpointed and its increments run on
+Spark.
+
 Shuffle budget at scale (SURVEY.md §4): documents→extract is shuffle-free
 (narrow explode + mapInPandas over input splits); mentions/triples are
 narrow explodes of the extract checkpoint; the first shuffles appear at
@@ -73,10 +85,19 @@ from kg.graph import (
     merge_counts_local,
     nodes_from_counts_local,
 )
-from kg.invariant import passthrough_docs, span_violations
-from kg.keyphrase import keyphrases_table
+from kg.invariant import passthrough_docs, passthrough_local, span_violations, span_violations_local
+from kg.keyphrase import keyphrases_local, keyphrases_table
 from kg.linking import link_committed, links_on_driver, signature_base
-from kg.mention import explode_text_spans, extract_sentences, mentions_table, triples_table
+from kg.mention import (
+    explode_text_spans,
+    extract_local,
+    extract_sentences,
+    mentions_local,
+    mentions_table,
+    text_spans_local,
+    triples_local,
+    triples_table,
+)
 from kg.synth import corpus_vocab
 from kg.tokenizer import Vocab
 
@@ -207,28 +228,32 @@ def _run_linked_stage(
 class Stage:
     """One node of the DAG.  ``build`` returns the stage's rows from the
     committed inputs (a DataFrame, or a ``pyarrow.Table`` built on the
-    driver); ``increment`` returns the batch's rows to file-append, or None
-    when a precondition of its own fails (the stage then rebuilds).  A
-    stage with ``own_commit`` keys and commits its checkpoint itself, and
+    driver); ``increment`` returns the batch's rows to file-append — a
+    DataFrame, or a function computing a ``pyarrow.Table`` on the driver —
+    or None when a precondition of its own fails (the stage then rebuilds).
+    A stage with ``own_commit`` keys and commits its checkpoint itself, and
     ``build`` returns nothing (its reader opens on first use)."""
 
     name: str
     inputs: tuple[str, ...]
     build: Callable[[_Fold], object]
-    increment: Callable[[_Fold], DataFrame | None] | None = None
+    increment: Callable[[_Fold], object] | None = None
     partition_by: tuple[str, ...] | None = None
     own_commit: bool = False
 
 
-def _per_document(name: str, source: str, rows: Callable) -> Stage:
+def _per_document(name: str, source: str, rows: Callable, local: Callable) -> Stage:
     """A stage whose rows are a function of each document: ``rows(f, df)``
     over the committed ``source``, or over the rows the batch appended to
-    it."""
-    return Stage(
-        name, (source,),
-        lambda f: rows(f, f.read(source)),
-        lambda f: rows(f, f.inc(source)),
-    )
+    it — ``local(f, table)`` over them on the driver when the batch's
+    increment of ``source`` is held there (``_Fold.held``)."""
+
+    def increment(f: _Fold):
+        if source in f.held:
+            return lambda: local(f, f.held[source])
+        return rows(f, f.inc(source))
+
+    return Stage(name, (source,), lambda f: rows(f, f.read(source)), increment)
 
 
 def _linked(f: _Fold) -> None:
@@ -315,7 +340,8 @@ def _edges_delta(f: _Fold) -> DataFrame | None:
     if moved:
         return None
     old_doc_ids = f.cat.read("documents", files=f.old_docs).select("doc_id")
-    if not f.batch.select("doc_id").join(old_doc_ids, "doc_id", "left_semi").isEmpty():
+    new_doc_ids = f.inc("documents").select("doc_id")
+    if not new_doc_ids.join(old_doc_ids, "doc_id", "left_semi").isEmpty():
         return None
     return build_edges(f.inc("triples"), f.read("linked"))
 
@@ -329,9 +355,14 @@ STAGES = (
     _per_document(
         "extract", "documents",
         lambda f, d: extract_sentences(explode_text_spans(d), f.vocab),
+        lambda f, t: extract_local(text_spans_local(t), f.vocab),
     ),
-    _per_document("mentions", "extract", lambda f, d: mentions_table(d)),
-    _per_document("triples", "extract", lambda f, d: triples_table(d)),
+    _per_document(
+        "mentions", "extract", lambda f, d: mentions_table(d), lambda f, t: mentions_local(t),
+    ),
+    _per_document(
+        "triples", "extract", lambda f, d: triples_table(d), lambda f, t: triples_local(t),
+    ),
     Stage("linked", ("mentions",), _linked, own_commit=True),
     Stage("nodes", ("mentions", "linked"), _nodes, partition_by=("kind",)),
     Stage(
@@ -339,16 +370,23 @@ STAGES = (
         lambda f: build_edges(f.read("triples"), f.read("linked")),
         _edges_delta, partition_by=("pred",),
     ),
-    _per_document("keyphrases", "documents", lambda f, d: keyphrases_table(d)),
-    _per_document("documents_out", "documents", lambda f, d: passthrough_docs(d)),
+    _per_document(
+        "keyphrases", "documents",
+        lambda f, d: keyphrases_table(d), lambda f, t: keyphrases_local(t),
+    ),
+    _per_document(
+        "documents_out", "documents",
+        lambda f, d: passthrough_docs(d), lambda f, t: passthrough_local(t),
+    ),
 )
 _NAMES = tuple(st.name for st in STAGES)
 
 
 class _Fold:
-    """One call's state: the batch (None for a fresh run or resume), every
-    stage input's fingerprint before the call, the increments taken, and
-    the checkpoint readers opened."""
+    """One call's state: the batch (None for a fresh run or resume; a
+    ``pyarrow.Table`` when it is held on the driver), every stage input's
+    fingerprint before the call, the increments taken (and those computed
+    on the driver, ``held``), and the checkpoint readers opened."""
 
     def __init__(self, cat, vocab, docs, token, tokens, batch):
         self.cat, self.vocab, self.docs, self.batch = cat, vocab, docs, batch
@@ -356,6 +394,7 @@ class _Fold:
         self.meta = {"documents": {"batch_tokens": tokens}}
         self.pre = {i: cat.fingerprint(i) for st in STAGES for i in st.inputs}
         self.incs: dict[str, list[str]] = {}  # increments taken -> files appended
+        self.held: dict = {}  # increments committed from the driver -> their pyarrow.Table
         self.inc_tables: dict[str, DataFrame] = {}
         self.tables: dict[str, DataFrame] = {}
         self.timings: dict[str, float] = {}
@@ -404,8 +443,9 @@ class _Fold:
         )
 
     def step(self, st: Stage) -> None:
-        """Run one stage by the rule; its timing covers the commit (a
-        precondition an increment checks runs before the clock starts)."""
+        """Run one stage by the rule; its timing covers the commit and a
+        driver increment's compute (a precondition an increment checks runs
+        before the clock starts)."""
         cat, name = self.cat, st.name
         kw = {
             "inputs": st.inputs, "partition_by": st.partition_by,
@@ -416,8 +456,12 @@ class _Fold:
             if not cat.is_complete(name, st.inputs, kw["extra_inputs"]):
                 rows = st.increment(self)
         t0 = time.perf_counter()
+        if callable(rows):
+            rows = rows()
         if rows is not None:
             self.incs[name] = cat.append(name, rows, **kw)
+            if not isinstance(rows, DataFrame):
+                self.held[name] = rows
             name += "+append"
         elif st.own_commit:
             st.build(self)
@@ -427,14 +471,18 @@ class _Fold:
 
     def check(self) -> int:
         """Span invariant over what this call wrote: the batch when
-        documents_out took its increment, the whole table otherwise (the
-        property is per document, so the proofs compose)."""
+        documents_out took its increment (on the driver when it was
+        computed there), the whole table otherwise (the property is per
+        document, so the proofs compose)."""
         t0 = time.perf_counter()
-        if "documents_out" in self.incs:
-            docs, out = self.inc("documents"), self.inc("documents_out")
+        if "documents_out" in self.held:
+            n = span_violations_local(self.held["documents"], self.held["documents_out"])
         else:
-            docs, out = self.read("documents"), self.read("documents_out")
-        n = span_violations(docs, out).count()
+            if "documents_out" in self.incs:
+                docs, out = self.inc("documents"), self.inc("documents_out")
+            else:
+                docs, out = self.read("documents"), self.read("documents_out")
+            n = span_violations(docs, out).count()
         self.timings["invariant_check"] = round(time.perf_counter() - t0, 3)
         return n
 
@@ -552,6 +600,34 @@ def _fold(cat, vocab, check_invariant, docs, token, tokens, batch=None) -> Pipel
     )
 
 
+# A batch above ``DRIVER_BATCH_MAX_DOCS`` takes the Spark increments at this
+# many documents per partition (``_spark_batch``).
+INCREMENT_DOCS_PER_PARTITION = 16_000
+# An append batch of at most this many documents is pulled to the driver in
+# one Arrow job and its six per-document increments and span check are
+# computed there (``_Fold.held``).  Measured with ``tools/append_profile.py
+# --seed 3 --ops 2 --batch-docs N --bound 0 1000000000000`` on a 4-core VM
+# (local[4], 1 GB driver heap, as perfbench runs): one append of an N-doc
+# batch onto the 8k-doc ``append_growth`` base, the two sides interleaved,
+# median of 2 ops after one warm-up (3 at N = 80).  CPU s of the process
+# tree / wall s / Spark jobs (the Spark side's include its one-row pull),
+# and MB = the Python driver's peak resident size during the op over its
+# size before it:
+#        N          spark                       driver
+#       80     6.57 /  3.38 / 21 /   0      2.23 /  1.37 / 4 /   0
+#      800     9.74 /  3.47 / 21 /   0      2.74 /  1.38 / 4 /   0
+#    4,000    11.52 /  4.06 / 21.5 / 1      4.59 /  2.50 / 4.5 / 12
+#   16,000    18.54 /  7.08 / 22 /   3     12.62 /  7.96 / 5 /  79
+#   32,000    22.43 /  8.20 / 22 /  23     20.72 / 13.71 / 5 / 214
+# Both sides committed the expected counts in every op.  The driver side
+# uses less CPU at every size (it is the benchmark's op_cpu_s), 3x at 80
+# docs, but its extract runs on one core: from 16k docs its wall is the
+# longer (1.1x there, 1.7x at 32k, where the CPU is a draw and the driver
+# holds 214 MB).  Up to 16k docs Spark runs each increment as one task
+# anyway (``INCREMENT_DOCS_PER_PARTITION``), so the bound is that constant.
+DRIVER_BATCH_MAX_DOCS = INCREMENT_DOCS_PER_PARTITION
+
+
 def run_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -596,6 +672,14 @@ def run_pipeline_append(
     run on Spark.  A daily 1% batch therefore costs ~1% of extraction plus
     the tail, instead of a full recompute.
 
+    The batch is pulled once, at most ``DRIVER_BATCH_MAX_DOCS`` + 1 rows
+    through Arrow (one Spark job).  When it fits, the per-document
+    increments and the span check are computed on the driver from that
+    table, with no Spark job; an append below both bounds then runs the
+    pull and the edges stage only.  When it does not fit, the batch is
+    checkpointed and re-widthed (``_spark_batch``) and the increments run
+    on Spark.
+
     Equality contract: append(A then B) produces the same nine tables as a
     fresh run over A∪B (tests/test_incremental.py) — entity ids are
     content hashes, linking covers the full distinct-mention set (the
@@ -626,24 +710,35 @@ def run_pipeline_append(
         return _fold(
             cat, vocab, check_invariant, cat.read("documents"), old_token, folded
         )
+    limit = min(DRIVER_BATCH_MAX_DOCS, 2**31 - 2) + 1  # DataFrame.limit takes an int32
+    batch = new_docs.limit(limit).toArrow()
+    if batch.num_rows == limit:
+        batch = _spark_batch(spark, new_docs)
+    return _fold(
+        cat, vocab, check_invariant, None, f"{old_token}+{new_token}",
+        folded + [new_token], batch,
+    )
+
+
+def _spark_batch(spark: SparkSession, new_docs: DataFrame) -> DataFrame:
+    """A batch above ``DRIVER_BATCH_MAX_DOCS``, checkpointed and re-widthed
+    for the Spark increments.
+
+    Data-sized increment width (r6, guide §6 small-files): the batch DF
+    arrives at driver parallelism (32 partitions for a 5k-doc batch), so
+    every appended stage wrote 32 near-empty files per append — file
+    counts, task counts and footer reads all scale with appends instead of
+    data.  Re-width to ``INCREMENT_DOCS_PER_PARTITION`` (floor 1, cap pool
+    width): increments stay wide enough for the extract kernel, and a batch
+    appends one file per stage per partition instead of 32."""
     new_docs = new_docs.localCheckpoint()
-    # Data-sized increment width (r6, guide §6 small-files): the batch DF
-    # arrives at driver parallelism (32 partitions for a 5k-doc batch), so
-    # every appended stage wrote 32 near-empty files per append — file
-    # counts, task counts and footer reads all scale with appends instead
-    # of data.  Re-width to ~16k docs/partition (floor 1, cap pool width):
-    # increments stay wide enough for the extract kernel, and a 1% batch
-    # appends 1 file per stage instead of 32.
     n_batch = new_docs.count()
     width = max(1, min(
-        spark.sparkContext.defaultParallelism, -(-n_batch // 16_000)
+        spark.sparkContext.defaultParallelism, -(-n_batch // INCREMENT_DOCS_PER_PARTITION)
     ))
     if width < new_docs.rdd.getNumPartitions():
         new_docs = new_docs.repartition(width).localCheckpoint()
-    return _fold(
-        cat, vocab, check_invariant, None, f"{old_token}+{new_token}",
-        folded + [new_token], new_docs,
-    )
+    return new_docs
 
 
 def top_entity_pairs(edges: DataFrame, nodes: DataFrame, k: int = 20) -> DataFrame:

@@ -8,12 +8,41 @@ the oracle SQL exactly (driver hashes values under sorted column names).
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    """The table's parquet, opened with the schema Spark would infer, read
+    from a footer on the driver: opening runs no schema-inference job."""
+    path = f"{sf_dir}/{table}.parquet"
+    return spark.read.schema(footer_schema(path)).parquet(path)
+
+
+def footer_schema(path: str) -> StructType:
+    """Spark's inferred schema of the parquet at ``path`` (a file, or a
+    directory of part-files: the first one's), from its footer: the schema
+    Spark recorded there when Spark wrote it, else the Arrow schema with a
+    zone-less timestamp as ``timestamp_ntz``, as Spark infers it."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if os.path.isdir(path):
+        path = min(
+            os.path.join(root, name)
+            for root, _dirs, names in os.walk(path)
+            for name in names
+            if name.endswith(".parquet")
+        )
+    schema = pq.read_schema(path)
+    written = (schema.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if written is not None:
+        return StructType.fromJson(json.loads(written))
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True)
 
 
 # Plan size estimates below this many bytes are not spread.  Measured with
@@ -38,7 +67,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # and buys wall only for the Python kernels.  From 2.4 MB on it saves at
 # least as much wall as it adds CPU on both of them (1.6-2.6x less wall);
 # at 1.2 MB simhash still loses (0.44 CPU-s more for 0.23 s less wall), and
-# at 0.25 MB both lose.  cosine_topk gains nothing at any measured size.
+# at 0.25 MB both lose.  cosine_topk gains no wall at any measured size, so
+# ``kg.ops.similarity.cosine_scores`` no longer calls the spread at all.
 SPREAD_MIN_BYTES = 2 << 20
 
 

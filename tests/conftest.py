@@ -28,6 +28,16 @@ def at_both_bounds(monkeypatch, bound: str = "kg.linking.DRIVER_LINK_MAX_MENTION
 
 
 DEDUP_BOUND = "kg.ops.dedup.DRIVER_DEDUP_MAX_ROWS"
+BATCH_BOUND = "kg.pipeline.DRIVER_BATCH_MAX_DOCS"
+
+
+def at_both_link_and_batch_bounds(monkeypatch):
+    """``at_both_bounds`` of the linking bound and, within each side, of
+    ``BATCH_BOUND``: the four combinations in turn, each yielded as a label
+    ("<link>-<batch>") for its own paths."""
+    for link in at_both_bounds(monkeypatch):
+        for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+            yield f"{link}-{batch}"
 
 
 @pytest.fixture(scope="session")

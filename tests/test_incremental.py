@@ -6,7 +6,7 @@ import pytest
 from kg.pipeline import run_pipeline, run_pipeline_append
 from kg.synth import docs_to_df, synth_docs
 
-from conftest import at_both_bounds
+from conftest import BATCH_BOUND, at_both_bounds, at_both_link_and_batch_bounds
 
 
 def _rows(df):
@@ -19,32 +19,33 @@ def split_corpus(sentences):
     return docs[:100], docs[100:], docs
 
 
-def test_append_equals_fresh(spark, vocab, tmp_path, split_corpus):
-    old, new, full = split_corpus
-    fresh = run_pipeline(
-        spark, docs_to_df(spark, full), str(tmp_path / "fresh"),
-        vocab=vocab, input_token="t150",
-    )
-    base = str(tmp_path / "inc")
-    run_pipeline(
-        spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
-    )
-    res = run_pipeline_append(
-        spark, docs_to_df(spark, new), base, vocab=vocab, input_token="b2"
-    )
-    for name in fresh.tables:
-        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
-    # the per-document heavy stages were appended, never recomputed
-    for stage in ("documents", "extract", "mentions", "triples",
-                  "keyphrases", "documents_out"):
-        assert f"{stage}+append" in res.executed
-        assert stage not in res.executed
-    # recomputed tail: linked + nodes; edges took the INCREMENTAL path (r6)
-    # on this corpus — batch doc_ids are disjoint and no old mention's
-    # canonical changed, so only the canonicalized delta was appended
-    assert {"linked", "nodes"} <= set(res.executed)
-    assert "edges+append" in res.executed
-    assert "edges" not in res.executed
+def test_append_equals_fresh(spark, vocab, tmp_path, split_corpus, monkeypatch):
+    for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+        old, new, full = split_corpus
+        fresh = run_pipeline(
+            spark, docs_to_df(spark, full), str(tmp_path / str(batch) / "fresh"),
+            vocab=vocab, input_token="t150",
+        )
+        base = str(tmp_path / str(batch) / "inc")
+        run_pipeline(
+            spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
+        )
+        res = run_pipeline_append(
+            spark, docs_to_df(spark, new), base, vocab=vocab, input_token="b2"
+        )
+        for name in fresh.tables:
+            assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+        # the per-document heavy stages were appended, never recomputed
+        for stage in ("documents", "extract", "mentions", "triples",
+                      "keyphrases", "documents_out"):
+            assert f"{stage}+append" in res.executed
+            assert stage not in res.executed
+        # recomputed tail: linked + nodes; edges took the INCREMENTAL path (r6)
+        # on this corpus — batch doc_ids are disjoint and no old mention's
+        # canonical changed, so only the canonicalized delta was appended
+        assert {"linked", "nodes"} <= set(res.executed)
+        assert "edges+append" in res.executed
+        assert "edges" not in res.executed
 
 
 def test_append_is_idempotent(spark, vocab, tmp_path, split_corpus):
@@ -66,21 +67,22 @@ def test_append_is_idempotent(spark, vocab, tmp_path, split_corpus):
 
 
 def test_plain_rerun_after_append_skips_everything(
-    spark, vocab, tmp_path, split_corpus
+    spark, vocab, tmp_path, split_corpus, monkeypatch
 ):
-    old, new, full = split_corpus
-    base = str(tmp_path / "rerun")
-    run_pipeline(
-        spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
-    )
-    run_pipeline_append(
-        spark, docs_to_df(spark, new), base, vocab=vocab, input_token="b2"
-    )
-    res = run_pipeline(
-        spark, docs_to_df(spark, full), base, vocab=vocab,
-        input_token="t100+b2",
-    )
-    assert res.executed == []
+    for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+        old, new, full = split_corpus
+        base = str(tmp_path / str(batch) / "rerun")
+        run_pipeline(
+            spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
+        )
+        run_pipeline_append(
+            spark, docs_to_df(spark, new), base, vocab=vocab, input_token="b2"
+        )
+        res = run_pipeline(
+            spark, docs_to_df(spark, full), base, vocab=vocab,
+            input_token="t100+b2",
+        )
+        assert res.executed == []
 
 
 def test_torn_append_invisible_to_readers_and_retry_safe(
@@ -96,7 +98,7 @@ def test_torn_append_invisible_to_readers_and_retry_safe(
 
     from kg.catalog import StageCatalog
 
-    for bound in at_both_bounds(monkeypatch):
+    for bound in at_both_link_and_batch_bounds(monkeypatch):
         old, new, full = split_corpus
         base = str(tmp_path / str(bound) / "torn")
         run_pipeline(
@@ -182,11 +184,12 @@ def test_append_after_interrupted_append_equals_fresh(
     current with the catalog before the append.  The next append, of a
     DIFFERENT batch, must not add only its own rows on top: every table
     must equal a fresh run over the committed documents."""
-    res, fresh = _interrupted_then_append(
-        spark, vocab, sentences, tmp_path, monkeypatch, stage
-    )
-    for name in fresh.tables:
-        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+    for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+        res, fresh = _interrupted_then_append(
+            spark, vocab, sentences, tmp_path / str(batch), monkeypatch, stage
+        )
+        for name in fresh.tables:
+            assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
 
 
 def _fresh_and_append(spark, vocab, base, split_corpus):
@@ -248,7 +251,7 @@ def test_append_of_a_batch_without_triples_equals_fresh(
     leaves no file.  The append must still commit and equal a fresh run."""
     from kg.catalog import StageCatalog
 
-    for bound in at_both_bounds(monkeypatch):
+    for bound in at_both_link_and_batch_bounds(monkeypatch):
         old, _, _ = split_corpus
         base = str(tmp_path / str(bound) / "notriples")
         run_pipeline(
@@ -360,7 +363,8 @@ def test_append_soak_chain_stays_equal_to_fresh(
     import kg.linking
 
     monkeypatch.setattr(kg.linking, "DRIVER_LINK_MAX_MENTIONS", 10**12)
-    _soak_chain(spark, vocab, sentences, str(tmp_path), on_driver=True)
+    for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+        _soak_chain(spark, vocab, sentences, str(tmp_path / str(batch)), on_driver=True)
 
 
 def test_append_soak_chain_distributed_tail_stays_equal_to_fresh(
@@ -370,7 +374,8 @@ def test_append_soak_chain_distributed_tail_stays_equal_to_fresh(
     import kg.linking
 
     monkeypatch.setattr(kg.linking, "DRIVER_LINK_MAX_MENTIONS", 0)
-    _soak_chain(spark, vocab, sentences, str(tmp_path), on_driver=False)
+    for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+        _soak_chain(spark, vocab, sentences, str(tmp_path / str(batch)), on_driver=False)
 
 
 def test_append_requires_completed_run(spark, vocab, tmp_path, split_corpus):
@@ -426,7 +431,7 @@ def test_append_nondisjoint_doc_ids_falls_back_and_stays_equal(
     — both runs use check_invariant=False — and per-doc appended tables
     like keyphrases are out of contract for such input; the edge/node/link
     tail is what the fallback guarantees.)"""
-    for bound in at_both_bounds(monkeypatch):
+    for bound in at_both_link_and_batch_bounds(monkeypatch):
         old, new, _ = split_corpus
         reused = [dict(new[0], doc_id=old[5]["doc_id"])] + new[1:3]
         base = str(tmp_path / str(bound) / "nondisj")
@@ -455,7 +460,7 @@ def test_append_canonical_rename_falls_back_and_stays_equal(
     (lexicographically smaller) canonical renames every old edge touching
     the component — the stability check must force the full recompute and
     the appended result must equal a fresh run over the union."""
-    for bound in at_both_bounds(monkeypatch):
+    for bound in at_both_link_and_batch_bounds(monkeypatch):
         old = [
             _text_doc("doc-a0", "中国致公党/ns 中国致公党人/ns"),
             _text_doc("doc-a1", "中国致公党/ns 北京/ns"),

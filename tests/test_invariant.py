@@ -1,14 +1,28 @@
+"""The span invariant's damage classes, each planted against both checks:
+Spark's ``span_violations`` and the driver's ``span_violations_local``
+(an append batch held on the driver), which must count alike."""
+
 from pyspark.sql import functions as F
 
-from kg.invariant import passthrough_docs, span_violations
+from kg.invariant import passthrough_docs, passthrough_local, span_violations, span_violations_local
 from kg.synth import docs_to_df, synth_docs
+
+
+def _violations(docs, out) -> int:
+    """The Spark check's count, asserted equal to the driver check's on
+    the same tables."""
+    n = span_violations(docs, out).count()
+    assert span_violations_local(docs.toArrow(), out.toArrow()) == n
+    return n
 
 
 def test_passthrough_preserves_all_docs(spark):
     docs = docs_to_df(spark, synth_docs(40))
     out = passthrough_docs(docs)
-    assert span_violations(docs, out).count() == 0
+    assert _violations(docs, out) == 0
     assert out.count() == 40
+    held = docs.toArrow()
+    assert span_violations_local(held, passthrough_local(held)) == 0
 
 
 def test_violation_detected_on_mutation(spark):
@@ -22,7 +36,8 @@ def test_violation_detected_on_mutation(spark):
         F.exists("spans", lambda s: s["kind"] != "text")
     ).count()
     assert n_with_media > 0
-    assert span_violations(docs, passthrough_docs(mutated)).count() == n_with_media
+    assert _violations(docs, passthrough_docs(mutated)) == n_with_media
+    assert span_violations_local(docs.toArrow(), passthrough_local(mutated.toArrow())) == n_with_media
 
 
 def test_null_spans_equivalent_to_empty(spark):
@@ -35,13 +50,16 @@ def test_null_spans_equivalent_to_empty(spark):
     )
     out = passthrough_docs(docs)
     assert out.count() == 2
-    assert span_violations(docs, out).count() == 0
+    assert _violations(docs, out) == 0
+    held = docs.toArrow()
+    assert span_violations_local(held, passthrough_local(held)) == 0
 
 
 def test_missing_doc_is_a_violation(spark):
     docs = docs_to_df(spark, synth_docs(10))
     out = passthrough_docs(docs).where(F.col("doc_id") != "doc-00000003")
-    assert span_violations(docs, out).count() == 1
+    assert _violations(docs, out) == 1
+    assert _violations(out, docs) == 1  # missing from the input side
 
 
 def test_violation_detected_on_reorder(spark):
@@ -62,4 +80,4 @@ def test_violation_detected_on_reorder(spark):
         ).alias("spans"),
     )
     multi = docs.where(F.size("spans") >= 2).count()
-    assert span_violations(docs, mutated).count() >= multi - 1
+    assert _violations(docs, mutated) >= multi - 1

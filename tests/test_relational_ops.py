@@ -103,3 +103,25 @@ def test_approx_distinct_within_5pct_of_exact(spark):
     assert set(exact) == set(approx)
     for et, n in exact.items():
         assert abs(approx[et] - n) / n <= 0.05, (et, approx[et], n)
+
+
+def test_load_takes_the_schema_spark_infers(spark, sf_dir, tmp_path):
+    """``R.load`` opens a table with the schema read from its footer on the
+    driver, and that schema is the one Spark's own inference gives: on the
+    benchmark generator's tables (one pyarrow file each, zone-less
+    timestamps) and on a Spark-written directory (INT96 timestamps)."""
+    import os
+
+    from perfbench import tables
+
+    dirs = [sf_dir([(1, 0, 7, "error", 1)])]
+    tables.write(tables.generate(1, 0.0002), str(tmp_path / "gen"))
+    dirs.append(str(tmp_path / "gen"))
+    seen = set()
+    for d in dirs:
+        for name in sorted(n for n in os.listdir(d) if n.endswith(".parquet")):
+            table = name.removesuffix(".parquet")
+            inferred = spark.read.parquet(os.path.join(d, name)).schema
+            assert R.load(spark, d, table).schema == inferred, (d, table)
+            seen |= {f.dataType.typeName() for f in inferred.fields}
+    assert {"timestamp", "timestamp_ntz", "array"} <= seen

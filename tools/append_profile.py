@@ -1,11 +1,18 @@
 """Where an ``append_growth`` op's CPU goes, and how many Spark jobs it runs.
 
     python3 tools/append_profile.py --seed 3 --ops 3
+    python3 tools/append_profile.py --batch-docs 4000 --bound 0 1000000000000
 
 Run from the repository root.  The script builds the perfbench
 ``append_growth`` workload (same inputs, same checked setup, one warm-up
 op) in one ``local[<cpus>]`` session started the way ``perfbench/run.py``
 starts it, then runs ``--ops`` untraced ops and one traced op.
+``--batch-docs`` sets the documents per appended batch (the workload's 80
+by default).  ``--bound`` forces ``kg.pipeline.DRIVER_BATCH_MAX_DOCS`` to
+each value given: the untraced ops then cycle through them, ``--ops`` per
+value, interleaved so drift and host steal hit every value alike (the
+traced op takes the first) — the way the constant's crossover table is
+measured.
 
 For each untraced op it reads ``/proc/<pid>/task/*/stat`` of every process
 of the tree before and after, and charges the CPU (user + system) to:
@@ -25,8 +32,10 @@ of the tree before and after, and charges the CPU (user + system) to:
 
 It also counts each untraced op's Spark jobs (one job group per op), and
 the traced op's jobs per pipeline stage through the job groups
-``perfbench/trace.py`` sets.  It prints a table of medians over the ops,
-then one JSON line with everything.  It imports perfbench and changes none
+``perfbench/trace.py`` sets, and samples the Python driver's peak resident
+size during each untraced op, over its size before it (``driver_mb``).  It
+prints a table of medians over the ops (per bound), then one JSON line with
+everything.  It imports perfbench and changes none
 of it; everything it writes goes under ``.append_profile_work/`` in the
 current directory, deleted at exit.
 """
@@ -128,35 +137,48 @@ def _parse(argv):
     p.add_argument("--ops", type=int, default=3)
     p.add_argument("--jobs", action="store_true",
                    help="also list the traced op's jobs per stage by call site")
+    p.add_argument("--batch-docs", type=int, default=None,
+                   help="documents per appended batch (default: the workload's)")
+    p.add_argument("--bound", type=int, nargs="+", default=None,
+                   help="force kg.pipeline.DRIVER_BATCH_MAX_DOCS to each value in turn")
     return p.parse_args(argv)
 
 
 def profile(args, work: str) -> dict:
+    import kg.pipeline
     from perfbench.run import RssSampler, _start_spark, _stop_spark, tree_cpu_s
     from perfbench.trace import STAGES, Tracer
     from perfbench.workloads import AppendGrowth
+    from tools.leaf_profile import DriverPeak
 
+    bounds = args.bound or [kg.pipeline.DRIVER_BATCH_MAX_DOCS]
     spark = _start_spark(work, trace=False)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     try:
         with RssSampler(interval=3600) as rss:  # CPU clock only
             wl = AppendGrowth(spark, work, args.seed)
+            if args.batch_docs is not None:
+                wl.BATCH_DOCS = args.batch_docs
             ok = [wl.setup(wl.generate()).ok]
             cpu = lambda: tree_cpu_s(rss)  # noqa: E731
             ok.append(wl.op("warmup0", None, cpu).ok)
             ops = []
-            for i in range(args.ops):
-                label = f"op{i}"
+            for i in range(args.ops * len(bounds)):
+                label, bound = f"op{i}", bounds[i % len(bounds)]
+                kg.pipeline.DRIVER_BATCH_MAX_DOCS = bound
                 sc.setJobGroup(f"plain@{label}", label)
                 before = snapshot()
-                op = wl.op(label, None, cpu)
+                with DriverPeak() as peak:
+                    op = wl.op(label, None, cpu)
                 classes, other = by_class(before, snapshot())
                 ok.append(op.ok)
                 ops.append({
-                    "cpu_s": op.cpu, "wall_s": op.wall, "classes": classes, "jvm_other": other,
+                    "bound": bound, "cpu_s": op.cpu, "wall_s": op.wall, "driver_mb": peak.mb,
+                    "classes": classes, "jvm_other": other,
                     "jobs": len(tracker.getJobIdsForGroup(f"plain@{label}")),
                 })
+            kg.pipeline.DRIVER_BATCH_MAX_DOCS = bounds[0]
             tracer = Tracer(spark)
             tracer.install()
             try:
@@ -169,7 +191,10 @@ def profile(args, work: str) -> dict:
             call_sites = {s: [_call_site(tracker, j) for j in sorted(ids)] for s, ids in job_ids.items()}
     finally:
         _stop_spark(spark)
-    out = {"seed": args.seed, "correct": all(ok), "ops": ops, "traced_stage_jobs": stage_jobs}
+    out = {
+        "seed": args.seed, "batch_docs": wl.BATCH_DOCS, "correct": all(ok), "ops": ops,
+        "traced_stage_jobs": stage_jobs,
+    }
     if args.jobs:
         out["traced_call_sites"] = call_sites
     return out
@@ -183,21 +208,26 @@ def _call_site(tracker, job_id: int) -> str:
 
 
 def report(res: dict) -> str:
-    ops = res["ops"]
     med = lambda xs: statistics.median(xs)  # noqa: E731
-    total = med([o["cpu_s"] for o in ops])
-    lines = [f"append_growth seed {res['seed']}, {len(ops)} ops, correct={res['correct']}",
-             f"{'class':<16}{'CPU-s':>8}{'share':>8}"]
-    for cls in CLASSES:
-        v = med([o["classes"][cls] for o in ops])
-        lines.append(f"{cls:<16}{v:8.2f}{v / total:8.0%}")
-    lines.append(f"{'op (tree)':<16}{total:8.2f}")
-    names = {n for o in ops for n in o["jvm_other"]}
-    top = sorted(((med([o["jvm_other"].get(n, 0.0) for o in ops]), n) for n in names), reverse=True)
-    lines.append("jvm_other by thread: " + ", ".join(f"{n} {v:.2f}" for v, n in top[:6]))
-    lines.append(f"jobs per op: {med([o['jobs'] for o in ops]):g} (untraced)")
+    lines = [f"append_growth seed {res['seed']}, {res['batch_docs']}-doc batches, correct={res['correct']}"]
+    bounds = list(dict.fromkeys(o["bound"] for o in res["ops"]))
+    for bound in bounds:
+        ops = [o for o in res["ops"] if o["bound"] == bound]
+        total = med([o["cpu_s"] for o in ops])
+        lines += [f"DRIVER_BATCH_MAX_DOCS={bound}: {len(ops)} ops",
+                  f"{'class':<16}{'CPU-s':>8}{'share':>8}"]
+        for cls in CLASSES:
+            v = med([o["classes"][cls] for o in ops])
+            lines.append(f"{cls:<16}{v:8.2f}{v / total:8.0%}")
+        lines.append(f"{'op (tree)':<16}{total:8.2f}")
+        names = {n for o in ops for n in o["jvm_other"]}
+        top = sorted(((med([o["jvm_other"].get(n, 0.0) for o in ops]), n) for n in names), reverse=True)
+        lines.append("jvm_other by thread: " + ", ".join(f"{n} {v:.2f}" for v, n in top[:6]))
+        lines.append(f"wall {med([o['wall_s'] for o in ops]):.2f} s, driver peak "
+                     f"{med([o['driver_mb'] for o in ops]):.0f} MB, "
+                     f"jobs per op {med([o['jobs'] for o in ops]):g} (untraced)")
     stage = res["traced_stage_jobs"]
-    lines.append("jobs per stage (traced op): " + ", ".join(
+    lines.append(f"jobs per stage (traced op, DRIVER_BATCH_MAX_DOCS={bounds[0]}): " + ", ".join(
         f"{s} {n}" for s, n in stage.items()) + f"; total {sum(stage.values())}")
     for s, sites in res.get("traced_call_sites", {}).items():
         lines += [f"  {s}: {site}" for site in sites]

@@ -28,8 +28,8 @@ per job group through ``sc.statusTracker()``.
   and the Python driver's peak resident MB during the call over its size
   before it.
 - ``spread``: the consumers of ``kg.relational.spread_small_scan``
-  (``simhash``, the minhash signature kernel, ``cosine_topk``) on the
-  generator's ``documents`` and ``embeddings`` at each scale factor, with
+  (``simhash`` and the minhash signature kernel) on the generator's
+  ``documents`` at each scale factor, with
   the scan always round-robin repartitioned to the pool's parallelism
   (spread) and never (no spread), interleaved; prints the input's plan
   size estimate (what ``SPREAD_MIN_BYTES`` is compared with), median CPU
@@ -253,7 +253,6 @@ def spread(spark, meter, work, args) -> bool:
 
     import kg.relational as R
     from kg.ops import dedup
-    from kg.ops.similarity import cosine_topk
     from perfbench import tables
 
     default = R.spread_small_scan
@@ -262,29 +261,19 @@ def spread(spark, meter, work, args) -> bool:
     leaves = {
         "simhash": lambda d: dedup.simhash64(d["documents"]),
         "minhash_sigs": lambda d: dedup.doc_shingle_buckets(d["documents"]),
-        "cosine_topk": lambda d: cosine_topk(d["embeddings"], [1.0] * tables.EMB_DIM, k=10),
     }
-    source = {"simhash": "documents", "minhash_sigs": "documents", "cosine_topk": "embeddings"}
     print(f"median of {args.repeats} interleaved calls per side after one warm-up each")
     print(f"{'leaf':<14}{'sf':>5}{'plan MB':>9}{'side':>11}{'CPU-s':>8}{'wall-s':>8}{'jobs':>6}{'steal':>7}")
     for sf in args.sf:
-        # perfbench.tables.generate's first two tables, without its star
-        # schema (millions of lineitem rows at sf 2): the same generator
-        # state, so the same rows
+        # perfbench.tables.generate's first table, without its star schema
+        # (millions of lineitem rows at sf 2): the same generator state, so
+        # the same rows
         rng = np.random.default_rng([1, 0x7AB1E5])
-        inputs = {
-            "documents": tables._documents(rng, max(16, int(sf * 50_000))),
-            "embeddings": tables._embeddings(rng, max(16, int(sf * 20_000))),
-        }
-        frames = {}
-        for name, t in inputs.items():
-            path = os.path.join(work, f"{name}-{sf}.parquet")
-            pq.write_table(t, path)
-            frames[name] = spark.read.parquet(path)
+        path = os.path.join(work, f"documents-{sf}.parquet")
+        pq.write_table(tables._documents(rng, max(16, int(sf * 50_000))), path)
+        frames = {"documents": spark.read.parquet(path)}
         for leaf, build in leaves.items():
-            src = frames[source[leaf]]
-            if leaf != "cosine_topk":
-                src = src.select("doc_id", "text")
+            src = frames["documents"].select("doc_id", "text")
             est = src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() / 2**20
             runs = {"spread": [], "no spread": []}
             try:
