@@ -1,7 +1,4 @@
-"""Round-6 optimization measurement harness (guide §1) — bench.py is FROZEN,
-so all extra instrumentation lives here.
-
-Modes:
+"""Per-query timing and plans for the relational bench leaves.
 
   python bench_extra.py queries [sf_dir] [name ...]
       Time each named entry query (default: bench.py's RELATIONAL_BENCH)
@@ -9,24 +6,17 @@ Modes:
       ``.explain("formatted")`` for each to plans/r06/<name>_<tag>.txt
       (tag via $BENCH_EXTRA_TAG, default "before").
 
-  python bench_extra.py pipeline [sf_dir] [n_docs]
-      One end-to-end run_pipeline on a fresh tmpfs checkpoint dir with
-      per-stage timings printed (the stage-level profile bench.py's
-      kg_pipeline number aggregates).
-
-  python bench_extra.py append [sf_dir] [base_docs]
-      One run_pipeline + both append batches with per-stage timings.
-
-Every job is labelled via setJobDescription so the plans/UI stay readable.
+Pipeline and append runs are ``bench.py``'s (``bench_kg``,
+``bench_kg_append``); ``tools/append_profile.py`` profiles an append per
+stage.  Every job is labelled via setJobDescription so the plans/UI stay
+readable.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -87,82 +77,14 @@ def bench_queries(sf_dir: str, names: list[str]) -> None:
     spark.stop()
 
 
-def bench_pipeline(sf_dir: str, n_docs: int) -> None:
-    from kg.pipeline import run_pipeline
-    from kg.synth import corpus_vocab, synth_docs_df
-
-    spark = _spark()
-    vocab = corpus_vocab()
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    base = tempfile.mkdtemp(prefix="kg_bx_", dir=shm)
-    try:
-        run_pipeline(
-            spark, synth_docs_df(spark, 2000), os.path.join(base, "warm"),
-            vocab=vocab, input_token="synth:2000:42",
-        )
-        t0 = time.perf_counter()
-        res = run_pipeline(
-            spark, synth_docs_df(spark, n_docs), base,
-            vocab=vocab, input_token=f"synth:{n_docs}:42",
-        )
-        wall = time.perf_counter() - t0
-        print(json.dumps({
-            "n_docs": n_docs, "wall": round(wall, 3),
-            "timings": res.timings, "counts": res.counts(),
-        }, indent=1))
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        spark.stop()
-
-
-def bench_append(sf_dir: str, n_docs: int) -> None:
-    from kg.pipeline import run_pipeline, run_pipeline_append
-    from kg.synth import corpus_vocab, docs_to_df, synth_docs
-
-    spark = _spark()
-    vocab = corpus_vocab()
-    batch_sizes = [max(1, int(n_docs * f)) for f in (0.1, 0.01)]
-    docs = synth_docs(n_docs + sum(batch_sizes))
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    base = tempfile.mkdtemp(prefix="kg_bxa_", dir=shm)
-    try:
-        t0 = time.perf_counter()
-        res = run_pipeline(
-            spark, docs_to_df(spark, docs[:n_docs]), base,
-            vocab=vocab, input_token=f"base:{n_docs}",
-        )
-        full = time.perf_counter() - t0
-        print(json.dumps({"phase": "full", "sec": round(full, 3),
-                          "timings": res.timings}, indent=1))
-        off = n_docs
-        for nb in batch_sizes:
-            t0 = time.perf_counter()
-            res = run_pipeline_append(
-                spark, docs_to_df(spark, docs[off:off + nb]), base,
-                vocab=vocab, input_token=f"batch:{off}:{nb}",
-            )
-            sec = time.perf_counter() - t0
-            off += nb
-            print(json.dumps({"phase": f"append_{nb}", "sec": round(sec, 3),
-                              "timings": res.timings}, indent=1))
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        spark.stop()
-
-
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    if mode == "queries":
-        bench_queries(sf_dir, sys.argv[3:])
-    elif mode == "pipeline":
-        bench_pipeline(sf_dir, int(sys.argv[3]) if len(sys.argv) > 3 else 100_000)
-    elif mode == "append":
-        bench_append(sf_dir, int(sys.argv[3]) if len(sys.argv) > 3 else 50_000)
-    else:
+    if mode != "queries":
         raise SystemExit(f"unknown mode {mode!r}")
+    bench_queries(sf_dir, sys.argv[3:])
 
 
 if __name__ == "__main__":

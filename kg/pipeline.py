@@ -60,10 +60,11 @@ bound) and the grouping aggregations of edges, and of nodes above the bound
 (below it, the one mention-count aggregation of a rebuild) — all keyed,
 AQE-coalesced, skew-join protected.
 
-Scheduling: each stage is submitted as soon as its inputs commit, to the
-executor ``_stage_executor`` sizes from the committed corpus.
-``PipelineResult.executed`` is canonical DAG order whatever the completion
-order.
+Scheduling: ``_fold`` runs the stages one after another in ``STAGES``
+order on the calling thread, then the span check; ``STAGES`` lists every
+stage after its inputs.  ``PipelineResult.executed`` lists the commits in
+the order they were made, so an append's ``+append`` entries stand where
+their stages ran, between the tail's rebuilds.
 """
 
 from __future__ import annotations
@@ -71,7 +72,6 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable, Mapping
-from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,9 +102,9 @@ from kg.synth import corpus_vocab
 from kg.tokenizer import Vocab
 
 
-class _SerialExecutor:
-    """Drop-in ThreadPoolExecutor stand-in that runs submit() inline on the
-    calling thread — the serial scheduling path, same code shape."""
+class _InlineRunner:
+    """Runs each submitted task at once on the calling thread and returns
+    its result."""
 
     def __enter__(self):
         return self
@@ -112,52 +112,17 @@ class _SerialExecutor:
     def __exit__(self, *exc):
         return False
 
-    def submit(self, fn, *args, **kwargs) -> Future:
-        f: Future = Future()
-        try:
-            f.set_result(fn(*args, **kwargs))
-        except BaseException as e:  # noqa: BLE001 — mirror executor semantics
-            f.set_exception(e)
-        return f
+    def submit(self, fn):
+        return fn()
 
 
-# Graduated overlap width (r6).  4-way submission wins only in the
-# micro-stage regime where per-stage fixed costs dominate; calibrated
-# between the measured 4-way win at local[32]/100k docs (3.1k docs/slot:
-# 38s -> 21s), the r6 3-pair interleaved win at the 550k-doc append tail
-# (17.2k docs/slot: serial [25.4,12.9,13.2]s vs [15.7,12.1,10.0]s), and
-# the measured 4-way LOSS at 31k docs/slot (1M fresh run, 39.8s vs 36.9s).
-STAGE_OVERLAP_MAX_ROWS_PER_SLOT = 24_000
-# Past that, TWO jobs in flight keep winning long after four stop (guide
-# §2.6: "2-3 jobs in flight is plenty" — the second job back-fills the
-# first's commit tails without the 4-way thrash).  Measured r6, every
-# interleaved pair: local[32]/1M (31k docs/slot) serial [26.1,23.2,23.8]s
-# vs 2-way [17.9,16.4,16.8]s; local[32]/4M (125k/slot) [61.4,59.1] vs
-# [48.4,49.9]; PINNED local[8]/4M (500k/slot) [102.6,114.2] vs
-# [88.4,86.0].  Above the measured 512k-docs/slot win boundary the r5
-# evidence (4-way collapse at 2M docs/slot, every overlapped stage's wall
-# grew to the group total at pinned local[8]/16M; no 2-way measurement
-# there) makes serial the conservative 100-TB default.
-STAGE_OVERLAP2_MAX_ROWS_PER_SLOT = 512_000
-# The r6 figures above were measured with fixed stage groups: extract and
-# linked on the calling thread, the four per-document siblings as one pooled
-# group, then nodes, edges and the invariant check as another.  ``_fold``
-# submits each stage when its inputs commit, so above 8 slots extract and
-# linked take pool workers, keyphrases and documents_out may start before
-# mentions, and the invariant check can overlap linking.  Those overlap sets
-# are unmeasured at these widths (ROADMAP item 3).
-
-
-def _stage_executor(spark: SparkSession, n_rows: int = 0):
-    """How many stages run at once, from the corpus rows per task slot:
-    serial below 8 slots and above ``STAGE_OVERLAP2_MAX_ROWS_PER_SLOT``,
-    4 up to ``STAGE_OVERLAP_MAX_ROWS_PER_SLOT``, 2 between."""
-    slots = spark.sparkContext.defaultParallelism
-    per_slot = n_rows / max(slots, 1)
-    if slots < 8 or per_slot > STAGE_OVERLAP2_MAX_ROWS_PER_SLOT:
-        return _SerialExecutor()
-    workers = 4 if per_slot <= STAGE_OVERLAP_MAX_ROWS_PER_SLOT else 2
-    return ThreadPoolExecutor(max_workers=workers, thread_name_prefix="kg-stage")
+def _stage_executor() -> _InlineRunner:
+    """The runner ``_fold`` hands each stage's task to.  The stages run in
+    ``STAGES`` order on the calling thread; this seam exists only so a
+    tracer can wrap the tasks it spans by name (perfbench/trace.py replaces
+    this attribute and spans ``_nodes_stage``/``_edges_stage``), until stage
+    spans move into ``_Fold.step`` (ROADMAP item 2)."""
+    return _InlineRunner()
 
 
 def _run_linked_stage(
@@ -498,17 +463,6 @@ def _task(name: str, fn, *args):
     return task
 
 
-def _ledger(executed: list[str]) -> list[str]:
-    """``executed`` in canonical DAG order: appended stages, then the rest.
-    Stages outside the table (signature table, CC rounds, ``nodes_mtc``)
-    keep their commit order, placed before linked."""
-    aux = [s for s in executed if s.removesuffix("+append") not in _NAMES]
-    return [f"{s}+append" for s in _NAMES if f"{s}+append" in executed] + [
-        x for s in _NAMES
-        for x in (aux if s == "linked" else []) + ([s] if s in executed else [])
-    ]
-
-
 def input_fingerprint(docs: DataFrame) -> str:
     """Order-independent content fingerprint of the input corpus.
 
@@ -553,7 +507,11 @@ class PipelineResult:
     """``tables`` maps each of the nine published stages to a reader of its
     committed checkpoint: the readers opened during the run, and for the
     stages the run appended to, a reader opened on first access (one file
-    listing + schema job each) of whatever that stage has committed then."""
+    listing + schema job each) of whatever that stage has committed then.
+    ``executed`` lists what the call committed, in commit order: ``<stage>``
+    for a rebuild, ``<stage>+append`` for an increment, and the commits a
+    stage makes before its own (the signature table and CC rounds before
+    ``linked``, ``nodes_mtc`` before ``nodes``) where they happened."""
 
     tables: Mapping[str, DataFrame]
     catalog: StageCatalog
@@ -566,35 +524,23 @@ class PipelineResult:
 
 
 def _fold(cat, vocab, check_invariant, docs, token, tokens, batch=None) -> PipelineResult:
-    """Run ``STAGES`` over ``cat`` by the rule in the module docstring.
-    ``docs`` is the input a rebuilt documents stage commits, ``token`` its
-    ``__input__`` version, ``tokens`` its batch ledger."""
+    """Run ``STAGES`` over ``cat`` in order, each by the rule in the module
+    docstring, then the span check.  ``docs`` is the input a rebuilt
+    documents stage commits, ``token`` its ``__input__`` version, ``tokens``
+    its batch ledger."""
     f = _Fold(cat, vocab or corpus_vocab(), docs, token, tokens, batch)
-    f.step(STAGES[0])  # documents first: the width is sized on the committed corpus
-    tasks = [(st.name, st.inputs, _task(f"_{st.name}_stage", f.step, st)) for st in STAGES[1:]]
-    if check_invariant:
-        tasks.append(("invariant", ("documents_out",), _task("_check", f.check)))
-    done = {"documents": None}
-    running: dict[Future, str] = {}
-    with _stage_executor(cat.spark, cat.manifest("documents")["rows"]) as ex:
-        while tasks or running:
-            for t in [t for t in tasks if set(t[1]) <= done.keys()]:
-                tasks.remove(t)
-                fut = ex.submit(t[2])
-                if fut.done():  # serial: a failed stage stops the fold here
-                    done[t[0]] = fut.result()
-                else:
-                    running[fut] = t[0]
-            finished, _ = wait(running, return_when=FIRST_COMPLETED)
-            for fut in finished:
-                done[running.pop(fut)] = fut.result()
-    violations = done.get("invariant", 0)
+    violations = 0
+    with _stage_executor() as ex:
+        for st in STAGES:
+            ex.submit(_task(f"_{st.name}_stage", f.step, st))
+        if check_invariant:
+            violations = ex.submit(_task("_check", f.check))
     if violations:
         raise AssertionError(f"span-sequence invariant violated for {violations} docs")
     return PipelineResult(
         tables=_LazyTables(cat, _NAMES, f.tables),
         catalog=cat,
-        executed=_ledger(cat.executed),
+        executed=list(cat.executed),
         invariant_violations=violations,
         timings=f.timings,
     )

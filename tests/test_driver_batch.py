@@ -8,6 +8,7 @@ Runs on in-test documents, so it needs no reference corpus file.
 """
 
 import json
+import time
 
 import pytest
 
@@ -162,6 +163,7 @@ def test_append_below_the_batch_bound_runs_no_job_in_the_per_document_stages(
     does, so edges take their recompute; the pull is the one job outside
     the stages."""
     from perfbench.trace import STAGES, Tracer
+    from perfbench.workloads import spans_account
 
     docs = synth_docs(100, sentences=sentences)
     base = str(tmp_path / "jobs")
@@ -173,10 +175,12 @@ def test_append_below_the_batch_bound_runs_no_job_in_the_per_document_stages(
     tracer.install()
     try:
         tracer.begin_op("batchguard")
+        t0 = time.perf_counter()
         res = run_pipeline_append(
             spark, docs_to_df(spark, [_text("r-b0", "中国致公/ns 北京/ns")]), base,
             vocab=vocab, input_token="b2",
         )
+        t1 = time.perf_counter()
     finally:
         tracer.uninstall()
     tracker = spark.sparkContext.statusTracker()
@@ -188,3 +192,7 @@ def test_append_below_the_batch_bound_runs_no_job_in_the_per_document_stages(
     assert all(jobs[s] == 0 for s in (*per_document, "invariant")), jobs
     assert jobs["driver"] == 1, jobs
     assert sum(jobs.values()) <= 5, jobs
+    # the tracer spans every stage the append ran, nodes and edges through
+    # their named tasks, all inside the append's wall
+    assert spans_account(tracer, "batchguard", t0, t1, res.executed)
+    assert {"nodes", "edges"} <= tracer.op_stages("batchguard")

@@ -192,57 +192,6 @@ def test_append_after_interrupted_append_equals_fresh(
             assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
 
 
-def _fresh_and_append(spark, vocab, base, split_corpus):
-    """A fresh run over the whole corpus and a run over its first part
-    with the rest appended."""
-    old, new, full = split_corpus
-    fresh = run_pipeline(
-        spark, docs_to_df(spark, full), f"{base}/fresh", vocab=vocab,
-        input_token="t150",
-    )
-    run_pipeline(
-        spark, docs_to_df(spark, old), f"{base}/inc", vocab=vocab,
-        input_token="t100",
-    )
-    res = run_pipeline_append(
-        spark, docs_to_df(spark, new), f"{base}/inc", vocab=vocab,
-        input_token="b2",
-    )
-    return fresh, res
-
-
-@pytest.mark.parametrize("width", [2, 4])
-def test_threaded_scheduler_matches_serial(
-    spark, vocab, sentences, tmp_path, monkeypatch, split_corpus, width
-):
-    """The pool branch of the scheduler (chosen from 8 slots up): stages
-    submitted as their inputs commit and finishing in any order give the
-    serial run's tables and ``executed`` ledgers, and an interrupted append
-    followed by another batch still equals a fresh run."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import kg.pipeline
-
-    serial_fresh, serial_res = _fresh_and_append(
-        spark, vocab, str(tmp_path / "serial"), split_corpus
-    )
-    monkeypatch.setattr(
-        kg.pipeline, "_stage_executor",
-        lambda spark, n_rows=0: ThreadPoolExecutor(max_workers=width),
-    )
-    fresh, res = _fresh_and_append(spark, vocab, str(tmp_path / "pool"), split_corpus)
-    assert fresh.executed == serial_fresh.executed
-    assert res.executed == serial_res.executed
-    for name in fresh.tables:
-        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
-        assert _rows(fresh.tables[name]) == _rows(serial_fresh.tables[name]), name
-    res, fresh = _interrupted_then_append(
-        spark, vocab, sentences, tmp_path, monkeypatch, "mentions"
-    )
-    for name in fresh.tables:
-        assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
-
-
 def test_append_of_a_batch_without_triples_equals_fresh(
     spark, vocab, tmp_path, split_corpus, monkeypatch
 ):
