@@ -222,11 +222,10 @@ class StageCatalog:
         ``reconcile`` pass at the start of the next append (and never read
         meanwhile); a retry then re-appends the batch cleanly
         (tests/test_incremental.py::test_torn_append_*).
-        ``partition_by`` appends hive-partitioned increments (r6 — the
-        incremental edges path): new part-files land inside their partition
-        subdirectories, the manifest records partition-relative paths, and
-        ``read``'s basePath recovery is unchanged.  Must match the stage's
-        original partitioning.
+        ``partition_by`` appends hive-partitioned increments: new part-files
+        land inside their partition subdirectories, the manifest records
+        partition-relative paths, and ``read``'s basePath recovery is
+        unchanged.  Must match the stage's original partitioning.
         """
         return self._commit(
             stage, data, partition_by, inputs, extra_inputs, meta, append=True
@@ -322,20 +321,22 @@ class StageCatalog:
             pq.write_table(table, os.path.join(path, f"part-00000-{job}-c000{ext}.parquet"),
                            compression=codec)
             return
-        keys = list(zip(*(
-            pc.cast(table.column(c), pa.string()).to_pylist() for c in partition_by
-        )))
-        rows: dict[tuple, list[int]] = {}
-        for i, key in enumerate(keys):
-            rows.setdefault(key, []).append(i)
+        # sort the rows on each key's dictionary codes, then write each run
+        # of one partition value as a slice: no per-row Python loop
+        codes = {c: pc.dictionary_encode(table[c].combine_chunks()).indices for c in partition_by}
+        table = table.take(pc.sort_indices(pa.table(codes), [(c, "ascending") for c in codes]))
+        runs = [pc.run_end_encode(table[c].combine_chunks()).run_ends for c in codes]
+        ends = sorted({e for r in runs for e in r.to_pylist()})
+        keys = [pc.cast(table[c], pa.string()) for c in partition_by]
         data = table.select([c for c in table.column_names if c not in partition_by])
-        for key, idx in rows.items():
+        for start, end in zip([0] + ends, ends):
             sub = os.path.join(path, *(
                 f"{_escape(c)}={_HIVE_NULL if v is None else _escape(v)}"
-                for c, v in zip(partition_by, key)
+                for c, v in zip(partition_by, (k[start].as_py() for k in keys))
             ))
             os.makedirs(sub, exist_ok=True)
-            pq.write_table(data.take(idx), os.path.join(sub, f"part-00000-{job}.c000{ext}.parquet"),
+            pq.write_table(data.slice(start, end - start),
+                           os.path.join(sub, f"part-00000-{job}.c000{ext}.parquet"),
                            compression=codec)
 
     def reanchor(self, stage: str, extra_inputs: dict[str, str]) -> None:

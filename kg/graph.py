@@ -8,11 +8,14 @@ ids are stable across runs and cluster sizes (no monotonically_increasing_id,
 which is partition-layout-dependent and would break resume byte-identity).
 ``kind`` is the modal mention tag with deterministic ties (count desc, tag asc).
 
-Nodes have two builders over the same (mention, tag, cnt) statistic: the
-Spark one (``build_nodes_from_counts``) and a driver one
-(``nodes_from_counts_local``, pandas in, ``pyarrow.Table`` out; the
-statistic merged by ``merge_counts_local``) for vocabularies small enough
-to link on the driver.  They give the same rows.
+Nodes and edges each have two builders that give the same rows: a Spark
+one and a driver one.  Nodes build from the (mention, tag, cnt) statistic,
+by ``build_nodes_from_counts`` or, for vocabularies small enough to link on
+the driver, by ``nodes_from_counts_local`` (pandas in, ``pyarrow.Table``
+out; the statistic merged by ``merge_counts_local``).  Edges build from the
+triples and the linked map, by ``build_edges`` or, for triples tables small
+enough to hold on the driver, by ``edges_local`` (``pyarrow.Table`` in and
+out, in the same schema).
 """
 
 from __future__ import annotations
@@ -126,6 +129,37 @@ def build_edges(triples: DataFrame, mention_map: DataFrame) -> DataFrame:
             "weight",
         )
     )
+
+
+def edges_local(triples, linked):
+    """``build_edges`` on the driver: ``triples`` (subj, pred, obj, doc_id,
+    ...) and ``linked`` (mention, canonical) are ``pyarrow.Table``s; returns
+    the edges as a ``pyarrow.Table`` in the Spark builder's schema (``weight``
+    non-nullable, as Spark's count is).  Same rules: inner joins of subj and
+    obj on the map (null keys match nothing), groups with null ``pred`` or
+    ``doc_id`` kept, ``entity_id`` hashed once per distinct canonical."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    m = linked.select(["mention", "canonical"])
+    g = (
+        triples.select(["subj", "pred", "obj", "doc_id"])
+        .join(m.rename_columns(["subj", "subj_canonical"]), "subj", join_type="inner")
+        .join(m.rename_columns(["obj", "obj_canonical"]), "obj", join_type="inner")
+        .group_by(["subj_canonical", "pred", "obj_canonical", "doc_id"])
+        .aggregate([([], "count_all")])
+    )
+    subj, obj = g.column("subj_canonical"), g.column("obj_canonical")
+    canonical = pc.unique(pa.chunked_array(subj.chunks + obj.chunks, pa.string())).drop_null()
+    ids = pa.array(
+        [hashlib.sha256(c.encode()).hexdigest()[:16] for c in canonical.to_pylist()], pa.string()
+    )
+    schema = pa.schema([(c, pa.string()) for c in ("subj", "pred", "obj", "doc_id")])
+    return pa.Table.from_arrays([
+        ids.take(pc.index_in(subj, value_set=canonical)), g.column("pred"),
+        ids.take(pc.index_in(obj, value_set=canonical)), g.column("doc_id"),
+        pc.cast(g.column("count_all"), pa.float64()),
+    ], schema=schema.append(pa.field("weight", pa.float64(), nullable=False)))
 
 
 def entity_pagerank(

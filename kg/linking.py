@@ -94,8 +94,7 @@ _P = MINHASH_PRIME
 # The same bound keeps the rest of an append's vocabulary-sized tail on the
 # driver.  ``tools/link_crossover.py 100000 <shape> tail`` runs it step by
 # step at the bound (1% never-seen mentions, the pre-batch map held
-# throughout, as the pipeline holds it for the edges check); peak resident
-# MB of the Python driver in each step, same VM:
+# throughout); peak resident MB of the Python driver in each step, same VM:
 #              before  old map  sig delta  link  nodes_mtc  nodes  map compare
 #   gen          180      200        210   355        281    341          324
 #   prefix       215      230        240   397        300    342          326

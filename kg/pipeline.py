@@ -20,12 +20,13 @@ resume, and takes one path per stage:
 
 The increments: the per-document stages file-append the batch's rows,
 ``linked`` refreshes its signature table from the batch's mentions
-(``_run_linked_stage``), ``nodes`` merges the batch's counts into
-``nodes_mtc``, and ``edges`` appends the batch's edges when no old
-canonical moved and its doc_ids are new.  A fresh run is ``_fold`` with no
-batch, and so is an append whose batch is already folded in (a retried or
-interrupted append): every stage left stale by an interrupted append is
-rebuilt.
+(``_run_linked_stage``), and ``nodes`` merges the batch's counts into
+``nodes_mtc``.  ``edges`` has no increment: a batch's new mention can join
+an old component and rename it, and a reused doc_id merges into an old
+group, so every call that changes the triples or the map recomputes it.  A
+fresh run is ``_fold`` with no batch, and so is an append whose batch is
+already folded in (a retried or interrupted append): every stage left stale
+by an interrupted append is rebuilt.
 
 The vocabulary-sized tail — the signature delta, the linked map,
 ``nodes_mtc`` and nodes, whose inputs are sized by the distinct mentions,
@@ -40,25 +41,29 @@ a fresh run or resume after the table is refreshed.  A fresh run below
 the bound counts mentions in one Spark aggregation and builds nodes from
 it on the driver too.  Above the bound all of it is Spark.
 
+The edges recompute runs on the driver while the triples manifest holds
+at most ``DRIVER_EDGES_MAX_TRIPLES`` rows, on a fresh run, an append and a
+resume alike: the triples and the linked map are read through Arrow, the
+edges built by ``kg.graph.edges_local`` and committed from the
+``pyarrow.Table``.  Above the bound ``kg.graph.build_edges`` runs on Spark.
+
 The batch-sized head — the six per-document increments and the span
 check — runs on the driver when an append's batch holds at most
 ``DRIVER_BATCH_MAX_DOCS`` documents: ``run_pipeline_append`` pulls it in one
 Arrow job, and each per-document stage computes its increment from its
 source's increment in memory (``_Fold.held``) with the ``*_local`` twin of
 its Spark function, commits it from the ``pyarrow.Table`` and hands that
-table on; the span check compares the held tables exactly.  Below both
-bounds an append runs the pull and the edges stage's jobs only (4 on an
-``append_growth`` batch, which renames a component, so edges are
-recomputed).  A larger batch is checkpointed and its increments run on
-Spark.
+table on; the span check compares the held tables exactly.  Below all
+three bounds an append runs one Spark job, the pull.  A larger batch is
+checkpointed and its increments run on Spark.
 
 Shuffle budget at scale (SURVEY.md §4): documents→extract is shuffle-free
 (narrow explode + mapInPandas over input splits); mentions/triples are
 narrow explodes of the extract checkpoint; the first shuffles appear at
 entity linking (distinct mentions; the LSH bucket join only above the
-bound) and the grouping aggregations of edges, and of nodes above the bound
-(below it, the one mention-count aggregation of a rebuild) — all keyed,
-AQE-coalesced, skew-join protected.
+bound) and the grouping aggregations of edges and nodes above their bounds
+(below the link bound, the one mention-count aggregation of a rebuild) —
+all keyed, AQE-coalesced, skew-join protected.
 
 Scheduling: ``_fold`` runs the stages one after another in ``STAGES``
 order on the calling thread, then the span check; ``STAGES`` lists every
@@ -69,7 +74,6 @@ their stages ran, between the tail's rebuilds.
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
@@ -81,6 +85,7 @@ from kg.catalog import StageCatalog
 from kg.graph import (
     build_edges,
     build_nodes_from_counts,
+    edges_local,
     mention_tag_counts,
     merge_counts_local,
     nodes_from_counts_local,
@@ -121,7 +126,7 @@ def _stage_executor() -> _InlineRunner:
     ``STAGES`` order on the calling thread; this seam exists only so a
     tracer can wrap the tasks it spans by name (perfbench/trace.py replaces
     this attribute and spans ``_nodes_stage``/``_edges_stage``), until stage
-    spans move into ``_Fold.step`` (ROADMAP item 2)."""
+    spans move into ``_Fold.step`` (ROADMAP item 3)."""
     return _InlineRunner()
 
 
@@ -194,8 +199,7 @@ class Stage:
     """One node of the DAG.  ``build`` returns the stage's rows from the
     committed inputs (a DataFrame, or a ``pyarrow.Table`` built on the
     driver); ``increment`` returns the batch's rows to file-append — a
-    DataFrame, or a function computing a ``pyarrow.Table`` on the driver —
-    or None when a precondition of its own fails (the stage then rebuilds).
+    DataFrame, or a function computing a ``pyarrow.Table`` on the driver.
     A stage with ``own_commit`` keys and commits its checkpoint itself, and
     ``build`` returns nothing (its reader opens on first use)."""
 
@@ -278,37 +282,16 @@ def _nodes(f: _Fold):
     return build_nodes_from_counts(counts, f.read("linked"))
 
 
-def _linked_map(cat: StageCatalog) -> dict[str, str]:
-    table = cat.read_arrow("linked")
-    return dict(zip(table.column("mention").to_pylist(), table.column("canonical").to_pylist()))
-
-
-def _edges_delta(f: _Fold) -> DataFrame | None:
-    """The batch's edges, when appending them equals a rebuild: edges group
-    by (subj, pred, obj, doc_id), so a batch whose doc_ids are all new
-    touches no old group, and when no old mention's canonical moved (a new
-    mention joining an old component can rename it) every old row is
-    unchanged.  Canonical stability is checked first — on the driver side
-    of the bound from the old and new maps read through Arrow — so a batch
-    that renames a component (the common case) never scans the documents
-    table for its doc_ids."""
-    if f.on_driver:
-        new = _linked_map(f.cat)
-        moved = any(new.get(m) != c for m, c in f.old_map.items())
-    else:
-        moved = not (
-            f.old_linked.withColumnRenamed("canonical", "old_canonical")
-            .join(f.read("linked"), "mention")
-            .where(F.col("old_canonical") != F.col("canonical"))
-            .isEmpty()
-        )
-    if moved:
-        return None
-    old_doc_ids = f.cat.read("documents", files=f.old_docs).select("doc_id")
-    new_doc_ids = f.inc("documents").select("doc_id")
-    if not new_doc_ids.join(old_doc_ids, "doc_id", "left_semi").isEmpty():
-        return None
-    return build_edges(f.inc("triples"), f.read("linked"))
+def _edges(f: _Fold):
+    """edges from the triples and the linked map, rebuilt on every call that
+    changes either: on the driver (both read through Arrow, the edges built
+    as a ``pyarrow.Table``) while the triples manifest holds at most
+    ``DRIVER_EDGES_MAX_TRIPLES`` rows, by Spark above — one edges path on
+    each side."""
+    if f.cat.manifest("triples")["rows"] <= DRIVER_EDGES_MAX_TRIPLES:
+        triples = f.cat.read_arrow("triples", ["subj", "pred", "obj", "doc_id"])
+        return edges_local(triples, f.cat.read_arrow("linked"))
+    return build_edges(f.read("triples"), f.read("linked"))
 
 
 # Published hive-partitioned on their dominant access key (VERDICT r2 item
@@ -330,11 +313,7 @@ STAGES = (
     ),
     Stage("linked", ("mentions",), _linked, own_commit=True),
     Stage("nodes", ("mentions", "linked"), _nodes, partition_by=("kind",)),
-    Stage(
-        "edges", ("triples", "linked"),
-        lambda f: build_edges(f.read("triples"), f.read("linked")),
-        _edges_delta, partition_by=("pred",),
-    ),
+    Stage("edges", ("triples", "linked"), _edges, partition_by=("pred",)),
     _per_document(
         "keyphrases", "documents",
         lambda f, d: keyphrases_table(d), lambda f, t: keyphrases_local(t),
@@ -367,20 +346,6 @@ class _Fold:
         # once per call: for an append, here, from the pre-batch signature
         # table; otherwise by the linked stage, from the refreshed one
         self.on_driver = links_on_driver(cat, "linked_cc_sigs") if batch is not None else None
-        self.old_map = self.old_linked = self.old_docs = None
-        if batch is not None and self.anchored("edges", ("triples", "linked")):
-            # edges' increment compares against the pre-batch map (a driver
-            # dict on the driver side) and doc_ids (read only if no
-            # canonical moved); the linked dir is overwritten below,
-            # documents grows
-            docs_dir = cat.data_dir("documents")
-            self.old_docs = [
-                os.path.join(docs_dir, x["file"]) for x in cat.manifest("documents")["files"]
-            ]
-            if self.on_driver:
-                self.old_map = _linked_map(cat)
-            else:
-                self.old_linked = cat.read("linked").localCheckpoint()
 
     def read(self, stage: str) -> DataFrame:
         if stage not in self.tables:
@@ -395,22 +360,17 @@ class _Fold:
             self.inc_tables[stage] = self.cat.read(stage, files=self.incs[stage])
         return self.inc_tables[stage]
 
-    def anchored(self, stage: str, inputs) -> bool:
-        """The stage's manifest records its inputs' pre-batch fingerprints."""
-        return self.cat.is_complete(stage, extra_inputs={i: self.pre[i] for i in inputs})
-
     def incremental(self, stage: str, inputs) -> bool:
         """Rule 2 (module docstring) for ``stage``."""
         return (
             self.batch is not None
             and all(i in self.incs for i in inputs)
-            and self.anchored(stage, inputs)
+            and self.cat.is_complete(stage, extra_inputs={i: self.pre[i] for i in inputs})
         )
 
     def step(self, st: Stage) -> None:
         """Run one stage by the rule; its timing covers the commit and a
-        driver increment's compute (a precondition an increment checks runs
-        before the clock starts)."""
+        driver increment's compute."""
         cat, name = self.cat, st.name
         kw = {
             "inputs": st.inputs, "partition_by": st.partition_by,
@@ -573,6 +533,28 @@ INCREMENT_DOCS_PER_PARTITION = 16_000
 # anyway (``INCREMENT_DOCS_PER_PARTITION``), so the bound is that constant.
 DRIVER_BATCH_MAX_DOCS = INCREMENT_DOCS_PER_PARTITION
 
+# The edges stage builds on the driver (``kg.graph.edges_local``) while the
+# triples manifest holds at most this many rows (``_edges``).  Measured with
+# ``tools/append_profile.py --seed 3 --edges-tiles 1 40 160 --bound 0
+# 1000000000000 --ops 3`` on a 4-core VM (local[4], 1 GB driver heap, as
+# perfbench runs): the edges stage alone, rebuilt from an ``append_growth``
+# catalog (base and two appends) whose triples are tiled K times (doc_ids
+# suffixed per copy, one file per core), the two sides interleaved, median
+# of 3 rebuilds after one warm-up.  CPU s of the process tree / wall s /
+# the Python driver's peak resident MB (225 before any edges build; the
+# allocator keeps what a driver build freed, so a Spark row's peak is what
+# the earlier driver builds left resident):
+#      triples      edges       spark                driver
+#       20,446     20,101    2.31 /  0.74 /   225    0.29 / 0.07 /  225
+#      817,840    804,040    9.41 /  2.68 /   571    1.88 / 1.22 /  794
+#    3,271,360  3,216,160   38.46 / 10.99 / 1454    6.71 / 4.33 / 2307
+# Both sides committed the same edges (order-insensitive digest) at every
+# size.  The driver uses 5-8x less CPU and less wall at every size, so the
+# bound is set by its memory, which Spark neither manages nor spills: about
+# 0.7 KB of driver peak per triple, some 0.7 GB over the baseline at the
+# bound, near the 0.55 GB ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` allows.
+DRIVER_EDGES_MAX_TRIPLES = 1_000_000
+
 
 def run_pipeline(
     spark: SparkSession,
@@ -611,20 +593,21 @@ def run_pipeline_append(
     linking (signatures only for the batch's never-seen mentions; the map
     over distinct mention strings, orders of magnitude smaller than the
     corpus; skipped when the batch adds no mention), nodes from the
-    maintained ``nodes_mtc`` counts, and edges.  While the signature table
-    holds at most ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` rows, the
-    signature delta, the map, ``nodes_mtc`` and nodes are computed and
-    committed on the driver through Arrow, with no Spark job; above it they
-    run on Spark.  A daily 1% batch therefore costs ~1% of extraction plus
-    the tail, instead of a full recompute.
+    maintained ``nodes_mtc`` counts, and the edges recompute.  While the
+    signature table holds at most ``kg.linking.DRIVER_LINK_MAX_MENTIONS``
+    rows, the signature delta, the map, ``nodes_mtc`` and nodes are
+    computed and committed on the driver through Arrow, with no Spark job;
+    above it they run on Spark.  Edges are recomputed the same way below
+    ``DRIVER_EDGES_MAX_TRIPLES`` triples, by Spark above.  A daily 1% batch
+    therefore costs ~1% of extraction plus the tail, instead of a full
+    recompute.
 
     The batch is pulled once, at most ``DRIVER_BATCH_MAX_DOCS`` + 1 rows
     through Arrow (one Spark job).  When it fits, the per-document
     increments and the span check are computed on the driver from that
-    table, with no Spark job; an append below both bounds then runs the
-    pull and the edges stage only.  When it does not fit, the batch is
-    checkpointed and re-widthed (``_spark_batch``) and the increments run
-    on Spark.
+    table, with no Spark job; an append below all three bounds then runs
+    the pull only.  When it does not fit, the batch is checkpointed and
+    re-widthed (``_spark_batch``) and the increments run on Spark.
 
     Equality contract: append(A then B) produces the same nine tables as a
     fresh run over A∪B (tests/test_incremental.py) — entity ids are

@@ -16,26 +16,30 @@ from kg.synth import (  # noqa: F401  (tagged_lines: imported by tests from here
 )
 
 
-def at_both_bounds(monkeypatch, bound: str = "kg.linking.DRIVER_LINK_MAX_MENTIONS"):
-    """Force a driver-vs-Spark bound (a dotted module constant, by default
-    ``kg.linking.DRIVER_LINK_MAX_MENTIONS``) to each side in turn and yield
+LINK_BOUND = "kg.linking.DRIVER_LINK_MAX_MENTIONS"
+DEDUP_BOUND = "kg.ops.dedup.DRIVER_DEDUP_MAX_ROWS"
+BATCH_BOUND = "kg.pipeline.DRIVER_BATCH_MAX_DOCS"
+EDGES_BOUND = "kg.pipeline.DRIVER_EDGES_MAX_TRIPLES"
+
+
+def at_both_bounds(monkeypatch, *bounds: str):
+    """Force driver-vs-Spark bounds (dotted module constants, by default
+    ``LINK_BOUND``) to each side in turn, all to the same side, and yield
     it: 10**12 (the driver side), then 0 (the Spark side).  Looped over in
     a test body rather than parametrized, so the test's id stays the same;
-    ``monkeypatch`` restores the bound at teardown."""
+    ``monkeypatch`` restores the bounds at teardown."""
     for value in (10**12, 0):
-        monkeypatch.setattr(bound, value)
+        for bound in bounds or (LINK_BOUND,):
+            monkeypatch.setattr(bound, value)
         yield value
 
 
-DEDUP_BOUND = "kg.ops.dedup.DRIVER_DEDUP_MAX_ROWS"
-BATCH_BOUND = "kg.pipeline.DRIVER_BATCH_MAX_DOCS"
-
-
 def at_both_link_and_batch_bounds(monkeypatch):
-    """``at_both_bounds`` of the linking bound and, within each side, of
-    ``BATCH_BOUND``: the four combinations in turn, each yielded as a label
-    ("<link>-<batch>") for its own paths."""
-    for link in at_both_bounds(monkeypatch):
+    """``at_both_bounds`` of the linking bound, with ``EDGES_BOUND`` on the
+    same side, and within each side of ``BATCH_BOUND``: the four
+    combinations in turn, each yielded as a label ("<link>-<batch>") for
+    its own paths."""
+    for link in at_both_bounds(monkeypatch, LINK_BOUND, EDGES_BOUND):
         for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
             yield f"{link}-{batch}"
 

@@ -1,12 +1,19 @@
 """entity_pagerank: distributed power iteration vs a pure-Python twin,
 stochastic-completion invariant (total rank 1.0), self-loop exclusion; the
-driver nodes builder against the Spark one."""
+driver nodes and edges builders against the Spark ones."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import Row
 
-from kg.graph import build_nodes_from_counts, entity_pagerank, nodes_from_counts_local
+from kg.catalog import StageCatalog
+from kg.graph import (
+    build_edges,
+    build_nodes_from_counts,
+    edges_local,
+    entity_pagerank,
+    nodes_from_counts_local,
+)
 
 
 def pagerank_local(links, damping=0.85, n_iters=3):
@@ -150,3 +157,55 @@ def test_driver_nodes_equal_spark_nodes(spark):
     )
     kinds = {r["canonical_text"]: (r["kind"], r["n_mentions"]) for r in local}
     assert kinds == {"北京": ("nt", 7), "上海": ("ns", 4), "李": ("nr", 5)}
+
+
+TRIPLES_SCHEMA = "subj string, pred string, obj string, doc_id string, sent_offset int"
+EDGE_TRIPLES = [
+    ("北京", "rel_ns_ns", "北京市", "d0", 0),  # a self-pair: one component
+    ("北京", "rel_ns_ns", "上海", "d0", 1),  # duplicated below: weight 2.0
+    ("北京", "rel_ns_ns", "上海", "d0", 2),
+    ("北京市", "rel_ns_ns", "上海", "d0", 3),  # two mentions, one canonical
+    ("北京", "rel_ns_ns", "上海", "d1", 0),
+    ("外", "rel_ns_ns", "上海", "d0", 0),  # subj missing from the map
+    ("上海", "rel_ns_ns", "外", "d0", 0),  # obj missing from the map
+    ("上海", None, "北京", "d2", 0),  # null pred
+    ("上海", "rel_ns_nr", "李", None, 0),  # null doc_id
+    ("上海", "rel_ns_nr", "李", None, 1),
+]
+
+
+def test_driver_edges_equal_spark_edges(spark, tmp_path):
+    """Same rows and schema from both builders on the edge cases above, and
+    from an empty triples table; the edges manifest's schema is the same
+    whichever side committed it."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    mention_map = spark.createDataFrame(
+        [("北京", "北京"), ("北京市", "北京"), ("上海", "上海"), ("李", "李")],
+        "mention string, canonical string",
+    )
+    for rows in (EDGE_TRIPLES, []):
+        triples = spark.createDataFrame(rows, TRIPLES_SCHEMA)
+        local = edges_local(triples.toArrow(), mention_map.toArrow())
+        distributed = build_edges(triples, mention_map)
+        assert from_arrow_schema(local.schema) == distributed.schema
+        assert sorted(repr(tuple(r.values())) for r in local.to_pylist()) == sorted(
+            repr(tuple(r)) for r in distributed.collect()
+        )
+        schemas = []
+        for name, data in (("spark", distributed), ("driver", local)):
+            cat = StageCatalog(spark, str(tmp_path / f"{name}{len(rows)}"))
+            cat.write("edges", data, partition_by=("pred",))
+            schemas.append(cat.manifest("edges")["schema"])
+        assert schemas[0] == schemas[1]
+    local = edges_local(
+        spark.createDataFrame(EDGE_TRIPLES, TRIPLES_SCHEMA).toArrow(), mention_map.toArrow()
+    )
+    weights = {
+        (r["pred"], r["doc_id"], r["subj"] == r["obj"]): r["weight"] for r in local.to_pylist()
+    }
+    assert weights == {
+        ("rel_ns_ns", "d0", True): 1.0, ("rel_ns_ns", "d0", False): 3.0,
+        ("rel_ns_ns", "d1", False): 1.0, (None, "d2", False): 1.0,
+        ("rel_ns_nr", None, False): 2.0,
+    }

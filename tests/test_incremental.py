@@ -6,7 +6,7 @@ import pytest
 from kg.pipeline import run_pipeline, run_pipeline_append
 from kg.synth import docs_to_df, synth_docs
 
-from conftest import BATCH_BOUND, at_both_bounds, at_both_link_and_batch_bounds
+from conftest import BATCH_BOUND, EDGES_BOUND, at_both_bounds, at_both_link_and_batch_bounds
 
 
 def _rows(df):
@@ -20,7 +20,7 @@ def split_corpus(sentences):
 
 
 def test_append_equals_fresh(spark, vocab, tmp_path, split_corpus, monkeypatch):
-    for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+    for batch in at_both_bounds(monkeypatch, BATCH_BOUND, EDGES_BOUND):
         old, new, full = split_corpus
         fresh = run_pipeline(
             spark, docs_to_df(spark, full), str(tmp_path / str(batch) / "fresh"),
@@ -40,12 +40,9 @@ def test_append_equals_fresh(spark, vocab, tmp_path, split_corpus, monkeypatch):
                       "keyphrases", "documents_out"):
             assert f"{stage}+append" in res.executed
             assert stage not in res.executed
-        # recomputed tail: linked + nodes; edges took the INCREMENTAL path (r6)
-        # on this corpus — batch doc_ids are disjoint and no old mention's
-        # canonical changed, so only the canonicalized delta was appended
-        assert {"linked", "nodes"} <= set(res.executed)
-        assert "edges+append" in res.executed
-        assert "edges" not in res.executed
+        # recomputed tail: linked, nodes and edges, which has no increment
+        assert {"linked", "nodes", "edges"} <= set(res.executed)
+        assert "edges+append" not in res.executed
 
 
 def test_append_is_idempotent(spark, vocab, tmp_path, split_corpus):
@@ -142,9 +139,10 @@ def test_torn_append_invisible_to_readers_and_retry_safe(
 
 
 def _interrupted_then_append(spark, vocab, sentences, tmp_path, monkeypatch, stage):
-    """Append batch A interrupted before ``<stage>+append``, then append a
-    different batch B; returns B's result and a fresh run over the
-    committed documents."""
+    """Append batch A interrupted before ``<stage>``'s commit (its append,
+    or for edges, which is rebuilt, its write), then append a different
+    batch B; returns B's result and a fresh run over the committed
+    documents."""
     from kg.catalog import StageCatalog
 
     docs = synth_docs(100, sentences=sentences)
@@ -152,15 +150,16 @@ def _interrupted_then_append(spark, vocab, sentences, tmp_path, monkeypatch, sta
     run_pipeline(
         spark, docs_to_df(spark, docs[:60]), base, vocab=vocab, input_token="base"
     )
-    real_append = StageCatalog.append
-
-    def interrupted(cat, name, *a, **kw):
-        if name == stage:
-            raise RuntimeError(f"interrupted before {stage}+append")
-        return real_append(cat, name, *a, **kw)
+    def interrupted(commit):
+        def wrapper(cat, name, *a, **kw):
+            if name == stage:
+                raise RuntimeError(f"interrupted before {stage}'s commit")
+            return commit(cat, name, *a, **kw)
+        return wrapper
 
     with monkeypatch.context() as m:
-        m.setattr(StageCatalog, "append", interrupted)
+        m.setattr(StageCatalog, "append", interrupted(StageCatalog.append))
+        m.setattr(StageCatalog, "write", interrupted(StageCatalog.write))
         with pytest.raises(RuntimeError, match="interrupted"):
             run_pipeline_append(
                 spark, docs_to_df(spark, docs[60:80]), base, vocab=vocab,
@@ -180,11 +179,11 @@ def _interrupted_then_append(spark, vocab, sentences, tmp_path, monkeypatch, sta
 def test_append_after_interrupted_append_equals_fresh(
     spark, vocab, sentences, tmp_path, monkeypatch, stage
 ):
-    """An append interrupted before ``<stage>+append`` leaves that stage
+    """An append interrupted before ``<stage>``'s commit leaves that stage
     current with the catalog before the append.  The next append, of a
     DIFFERENT batch, must not add only its own rows on top: every table
     must equal a fresh run over the committed documents."""
-    for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+    for batch in at_both_bounds(monkeypatch, BATCH_BOUND, EDGES_BOUND):
         res, fresh = _interrupted_then_append(
             spark, vocab, sentences, tmp_path / str(batch), monkeypatch, stage
         )
@@ -195,9 +194,9 @@ def test_append_after_interrupted_append_equals_fresh(
 def test_append_of_a_batch_without_triples_equals_fresh(
     spark, vocab, tmp_path, split_corpus, monkeypatch
 ):
-    """A batch whose sentences hold at most one entity adds no triple, so
-    the incremental edges path appends no row and its partitioned write
-    leaves no file.  The append must still commit and equal a fresh run."""
+    """A batch whose sentences hold at most one entity adds no triple: the
+    triples increment appends no row, and edges are still recomputed.  The
+    append must commit and equal a fresh run."""
     from kg.catalog import StageCatalog
 
     for bound in at_both_link_and_batch_bounds(monkeypatch):
@@ -217,7 +216,7 @@ def test_append_of_a_batch_without_triples_equals_fresh(
             spark, docs_to_df(spark, new), base, vocab=vocab, input_token="solo"
         )
         assert res.catalog.manifest("triples")["rows"] == n_triples
-        assert "edges+append" in res.executed
+        assert "edges" in res.executed
         fresh = run_pipeline(
             spark, docs_to_df(spark, old + new), str(tmp_path / str(bound) / "notriples_f"),
             vocab=vocab, input_token="tf",
@@ -312,7 +311,7 @@ def test_append_soak_chain_stays_equal_to_fresh(
     import kg.linking
 
     monkeypatch.setattr(kg.linking, "DRIVER_LINK_MAX_MENTIONS", 10**12)
-    for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+    for batch in at_both_bounds(monkeypatch, BATCH_BOUND, EDGES_BOUND):
         _soak_chain(spark, vocab, sentences, str(tmp_path / str(batch)), on_driver=True)
 
 
@@ -323,7 +322,7 @@ def test_append_soak_chain_distributed_tail_stays_equal_to_fresh(
     import kg.linking
 
     monkeypatch.setattr(kg.linking, "DRIVER_LINK_MAX_MENTIONS", 0)
-    for batch in at_both_bounds(monkeypatch, BATCH_BOUND):
+    for batch in at_both_bounds(monkeypatch, BATCH_BOUND, EDGES_BOUND):
         _soak_chain(spark, vocab, sentences, str(tmp_path / str(batch)), on_driver=False)
 
 
@@ -370,16 +369,13 @@ def _text_doc(doc_id: str, text: str) -> dict:
 def test_append_nondisjoint_doc_ids_falls_back_and_stays_equal(
     spark, vocab, tmp_path, split_corpus, monkeypatch
 ):
-    """A batch that REUSES an old doc_id breaks the doc-partitioned-groups
-    argument of the incremental edges path (r6): a fresh run MERGES the
-    (subj, pred, obj, doc_id) groups across the two same-id docs, a blind
-    file-append would keep them split.  The precheck must detect the
-    overlap and take the full-recompute fallback ('edges' executed, no
-    'edges+append'), whose global groupBy merges them identically to
-    fresh.  (Duplicate doc_ids violate the span invariant by construction
-    — both runs use check_invariant=False — and per-doc appended tables
-    like keyphrases are out of contract for such input; the edge/node/link
-    tail is what the fallback guarantees.)"""
+    """A batch that REUSES an old doc_id: a fresh run MERGES the (subj,
+    pred, obj, doc_id) groups across the two same-id docs, and so must the
+    append's edges recompute, whose grouping over all triples merges them
+    identically on both edges sides.  (Duplicate doc_ids violate the span
+    invariant by construction — both runs use check_invariant=False — and
+    per-doc appended tables like keyphrases are out of contract for such
+    input; the edge/node/link tail is what the recompute guarantees.)"""
     for bound in at_both_link_and_batch_bounds(monkeypatch):
         old, new, _ = split_corpus
         reused = [dict(new[0], doc_id=old[5]["doc_id"])] + new[1:3]
@@ -393,7 +389,6 @@ def test_append_nondisjoint_doc_ids_falls_back_and_stays_equal(
             check_invariant=False,
         )
         assert "edges" in res.executed
-        assert "edges+append" not in res.executed
         fresh = run_pipeline(
             spark, docs_to_df(spark, old + reused), str(tmp_path / str(bound) / "nondisj_f"),
             vocab=vocab, input_token="tf", check_invariant=False,
@@ -407,8 +402,9 @@ def test_append_canonical_rename_falls_back_and_stays_equal(
 ):
     """A new mention that joins an old component AND becomes its new
     (lexicographically smaller) canonical renames every old edge touching
-    the component — the stability check must force the full recompute and
-    the appended result must equal a fresh run over the union."""
+    the component: the edges recompute must rename the old edges on both
+    edges sides, and the appended result must equal a fresh run over the
+    union."""
     for bound in at_both_link_and_batch_bounds(monkeypatch):
         old = [
             _text_doc("doc-a0", "中国致公党/ns 中国致公党人/ns"),
@@ -426,7 +422,6 @@ def test_append_canonical_rename_falls_back_and_stays_equal(
         linked = {r["mention"]: r["canonical"] for r in res.tables["linked"].collect()}
         assert linked["中国致公党"] == "中国致公"
         assert "edges" in res.executed
-        assert "edges+append" not in res.executed
         fresh = run_pipeline(
             spark, docs_to_df(spark, old + new), str(tmp_path / str(bound) / "rename_f"),
             vocab=vocab, input_token="tF",

@@ -155,9 +155,9 @@ def test_append_below_the_bound_runs_no_job_in_linked_or_nodes(
     spark, tmp_path, corpus, local_vocab
 ):
     """Below the bound an append's vocabulary-sized tail runs on the driver:
-    no Spark job in the linked and nodes stages, and at most 30 in the
-    whole append, counted per stage by the job groups perfbench's tracer
-    sets."""
+    no Spark job in the linked and nodes stages, nor in edges below
+    ``DRIVER_EDGES_MAX_TRIPLES``, and at most 30 in the whole append,
+    counted per stage by the job groups perfbench's tracer sets."""
     from perfbench.trace import STAGES, Tracer
 
     old, new = corpus
@@ -181,7 +181,7 @@ def test_append_below_the_bound_runs_no_job_in_linked_or_nodes(
     tracker = spark.sparkContext.statusTracker()
     jobs = {s: len(tracker.getJobIdsForGroup(f"{s}@jobguard")) for s in ("driver", *STAGES)}
     assert {"linked_cc_sigs+append", "linked", "nodes_mtc", "nodes"} <= set(res.executed)
-    assert jobs["linked"] == jobs["nodes"] == 0, jobs
+    assert jobs["linked"] == jobs["nodes"] == jobs["edges"] == 0, jobs
     assert sum(jobs.values()) <= 30, jobs
 
 

@@ -2,6 +2,7 @@
 
     python3 tools/append_profile.py --seed 3 --ops 3
     python3 tools/append_profile.py --batch-docs 4000 --bound 0 1000000000000
+    python3 tools/append_profile.py --edges-tiles 1 40 160 --bound 0 1000000000000
 
 Run from the repository root.  The script builds the perfbench
 ``append_growth`` workload (same inputs, same checked setup, one warm-up
@@ -35,9 +36,22 @@ the traced op's jobs per pipeline stage through the job groups
 ``perfbench/trace.py`` sets, and samples the Python driver's peak resident
 size during each untraced op, over its size before it (``driver_mb``).  It
 prints a table of medians over the ops (per bound), then one JSON line with
-everything.  It imports perfbench and changes none
-of it; everything it writes goes under ``.append_profile_work/`` in the
-current directory, deleted at exit.
+everything.
+
+``--edges-tiles`` measures the edges stage alone instead, the way the table
+at ``kg.pipeline.DRIVER_EDGES_MAX_TRIPLES`` is made.  After setup and two
+appends, for each tile count K the committed triples are replaced by K
+copies of themselves (each copy's doc_ids suffixed, so the edges grow K
+times), written as one file per core so the Spark scan is spread.  The
+edges stage is then rebuilt alone (a resume of the catalog with the edges
+checkpoint removed) ``--ops`` times after one warm-up, with
+``DRIVER_EDGES_MAX_TRIPLES`` forced to each ``--bound`` in turn,
+interleaved.  Per rebuild: process-tree CPU-s, wall, the Python driver's
+peak resident size (absolute, and over its size before the rebuild) and
+an order-insensitive digest of the committed edges, equal on both sides.
+
+It imports perfbench and changes none of it; everything it writes goes
+under ``.append_profile_work/`` in the current directory, deleted at exit.
 """
 
 from __future__ import annotations
@@ -140,7 +154,10 @@ def _parse(argv):
     p.add_argument("--batch-docs", type=int, default=None,
                    help="documents per appended batch (default: the workload's)")
     p.add_argument("--bound", type=int, nargs="+", default=None,
-                   help="force kg.pipeline.DRIVER_BATCH_MAX_DOCS to each value in turn")
+                   help="force kg.pipeline.DRIVER_BATCH_MAX_DOCS (with --edges-tiles, "
+                        "DRIVER_EDGES_MAX_TRIPLES) to each value in turn")
+    p.add_argument("--edges-tiles", type=int, nargs="+", default=None,
+                   help="time the edges stage alone on the triples tiled this many times")
     return p.parse_args(argv)
 
 
@@ -200,6 +217,83 @@ def profile(args, work: str) -> dict:
     return out
 
 
+def edges_crossover(args, work: str) -> dict:
+    """The ``--edges-tiles`` measurement (module docstring)."""
+    import kg.pipeline
+    from pyspark.sql import functions as F
+
+    from kg.catalog import StageCatalog
+    from perfbench.run import RssSampler, _cpus, _start_spark, _stop_spark, tree_cpu_s
+    from perfbench.workloads import AppendGrowth
+    from tools.leaf_profile import DriverPeak
+
+    bounds = args.bound or [kg.pipeline.DRIVER_EDGES_MAX_TRIPLES]
+    spark = _start_spark(work, trace=False)
+    try:
+        with RssSampler(interval=3600) as rss:  # CPU clock only
+            wl = AppendGrowth(spark, work, args.seed)
+            cpu = lambda: tree_cpu_s(rss)  # noqa: E731
+            ok = [wl.setup(wl.generate()).ok]
+            ok += [wl.op(f"append{i}", None, cpu).ok for i in range(2)]
+            cat = StageCatalog(spark, wl.base)
+            token = cat.manifest("documents")["inputs"]["__input__"]
+            base = cat.read("triples").localCheckpoint()
+            runs = []
+            for tiles in args.edges_tiles:
+                tiled = base.crossJoin(spark.range(tiles)).select(
+                    "subj", "pred", "obj", F.concat_ws("#", "doc_id", F.col("id").cast("string"))
+                    .alias("doc_id"), "sent_offset",
+                ) if tiles > 1 else base
+                cat.write("triples", tiled.repartition(_cpus()), inputs=("extract",))
+                n_triples = cat.manifest("triples")["rows"]
+                for r in range(args.ops + 1):
+                    for bound in bounds:
+                        kg.pipeline.DRIVER_EDGES_MAX_TRIPLES = bound
+                        shutil.rmtree(os.path.join(wl.base, "edges"))
+                        c0 = cpu()
+                        with DriverPeak() as peak:
+                            res = kg.pipeline.run_pipeline(
+                                spark, None, wl.base, vocab=wl.vocab, check_invariant=False,
+                                input_token=token,
+                            )
+                        c1 = cpu()
+                        ok.append(res.executed == ["edges"])
+                        edges = cat.read("edges").select(
+                            F.count("*").alias("n"),
+                            F.bit_xor(F.xxhash64("subj", "pred", "obj", "doc_id", "weight")).alias("h"),
+                        ).first()
+                        runs.append({
+                            "tiles": tiles, "triples": n_triples, "bound": bound, "warmup": r == 0,
+                            "cpu_s": c1 - c0, "wall_s": res.timings["edges"],
+                            "driver_peak_mb": peak.peak / 1024, "driver_mb": peak.mb,
+                            "edges": edges["n"], "digest": f"{edges['h'] & (2**64 - 1):016x}",
+                        })
+                        print(json.dumps(runs[-1]), flush=True)
+    finally:
+        _stop_spark(spark)
+    counted = [r for r in runs if not r["warmup"]]
+    same = all(
+        len({r["digest"] for r in counted if r["tiles"] == t}) == 1 for t in args.edges_tiles
+    )
+    return {"seed": args.seed, "correct": all(ok) and same, "runs": runs}
+
+
+def edges_report(res: dict) -> str:
+    med = lambda xs: statistics.median(xs)  # noqa: E731
+    lines = [f"edges stage, append_growth seed {res['seed']}, correct={res['correct']}",
+             f"{'triples':>10}{'edges':>10}{'bound':>15}{'CPU-s':>8}{'wall':>8}"
+             f"{'peak MB':>9}{'+MB':>7}"]
+    counted = [r for r in res["runs"] if not r["warmup"]]
+    for key in dict.fromkeys((r["tiles"], r["bound"]) for r in counted):
+        rs = [r for r in counted if (r["tiles"], r["bound"]) == key]
+        lines.append(
+            f"{rs[0]['triples']:>10,}{rs[0]['edges']:>10,}{key[1]:>15}"
+            f"{med([r['cpu_s'] for r in rs]):8.2f}{med([r['wall_s'] for r in rs]):8.2f}"
+            f"{med([r['driver_peak_mb'] for r in rs]):9.0f}{med([r['driver_mb'] for r in rs]):7.0f}"
+        )
+    return "\n".join(lines)
+
+
 def _call_site(tracker, job_id: int) -> str:
     """The name of a job's last Spark stage: its action's call site."""
     job = tracker.getJobInfo(job_id)
@@ -246,13 +340,13 @@ def main(argv=None) -> int:
     work = os.path.join(root, ".append_profile_work", str(os.getpid()))
     _isolate(work)
     try:
-        res = profile(args, work)
+        res = edges_crossover(args, work) if args.edges_tiles else profile(args, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
         parent = os.path.dirname(work)
         if os.path.isdir(parent) and not os.listdir(parent):
             os.rmdir(parent)
-    print(report(res))
+    print(edges_report(res) if args.edges_tiles else report(res))
     print(json.dumps(res))
     return 0 if res["correct"] else 1
 

@@ -30,7 +30,7 @@ script.
 
 ``tail`` measures the rest of an append's driver tail at N mentions
 instead (``tail``'s docstring): the driver's peak resident size in each
-step, with the pre-batch map held throughout, as the pipeline holds it.
+step, with the pre-batch map held throughout.
 
 Usage, from the repository root:
     python tools/link_crossover.py N generator|prefix|dense driver|distributed [rounds]
@@ -56,7 +56,6 @@ import kg.linking as L  # noqa: E402
 from kg.catalog import StageCatalog  # noqa: E402
 from kg.config import LSH_MAX_BUCKET  # noqa: E402
 from kg.graph import merge_counts_local, nodes_from_counts_local  # noqa: E402
-from kg.pipeline import _linked_map  # noqa: E402
 from kg.session import get_spark  # noqa: E402
 from perfbench.corpus import _LEXICON_SIZE, Generator  # noqa: E402
 from perfbench.run import RssSampler, tree_cpu_s  # noqa: E402
@@ -109,15 +108,20 @@ def driver_peak_mb(reset: bool = False) -> float:
         return int(re.search(r"VmHWM:\s+(\d+)", f.read()).group(1)) / 1024
 
 
+def linked_map(cat: StageCatalog) -> dict[str, str]:
+    table = cat.read_arrow("linked")
+    return dict(zip(table.column("mention").to_pylist(), table.column("canonical").to_pylist()))
+
+
 def tail(cat: StageCatalog, texts: list[str], seed: int = 5) -> None:
     """An append of 1% never-seen mentions into a base of the other 99%, on
-    the driver side of the bound, step by step as ``kg.pipeline`` runs it:
-    the pre-batch map read for the edges check (and held to the end), the
-    signature delta, linking, the ``nodes_mtc`` merge, the nodes build and
-    the map comparison.  Per step: wall seconds and the Python driver's
-    peak resident size during it.  The base's (mention, tag, cnt) statistic
-    gives each mention one or two of three tags; the batch has 5 mention
-    rows per new mention, 4 of them of base mentions."""
+    the driver side of the bound, step by step: the pre-batch map read (and
+    held to the end), the signature delta, linking, the ``nodes_mtc``
+    merge, the nodes build, and the map comparison that counts the old
+    mentions the batch renamed.  Per step: wall seconds and the Python
+    driver's peak resident size during it.  The base's (mention, tag, cnt)
+    statistic gives each mention one or two of three tags; the batch has 5
+    mention rows per new mention, 4 of them of base mentions."""
     import pyarrow as pa
 
     rng = random.Random(f"link-crossover-tail:{seed}")
@@ -147,7 +151,7 @@ def tail(cat: StageCatalog, texts: list[str], seed: int = 5) -> None:
     driver_peak_mb(reset=True)
     print(f"tail n={len(texts)}: base {len(texts) - len(new)}, new {len(new)}, "
           f"batch rows {rows.num_rows}, driver before {driver_peak_mb():.0f} MB", flush=True)
-    old_map = step("old map", lambda: _linked_map(cat))
+    old_map = step("old map", lambda: linked_map(cat))
     step("signature delta", lambda: L.signature_base(
         sorted(set(batch)), catalog=cat, stage_name="sigs", anchor={"mentions": "post"},
         increment=True,
@@ -163,7 +167,7 @@ def tail(cat: StageCatalog, texts: list[str], seed: int = 5) -> None:
     ), partition_by=("kind",)))
 
     def compare():
-        now = _linked_map(cat)
+        now = linked_map(cat)
         return sum(now.get(m) != c for m, c in old_map.items())
 
     moved = step("map comparison", compare)
