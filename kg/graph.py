@@ -12,10 +12,10 @@ Nodes and edges each have two builders that give the same rows: a Spark
 one and a driver one.  Nodes build from the (mention, tag, cnt) statistic,
 by ``build_nodes_from_counts`` or, for vocabularies small enough to link on
 the driver, by ``nodes_from_counts_local`` (pandas in, ``pyarrow.Table``
-out; the statistic merged by ``merge_counts_local``).  Edges build from the
-triples and the linked map, by ``build_edges`` or, for triples tables small
-enough to hold on the driver, by ``edges_local`` (``pyarrow.Table`` in and
-out, in the same schema).
+out; the statistic counted and merged by ``merge_counts_local``).  Edges
+build from the triples and the linked map, by ``build_edges`` or, for
+triples tables small enough to hold on the driver, by ``edges_local``
+(``pyarrow.Table`` in and out, in the same schema).
 """
 
 from __future__ import annotations
@@ -69,14 +69,17 @@ def build_nodes_from_counts(counts: DataFrame, mention_map: DataFrame) -> DataFr
 
 def merge_counts_local(counts, mention_rows):
     """``mention_tag_counts`` of ``mention_rows`` (mention, tag) added into
-    ``counts`` (mention, tag, cnt) on the driver: both are
-    ``pyarrow.Table``s, summed in pandas; returns the merged statistic as a
-    ``pyarrow.Table``."""
+    ``counts`` (mention, tag, cnt) on the driver, or counted alone when
+    ``counts`` is None: ``pyarrow.Table``s, summed in pandas; returns the
+    merged statistic as a ``pyarrow.Table``."""
     import pandas as pd
     import pyarrow as pa
 
+    frames = [mention_rows.to_pandas().assign(cnt=1)]
+    if counts is not None:
+        frames.insert(0, counts.to_pandas())
     merged = (
-        pd.concat([counts.to_pandas(), mention_rows.to_pandas().assign(cnt=1)])
+        pd.concat(frames)
         .groupby(["mention", "tag"], as_index=False, dropna=False)["cnt"].sum()
     )
     schema = pa.schema([("mention", pa.string()), ("tag", pa.string()), ("cnt", pa.int64())])

@@ -7,7 +7,8 @@ re-assembles each document from the *exploded* span representation (the same
 explode the extract stage consumes), re-sorting by offset, and
 ``span_violations`` diffs the reassembly against the input table.
 ``passthrough_local`` and ``span_violations_local`` do the same on the
-driver for an append batch held there (kg/pipeline.py).
+driver for documents held there: a documents table or an append batch of
+at most ``DRIVER_BATCH_MAX_DOCS`` rows (kg/pipeline.py).
 """
 
 from __future__ import annotations
@@ -60,8 +61,9 @@ def passthrough_local(docs):
     """``passthrough_docs`` on the driver: a ``pyarrow.Table`` of documents
     -> the reassembled documents as a ``pyarrow.Table``.  Same rules: spans
     grouped by doc_id, null elements dropped, a null span list comes out
-    as ``[]``, and spans sorted as Spark sorts the (offset, kind, text,
-    media_ref) structs, a null field first."""
+    as ``[]``, spans sorted as Spark sorts the (offset, kind, text,
+    media_ref) structs, a null field first, and Spark's schema (neither the
+    span list nor its elements nullable)."""
     import pyarrow as pa
 
     spans: dict = {}
@@ -72,13 +74,12 @@ def passthrough_local(docs):
         return [(s[k] is not None, s[k]) for k in ("offset", "kind", "text", "media_ref")]
 
     struct = docs.schema.field("spans").type.value_type
-    return pa.table({
-        "doc_id": pa.array(list(spans), pa.string()),
-        "spans": pa.array(
-            [sorted(ss, key=key) for ss in spans.values()],
-            pa.list_(pa.struct([struct.field(k) for k in ("kind", "text", "media_ref", "offset")])),
-        ),
-    })
+    element = pa.struct([struct.field(k) for k in ("kind", "text", "media_ref", "offset")])
+    spans_type = pa.list_(pa.field("element", element, nullable=False))
+    schema = pa.schema([("doc_id", pa.string()), pa.field("spans", spans_type, nullable=False)])
+    return pa.table(
+        [list(spans), [sorted(ss, key=key) for ss in spans.values()]], schema=schema
+    )
 
 
 def span_violations(input_docs: DataFrame, output_docs: DataFrame) -> DataFrame:

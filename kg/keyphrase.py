@@ -6,7 +6,8 @@ code).  Entirely JVM-side: explode text spans -> whitespace segments ->
 rsplit-once word/tag (reference ner/dataset.py:38,44 parse) -> filter
 non-entity words of length >= 2 -> TF -> windowed top-k with deterministic
 ties (freq desc, phrase asc).  ``keyphrases_local`` computes the same rows on
-the driver for an append batch held there.
+the driver for documents held there (a documents table or an append batch
+of at most kg/pipeline.py ``DRIVER_BATCH_MAX_DOCS`` rows).
 """
 
 from __future__ import annotations
@@ -64,8 +65,8 @@ def keyphrases_local(docs, top_k: int = KEYPHRASE_TOP_K):
     """``keyphrases_table`` on the driver: a ``pyarrow.Table`` of documents
     -> the same rows as a ``pyarrow.Table``.  Spark's semantics: ``trim``
     strips only U+0020, segments split on Java's ASCII ``\\s``, a segment
-    without '/' has the empty word, and ties rank by phrase in code-point
-    (= UTF-8 byte) order."""
+    without '/' has the empty word, ties rank by phrase in code-point
+    (= UTF-8 byte) order, and the schema is Spark's (only doc_id nullable)."""
     import pyarrow as pa
 
     tf: dict[str, Counter] = {}
@@ -86,9 +87,8 @@ def keyphrases_local(docs, top_k: int = KEYPHRASE_TOP_K):
         )
     ]
     doc_ids, phrases, freqs, ranks = zip(*rows) if rows else ((), (), (), ())
-    return pa.table({
-        "doc_id": pa.array(doc_ids, pa.string()),
-        "phrase": pa.array(phrases, pa.string()),
-        "freq": pa.array(freqs, pa.int64()),
-        "rank": pa.array(ranks, pa.int32()),
-    })
+    schema = pa.schema([
+        ("doc_id", pa.string()), pa.field("phrase", pa.string(), nullable=False),
+        pa.field("freq", pa.int64(), nullable=False), pa.field("rank", pa.int32(), nullable=False),
+    ])
+    return pa.table([doc_ids, phrases, freqs, ranks], schema=schema)

@@ -253,22 +253,33 @@ def signature_base(
     against one Arrow read of the table's mention column, signed in-process
     (``signature_rows``) and appended as a ``pyarrow.Table`` — no Spark job.
 
+    ``distinct`` is a DataFrame, or a list of mention strings held on the
+    driver (the distinct values, as ``select("mention").distinct()`` gives
+    them, a null included).  A list is signed in-process in every mode: the
+    first commit, the delta and the reconciliation, whose stale rows
+    rebuild the whole table from the list as they do from a DataFrame.
+
     ``anchor`` (extra manifest inputs, e.g. ``{"mentions": fingerprint}``)
     is recorded on every commit, and re-recorded when nothing changed, so a
     caller can later prove which mention set the table covers.  Without a
     catalog this is exactly one kernel pass.
     """
+    def sign(mentions):
+        if isinstance(mentions, list):
+            return signature_rows(mentions)
+        return mention_shingle_buckets(mentions)
+
     if catalog is None:
-        return mention_shingle_buckets(distinct)
+        return sign(distinct)
     if catalog.manifest(stage_name) is None:
-        return catalog.run(
-            stage_name, lambda: mention_shingle_buckets(distinct), extra_inputs=anchor
-        )
+        return catalog.run(stage_name, lambda: sign(distinct), extra_inputs=anchor)
     n_stale, delta = 0, None
     if isinstance(distinct, list):
         known = set(catalog.read_arrow(stage_name, ["mention"]).column("mention").to_pylist())
-        fresh = sorted(set(distinct) - known)
-        if fresh:
+        if not increment:
+            n_stale = len(known.difference(distinct))
+        fresh = [m for m in distinct if m not in known]
+        if fresh and not n_stale:
             delta = signature_rows(fresh)
     elif increment:
         # batch-sized: collect the delta's strings so emptiness costs no extra
@@ -298,7 +309,7 @@ def signature_base(
         if counts["n_delta"] and not n_stale:
             delta = mention_shingle_buckets(distinct.join(existing, "mention", "left_anti"))
     if n_stale:
-        catalog.write(stage_name, mention_shingle_buckets(distinct), extra_inputs=anchor)
+        catalog.write(stage_name, sign(distinct), extra_inputs=anchor)
         catalog.executed.append(stage_name)
     elif delta is not None:
         catalog.append(stage_name, delta, extra_inputs=anchor)

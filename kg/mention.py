@@ -29,10 +29,11 @@ splits; no shuffle, no driver collection.  Arrow batch size is bounded by
 memory is O(batch * sentence_len), not O(L^2).
 
 Each Spark function has a ``*_local`` twin beside it that computes the same
-rows from a ``pyarrow.Table`` on the driver, for an append batch small
-enough to hold there (kg/pipeline.py ``DRIVER_BATCH_MAX_DOCS``): the span
-explode with Spark's ``trim``, the extractor through the same kernel body
-(``extract_batch``), and the mention/triple explodes as Arrow list flattens.
+rows from a ``pyarrow.Table`` on the driver, for a documents table or an
+append batch small enough to hold there (kg/pipeline.py
+``DRIVER_BATCH_MAX_DOCS``): the span explode with Spark's ``trim``, the
+extractor through the same kernel body (``extract_batch``), and the
+mention/triple explodes as Arrow list flattens.
 """
 
 from __future__ import annotations

@@ -37,9 +37,12 @@ from ``pyarrow.Table``s by ``StageCatalog.write``/``append``, so an append
 runs no Spark job in linked or nodes.  The side is decided once per call,
 from the signature table's manifest: an append reads it before the batch
 (so the driver may hold up to the bound plus one batch's new mentions),
-a fresh run or resume after the table is refreshed.  A fresh run below
-the bound counts mentions in one Spark aggregation and builds nodes from
-it on the driver too.  Above the bound all of it is Spark.
+a fresh run or resume after the table is refreshed.  A rebuild of the
+counts below the bound reads the mentions whole on the driver below
+``DRIVER_BATCH_MAX_DOCS`` documents and counts them in pandas (the first
+append's ``nodes_mtc`` too), in one Spark aggregation pulled through Arrow
+above it, and builds nodes from the counts on the driver too.  Above the
+bound all of it is Spark.
 
 The edges recompute runs on the driver while the triples manifest holds
 at most ``DRIVER_EDGES_MAX_TRIPLES`` rows, on a fresh run, an append and a
@@ -47,22 +50,31 @@ resume alike: the triples and the linked map are read through Arrow, the
 edges built by ``kg.graph.edges_local`` and committed from the
 ``pyarrow.Table``.  Above the bound ``kg.graph.build_edges`` runs on Spark.
 
-The batch-sized head — the six per-document increments and the span
-check — runs on the driver when an append's batch holds at most
-``DRIVER_BATCH_MAX_DOCS`` documents: ``run_pipeline_append`` pulls it in one
-Arrow job, and each per-document stage computes its increment from its
-source's increment in memory (``_Fold.held``) with the ``*_local`` twin of
-its Spark function, commits it from the ``pyarrow.Table`` and hands that
-table on; the span check compares the held tables exactly.  Below all
-three bounds an append runs one Spark job, the pull.  A larger batch is
-checkpointed and its increments run on Spark.
+The five per-document stages and the span check run on the driver while
+the documents manifest holds at most ``DRIVER_BATCH_MAX_DOCS`` rows, on
+every call.  A rebuild reads its source's whole committed table through
+Arrow (``StageCatalog.read_arrow``) or takes the one this call already
+holds (``_Fold.whole``), computes its rows with the ``*_local`` twin of
+its Spark function, commits them from the ``pyarrow.Table`` and holds them
+in turn; a fresh run's documents stage is written by Spark from the input,
+as above the bound, and read back whole.  An append pulls its batch once,
+at most the bound plus one row through Arrow (``_pull``), and when it fits
+computes each increment from its source's increment, held apart from the
+whole tables (``_Fold.held``), so a rebuild never reads a batch as its
+whole source.  From whole mentions, ``linked`` signs the distinct mentions
+in-process while they number at most the link bound, and ``nodes`` counts
+them in pandas; the span check compares the two tables exactly.  Below all
+three bounds a fresh run runs one Spark job, the documents write (plus
+the input fingerprint scan when no ``input_token`` is given), and an
+append runs the pull only.  Above the bound every stage runs on Spark.
 
 Shuffle budget at scale (SURVEY.md §4): documents→extract is shuffle-free
 (narrow explode + mapInPandas over input splits); mentions/triples are
 narrow explodes of the extract checkpoint; the first shuffles appear at
 entity linking (distinct mentions; the LSH bucket join only above the
 bound) and the grouping aggregations of edges and nodes above their bounds
-(below the link bound, the one mention-count aggregation of a rebuild) —
+(below the link bound and above the batch bound, the one mention-count
+aggregation of a rebuild) —
 all keyed, AQE-coalesced, skew-join protected.
 
 Scheduling: ``_fold`` runs the stages one after another in ``STAGES``
@@ -81,6 +93,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+import kg.linking
 from kg.catalog import StageCatalog
 from kg.graph import (
     build_edges,
@@ -134,6 +147,7 @@ def _run_linked_stage(
     cat: StageCatalog,
     batch: tuple[str, list[str]] | None = None,
     on_driver: bool | None = None,
+    whole=None,
 ) -> bool:
     """Refresh the durable signature table, then compute-or-skip the linked
     stage KEYED ON THE SIGNATURE TABLE's fingerprint (r6).  Returns
@@ -159,7 +173,12 @@ def _run_linked_stage(
     mentions table, and on the driver none runs at all: the increment's
     mention column is read through Arrow and the delta signed and appended
     in-process.  Otherwise (first run, changed corpus, a crash between the
-    two commits) ``signature_base`` reconciles against the full mention set.
+    two commits) ``signature_base`` reconciles against the full mention set:
+    the distinct mentions of ``whole``, the whole mentions table when the
+    call holds it on the driver (``_Fold.whole``), signed in-process while
+    they number at most ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` (the bound
+    on what the driver signs and links), else of the committed table on
+    Spark.
 
     Linking runs on the driver (one Arrow read, the map committed from a
     ``pyarrow.Table``, no Spark job and no ``linked_cc_*`` round commits)
@@ -174,7 +193,10 @@ def _run_linked_stage(
         grown = batch is not None and cat.is_complete(
             "linked_cc_sigs", extra_inputs={"mentions": batch[0]}
         )
-        if not grown:
+        held = None if grown or whole is None else whole.column("mention").unique()
+        if held is not None and len(held) <= kg.linking.DRIVER_LINK_MAX_MENTIONS:
+            mentions = held.to_pylist()
+        elif not grown:
             mentions = cat.read("mentions").select("mention").distinct()
         elif on_driver:
             batch_mentions = cat.read_arrow("mentions", ["mention"], files=batch[1])
@@ -214,15 +236,24 @@ class Stage:
 def _per_document(name: str, source: str, rows: Callable, local: Callable) -> Stage:
     """A stage whose rows are a function of each document: ``rows(f, df)``
     over the committed ``source``, or over the rows the batch appended to
-    it — ``local(f, table)`` over them on the driver when the batch's
-    increment of ``source`` is held there (``_Fold.held``)."""
+    it.  On the driver, ``local(f, table)`` computes them instead: a
+    rebuild from ``source``'s whole table (``_Fold.source``), held whole in
+    turn, and an increment from the batch's increment of ``source`` when
+    that is held there (``_Fold.held``)."""
+
+    def build(f: _Fold):
+        table = f.source(source)
+        if table is None:
+            return rows(f, f.read(source))
+        f.whole[name] = local(f, table)
+        return f.whole[name]
 
     def increment(f: _Fold):
         if source in f.held:
             return lambda: local(f, f.held[source])
         return rows(f, f.inc(source))
 
-    return Stage(name, (source,), lambda f: rows(f, f.read(source)), increment)
+    return Stage(name, (source,), build, increment)
 
 
 def _linked(f: _Fold) -> None:
@@ -232,7 +263,7 @@ def _linked(f: _Fold) -> None:
     batch = None
     if "mentions" in f.incs:
         batch = (f.pre["mentions"], f.incs["mentions"])
-    f.on_driver = _run_linked_stage(f.cat, batch, f.on_driver)
+    f.on_driver = _run_linked_stage(f.cat, batch, f.on_driver, f.whole.get("mentions"))
     if batch is not None:
         f.incs["linked"] = []
 
@@ -240,15 +271,20 @@ def _linked(f: _Fold) -> None:
 def _counts(f: _Fold):
     """The (mention, tag, cnt) statistic nodes derive from: a
     ``pyarrow.Table`` on the driver side of the bound (``f.on_driver``), a
-    DataFrame otherwise.  A call without a batch counts all mentions in one
-    Spark aggregation (pulled through Arrow on the driver side).  A call
-    with one keeps the statistic as ``nodes_mtc`` for the next append: the
-    batch's counts merged in when rule 2 holds for it (on the driver, the
-    committed counts and the increment's mention rows are read through
-    Arrow and summed in pandas), counted from all mentions otherwise."""
+    DataFrame otherwise.  A call without a batch counts all mentions: on
+    the driver side in pandas when the mentions are held whole or small
+    enough to read whole (``_Fold.source``), else in one Spark aggregation
+    (pulled through Arrow on the driver side).  A call with one keeps the
+    statistic as ``nodes_mtc`` for the next append: the batch's counts
+    merged in when rule 2 holds for it (on the driver, the committed counts
+    and the increment's mention rows are read through Arrow and summed in
+    pandas), counted from all mentions otherwise."""
     cat = f.cat
 
     def all_counts():
+        held = f.source("mentions") if f.on_driver else None
+        if held is not None:
+            return merge_counts_local(None, held.select(["mention", "tag"]))
         counts = mention_tag_counts(f.read("mentions"))
         return counts.toArrow() if f.on_driver else counts
 
@@ -330,7 +366,9 @@ class _Fold:
     """One call's state: the batch (None for a fresh run or resume; a
     ``pyarrow.Table`` when it is held on the driver), every stage input's
     fingerprint before the call, the increments taken (and those computed
-    on the driver, ``held``), and the checkpoint readers opened."""
+    on the driver, ``held``), the whole tables held on the driver
+    (``whole``: kept apart from ``held``, which holds only a batch's rows),
+    and the checkpoint readers opened."""
 
     def __init__(self, cat, vocab, docs, token, tokens, batch):
         self.cat, self.vocab, self.docs, self.batch = cat, vocab, docs, batch
@@ -339,6 +377,7 @@ class _Fold:
         self.pre = {i: cat.fingerprint(i) for st in STAGES for i in st.inputs}
         self.incs: dict[str, list[str]] = {}  # increments taken -> files appended
         self.held: dict = {}  # increments committed from the driver -> their pyarrow.Table
+        self.whole: dict = {}  # whole committed tables held on the driver
         self.inc_tables: dict[str, DataFrame] = {}
         self.tables: dict[str, DataFrame] = {}
         self.timings: dict[str, float] = {}
@@ -351,6 +390,16 @@ class _Fold:
         if stage not in self.tables:
             self.tables[stage] = self.cat.read(stage)
         return self.tables[stage]
+
+    def source(self, stage: str):
+        """``stage``'s whole committed table on the driver: the one this call
+        holds, else read through Arrow while the documents manifest holds at
+        most ``DRIVER_BATCH_MAX_DOCS`` rows; None above the bound."""
+        if stage not in self.whole:
+            if self.cat.manifest("documents")["rows"] > DRIVER_BATCH_MAX_DOCS:
+                return None
+            self.whole[stage] = self.cat.read_arrow(stage)
+        return self.whole[stage]
 
     def inc(self, stage: str) -> DataFrame:
         """Reader of the rows ``stage`` appended in this call, opened on first
@@ -396,18 +445,20 @@ class _Fold:
 
     def check(self) -> int:
         """Span invariant over what this call wrote: the batch when
-        documents_out took its increment (on the driver when it was
-        computed there), the whole table otherwise (the property is per
-        document, so the proofs compose)."""
+        documents_out took its increment, the whole table otherwise (the
+        property is per document, so the proofs compose).  Compared exactly
+        on the driver where the tables are held there or the whole table
+        is below ``DRIVER_BATCH_MAX_DOCS`` (``source``), by Spark's checksum
+        join otherwise."""
         t0 = time.perf_counter()
         if "documents_out" in self.held:
             n = span_violations_local(self.held["documents"], self.held["documents_out"])
+        elif "documents_out" in self.incs:
+            n = span_violations(self.inc("documents"), self.inc("documents_out")).count()
+        elif (docs := self.source("documents")) is not None:
+            n = span_violations_local(docs, self.source("documents_out"))
         else:
-            if "documents_out" in self.incs:
-                docs, out = self.inc("documents"), self.inc("documents_out")
-            else:
-                docs, out = self.read("documents"), self.read("documents_out")
-            n = span_violations(docs, out).count()
+            n = span_violations(self.read("documents"), self.read("documents_out")).count()
         self.timings["invariant_check"] = round(time.perf_counter() - t0, 3)
         return n
 
@@ -441,7 +492,7 @@ def input_fingerprint(docs: DataFrame) -> str:
 
 class _LazyTables(Mapping):
     """Mapping of stage name -> committed checkpoint reader that defers the
-    ``StageCatalog.read`` (file listing + schema job) until first access."""
+    ``StageCatalog.read`` (a file listing) until first access."""
 
     def __init__(self, cat: StageCatalog, stages, seed=None):
         self._cat = cat
@@ -466,8 +517,8 @@ class _LazyTables(Mapping):
 class PipelineResult:
     """``tables`` maps each of the nine published stages to a reader of its
     committed checkpoint: the readers opened during the run, and for the
-    stages the run appended to, a reader opened on first access (one file
-    listing + schema job each) of whatever that stage has committed then.
+    stages the run appended to, a reader opened on first access (a file
+    listing, no job) of whatever that stage has committed then.
     ``executed`` lists what the call committed, in commit order: ``<stage>``
     for a rebuild, ``<stage>+append`` for an increment, and the commits a
     stage makes before its own (the signature table and CC rounds before
@@ -510,8 +561,12 @@ def _fold(cat, vocab, check_invariant, docs, token, tokens, batch=None) -> Pipel
 # many documents per partition (``_spark_batch``).
 INCREMENT_DOCS_PER_PARTITION = 16_000
 # An append batch of at most this many documents is pulled to the driver in
-# one Arrow job and its six per-document increments and span check are
-# computed there (``_Fold.held``).  Measured with ``tools/append_profile.py
+# one Arrow job (``_pull``), and while the documents manifest holds at most
+# this many rows a rebuild reads its source whole through Arrow; the
+# per-document stages and the span check are then computed there
+# (``_Fold.held``, ``_Fold.whole``).  The append table below sets it; the
+# fresh-build table after it checks it.
+# Measured with ``tools/append_profile.py
 # --seed 3 --ops 2 --batch-docs N --bound 0 1000000000000`` on a 4-core VM
 # (local[4], 1 GB driver heap, as perfbench runs): one append of an N-doc
 # batch onto the 8k-doc ``append_growth`` base, the two sides interleaved,
@@ -531,6 +586,22 @@ INCREMENT_DOCS_PER_PARTITION = 16_000
 # longer (1.1x there, 1.7x at 32k, where the CPU is a draw and the driver
 # holds 214 MB).  Up to 16k docs Spark runs each increment as one task
 # anyway (``INCREMENT_DOCS_PER_PARTITION``), so the bound is that constant.
+# The fresh build, measured with ``tools/append_profile.py --seed 3 --ops 2
+# --fresh-docs 8000 16000 32000 --bound 0 1000000000000`` (same VM,
+# local[4], 1 GB driver heap): ``run_pipeline`` of the generator's N-doc
+# base into an empty catalog, the sides interleaved, median of 2 builds
+# after one warm-up, the sizes in this order in one JVM.  CPU s / wall s /
+# jobs / the driver's peak MB (absolute, and over its size before the
+# build):
+#        N          spark                       driver
+#    8,000    13.28 /  4.99 / 16 / 243 +  1    3.36 /  2.90 / 1 / 254 +  19
+#   16,000     9.83 /  4.33 / 16 / 293 +  0    6.05 /  5.61 / 1 / 329 +  44
+#   32,000    11.52 /  4.36 / 16 / 425 +  0   10.65 / 10.13 / 1 / 489 + 118
+# The nine tables were equal on both sides at every size.  The same shape
+# as an append's: less CPU on the driver up to 16k docs (4.0x at 8k, 1.6x
+# at 16k), the longer wall from 16k, and a draw in CPU at 32k with 2.3x the
+# wall.  Cold, as the first build in a new JVM, the driver side's lead is
+# wider: 4.44 against 48.68 CPU s at 8k (the warm-ups of this run).
 DRIVER_BATCH_MAX_DOCS = INCREMENT_DOCS_PER_PARTITION
 
 # The edges stage builds on the driver (``kg.graph.edges_local``) while the
@@ -566,7 +637,12 @@ def run_pipeline(
 ) -> PipelineResult:
     """``input_token``: caller-supplied input version (Iceberg snapshot id,
     synth parameters, ...).  When given, the change-detection scan of the
-    input is skipped — the token is the fingerprint."""
+    input is skipped — the token is the fingerprint.
+
+    ``docs`` is read only when the documents stage is rebuilt, by the Spark
+    job that writes it; at most ``DRIVER_BATCH_MAX_DOCS`` documents are
+    then read back whole through Arrow, and every per-document stage and
+    the span check run on the driver."""
     cat = StageCatalog(spark, base_dir)
     token = input_token or input_fingerprint(docs)
     # explicit folded-batch ledger (ADVICE r3): appended batch identity is
@@ -603,7 +679,7 @@ def run_pipeline_append(
     recompute.
 
     The batch is pulled once, at most ``DRIVER_BATCH_MAX_DOCS`` + 1 rows
-    through Arrow (one Spark job).  When it fits, the per-document
+    through Arrow (one Spark job, ``_pull``).  When it fits, the per-document
     increments and the span check are computed on the driver from that
     table, with no Spark job; an append below all three bounds then runs
     the pull only.  When it does not fit, the batch is checkpointed and
@@ -639,14 +715,22 @@ def run_pipeline_append(
         return _fold(
             cat, vocab, check_invariant, cat.read("documents"), old_token, folded
         )
-    limit = min(DRIVER_BATCH_MAX_DOCS, 2**31 - 2) + 1  # DataFrame.limit takes an int32
-    batch = new_docs.limit(limit).toArrow()
-    if batch.num_rows == limit:
+    batch = _pull(new_docs)
+    if batch is None:
         batch = _spark_batch(spark, new_docs)
     return _fold(
         cat, vocab, check_invariant, None, f"{old_token}+{new_token}",
         folded + [new_token], batch,
     )
+
+
+def _pull(docs: DataFrame):
+    """``docs`` as one ``pyarrow.Table`` when it holds at most
+    ``DRIVER_BATCH_MAX_DOCS`` rows, else None: one Spark job pulls at most
+    the bound plus one row through Arrow: an append's batch."""
+    limit = min(DRIVER_BATCH_MAX_DOCS, 2**31 - 2) + 1  # DataFrame.limit takes an int32
+    table = docs.limit(limit).toArrow()
+    return table if table.num_rows < limit else None
 
 
 def _spark_batch(spark: SparkSession, new_docs: DataFrame) -> DataFrame:

@@ -85,17 +85,46 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     input, read off the optimized plan's ``sizeInBytes`` estimate (no job,
     no physical planning), the input is returned as is: there the exchange
     and its extra job cost more CPU than they save wall (table above).
-    Above it, when the source already yields at least pool-parallelism
-    splits (every realistic 100-TB table), this is a NO-OP — no shuffle is
-    added.  Round-robin keeps Spark's sort-before-repartition determinism
-    under task retry.
+    Above it, when the source already scans as at least pool-parallelism
+    tasks that hold rows (every realistic 100-TB table, ``_row_splits``),
+    this is a NO-OP — no shuffle is added.  Round-robin keeps Spark's
+    sort-before-repartition determinism under task retry.
     """
     if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() < SPREAD_MIN_BYTES:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    if _row_splits(df, target) >= target:
         return df
     return df.repartition(target)
+
+
+def _row_splits(df: DataFrame, target: int) -> int:
+    """How many of the scan's splits can hold rows, counted up to
+    ``target``: its partitions, but at most the row groups of its parquet
+    input files.  Spark cuts a file into byte-range splits and reads each
+    row group in the split its midpoint falls in, so a one-row-group file
+    scans on one core however many splits it is cut into.  The row groups
+    come from the files' footers (``inputFiles``, read on the driver: no
+    job), and only while the answer can change: none are read when the
+    partitions are already fewer than ``target``, and the reads stop once
+    the row groups reach it, so at most ``target`` footers are opened."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    n = df.rdd.getNumPartitions()
+    if n < target:
+        return n
+    files = df.inputFiles()
+    if not files or not all(f.endswith(".parquet") for f in files):
+        return n
+    groups = 0
+    for uri in files:
+        if groups >= target:
+            break
+        fs, path = pafs.FileSystem.from_uri(uri)
+        with fs.open_input_file(path) as f:
+            groups += pq.ParquetFile(f).metadata.num_row_groups
+    return min(n, groups)
 
 
 # -- P1: whitespace segmentation ------------------------------------------

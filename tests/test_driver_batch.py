@@ -1,6 +1,7 @@
-"""An append batch held on the driver: the ``*_local`` twins of the six
-per-document stages and of the span check give Spark's rows, and an append
-below ``kg.pipeline.DRIVER_BATCH_MAX_DOCS`` runs no Spark job in them.  The
+"""Documents held on the driver: the ``*_local`` twins of the six
+per-document stages and of the span check give Spark's rows, an append
+below ``kg.pipeline.DRIVER_BATCH_MAX_DOCS`` runs no Spark job in them, and
+a fresh run below it commits Spark's tables and schemas in one job.  The
 span check's damage classes are planted against both sides in
 tests/test_invariant.py.
 
@@ -197,3 +198,56 @@ def test_append_below_the_batch_bound_runs_no_job_in_the_per_document_stages(
     # their named tasks, all inside the append's wall
     assert spans_account(tracer, "batchguard", t0, t1, res.executed)
     assert {"nodes", "edges"} <= tracer.op_stages("batchguard")
+
+
+def _schemas(cat) -> dict[str, dict]:
+    """Each published stage's committed schema, nullability included."""
+    return {name: json.loads(cat.manifest(name)["schema"]) for name in NINE}
+
+
+def test_fresh_run_of_edge_documents_equals_on_both_sides(spark, edge_vocab, sentences, tmp_path, monkeypatch):
+    """A fresh run over a base plus the edge documents, its input held on
+    the driver and on Spark: both span checks flag e-media, and the nine
+    tables and their committed schemas agree."""
+    from kg.catalog import StageCatalog
+
+    docs = docs_to_df(spark, synth_docs(40, sentences=sentences)).unionByName(_edge_df(spark, odd=False))
+    tables, schemas = {}, {}
+    for bound in at_both_bounds(monkeypatch, BATCH_BOUND):
+        base = str(tmp_path / str(bound))
+        with pytest.raises(AssertionError, match="violated for 1 docs"):
+            run_pipeline(spark, docs, base, vocab=edge_vocab, input_token="all")
+        cat = StageCatalog(spark, base)
+        tables[bound] = {name: _spark_rows(cat.read(name)) for name in NINE}
+        schemas[bound] = _schemas(cat)
+        assert cat.manifest("documents")["rows"] == 48
+    for name in NINE:
+        assert tables[10**12][name] == tables[0][name], name
+        assert schemas[10**12][name] == schemas[0][name], name
+
+
+def test_fresh_run_below_every_bound_runs_one_job(spark, sentences, vocab, tmp_path):
+    """Below every bound a fresh run with an ``input_token`` runs one Spark
+    job, the write of its documents stage, and a plain rerun runs none: it
+    finds every stage complete and checks the spans on the driver."""
+    docs = synth_docs(60, sentences=sentences) + EDGE_DOCS[:5]
+    path = str(tmp_path / "docs")
+    docs_to_df(spark, docs).write.parquet(path)
+    df = spark.read.schema(DOCS_SCHEMA).parquet(path)
+    base = str(tmp_path / "ckpt")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    runs = []
+    for label in ("fresh", "rerun"):
+        sc.setJobGroup(f"{label}@freshguard", label)
+        try:
+            runs.append(run_pipeline(spark, df, base, vocab=vocab, input_token="t"))
+        finally:
+            sc.setJobGroup("untraced", "")
+    fresh, rerun = runs
+    assert [s for s in fresh.executed if s in NINE] == list(NINE)
+    assert rerun.executed == []
+    assert fresh.invariant_violations == rerun.invariant_violations == 0
+    assert fresh.counts()["documents"] == len(docs)
+    jobs = {label: len(tracker.getJobIdsForGroup(f"{label}@freshguard")) for label in ("fresh", "rerun")}
+    assert jobs == {"fresh": 1, "rerun": 0}, jobs

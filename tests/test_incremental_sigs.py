@@ -14,7 +14,7 @@ import kg.linking as L
 from kg.pipeline import run_pipeline, run_pipeline_append
 from kg.synth import docs_to_df, synth_docs
 
-from conftest import at_both_bounds
+from conftest import BATCH_BOUND, LINK_BOUND, at_both_bounds
 
 
 def _rows(df):
@@ -118,3 +118,51 @@ def test_noop_reappend_never_touches_kernel(
     )
     assert res2.executed == []
     assert len(kernel_spy) == n_before  # idempotent no-op: zero kernel work
+
+
+def test_list_reconciliation_with_a_stale_row_rebuilds_the_table(spark, tmp_path, kernel_spy):
+    """A mention list held on the driver reconciles as a DataFrame does: a
+    committed row the list lacks is stale, so the whole table is rebuilt
+    from the list, not appended to; without a stale row only the new
+    mentions are signed and appended."""
+    from kg.catalog import StageCatalog
+
+    cat = StageCatalog(spark, str(tmp_path / "sigs"))
+    L.signature_base(["北京", "上海", "广州"], catalog=cat, stage_name="sigs", anchor={"m": "a"})
+    assert cat.executed == ["sigs"]
+    del kernel_spy[:]
+    current = ["北京", "上海", "南京"]
+    table = L.signature_base(current, catalog=cat, stage_name="sigs", anchor={"m": "b"})
+    assert kernel_spy == [3]  # the whole list, not only 南京
+    assert cat.executed == ["sigs", "sigs"]
+    assert cat.manifest("sigs")["inputs"]["m"] == "b"
+    on_spark = L.signature_base(spark.createDataFrame([(m,) for m in current], "mention string"))
+    assert _rows(table) == _rows(on_spark)
+    del kernel_spy[:]
+    L.signature_base(current + ["深圳"], catalog=cat, stage_name="sigs", anchor={"m": "c"})
+    assert kernel_spy == [1]
+    assert cat.executed[-1] == "sigs+append"
+    assert cat.manifest("sigs")["rows"] == 4
+
+
+def test_held_mentions_are_signed_on_the_driver_only_below_the_link_bound(
+    spark, vocab, sentences, tmp_path, monkeypatch
+):
+    """A fresh run below the batch bound holds its mentions on the driver,
+    but signs them in-process only while they number at most the link
+    bound; one mention above it, the Spark kernel signs them, as it does
+    when nothing is held."""
+    monkeypatch.setattr(BATCH_BOUND, 10**12)
+    signed = []
+    real_kernel, real_rows = L.mention_shingle_buckets, L.signature_rows
+    monkeypatch.setattr(L, "mention_shingle_buckets", lambda df: signed.append("spark") or real_kernel(df))
+    monkeypatch.setattr(L, "signature_rows", lambda ms: signed.append(len(ms)) or real_rows(ms))
+    docs = docs_to_df(spark, synth_docs(40, sentences=sentences))
+    res = run_pipeline(spark, docs, str(tmp_path / "driver"), vocab=vocab, input_token="t")
+    n = res.catalog.manifest("linked_cc_sigs")["rows"]
+    assert signed == [n]
+    del signed[:]
+    monkeypatch.setattr(LINK_BOUND, n - 1)
+    res = run_pipeline(spark, docs, str(tmp_path / "spark"), vocab=vocab, input_token="t")
+    assert signed == ["spark"]
+    assert res.catalog.manifest("linked_cc_sigs")["rows"] == n

@@ -2,6 +2,8 @@
 (the DuckDB oracle harness checks them at sf0.01; these pin the edge cases)."""
 
 import datetime as dt
+import os
+import shutil
 
 import pytest
 
@@ -125,3 +127,49 @@ def test_load_takes_the_schema_spark_infers(spark, sf_dir, tmp_path):
             assert R.load(spark, d, table).schema == inferred, (d, table)
             seen |= {f.dataType.typeName() for f in inferred.fields}
     assert {"timestamp", "timestamp_ntz", "array"} <= seen
+
+
+def test_spread_counts_row_groups_not_byte_splits(spark, tmp_path, monkeypatch):
+    """Above ``SPREAD_MIN_BYTES`` a one-row-group parquet file is spread
+    although Spark cuts it into a pool's width of byte-range splits (only
+    one of them holds rows), and a file with a pool's width of row groups
+    in as many splits is left as it is."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(R, "SPREAD_MIN_BYTES", 1)
+    width = spark.sparkContext.defaultParallelism
+    n = 4000 * width
+    table = pa.table({"doc_id": [f"d{i}" for i in range(n)], "text": [f"t{i} " * 8 for i in range(n)]})
+    one, many = str(tmp_path / "one.parquet"), str(tmp_path / "many.parquet")
+    pq.write_table(table, one, compression="none")
+    pq.write_table(table, many, compression="none", row_group_size=n // width)
+    size = max(map(os.path.getsize, (one, many)))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(size // width))
+    try:
+        one_df, many_df = spark.read.parquet(one), spark.read.parquet(many)
+        assert one_df.rdd.getNumPartitions() >= width  # split by bytes
+        spread = R.spread_small_scan(one_df)
+        assert spread is not one_df
+        assert spread.rdd.getNumPartitions() == width
+        assert sorted(spread.collect()) == sorted(one_df.collect())
+        assert many_df.rdd.getNumPartitions() >= width
+        assert R.spread_small_scan(many_df) is many_df
+        # footers are read only while they can change the answer: none
+        # below a pool's width of splits, and none past a pool's width of
+        # row groups
+        reads = []
+        footer = pq.ParquetFile
+        monkeypatch.setattr(pq, "ParquetFile", lambda f: reads.append(f) or footer(f))
+        assert R._row_splits(one_df.coalesce(1), width) == 1
+        assert reads == []
+        (tmp_path / "dir").mkdir()
+        for i in range(3):
+            shutil.copy(many, tmp_path / "dir" / f"part-{i}.parquet")
+        dir_df = spark.read.parquet(str(tmp_path / "dir"))
+        assert R.spread_small_scan(dir_df) is dir_df
+        assert len(reads) == 1
+    finally:
+        spark.conf.set(key, old)

@@ -7,7 +7,7 @@ import shutil
 from kg.pipeline import run_pipeline
 from kg.synth import docs_to_df, synth_docs
 
-from conftest import EDGES_BOUND, LINK_BOUND, at_both_bounds
+from conftest import BATCH_BOUND, EDGES_BOUND, LINK_BOUND, at_both_bounds
 
 ALL_STAGES = [
     "documents",
@@ -35,7 +35,7 @@ def _main_stages(executed):
 def test_resume_skips_completed_and_recomputes_suffix(
     spark, vocab, sentences, tmp_path, monkeypatch
 ):
-    for bound in at_both_bounds(monkeypatch, LINK_BOUND, EDGES_BOUND):
+    for bound in at_both_bounds(monkeypatch, LINK_BOUND, EDGES_BOUND, BATCH_BOUND):
         base = str(tmp_path / str(bound) / "run")
         docs = docs_to_df(spark, synth_docs(30, sentences=sentences))
 
@@ -61,7 +61,7 @@ def test_resume_skips_completed_and_recomputes_suffix(
 def test_input_change_invalidates_downstream(
     spark, vocab, sentences, tmp_path, monkeypatch
 ):
-    for bound in at_both_bounds(monkeypatch, LINK_BOUND, EDGES_BOUND):
+    for bound in at_both_bounds(monkeypatch, LINK_BOUND, EDGES_BOUND, BATCH_BOUND):
         base = str(tmp_path / str(bound) / "run2")
         run_pipeline(spark, docs_to_df(spark, synth_docs(20, sentences=sentences)), base, vocab=vocab)
         # new input: documents checkpoint is rewritten -> full recompute
@@ -72,7 +72,7 @@ def test_input_change_invalidates_downstream(
 def test_uncommitted_stage_is_recomputed(
     spark, vocab, sentences, tmp_path, monkeypatch
 ):
-    for bound in at_both_bounds(monkeypatch, LINK_BOUND, EDGES_BOUND):
+    for bound in at_both_bounds(monkeypatch, LINK_BOUND, EDGES_BOUND, BATCH_BOUND):
         base = str(tmp_path / str(bound) / "run3")
         res1 = run_pipeline(spark, docs_to_df(spark, synth_docs(20, sentences=sentences)), base, vocab=vocab)
         golden = _table_rows(res1.tables["triples"])

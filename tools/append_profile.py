@@ -3,6 +3,7 @@
     python3 tools/append_profile.py --seed 3 --ops 3
     python3 tools/append_profile.py --batch-docs 4000 --bound 0 1000000000000
     python3 tools/append_profile.py --edges-tiles 1 40 160 --bound 0 1000000000000
+    python3 tools/append_profile.py --fresh-docs 8000 16000 32000 --bound 0 1000000000000
 
 Run from the repository root.  The script builds the perfbench
 ``append_growth`` workload (same inputs, same checked setup, one warm-up
@@ -49,6 +50,18 @@ checkpoint removed) ``--ops`` times after one warm-up, with
 interleaved.  Per rebuild: process-tree CPU-s, wall, the Python driver's
 peak resident size (absolute, and over its size before the rebuild) and
 an order-insensitive digest of the committed edges, equal on both sides.
+
+``--fresh-docs`` measures the fresh build alone, the way the fresh-build
+table at ``kg.pipeline.DRIVER_BATCH_MAX_DOCS`` is made.  For each size N
+the workload's generator makes an N-doc base (its ``append_growth`` setup
+corpus at N docs), written as parquet; ``run_pipeline`` then builds it
+into an empty catalog ``--ops`` times after one warm-up, with
+``DRIVER_BATCH_MAX_DOCS`` forced to each ``--bound`` in turn, interleaved.
+Per build: process-tree CPU-s, wall, the Spark jobs it ran (its own job
+group; the input's schema read happens before it), the Python driver's
+peak resident size (absolute, and over its size before the build), the
+committed counts against the generator's oracle, and an order-insensitive
+digest of the nine tables, equal on both sides.
 
 It imports perfbench and changes none of it; everything it writes goes
 under ``.append_profile_work/`` in the current directory, deleted at exit.
@@ -158,6 +171,8 @@ def _parse(argv):
                         "DRIVER_EDGES_MAX_TRIPLES) to each value in turn")
     p.add_argument("--edges-tiles", type=int, nargs="+", default=None,
                    help="time the edges stage alone on the triples tiled this many times")
+    p.add_argument("--fresh-docs", type=int, nargs="+", default=None,
+                   help="time the fresh build alone on bases of this many documents")
     return p.parse_args(argv)
 
 
@@ -294,6 +309,98 @@ def edges_report(res: dict) -> str:
     return "\n".join(lines)
 
 
+def _digest(cat) -> str:
+    """Order-insensitive digest of the nine committed tables: per table,
+    the row count and the xor of each row's xxhash64."""
+    from pyspark.sql import functions as F
+
+    from kg.pipeline import _NAMES
+
+    parts = []
+    for name in _NAMES:
+        df = cat.read(name)
+        row = df.select(F.count("*").alias("n"), F.bit_xor(F.xxhash64(*df.columns)).alias("h")).first()
+        parts.append(f"{row['n']}:{(row['h'] or 0) & (2**64 - 1):016x}")
+    return "/".join(parts)
+
+
+def fresh_crossover(args, work: str) -> dict:
+    """The ``--fresh-docs`` measurement (module docstring)."""
+    import time
+
+    import kg.pipeline
+    from kg.catalog import StageCatalog
+    from kg.synth import corpus_vocab
+    from perfbench.run import RssSampler, _start_spark, _stop_spark, tree_cpu_s
+    from perfbench.workloads import AppendGrowth, ExpectedCounts, text_spans, write_docs
+    from tools.leaf_profile import DriverPeak
+
+    bounds = args.bound or [kg.pipeline.DRIVER_BATCH_MAX_DOCS]
+    spark = _start_spark(work, trace=False)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    runs, ok = [], []
+    try:
+        with RssSampler(interval=3600) as rss:  # CPU clock only
+            for n_docs in args.fresh_docs:
+                wl = AppendGrowth(spark, work, args.seed)
+                wl.N_DOCS = n_docs
+                gen, pool, docs = wl.generate()
+                vocab = corpus_vocab(pool + [gen.alphabet_line()])
+                want = ExpectedCounts(vocab)(text_spans(docs))
+                path = os.path.join(work, f"docs{n_docs}")
+                write_docs(docs, path)
+                del docs
+                for r in range(args.ops + 1):
+                    for bound in bounds:
+                        kg.pipeline.DRIVER_BATCH_MAX_DOCS = bound
+                        base = os.path.join(work, "fresh")
+                        shutil.rmtree(base, ignore_errors=True)
+                        df = spark.read.parquet(path)
+                        label = f"fresh{len(runs)}"
+                        sc.setJobGroup(label, label)
+                        c0, t0 = tree_cpu_s(rss), time.perf_counter()
+                        with DriverPeak() as peak:
+                            res = kg.pipeline.run_pipeline(
+                                spark, df, base, vocab=vocab, input_token=f"fresh:{n_docs}",
+                            )
+                        wall, c1 = time.perf_counter() - t0, tree_cpu_s(rss)
+                        sc.setJobGroup("untraced", "")
+                        counts = res.counts()
+                        ok.append(res.invariant_violations == 0 and counts["documents"] == n_docs
+                                  and (counts["mentions"], counts["triples"]) == want)
+                        runs.append({
+                            "docs": n_docs, "bound": bound, "warmup": r == 0,
+                            "cpu_s": c1 - c0, "wall_s": wall,
+                            "jobs": len(tracker.getJobIdsForGroup(label)),
+                            "driver_peak_mb": peak.peak / 1024, "driver_mb": peak.mb,
+                            "digest": _digest(StageCatalog(spark, base)), "correct": ok[-1],
+                        })
+                        print(json.dumps(runs[-1]), flush=True)
+    finally:
+        _stop_spark(spark)
+    same = all(
+        len({r["digest"] for r in runs if r["docs"] == n}) == 1 for n in args.fresh_docs
+    )
+    return {"seed": args.seed, "correct": all(ok) and same, "runs": runs}
+
+
+def fresh_report(res: dict) -> str:
+    med = lambda xs: statistics.median(xs)  # noqa: E731
+    lines = [f"fresh build, append_growth generator seed {res['seed']}, correct={res['correct']}",
+             f"{'docs':>8}{'bound':>15}{'CPU-s':>8}{'wall':>8}{'jobs':>6}{'peak MB':>9}{'+MB':>7}"]
+    counted = [r for r in res["runs"] if not r["warmup"]]
+    for key in dict.fromkeys((r["docs"], r["bound"]) for r in counted):
+        rs = [r for r in counted if (r["docs"], r["bound"]) == key]
+        lines.append(
+            f"{key[0]:>8,}{key[1]:>15}"
+            f"{med([r['cpu_s'] for r in rs]):8.2f}{med([r['wall_s'] for r in rs]):8.2f}"
+            f"{med([r['jobs'] for r in rs]):6g}"
+            f"{med([r['driver_peak_mb'] for r in rs]):9.0f}{med([r['driver_mb'] for r in rs]):7.0f}"
+        )
+    return "\n".join(lines)
+
+
 def _call_site(tracker, job_id: int) -> str:
     """The name of a job's last Spark stage: its action's call site."""
     job = tracker.getJobInfo(job_id)
@@ -340,13 +447,21 @@ def main(argv=None) -> int:
     work = os.path.join(root, ".append_profile_work", str(os.getpid()))
     _isolate(work)
     try:
-        res = edges_crossover(args, work) if args.edges_tiles else profile(args, work)
+        if args.fresh_docs:
+            res = fresh_crossover(args, work)
+        elif args.edges_tiles:
+            res = edges_crossover(args, work)
+        else:
+            res = profile(args, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
         parent = os.path.dirname(work)
         if os.path.isdir(parent) and not os.listdir(parent):
             os.rmdir(parent)
-    print(edges_report(res) if args.edges_tiles else report(res))
+    if args.fresh_docs:
+        print(fresh_report(res))
+    else:
+        print(edges_report(res) if args.edges_tiles else report(res))
     print(json.dumps(res))
     return 0 if res["correct"] else 1
 
