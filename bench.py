@@ -347,7 +347,10 @@ def scaling_worker() -> None:
         app_name=f"kg-scale-{cores}",
         master=f"local[{cores}]",
         shuffle_partitions=parts,
-        extra_conf={"spark.local.dir": local_dir},
+        # one shared-JVM heap serves driver+executors in local mode; 16g keeps
+        # GC off the critical path at the 16M-doc corpus (both sides get the
+        # same heap, so the lo/hi ratio is unaffected)
+        extra_conf={"spark.local.dir": local_dir, "spark.driver.memory": "16g"},
     )
     vocab = corpus_vocab()
     # untimed warm-up: small pipeline warms python workers / JIT / code cache
@@ -390,10 +393,6 @@ def _run_worker(n_cores: int, timeout_sec: float) -> dict:
     SIGKILLed — an overrunning measurement can never survive into the
     driver's bench window (VERDICT r4 item 1, the BENCH_r04 contamination)."""
     env = dict(os.environ, SPARK_KG_SCALE_CORES=str(n_cores), SPARK_KG_SCALE_REPEATS="1")
-    # one shared-JVM heap serves driver+executors in local mode; 16g keeps
-    # GC off the critical path at the 16M-doc corpus (both sides get the
-    # same heap, so the lo/hi ratio is unaffected)
-    env.setdefault("SPARK_KG_DRIVER_MEM", "16g")
     p = subprocess.Popen(
         [sys.executable, os.path.abspath(__file__), "--scaling-worker"],
         env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
@@ -589,11 +588,13 @@ CPU, allocator re-faulting, byte-quantized scan splits) — is in
   scaling JSON (`timings`).
 - Allocator retention + split sizing (round-5 root causes 5–6,
   bench_history_r5.md): this host's anonymous page-fault path scales
-  negatively with concurrency, so kg/session.py pins glibc's
+  negatively with concurrency, so round 5's kg/session.py pinned glibc's
   mmap/trim thresholds high (worker arenas retain their high-water mark —
   faults are paid once per long-lived worker, the steady state of real
-  cluster executors), routes pyarrow through the retaining allocator, and
-  pre-touches a fixed JVM heap; checkpoint scans are compute-dense
+  cluster executors), routed pyarrow through the retaining allocator, and
+  pre-touched a fixed JVM heap (all three since deleted: on a 4-core VM
+  perfbench's peak RSS fell 36-53% without them, while its CPU metrics
+  rose inside their bounds); checkpoint scans are compute-dense
   (~46 bytes/doc zstd, ~25 µs/doc kernel CPU) so maxPartitionBytes=16MB /
   openCost=512KB keep scan-stage parallelism data-sized instead of
   byte-quantized.  Measured effect: the 2M diagnostic pair moved from

@@ -612,9 +612,14 @@ DRIVER_BATCH_MAX_DOCS = INCREMENT_DOCS_PER_PARTITION
 # catalog (base and two appends) whose triples are tiled K times (doc_ids
 # suffixed per copy, one file per core), the two sides interleaved, median
 # of 3 rebuilds after one warm-up.  CPU s of the process tree / wall s /
-# the Python driver's peak resident MB (225 before any edges build; the
-# allocator keeps what a driver build freed, so a Spark row's peak is what
-# the earlier driver builds left resident):
+# the Python driver's peak resident MB (225 before any edges build).  The
+# table was measured while sessions pinned the malloc and Arrow pools to
+# keep freed memory, so a Spark row's peak is what earlier driver builds
+# left resident.  Re-run at 1 and 40 tiles without that pinning, a Spark
+# row still starts from what the driver build before it left (404-633 MB
+# after 920-943 MB builds at 40 tiles), but that is returned within the
+# op: each driver build started again from about 200 MB, and rose 720-743
+# MB (0.9 KB per triple) where it rose 155-464 MB from a retained start:
 #      triples      edges       spark                driver
 #       20,446     20,101    2.31 /  0.74 /   225    0.29 / 0.07 /  225
 #      817,840    804,040    9.41 /  2.68 /   571    1.88 / 1.22 /  794
