@@ -224,64 +224,53 @@ def mention_shingle_buckets(mention_texts: DataFrame) -> DataFrame:
 
 def signature_base(
     distinct,
-    catalog=None,
+    catalog,
     stage_name: str = "cc_sigs",
     anchor: dict[str, str] | None = None,
     increment: bool = False,
 ) -> DataFrame:
-    """Durable, append-only signature table over DISTINCT mentions.
-
-    The 100-TB growth shape: signatures are pure per-row functions of the
-    mention string, so when the corpus grows, the Arrow kernel only needs
-    to run over never-before-seen mentions — the anti-join delta — and the
-    new rows are appended file-wise through ``StageCatalog.append``
-    (tests/test_incremental_sigs.py pins that only the delta is signed).
-
-    Reconciliation (``increment=False``): ``distinct`` is the FULL current
-    mention set.  Rows whose mention is NOT in it mean the catalog dir was
-    reused for a different (non-superset) corpus: stale signature rows
-    could bridge CC components and corrupt canonical labels, so the table
-    is rebuilt from scratch instead.  Both checks are one full-outer pass,
-    bounded by the distinct-mention count.
+    """Durable signature table over DISTINCT mentions, refreshed in one of
+    two modes; returns its committed reader.
 
     Delta (``increment=True``): the caller has proven the table covers
     exactly the mentions before a batch, and ``distinct`` holds only the
-    batch's mentions.  Nothing can be stale, so the delta is ``distinct``
-    left-anti the table — O(batch) instead of O(corpus).  When the table is
-    small enough to link on the driver (``links_on_driver``) the caller
-    passes the batch's mentions as a list of strings: the delta is taken
-    against one Arrow read of the table's mention column, signed in-process
-    (``signature_rows``) and appended as a ``pyarrow.Table`` — no Spark job.
+    batch's mentions.  Signatures are pure per-row functions of the mention
+    string, so only the never-seen mentions — ``distinct`` left-anti the
+    table, O(batch) instead of O(corpus) — are signed and appended through
+    ``StageCatalog.append`` (tests/test_incremental_sigs.py pins that only
+    the delta is signed); with none, the table is re-anchored.  When the
+    table is small enough to link on the driver (``links_on_driver``) the
+    caller passes the batch's mentions as a list of strings: the delta is
+    taken against one Arrow read of the table's mention column, signed
+    in-process (``signature_rows``) and appended as a ``pyarrow.Table`` —
+    no Spark job.
+
+    Rebuild (every other refresh): ``distinct`` is the FULL current mention
+    set, signed whole and written over the table, so no row of an earlier
+    corpus survives to bridge CC components.
 
     ``distinct`` is a DataFrame, or a list of mention strings held on the
     driver (the distinct values, as ``select("mention").distinct()`` gives
-    them, a null included).  A list is signed in-process in every mode: the
-    first commit, the delta and the reconciliation, whose stale rows
-    rebuild the whole table from the list as they do from a DataFrame.
-
-    ``anchor`` (extra manifest inputs, e.g. ``{"mentions": fingerprint}``)
-    is recorded on every commit, and re-recorded when nothing changed, so a
-    caller can later prove which mention set the table covers.  Without a
-    catalog this is exactly one kernel pass.
+    them, a null included), signed in-process in both modes.  ``anchor``
+    (extra manifest inputs, e.g. ``{"mentions": fingerprint}``) is recorded
+    on every commit, and re-recorded when nothing changed, so a caller can
+    later prove which mention set the table covers.
     """
-    def sign(mentions):
-        if isinstance(mentions, list):
-            return signature_rows(mentions)
-        return mention_shingle_buckets(mentions)
-
-    if catalog is None:
-        return sign(distinct)
-    if catalog.manifest(stage_name) is None:
-        return catalog.run(stage_name, lambda: sign(distinct), extra_inputs=anchor)
-    n_stale, delta = 0, None
+    if not increment:
+        if isinstance(distinct, list):
+            rows = signature_rows(distinct)
+        else:
+            rows = mention_shingle_buckets(distinct)
+        catalog.write(stage_name, rows, extra_inputs=anchor)
+        catalog.executed.append(stage_name)
+        return catalog.read(stage_name)
+    delta = None
     if isinstance(distinct, list):
         known = set(catalog.read_arrow(stage_name, ["mention"]).column("mention").to_pylist())
-        if not increment:
-            n_stale = len(known.difference(distinct))
         fresh = [m for m in distinct if m not in known]
-        if fresh and not n_stale:
+        if fresh:
             delta = signature_rows(fresh)
-    elif increment:
+    else:
         # batch-sized: collect the delta's strings so emptiness costs no extra
         # job; from pandas the kernel input is a local relation (a row list
         # would start a Python worker per partition just to unpickle it)
@@ -293,25 +282,7 @@ def signature_base(
             delta = mention_shingle_buckets(catalog.spark.createDataFrame(
                 pd.DataFrame({"mention": fresh}), "mention string"
             ))
-    else:
-        existing = catalog.read(stage_name).select("mention")
-        distinct = distinct.localCheckpoint()  # scanned by reconcile + delta
-        counts = (
-            distinct.withColumn("_new", F.lit(1))
-            .join(existing.withColumn("_old", F.lit(1)), "mention", "full_outer")
-            .select(
-                F.count(F.when(F.col("_old").isNull(), 1)).alias("n_delta"),
-                F.count(F.when(F.col("_new").isNull(), 1)).alias("n_stale"),
-            )
-            .collect()[0]
-        )
-        n_stale = counts["n_stale"]
-        if counts["n_delta"] and not n_stale:
-            delta = mention_shingle_buckets(distinct.join(existing, "mention", "left_anti"))
-    if n_stale:
-        catalog.write(stage_name, sign(distinct), extra_inputs=anchor)
-        catalog.executed.append(stage_name)
-    elif delta is not None:
+    if delta is not None:
         catalog.append(stage_name, delta, extra_inputs=anchor)
     elif anchor:
         catalog.reanchor(stage_name, anchor)
@@ -337,8 +308,8 @@ def candidate_pairs(
     - everything else is a plain bucket equi-join, with AQE skew-join as
       the runtime backstop.
 
-    ``key`` names the member column (mention text in the legacy tests, a
-    compact surrogate id on the production path — link_mentions passes ids
+    ``key`` names the member column (mention text in the tests, a compact
+    surrogate id on the production path — ``mention_edge_ids`` passes ids
     so no mention text crosses the pair shuffle, VERDICT r4 item 3).
     """
     sized = buckets.join(
@@ -598,52 +569,32 @@ def connected_components(
     return labels
 
 
-def link_mentions(
-    mentions: DataFrame, catalog=None, stage_prefix: str = "cc"
-) -> DataFrame:
-    """mentions DF (col ``mention``) -> map (mention, canonical).
-
-    Mentions that never met a similar partner map to themselves.
-
-    The signature kernel runs ONCE over distinct mentions (``base``,
-    materialized) — and, when a ``catalog`` is given, once per NEVER-SEEN
-    mention across the catalog's lifetime: the signature table persists as
-    the ``{stage_prefix}_sigs`` stage and appended corpora only pay the
-    kernel for their delta (``signature_base``); the candidate/verify path
-    then works entirely on a
-    TEXT-FREE projection of it (``core``: surrogate id + shingle arrays +
-    bucket keys — its own checkpoint, so the analyzed plan downstream
-    carries no mention attribute at all), and mention text re-attaches only
-    to the verified edge set — orders of magnitude smaller than the
-    candidate pairs — ordered (least, greatest) so edge orientation stays
-    the old lexicographic one regardless of id assignment.  Surrogate ids
-    are ``monotonically_increasing_id`` frozen by the checkpoint: purely
-    internal (never in the output or any catalog token), so their
-    partition-layout dependence is harmless.
-
-    ``catalog`` (a StageCatalog) makes the CC iteration durably resumable —
-    see ``connected_components``.
-    """
-    distinct = mentions.select("mention").distinct()
-    base = signature_base(
-        distinct, catalog=catalog, stage_name=f"{stage_prefix}_sigs"
-    )
-    return link_from_signatures(base, catalog=catalog, stage_prefix=stage_prefix)
-
-
 def link_from_signatures(
     signatures: DataFrame, catalog=None, stage_prefix: str = "cc"
 ) -> DataFrame:
     """Candidate/verify/CC over an already-materialized signature table
-    (mention, shingles, buckets) -> (mention, canonical).
+    (mention, shingles, buckets) -> (mention, canonical); mentions that
+    never met a similar partner map to themselves.
 
-    Split out of ``link_mentions`` (r6) so the pipeline can key the linked
-    stage on the SIGNATURE TABLE's fingerprint: the linked map is a pure
-    function of the distinct-mention set, which the signature table
-    captures exactly — an appended batch that introduces no never-seen
-    mention leaves the table (and hence this whole computation) unchanged,
-    and the stage catalog can skip it outright instead of replaying
-    bucket join + verify + CC to rediscover the same fixed point.
+    Takes the signature table, not the mentions, so the pipeline can key
+    the linked stage on the SIGNATURE TABLE's fingerprint: the linked map
+    is a pure function of the distinct-mention set, which the signature
+    table captures exactly — an appended batch that introduces no
+    never-seen mention leaves the table (and hence this whole computation)
+    unchanged, and the stage catalog can skip it outright instead of
+    replaying bucket join + verify + CC to rediscover the same fixed point.
+
+    The candidate/verify path works entirely on a TEXT-FREE projection of
+    the table (``core``: surrogate id + shingle arrays + bucket keys — its
+    own checkpoint, so the analyzed plan downstream carries no mention
+    attribute at all), and mention text re-attaches only to the verified
+    edge set, ordered (least, greatest) so edge orientation stays the
+    lexicographic one regardless of id assignment.  Surrogate ids are
+    ``monotonically_increasing_id`` frozen by the checkpoint: purely
+    internal (never in the output or any catalog token), so their
+    partition-layout dependence is harmless.  ``catalog`` (a StageCatalog)
+    makes the CC iteration durably resumable — see
+    ``connected_components``.
     """
     base = (
         signatures

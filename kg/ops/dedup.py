@@ -35,6 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kg.config import MINHASH_PRIME
 from kg.linking import (
     _hash_params,
     _union_find,
@@ -45,7 +46,7 @@ from kg.linking import (
     verified_pairs,
 )
 
-_P = 2_147_483_647
+_P = MINHASH_PRIME
 
 # Signature tables with at most this many rows finish on the driver
 # (``_pull_small``); larger ones take the Spark plans.  Measured with

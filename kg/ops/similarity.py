@@ -161,24 +161,6 @@ def _resolve_lsh_geometry(
     return n_planes, n_tables
 
 
-def hyperplane_buckets(embeddings: DataFrame, dim: int, n_planes: int = 12, seed: int = 13) -> DataFrame:
-    """(vec_id, bucket) — sign pattern of projections onto fixed planes."""
-    planes = _planes(dim, n_planes, seed)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            signs = (m @ planes.T) >= 0
-            keys = ["".join("1" if s else "0" for s in row) for row in signs]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "bucket": keys})
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        kernel, "vec_id long, bucket string"
-    )
-
-
 def _key(signs) -> str:
     return "".join("1" if s else "0" for s in signs)
 
@@ -296,8 +278,9 @@ def embedding_nn_pairs(
 
     Relational formulation (posexplode -> index equi-join -> partial-dot
     aggregation) so the DuckDB oracle can replay it exactly; at scale the
-    LSH-bucketed variant (``hyperplane_buckets`` + within-bucket verify)
-    bounds the candidate set instead of the full cross product.
+    LSH-bucketed variant (``embedding_nn_pairs_lsh``:
+    ``hyperplane_buckets_multi`` + within-bucket verify) bounds the
+    candidate set instead of the full cross product.
     """
     flat = embeddings.select(
         "vec_id", F.posexplode("embedding").alias("i", "v")
@@ -363,12 +346,9 @@ def embedding_nn_pairs_lsh(
     n_planes, n_tables = _resolve_lsh_geometry(
         embeddings, n_planes, n_tables, n_vectors
     )
-    if n_tables > 1:
-        buckets = hyperplane_buckets_multi(
-            embeddings, dim, n_planes, n_tables, seed
-        ).select(F.concat_ws("|", F.col("table"), F.col("bucket")).alias("bucket"), "vec_id")
-    else:
-        buckets = hyperplane_buckets(embeddings, dim, n_planes, seed)
+    buckets = hyperplane_buckets_multi(
+        embeddings, dim, n_planes, n_tables, seed
+    ).select(F.concat_ws("|", F.col("table"), F.col("bucket")).alias("bucket"), "vec_id")
     a = buckets.select("bucket", F.col("vec_id").alias("vec_id_a"))
     b = buckets.select("bucket", F.col("vec_id").alias("vec_id_b"))
     pairs = (

@@ -21,12 +21,17 @@ resume, and takes one path per stage:
 The increments: the per-document stages file-append the batch's rows,
 ``linked`` refreshes its signature table from the batch's mentions
 (``_run_linked_stage``), and ``nodes`` merges the batch's counts into
-``nodes_mtc``.  ``edges`` has no increment: a batch's new mention can join
-an old component and rename it, and a reused doc_id merges into an old
-group, so every call that changes the triples or the map recomputes it.  A
-fresh run is ``_fold`` with no batch, and so is an append whose batch is
-already folded in (a retried or interrupted append): every stage left stale
-by an interrupted append is rebuilt.
+``nodes_mtc``.  The two tables a stage commits before its own follow the
+same rule on a fresh run, an append and a resume alike: the signature
+table (``linked_cc_sigs``) and the counts (``nodes_mtc``) are skipped when
+they are complete for the current mentions, take the batch's delta when
+their manifest records the pre-batch mentions, and are rebuilt from all
+mentions otherwise.  ``edges`` has no increment: a batch's new mention can
+join an old component and rename it, and a reused doc_id merges into an
+old group, so every call that changes the triples or the map recomputes
+it.  A fresh run is ``_fold`` with no batch, and so is an append whose
+batch is already folded in (a retried or interrupted append): every stage
+left stale by an interrupted append is rebuilt.
 
 The vocabulary-sized tail — the signature delta, the linked map,
 ``nodes_mtc`` and nodes, whose inputs are sized by the distinct mentions,
@@ -37,12 +42,11 @@ from ``pyarrow.Table``s by ``StageCatalog.write``/``append``, so an append
 runs no Spark job in linked or nodes.  The side is decided once per call,
 from the signature table's manifest: an append reads it before the batch
 (so the driver may hold up to the bound plus one batch's new mentions),
-a fresh run or resume after the table is refreshed.  A rebuild of the
-counts below the bound reads the mentions whole on the driver below
-``DRIVER_BATCH_MAX_DOCS`` documents and counts them in pandas (the first
-append's ``nodes_mtc`` too), in one Spark aggregation pulled through Arrow
-above it, and builds nodes from the counts on the driver too.  Above the
-bound all of it is Spark.
+a fresh run or resume after the table is refreshed.  A rebuild of
+``nodes_mtc`` below the bound reads the mentions whole on the driver below
+``DRIVER_BATCH_MAX_DOCS`` documents and counts them in pandas, in one Spark
+aggregation pulled through Arrow above it, and builds nodes from the
+counts on the driver too.  Above the bound all of it is Spark.
 
 The edges recompute runs on the driver while the triples manifest holds
 at most ``DRIVER_EDGES_MAX_TRIPLES`` rows, on a fresh run, an append and a
@@ -173,12 +177,12 @@ def _run_linked_stage(
     mentions table, and on the driver none runs at all: the increment's
     mention column is read through Arrow and the delta signed and appended
     in-process.  Otherwise (first run, changed corpus, a crash between the
-    two commits) ``signature_base`` reconciles against the full mention set:
-    the distinct mentions of ``whole``, the whole mentions table when the
-    call holds it on the driver (``_Fold.whole``), signed in-process while
-    they number at most ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` (the bound
-    on what the driver signs and links), else of the committed table on
-    Spark.
+    two commits) ``signature_base`` rebuilds the table from the full
+    mention set: the distinct mentions of ``whole``, the whole mentions
+    table when the call holds it on the driver (``_Fold.whole``), signed
+    in-process while they number at most
+    ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` (the bound on what the driver
+    signs and links), else of the committed table on Spark.
 
     Linking runs on the driver (one Arrow read, the map committed from a
     ``pyarrow.Table``, no Spark job and no ``linked_cc_*`` round commits)
@@ -269,41 +273,37 @@ def _linked(f: _Fold) -> None:
 
 
 def _counts(f: _Fold):
-    """The (mention, tag, cnt) statistic nodes derive from: a
+    """The (mention, tag, cnt) statistic nodes derive from, committed as
+    ``nodes_mtc`` by every call that rebuilds nodes and read back: a
     ``pyarrow.Table`` on the driver side of the bound (``f.on_driver``), a
-    DataFrame otherwise.  A call without a batch counts all mentions: on
-    the driver side in pandas when the mentions are held whole or small
-    enough to read whole (``_Fold.source``), else in one Spark aggregation
-    (pulled through Arrow on the driver side).  A call with one keeps the
-    statistic as ``nodes_mtc`` for the next append: the batch's counts
-    merged in when rule 2 holds for it (on the driver, the committed counts
-    and the increment's mention rows are read through Arrow and summed in
-    pandas), counted from all mentions otherwise."""
+    DataFrame otherwise.  By the stage rule: skipped when it is complete
+    for the current mentions; the batch's counts merged into it when rule 2
+    holds for it (on the driver, the committed counts and the increment's
+    mention rows are read through Arrow and summed in pandas); otherwise
+    counted from all mentions, on the driver side in pandas when the
+    mentions are held whole or small enough to read whole
+    (``_Fold.source``), else in one Spark aggregation (pulled through Arrow
+    on the driver side)."""
     cat = f.cat
 
-    def all_counts():
-        held = f.source("mentions") if f.on_driver else None
-        if held is not None:
-            return merge_counts_local(None, held.select(["mention", "tag"]))
-        counts = mention_tag_counts(f.read("mentions"))
-        return counts.toArrow() if f.on_driver else counts
-
-    def merged():
-        if not f.incremental("nodes_mtc", ("mentions",)):
-            return all_counts()
-        if not f.on_driver:
+    def rows():
+        if f.incremental("nodes_mtc", ("mentions",)):
+            if f.on_driver:
+                batch = cat.read_arrow("mentions", ["mention", "tag"], files=f.incs["mentions"])
+                return merge_counts_local(cat.read_arrow("nodes_mtc"), batch)
             return (
                 cat.read("nodes_mtc")
                 .unionByName(mention_tag_counts(f.inc("mentions")))
                 .groupBy("mention", "tag")
                 .agg(F.sum("cnt").cast("long").alias("cnt"))
             )
-        rows = cat.read_arrow("mentions", ["mention", "tag"], files=f.incs["mentions"])
-        return merge_counts_local(cat.read_arrow("nodes_mtc"), rows)
+        held = f.source("mentions") if f.on_driver else None
+        if held is not None:
+            return merge_counts_local(None, held.select(["mention", "tag"]))
+        counts = mention_tag_counts(f.read("mentions"))
+        return counts.toArrow() if f.on_driver else counts
 
-    if f.batch is None:
-        return all_counts()
-    counts = cat.run("nodes_mtc", merged, inputs=["mentions"])
+    counts = cat.run("nodes_mtc", rows, inputs=["mentions"])
     return cat.read_arrow("nodes_mtc") if f.on_driver else counts
 
 
@@ -606,29 +606,29 @@ DRIVER_BATCH_MAX_DOCS = INCREMENT_DOCS_PER_PARTITION
 
 # The edges stage builds on the driver (``kg.graph.edges_local``) while the
 # triples manifest holds at most this many rows (``_edges``).  Measured with
-# ``tools/append_profile.py --seed 3 --edges-tiles 1 40 160 --bound 0
+# ``tools/append_profile.py --seed 3 --edges-tiles 1 40 --bound 0
 # 1000000000000 --ops 3`` on a 4-core VM (local[4], 1 GB driver heap, as
 # perfbench runs): the edges stage alone, rebuilt from an ``append_growth``
 # catalog (base and two appends) whose triples are tiled K times (doc_ids
 # suffixed per copy, one file per core), the two sides interleaved, median
 # of 3 rebuilds after one warm-up.  CPU s of the process tree / wall s /
-# the Python driver's peak resident MB (225 before any edges build).  The
-# table was measured while sessions pinned the malloc and Arrow pools to
-# keep freed memory, so a Spark row's peak is what earlier driver builds
-# left resident.  Re-run at 1 and 40 tiles without that pinning, a Spark
-# row still starts from what the driver build before it left (404-633 MB
-# after 920-943 MB builds at 40 tiles), but that is returned within the
-# op: each driver build started again from about 200 MB, and rose 720-743
-# MB (0.9 KB per triple) where it rose 155-464 MB from a retained start:
+# the Python driver's peak resident MB (about 200 before each build; a
+# Spark row's peak is what the driver build before it left, returned
+# within the op).  The 3.3M row is from an earlier run with ``--edges-tiles
+# 1 40 160`` while sessions pinned the malloc and Arrow pools to keep freed
+# memory, so its driver peak is not comparable to the rows above it:
 #      triples      edges       spark                driver
-#       20,446     20,101    2.31 /  0.74 /   225    0.29 / 0.07 /  225
-#      817,840    804,040    9.41 /  2.68 /   571    1.88 / 1.22 /  794
+#       20,446     20,101    2.77 /  0.73 /   217    0.60 / 0.08 /  217
+#      817,840    804,040    9.54 /  2.73 /   594    1.85 / 1.05 /  960
 #    3,271,360  3,216,160   38.46 / 10.99 / 1454    6.71 / 4.33 / 2307
 # Both sides committed the same edges (order-insensitive digest) at every
-# size.  The driver uses 5-8x less CPU and less wall at every size, so the
-# bound is set by its memory, which Spark neither manages nor spills: about
-# 0.7 KB of driver peak per triple, some 0.7 GB over the baseline at the
-# bound, near the 0.55 GB ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` allows.
+# size.  The driver uses 4.6-5.7x less CPU and less wall at every size, so
+# the bound is set by its memory, which Spark neither manages nor spills:
+# the driver build rose 720-780 MB over its start at 817,840 triples,
+# about 0.9 KB per triple, some 0.9 GB over the baseline at the bound, more
+# than the 0.55 GB ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` allows.  The
+# bound stays at 1M: it holds the driver near 1.1 GB resident in all, and
+# ``append_growth`` (about 20k triples) sits far below it.
 DRIVER_EDGES_MAX_TRIPLES = 1_000_000
 
 

@@ -166,12 +166,10 @@ def test_append_below_the_batch_bound_runs_no_job_in_the_per_document_stages(
     from perfbench.trace import STAGES, Tracer
     from perfbench.workloads import spans_account
 
-    docs = synth_docs(100, sentences=sentences)
+    docs = synth_docs(80, sentences=sentences)
     base = str(tmp_path / "jobs")
     renamed = [_text("r-a0", "中国致公党/ns 中国致公党人/ns"), _text("r-a1", "中国致公党/ns 北京/ns")]
-    run_pipeline(spark, docs_to_df(spark, docs[:80] + renamed), base, vocab=vocab, input_token="base")
-    # the first append builds nodes_mtc, so the second takes every increment
-    run_pipeline_append(spark, docs_to_df(spark, docs[80:]), base, vocab=vocab, input_token="b1")
+    run_pipeline(spark, docs_to_df(spark, docs + renamed), base, vocab=vocab, input_token="base")
     tracer = Tracer(spark)
     tracer.install()
     try:

@@ -4,8 +4,9 @@ The 100-TB growth shape: on append, the only Python in the linking tail —
 the Arrow signature kernel — must run over NEVER-BEFORE-SEEN mention
 strings only, not the full distinct mention set.  Signatures are pure
 per-row functions, so the persisted table stays exactly equal to a fresh
-kernel pass; a catalog dir reused for a DIFFERENT (non-superset) corpus
-must detect the stale rows and rebuild from scratch.
+kernel pass.  Every refresh but that delta rebuilds the table, so a
+catalog dir reused for a DIFFERENT (non-superset) corpus keeps no stale
+row.
 """
 
 import pytest
@@ -120,29 +121,33 @@ def test_noop_reappend_never_touches_kernel(
     assert len(kernel_spy) == n_before  # idempotent no-op: zero kernel work
 
 
-def test_list_reconciliation_with_a_stale_row_rebuilds_the_table(spark, tmp_path, kernel_spy):
-    """A mention list held on the driver reconciles as a DataFrame does: a
-    committed row the list lacks is stale, so the whole table is rebuilt
-    from the list, not appended to; without a stale row only the new
-    mentions are signed and appended."""
+def test_a_non_delta_refresh_rebuilds_the_table(spark, tmp_path, kernel_spy):
+    """Without ``increment`` a refresh signs the whole mention list and
+    writes it over the table, never appends to it: with a committed row
+    the list lacks (stale) and with a plain superset alike.  A DataFrame of
+    the same mentions gives the same rows; only the delta mode signs just
+    the never-seen mentions."""
     from kg.catalog import StageCatalog
 
     cat = StageCatalog(spark, str(tmp_path / "sigs"))
-    L.signature_base(["北京", "上海", "广州"], catalog=cat, stage_name="sigs", anchor={"m": "a"})
+    L.signature_base(["北京", "上海", "广州"], cat, stage_name="sigs", anchor={"m": "a"})
     assert cat.executed == ["sigs"]
+    for current, anchor in ((["北京", "上海", "南京"], "b"), (["北京", "上海", "南京", "深圳"], "c")):
+        del kernel_spy[:]
+        table = L.signature_base(current, cat, stage_name="sigs", anchor={"m": anchor})
+        assert kernel_spy == [len(current)]  # the whole list, not only the new mentions
+        assert cat.executed[-1] == "sigs"
+        assert cat.manifest("sigs")["inputs"]["m"] == anchor
+        assert cat.manifest("sigs")["rows"] == len(current)
+        df = spark.createDataFrame([(m,) for m in current], "mention string")
+        on_spark = L.signature_base(df, StageCatalog(spark, str(tmp_path / anchor)), stage_name="sigs")
+        assert _rows(table) == _rows(on_spark)
+    assert "sigs+append" not in cat.executed
     del kernel_spy[:]
-    current = ["北京", "上海", "南京"]
-    table = L.signature_base(current, catalog=cat, stage_name="sigs", anchor={"m": "b"})
-    assert kernel_spy == [3]  # the whole list, not only 南京
-    assert cat.executed == ["sigs", "sigs"]
-    assert cat.manifest("sigs")["inputs"]["m"] == "b"
-    on_spark = L.signature_base(spark.createDataFrame([(m,) for m in current], "mention string"))
-    assert _rows(table) == _rows(on_spark)
-    del kernel_spy[:]
-    L.signature_base(current + ["深圳"], catalog=cat, stage_name="sigs", anchor={"m": "c"})
+    L.signature_base(["深圳", "杭州"], cat, stage_name="sigs", anchor={"m": "d"}, increment=True)
     assert kernel_spy == [1]
     assert cat.executed[-1] == "sigs+append"
-    assert cat.manifest("sigs")["rows"] == 4
+    assert cat.manifest("sigs")["rows"] == 5
 
 
 def test_held_mentions_are_signed_on_the_driver_only_below_the_link_bound(

@@ -5,8 +5,9 @@ from kg.linking import (
     band_keys,
     connected_components,
     jaccard,
+    link_from_signatures,
     link_local,
-    link_mentions,
+    mention_shingle_buckets,
     minhash_signature,
     shingle_hashes,
     _hash_params,
@@ -65,7 +66,8 @@ def test_spark_linking_matches_local(spark):
         "中国致公党第十一次全国代表大会主席团",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "mention string")
-    got = {r.mention: r.canonical for r in link_mentions(df).collect()}
+    linked = link_from_signatures(mention_shingle_buckets(df))
+    got = {r.mention: r.canonical for r in linked.collect()}
     want = link_local(texts)
     assert got == want
     # at least one non-trivial merge actually happened

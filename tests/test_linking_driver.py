@@ -117,27 +117,57 @@ def test_shingle_hashes_match_the_fold_up_to_k7():
             L.shingle_hashes("abcdefghij", bad)
 
 
+@pytest.fixture()
+def whole_reads(monkeypatch):
+    """Record each read of a stage's whole committed table, through Spark
+    or Arrow (a read of an increment's files is not recorded)."""
+    reads = []
+    real_read, real_arrow = StageCatalog.read, StageCatalog.read_arrow
+
+    def read(cat, stage, files=None):
+        if files is None:
+            reads.append(stage)
+        return real_read(cat, stage, files)
+
+    def read_arrow(cat, stage, columns=None, files=None):
+        if files is None:
+            reads.append(stage)
+        return real_arrow(cat, stage, columns, files)
+
+    monkeypatch.setattr(StageCatalog, "read", read)
+    monkeypatch.setattr(StageCatalog, "read_arrow", read_arrow)
+    return reads
+
+
 def test_append_equals_fresh_on_both_paths(
-    spark, tmp_path, monkeypatch, corpus, local_vocab, reference_link
+    spark, tmp_path, monkeypatch, corpus, local_vocab, reference_link, whole_reads
 ):
     """Forced to either side of the bound, an append equals a fresh run on
     all nine tables, and the two sides give the same tables: the driver
-    tail (signature delta, map, nodes_mtc, nodes) builds what Spark does."""
+    tail (signature delta, map, nodes_mtc, nodes) builds what Spark does.
+    The base run commits ``nodes_mtc``, so the first append merges its
+    batch's counts into it, reading no whole mentions table."""
     old, new = corpus
     tables, maps = {}, {}
-    for bound in (10**12, 0):
-        monkeypatch.setattr(L, "DRIVER_LINK_MAX_MENTIONS", bound)
+    for bound in at_both_bounds(monkeypatch):
         fresh = run_pipeline(
             spark, docs_to_df(spark, old + new), str(tmp_path / f"fresh{bound}"),
             vocab=local_vocab, input_token="all",
         )
         base = str(tmp_path / f"inc{bound}")
-        run_pipeline(
+        res0 = run_pipeline(
             spark, docs_to_df(spark, old), base, vocab=local_vocab, input_token="old"
         )
+        assert "nodes_mtc" in res0.executed
+        cat = res0.catalog
+        assert cat.manifest("nodes_mtc")["inputs"]["mentions"] == cat.fingerprint("mentions")
+        del whole_reads[:]
         res = run_pipeline_append(
             spark, docs_to_df(spark, new), base, vocab=local_vocab, input_token="b1"
         )
+        assert "nodes_mtc" in res.executed
+        assert "mentions" not in whole_reads, bound
+        assert "nodes_mtc" in whole_reads  # merged into, not recounted
         for name in fresh.tables:
             assert _rows(res.tables[name]) == _rows(fresh.tables[name]), (bound, name)
         assert ("linked_cc_final" in fresh.executed) == (bound == 0)
@@ -163,12 +193,8 @@ def test_append_below_the_bound_runs_no_job_in_linked_or_nodes(
     old, new = corpus
     base = str(tmp_path / "jobs")
     run_pipeline(spark, docs_to_df(spark, old), base, vocab=local_vocab, input_token="old")
-    # the first append builds nodes_mtc; the second, with never-seen
+    # the base run committed nodes_mtc, so the first append, with never-seen
     # surfaces, takes every increment and relinks
-    run_pipeline_append(
-        spark, docs_to_df(spark, _batch(BASE_LINES, 10, 4, "k")), base,
-        vocab=local_vocab, input_token="known",
-    )
     tracer = Tracer(spark)
     tracer.install()
     try:
@@ -273,13 +299,13 @@ def test_signature_delta_comes_from_the_batch(
         assert cat.manifest("linked_cc_sigs")["inputs"]["mentions"] == cat.fingerprint("mentions")
 
 
-def test_signature_delta_falls_back_to_reconciliation(
+def test_signature_delta_falls_back_to_a_rebuild(
     spark, tmp_path, corpus, local_vocab, sig_spy
 ):
     """A table not anchored on the pre-append mentions (a crash between the
     mentions append and the signature commit, or a catalog written before
-    the anchor existed) is reconciled against the full mention set, and
-    append == fresh still holds."""
+    the anchor existed) is rebuilt from the full mention set, and append ==
+    fresh still holds."""
     old, new = corpus
     base = str(tmp_path / "fallback")
     res0 = run_pipeline(
@@ -291,6 +317,8 @@ def test_signature_delta_falls_back_to_reconciliation(
     )
     assert sig_spy["increment"] == [False, False]
     assert "mentions" in sig_spy["reads"]
+    assert "linked_cc_sigs" in res.executed
+    assert "linked_cc_sigs+append" not in res.executed
     fresh = run_pipeline(
         spark, docs_to_df(spark, old + new), str(tmp_path / "fresh"),
         vocab=local_vocab, input_token="all",

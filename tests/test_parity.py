@@ -11,7 +11,7 @@ import shutil
 import pytest
 
 from kg import oracle
-from kg.linking import link_local, link_mentions
+from kg.linking import link_from_signatures, link_local, mention_shingle_buckets
 from kg.oracle import micro_prf
 from kg.pipeline import run_pipeline
 from kg.synth import corpus_vocab, docs_to_df, synth_docs
@@ -76,9 +76,10 @@ def test_linking_parity(spark, result, golden, reference_link):
     got = {r.mention: r.canonical for r in result.tables["linked"].collect()}
     assert got == want
     assert link_local(texts) == want
-    # the distributed path (no catalog: always link_from_signatures)
+    # the distributed path
     mentions = spark.createDataFrame([(t,) for t in texts], "mention string")
-    distributed = {r.mention: r.canonical for r in link_mentions(mentions).collect()}
+    linked = link_from_signatures(mention_shingle_buckets(mentions))
+    distributed = {r.mention: r.canonical for r in linked.collect()}
     assert distributed == want
 
 

@@ -27,9 +27,10 @@ def _table_rows(df):
 
 
 def _main_stages(executed):
-    """Drop the CC-internal durable rounds (linked_cc_iter*/linked_cc_final)
-    that the linked stage commits through the same catalog."""
-    return [s for s in executed if not s.startswith("linked_cc")]
+    """Drop the commits a stage makes before its own through the same
+    catalog: the signature table and CC rounds (linked_cc_*) of linked, and
+    the counts (nodes_mtc) of nodes."""
+    return [s for s in executed if not s.startswith("linked_cc") and s != "nodes_mtc"]
 
 
 def test_resume_skips_completed_and_recomputes_suffix(
