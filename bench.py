@@ -158,9 +158,7 @@ def bench_kg_append(
             )
             append = time.perf_counter() - t0
             off += nb
-            perdoc_app = sum(
-                v for k, v in res_app.timings.items() if k.endswith("+append")
-            )
+            perdoc_app = sum(res_app.timings.get(f"{s}+append", 0.0) for s in perdoc)
             key = f"{round(frac * 100):g}pct"
             out["batches"][key] = {
                 "batch_docs": nb,

@@ -222,71 +222,37 @@ def mention_shingle_buckets(mention_texts: DataFrame) -> DataFrame:
     )
 
 
-def signature_base(
-    distinct,
-    catalog,
-    stage_name: str = "cc_sigs",
-    anchor: dict[str, str] | None = None,
-    increment: bool = False,
-) -> DataFrame:
-    """Durable signature table over DISTINCT mentions, refreshed in one of
-    two modes; returns its committed reader.
+def signature_base(distinct, catalog=None, stage_name: str | None = None):
+    """Signature rows (mention, shingles, buckets) of the DISTINCT mentions
+    ``distinct``; commits nothing.
 
-    Delta (``increment=True``): the caller has proven the table covers
-    exactly the mentions before a batch, and ``distinct`` holds only the
-    batch's mentions.  Signatures are pure per-row functions of the mention
-    string, so only the never-seen mentions — ``distinct`` left-anti the
-    table, O(batch) instead of O(corpus) — are signed and appended through
-    ``StageCatalog.append`` (tests/test_incremental_sigs.py pins that only
-    the delta is signed); with none, the table is re-anchored.  When the
-    table is small enough to link on the driver (``links_on_driver``) the
-    caller passes the batch's mentions as a list of strings: the delta is
-    taken against one Arrow read of the table's mention column, signed
-    in-process (``signature_rows``) and appended as a ``pyarrow.Table`` —
-    no Spark job.
+    Without ``catalog``: the rows of the whole set, the FULL current
+    mention set of a rebuild, so no row of an earlier corpus survives to
+    bridge CC components.  With it: the rows of the mentions the committed
+    ``stage_name`` lacks, or None when every mention is there — the
+    delta of an append, O(batch) instead of O(corpus), since signatures
+    are pure per-row functions of the mention string
+    (tests/test_incremental_sigs.py pins that only the delta is signed).
 
-    Rebuild (every other refresh): ``distinct`` is the FULL current mention
-    set, signed whole and written over the table, so no row of an earlier
-    corpus survives to bridge CC components.
-
-    ``distinct`` is a DataFrame, or a list of mention strings held on the
-    driver (the distinct values, as ``select("mention").distinct()`` gives
-    them, a null included), signed in-process in both modes.  ``anchor``
-    (extra manifest inputs, e.g. ``{"mentions": fingerprint}``) is recorded
-    on every commit, and re-recorded when nothing changed, so a caller can
-    later prove which mention set the table covers.
+    ``distinct`` is a list of mention strings held on the driver (the
+    distinct values, as ``select("mention").distinct()`` gives them),
+    signed in-process (``signature_rows``); its delta is taken against one
+    Arrow read of the table's mention column.  Or it is a DataFrame: the
+    whole set is signed by the Arrow kernel (``mention_shingle_buckets``),
+    and a delta is the left-anti join against the table, collected to the
+    driver (it is batch-sized) and signed there.
     """
-    if not increment:
+    if catalog is None:
         if isinstance(distinct, list):
-            rows = signature_rows(distinct)
-        else:
-            rows = mention_shingle_buckets(distinct)
-        catalog.write(stage_name, rows, extra_inputs=anchor)
-        catalog.executed.append(stage_name)
-        return catalog.read(stage_name)
-    delta = None
+            return signature_rows(distinct)
+        return mention_shingle_buckets(distinct)
     if isinstance(distinct, list):
         known = set(catalog.read_arrow(stage_name, ["mention"]).column("mention").to_pylist())
         fresh = [m for m in distinct if m not in known]
-        if fresh:
-            delta = signature_rows(fresh)
     else:
-        # batch-sized: collect the delta's strings so emptiness costs no extra
-        # job; from pandas the kernel input is a local relation (a row list
-        # would start a Python worker per partition just to unpickle it)
-        import pandas as pd
-
         existing = catalog.read(stage_name).select("mention")
         fresh = [r["mention"] for r in distinct.join(existing, "mention", "left_anti").collect()]
-        if fresh:
-            delta = mention_shingle_buckets(catalog.spark.createDataFrame(
-                pd.DataFrame({"mention": fresh}), "mention string"
-            ))
-    if delta is not None:
-        catalog.append(stage_name, delta, extra_inputs=anchor)
-    elif anchor:
-        catalog.reanchor(stage_name, anchor)
-    return catalog.read(stage_name)
+    return signature_rows(fresh) if fresh else None
 
 
 def candidate_pairs(
@@ -416,6 +382,21 @@ def _union_find(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
     return {x: find(x) for x in parent}
 
 
+def label_table(labels: dict[str, str], key: str, label: str):
+    """``labels`` ({member: component label}, as ``_union_find`` gives
+    them) as a two-column ``pyarrow.Table`` of strings (``key``,
+    ``label``) sorted by member: the driver result of ``link_committed``,
+    of ``connected_components``' small-graph path and of
+    ``kg.ops.dedup.minhash_clusters``."""
+    import pyarrow as pa
+
+    items = sorted(labels.items())
+    return pa.table({
+        key: pa.array([k for k, _ in items], pa.string()),
+        label: pa.array([v for _, v in items], pa.string()),
+    })
+
+
 def connected_components(
     edges: DataFrame,
     max_iters: int = 25,
@@ -481,18 +462,9 @@ def connected_components(
         # row-path collect() pickled every edge row and createDataFrame
         # re-pickled every label — measured ~2.5s of pure serialization at
         # 250k edges (r6); the Arrow path moves both as columnar batches.
-        import pandas as pd
-
         pdf = edges.select("m1", "m2").toPandas()
-        labels_map = _union_find(list(zip(pdf["m1"], pdf["m2"])))
-        items = sorted(labels_map.items())
         frozen = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "mention": [k for k, _ in items],
-                    "canonical": [v for _, v in items],
-                }
-            ),
+            label_table(_union_find(zip(pdf["m1"], pdf["m2"])), "mention", "canonical"),
             "mention string, canonical string",
         )
         if catalog is not None:
@@ -695,7 +667,8 @@ def links_on_driver(catalog, sig_stage: str) -> bool:
     driver: at most ``DRIVER_LINK_MAX_MENTIONS`` rows, read from its
     manifest (free).  The pipeline keeps the whole vocabulary-sized tail —
     signature delta, linked map, ``nodes_mtc`` and nodes — on the driver
-    under the same rule, evaluated once per call (``kg.pipeline._Fold``)."""
+    under the same rule, evaluated once per call
+    (``kg.pipeline._Fold.driver_tail``)."""
     m = catalog.manifest(sig_stage)
     return m is not None and m["rows"] <= DRIVER_LINK_MAX_MENTIONS
 
@@ -711,19 +684,13 @@ def link_committed(catalog, sig_stage: str, on_driver: bool, stage_prefix: str =
         return link_from_signatures(
             catalog.read(sig_stage), catalog=catalog, stage_prefix=stage_prefix
         )
-    import pyarrow as pa
-
     table = catalog.read_arrow(sig_stage, ["mention", "shingles", "buckets"])
     labels = link_signatures(
         table.column("mention").to_pylist(),
         table.column("shingles").to_pylist(),
         table.column("buckets").to_pylist(),
     )
-    items = sorted(labels.items())
-    return pa.table({
-        "mention": pa.array([k for k, _ in items], pa.string()),
-        "canonical": pa.array([v for _, v in items], pa.string()),
-    })
+    return label_table(labels, "mention", "canonical")
 
 
 def link_local(

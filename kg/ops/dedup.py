@@ -42,6 +42,7 @@ from kg.linking import (
     band_keys,
     candidate_pairs,
     connected_components,
+    label_table,
     verified_edge_ids,
     verified_pairs,
 )
@@ -375,8 +376,6 @@ def minhash_clusters(
     base = doc_shingle_buckets(docs, num_hashes=num_hashes, bands=bands).localCheckpoint()
     local = _pull_small(base, ["doc_id", "shingles", "buckets"], items="shingles")
     if local is not None:
-        import pyarrow as pa
-
         labels = _union_find(verified_pairs(
             local.column("doc_id").to_pylist(),
             local.column("shingles").to_pylist(),
@@ -384,13 +383,8 @@ def minhash_clusters(
             threshold,
             max_bucket,
         ))
-        items = sorted(labels.items())
         return docs.sparkSession.createDataFrame(
-            pa.table({
-                "doc_id": pa.array([k for k, _ in items], pa.string()),
-                "cluster_id": pa.array([v for _, v in items], pa.string()),
-            }),
-            "doc_id string, cluster_id string",
+            label_table(labels, "doc_id", "cluster_id"), "doc_id string, cluster_id string"
         )
     comp = connected_components(_verified_edges(base, threshold, max_bucket))
     return comp.select(F.col("mention").alias("doc_id"), F.col("canonical").alias("cluster_id"))

@@ -3,13 +3,18 @@
 ``STAGES`` is the stage DAG; each stage is a committed parquet checkpoint
 via kg/catalog.py:
 
-    documents ──> extract ──> mentions ──> linked ──> nodes
-        │            └──────> triples ───────┴─────> edges
+    documents ──> extract ──> mentions ──> linked_cc_sigs ──> linked ──┐
+        │            │           └──────> nodes_mtc ───────────> nodes <┤
+        │            └──────> triples ─────────────────────────> edges <┘
         ├──────> keyphrases
         └──────> documents_out (span-sequence invariant proof)
 
+Nine of them are published (``PipelineResult.tables``); the signature
+table (``linked_cc_sigs``) and the (mention, tag, cnt) counts
+(``nodes_mtc``) are read only by ``linked`` and ``nodes``.
+
 One function, ``_fold``, runs the table for a fresh run, an append and a
-resume, and takes one path per stage:
+resume, and ``_Fold.step`` takes one path per stage:
 
 1. skip the stage if it is complete for its current inputs;
 2. otherwise take its increment if the call has a batch, the stage's
@@ -18,31 +23,30 @@ resume, and takes one path per stage:
    batch);
 3. otherwise rebuild it from the committed inputs.
 
-The increments: the per-document stages file-append the batch's rows,
-``linked`` refreshes its signature table from the batch's mentions
-(``_run_linked_stage``), and ``nodes`` merges the batch's counts into
-``nodes_mtc``.  The two tables a stage commits before its own follow the
-same rule on a fresh run, an append and a resume alike: the signature
-table (``linked_cc_sigs``) and the counts (``nodes_mtc``) are skipped when
-they are complete for the current mentions, take the batch's delta when
-their manifest records the pre-batch mentions, and are rebuilt from all
-mentions otherwise.  ``edges`` has no increment: a batch's new mention can
-join an old component and rename it, and a reused doc_id merges into an
-old group, so every call that changes the triples or the map recomputes
-it.  A fresh run is ``_fold`` with no batch, and so is an append whose
-batch is already folded in (a retried or interrupted append): every stage
-left stale by an interrupted append is rebuilt.
+The increments: the per-document stages file-append the batch's rows, and
+``linked_cc_sigs`` appends the signatures of the batch's never-seen
+mentions (``_signature_delta``), or, with none, re-anchors the table on
+the current mentions so that it and ``linked`` skip.  ``nodes_mtc``'s
+rebuild merges the batch's counts into the committed ones when rule 2
+holds for it, and counts all mentions otherwise (``_counts``).
+``linked``, ``nodes`` and ``edges`` have no increment: a batch's new
+mention can join an old component and rename it, and a reused doc_id
+merges into an old group, so every call that changes their inputs
+recomputes them.  A fresh run is ``_fold`` with no batch, and so is an
+append whose batch is already folded in (a retried or interrupted
+append): every stage left stale by an interrupted append is rebuilt.
 
 The vocabulary-sized tail — the signature delta, the linked map,
 ``nodes_mtc`` and nodes, whose inputs are sized by the distinct mentions,
 not the corpus — runs on the driver while the signature table holds at
-most ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` rows (``links_on_driver``):
-the increments are read through Arrow, merged in pandas and committed
-from ``pyarrow.Table``s by ``StageCatalog.write``/``append``, so an append
-runs no Spark job in linked or nodes.  The side is decided once per call,
-from the signature table's manifest: an append reads it before the batch
-(so the driver may hold up to the bound plus one batch's new mentions),
-a fresh run or resume after the table is refreshed.  A rebuild of
+most ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` rows
+(``_Fold.driver_tail``): the increments are read through Arrow, merged in
+pandas and committed from ``pyarrow.Table``s by
+``StageCatalog.write``/``append``, so an append runs no Spark job in
+linked or nodes.  The side is decided once per call, from the signature
+table's manifest: an append reads it before the batch (so the driver may
+hold up to the bound plus one batch's new mentions), a fresh run or
+resume on first use, after the table is refreshed.  A rebuild of
 ``nodes_mtc`` below the bound reads the mentions whole on the driver below
 ``DRIVER_BATCH_MAX_DOCS`` documents and counts them in pandas, in one Spark
 aggregation pulled through Arrow above it, and builds nodes from the
@@ -58,19 +62,20 @@ The five per-document stages and the span check run on the driver while
 the documents manifest holds at most ``DRIVER_BATCH_MAX_DOCS`` rows, on
 every call.  A rebuild reads its source's whole committed table through
 Arrow (``StageCatalog.read_arrow``) or takes the one this call already
-holds (``_Fold.whole``), computes its rows with the ``*_local`` twin of
-its Spark function, commits them from the ``pyarrow.Table`` and holds them
-in turn; a fresh run's documents stage is written by Spark from the input,
-as above the bound, and read back whole.  An append pulls its batch once,
-at most the bound plus one row through Arrow (``_pull``), and when it fits
-computes each increment from its source's increment, held apart from the
-whole tables (``_Fold.held``), so a rebuild never reads a batch as its
-whole source.  From whole mentions, ``linked`` signs the distinct mentions
-in-process while they number at most the link bound, and ``nodes`` counts
-them in pandas; the span check compares the two tables exactly.  Below all
-three bounds a fresh run runs one Spark job, the documents write (plus
-the input fingerprint scan when no ``input_token`` is given), and an
-append runs the pull only.  Above the bound every stage runs on Spark.
+holds (``_Fold.whole``, where ``step`` holds every rebuild computed on
+the driver), computes its rows with the ``*_local`` twin of its Spark
+function and commits them from the ``pyarrow.Table``; a fresh run's
+documents stage is written by Spark from the input, as above the bound,
+and read back whole.  An append pulls its batch once, at most the bound
+plus one row through Arrow (``_pull``), and when it fits computes each
+increment from its source's increment, held apart from the whole tables
+(``_Fold.held``), so a rebuild never reads a batch as its whole source.
+From whole mentions, ``linked_cc_sigs`` signs the distinct mentions
+in-process while they number at most the link bound, and ``nodes_mtc``
+counts them in pandas; the span check compares the two tables exactly.
+Below all three bounds a fresh run runs one Spark job, the documents
+write (plus the input fingerprint scan when no ``input_token`` is given),
+and an append runs the pull only.  Above the bound every stage runs on Spark.
 
 Shuffle budget at scale (SURVEY.md §4): documents→extract is shuffle-free
 (narrow explode + mapInPandas over input splits); mentions/triples are
@@ -147,44 +152,19 @@ def _stage_executor() -> _InlineRunner:
     return _InlineRunner()
 
 
-def _run_linked_stage(
-    cat: StageCatalog,
-    batch: tuple[str, list[str]] | None = None,
-    on_driver: bool | None = None,
-    whole=None,
-) -> bool:
-    """Refresh the durable signature table, then compute-or-skip the linked
-    stage KEYED ON THE SIGNATURE TABLE's fingerprint (r6).  Returns
-    ``on_driver``: whether the vocabulary-sized tail (signature delta,
-    linked, ``nodes_mtc``, nodes) runs on the driver.  The caller decides it
-    once per call (``_Fold``: an append from the pre-batch signature table);
-    None decides it here, from the refreshed table (a fresh run or resume).
+def _run_linked_stage(f: _Fold):
+    """The linked map over the committed signature table: one
+    ``link_committed`` call, on the side ``_Fold.driver_tail`` decides.
 
-    The linked map is a pure function of the distinct-mention set, which
-    the signature table captures exactly.  Keyed on the signature table, a
-    batch that introduces no never-seen mention (the steady-state growth
-    mode of a Zipf corpus) skips bucket join + verify + CC outright; any
-    new or removed mention changes the signature fingerprint and
-    recomputes.
+    The stage is KEYED ON THE SIGNATURE TABLE's fingerprint (r6): the
+    linked map is a pure function of the distinct-mention set, which the
+    signature table captures exactly, so a batch that introduces no
+    never-seen mention (the steady-state growth mode of a Zipf corpus)
+    leaves the table's data unchanged (``_signature_delta`` re-anchors
+    it) and skips bucket join + verify + CC outright; any new or removed
+    mention changes the fingerprint and relinks.
 
-    Signature refresh: every commit of ``linked_cc_sigs`` records the
-    mentions fingerprint it covers (``extra_inputs={"mentions": fp}``, the
-    ``nodes_mtc`` pattern).  When it matches the current mentions table
-    nothing is read at all.  On an append, ``batch`` is (pre-append
-    mentions fingerprint, the files of the mentions increment); when the
-    table is anchored on that pre-append fingerprint, the delta is the
-    batch's distinct mentions left-anti the table — no job scans the full
-    mentions table, and on the driver none runs at all: the increment's
-    mention column is read through Arrow and the delta signed and appended
-    in-process.  Otherwise (first run, changed corpus, a crash between the
-    two commits) ``signature_base`` rebuilds the table from the full
-    mention set: the distinct mentions of ``whole``, the whole mentions
-    table when the call holds it on the driver (``_Fold.whole``), signed
-    in-process while they number at most
-    ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` (the bound on what the driver
-    signs and links), else of the committed table on Spark.
-
-    Linking runs on the driver (one Arrow read, the map committed from a
+    Linking runs on the driver (one Arrow read, the map returned as a
     ``pyarrow.Table``, no Spark job and no ``linked_cc_*`` round commits)
     while the signature table holds at most
     ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` rows, distributed above
@@ -192,141 +172,126 @@ def _run_linked_stage(
     the driver path used less CPU and wall at every measured size (the
     table is at the constant).
     """
-    anchor = {"mentions": cat.fingerprint("mentions")}
-    if not cat.is_complete("linked_cc_sigs", extra_inputs=anchor):
-        grown = batch is not None and cat.is_complete(
-            "linked_cc_sigs", extra_inputs={"mentions": batch[0]}
-        )
-        held = None if grown or whole is None else whole.column("mention").unique()
-        if held is not None and len(held) <= kg.linking.DRIVER_LINK_MAX_MENTIONS:
-            mentions = held.to_pylist()
-        elif not grown:
-            mentions = cat.read("mentions").select("mention").distinct()
-        elif on_driver:
-            batch_mentions = cat.read_arrow("mentions", ["mention"], files=batch[1])
-            mentions = batch_mentions.column("mention").unique().to_pylist()
-        else:
-            mentions = cat.read("mentions", files=batch[1]).select("mention").distinct()
-        signature_base(
-            mentions, catalog=cat, stage_name="linked_cc_sigs", anchor=anchor, increment=grown,
-        )
-    if on_driver is None:
-        on_driver = links_on_driver(cat, "linked_cc_sigs")
-    cat.run(
-        "linked",
-        lambda: link_committed(cat, "linked_cc_sigs", on_driver, stage_prefix="linked_cc"),
-        inputs=["linked_cc_sigs"],
-    )
-    return on_driver
+    return link_committed(f.cat, "linked_cc_sigs", f.driver_tail(), stage_prefix="linked_cc")
 
 
 @dataclass(frozen=True)
 class Stage:
     """One node of the DAG.  ``build`` returns the stage's rows from the
     committed inputs (a DataFrame, or a ``pyarrow.Table`` built on the
-    driver); ``increment`` returns the batch's rows to file-append — a
-    DataFrame, or a function computing a ``pyarrow.Table`` on the driver.
-    A stage with ``own_commit`` keys and commits its checkpoint itself, and
-    ``build`` returns nothing (its reader opens on first use)."""
+    driver); ``increment`` returns the batch's rows to file-append (a
+    DataFrame, or a ``pyarrow.Table`` computed on the driver), or None
+    when the stage is already complete without them."""
 
     name: str
     inputs: tuple[str, ...]
     build: Callable[[_Fold], object]
     increment: Callable[[_Fold], object] | None = None
     partition_by: tuple[str, ...] | None = None
-    own_commit: bool = False
 
 
 def _per_document(name: str, source: str, rows: Callable, local: Callable) -> Stage:
     """A stage whose rows are a function of each document: ``rows(f, df)``
     over the committed ``source``, or over the rows the batch appended to
     it.  On the driver, ``local(f, table)`` computes them instead: a
-    rebuild from ``source``'s whole table (``_Fold.source``), held whole in
-    turn, and an increment from the batch's increment of ``source`` when
-    that is held there (``_Fold.held``)."""
+    rebuild from ``source``'s whole table (``_Fold.source``), and an
+    increment from the batch's increment of ``source`` when that is held
+    there (``_Fold.held``)."""
 
     def build(f: _Fold):
         table = f.source(source)
-        if table is None:
-            return rows(f, f.read(source))
-        f.whole[name] = local(f, table)
-        return f.whole[name]
+        return rows(f, f.read(source)) if table is None else local(f, table)
 
     def increment(f: _Fold):
         if source in f.held:
-            return lambda: local(f, f.held[source])
+            return local(f, f.held[source])
         return rows(f, f.inc(source))
 
     return Stage(name, (source,), build, increment)
 
 
-def _linked(f: _Fold) -> None:
-    """linked's signature delta needs the batch's mentions, so it is handed
-    the batch only when mentions took its increment; ``_run_linked_stage``
-    checks the anchor itself.  linked then counts as incremented."""
-    batch = None
-    if "mentions" in f.incs:
-        batch = (f.pre["mentions"], f.incs["mentions"])
-    f.on_driver = _run_linked_stage(f.cat, batch, f.on_driver, f.whole.get("mentions"))
-    if batch is not None:
-        f.incs["linked"] = []
+def _signatures(f: _Fold):
+    """``linked_cc_sigs``' rebuild: the full distinct mention set signed
+    (``signature_base``), in-process when this call holds the mentions
+    whole (``_Fold.whole``) and they number at most
+    ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` (the bound on what the driver
+    signs and links), else by the Arrow kernel over the committed
+    table."""
+    held = f.whole.get("mentions")
+    if held is not None:
+        distinct = held.column("mention").unique()
+        if len(distinct) <= kg.linking.DRIVER_LINK_MAX_MENTIONS:
+            return signature_base(distinct.to_pylist())
+    return signature_base(f.read("mentions").select("mention").distinct())
+
+
+def _signature_delta(f: _Fold):
+    """``linked_cc_sigs``' increment: the signature rows of the batch's
+    never-seen mentions (``signature_base`` against the committed table),
+    taken from the batch's mentions on the driver side of the link bound
+    (``_Fold.batch_arrow``: no job scans the full mentions table, and on
+    the driver none runs at all), by a Spark left-anti join above it.
+    With no never-seen mention the table is re-anchored on the current
+    mentions and nothing is returned, so ``step`` skips the stage and
+    ``linked`` skips too."""
+    if f.driver_tail():
+        mentions = f.batch_arrow("mentions", ["mention"]).column("mention").unique().to_pylist()
+    else:
+        mentions = f.inc("mentions").select("mention").distinct()
+    rows = signature_base(mentions, f.cat, "linked_cc_sigs")
+    if rows is None:
+        f.cat.reanchor("linked_cc_sigs", {"mentions": f.cat.fingerprint("mentions")})
+    return rows
 
 
 def _counts(f: _Fold):
-    """The (mention, tag, cnt) statistic nodes derive from, committed as
-    ``nodes_mtc`` by every call that rebuilds nodes and read back: a
-    ``pyarrow.Table`` on the driver side of the bound (``f.on_driver``), a
-    DataFrame otherwise.  By the stage rule: skipped when it is complete
-    for the current mentions; the batch's counts merged into it when rule 2
-    holds for it (on the driver, the committed counts and the increment's
-    mention rows are read through Arrow and summed in pandas); otherwise
-    counted from all mentions, on the driver side in pandas when the
-    mentions are held whole or small enough to read whole
-    (``_Fold.source``), else in one Spark aggregation (pulled through Arrow
-    on the driver side)."""
-    cat = f.cat
-
-    def rows():
-        if f.incremental("nodes_mtc", ("mentions",)):
-            if f.on_driver:
-                batch = cat.read_arrow("mentions", ["mention", "tag"], files=f.incs["mentions"])
-                return merge_counts_local(cat.read_arrow("nodes_mtc"), batch)
-            return (
-                cat.read("nodes_mtc")
-                .unionByName(mention_tag_counts(f.inc("mentions")))
-                .groupBy("mention", "tag")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        held = f.source("mentions") if f.on_driver else None
-        if held is not None:
-            return merge_counts_local(None, held.select(["mention", "tag"]))
-        counts = mention_tag_counts(f.read("mentions"))
-        return counts.toArrow() if f.on_driver else counts
-
-    counts = cat.run("nodes_mtc", rows, inputs=["mentions"])
-    return cat.read_arrow("nodes_mtc") if f.on_driver else counts
+    """``nodes_mtc``' rows: the (mention, tag, cnt) statistic nodes derive
+    from, a ``pyarrow.Table`` on the driver side of the link bound
+    (``_Fold.driver_tail``), a DataFrame otherwise.  When rule 2 holds for
+    it, the batch's counts merged into the committed ones (on the driver,
+    the committed counts read through Arrow and the batch's mention rows
+    (``_Fold.batch_arrow``) summed in pandas); otherwise counted from all
+    mentions, on the driver side in pandas when the mentions are held
+    whole or small enough to read whole (``_Fold.source``), else in one
+    Spark aggregation (pulled through Arrow on the driver side)."""
+    if f.incremental("nodes_mtc", ("mentions",)):
+        if f.driver_tail():
+            batch = f.batch_arrow("mentions", ["mention", "tag"])
+            return merge_counts_local(f.cat.read_arrow("nodes_mtc"), batch)
+        return (
+            f.cat.read("nodes_mtc")
+            .unionByName(mention_tag_counts(f.inc("mentions")))
+            .groupBy("mention", "tag")
+            .agg(F.sum("cnt").cast("long").alias("cnt"))
+        )
+    held = f.source("mentions") if f.driver_tail() else None
+    if held is not None:
+        return merge_counts_local(None, held.select(["mention", "tag"]))
+    counts = mention_tag_counts(f.read("mentions"))
+    return counts.toArrow() if f.driver_tail() else counts
 
 
 def _nodes(f: _Fold):
-    """nodes from the additive (mention, tag, cnt) statistic (``_counts``):
-    built on the driver as a ``pyarrow.Table`` below the bound, by Spark
-    above it — one nodes path on each side."""
-    counts = _counts(f)
-    if f.on_driver:
-        linked = f.cat.read_arrow("linked").to_pandas()
-        return nodes_from_counts_local(counts.to_pandas(), linked)
-    return build_nodes_from_counts(counts, f.read("linked"))
+    """nodes from the additive (mention, tag, cnt) statistic (``_counts``)
+    and the linked map: built on the driver as a ``pyarrow.Table`` below
+    the link bound, from the tables this call holds or reads through
+    Arrow (``_Fold.arrow``), by Spark above it — one nodes path on each
+    side."""
+    if f.driver_tail():
+        counts, linked = f.arrow("nodes_mtc"), f.arrow("linked")
+        return nodes_from_counts_local(counts.to_pandas(), linked.to_pandas())
+    return build_nodes_from_counts(f.read("nodes_mtc"), f.read("linked"))
 
 
 def _edges(f: _Fold):
     """edges from the triples and the linked map, rebuilt on every call that
-    changes either: on the driver (both read through Arrow, the edges built
-    as a ``pyarrow.Table``) while the triples manifest holds at most
-    ``DRIVER_EDGES_MAX_TRIPLES`` rows, by Spark above — one edges path on
-    each side."""
+    changes either: on the driver (both held or read through Arrow, the
+    edges built as a ``pyarrow.Table``) while the triples manifest holds
+    at most ``DRIVER_EDGES_MAX_TRIPLES`` rows, by Spark above — one edges
+    path on each side."""
     if f.cat.manifest("triples")["rows"] <= DRIVER_EDGES_MAX_TRIPLES:
-        triples = f.cat.read_arrow("triples", ["subj", "pred", "obj", "doc_id"])
-        return edges_local(triples, f.cat.read_arrow("linked"))
+        triples = f.arrow("triples", ["subj", "pred", "obj", "doc_id"])
+        return edges_local(triples, f.arrow("linked"))
     return build_edges(f.read("triples"), f.read("linked"))
 
 
@@ -347,8 +312,11 @@ STAGES = (
     _per_document(
         "triples", "extract", lambda f, d: triples_table(d), lambda f, t: triples_local(t),
     ),
-    Stage("linked", ("mentions",), _linked, own_commit=True),
-    Stage("nodes", ("mentions", "linked"), _nodes, partition_by=("kind",)),
+    Stage("linked_cc_sigs", ("mentions",), _signatures, _signature_delta),
+    # looked up at call time: perfbench/trace.py spans the linked map by this name
+    Stage("linked", ("linked_cc_sigs",), lambda f: _run_linked_stage(f)),
+    Stage("nodes_mtc", ("mentions",), _counts),
+    Stage("nodes", ("nodes_mtc", "linked"), _nodes, partition_by=("kind",)),
     Stage("edges", ("triples", "linked"), _edges, partition_by=("pred",)),
     _per_document(
         "keyphrases", "documents",
@@ -359,7 +327,9 @@ STAGES = (
         lambda f, d: passthrough_docs(d), lambda f, t: passthrough_local(t),
     ),
 )
-_NAMES = tuple(st.name for st in STAGES)
+# the nine published tables: every stage but the signature table and the
+# counts, which only linked and nodes read
+_NAMES = tuple(st.name for st in STAGES if st.name not in ("linked_cc_sigs", "nodes_mtc"))
 
 
 class _Fold:
@@ -381,9 +351,8 @@ class _Fold:
         self.inc_tables: dict[str, DataFrame] = {}
         self.tables: dict[str, DataFrame] = {}
         self.timings: dict[str, float] = {}
-        # which side of the bound the vocabulary-sized tail runs on, decided
-        # once per call: for an append, here, from the pre-batch signature
-        # table; otherwise by the linked stage, from the refreshed one
+        # which side of the link bound the vocabulary-sized tail runs on:
+        # for an append, decided here, from the pre-batch signature table
         self.on_driver = links_on_driver(cat, "linked_cc_sigs") if batch is not None else None
 
     def read(self, stage: str) -> DataFrame:
@@ -400,6 +369,30 @@ class _Fold:
                 return None
             self.whole[stage] = self.cat.read_arrow(stage)
         return self.whole[stage]
+
+    def arrow(self, stage: str, columns=None):
+        """``stage``'s whole committed table on the driver: the one this call
+        built there, else read through Arrow."""
+        if stage not in self.whole:
+            return self.cat.read_arrow(stage, columns)
+        return self.whole[stage].select(columns) if columns else self.whole[stage]
+
+    def batch_arrow(self, stage: str, columns):
+        """The rows ``stage`` appended in this call, on the driver: the ones
+        held there, else read through Arrow from the appended files."""
+        if stage in self.held:
+            return self.held[stage].select(columns)
+        return self.cat.read_arrow(stage, columns, files=self.incs[stage])
+
+    def driver_tail(self) -> bool:
+        """Whether the vocabulary-sized tail (signature delta, linked,
+        ``nodes_mtc``, nodes) runs on the driver, decided once per call:
+        an append decided it before the batch (so the driver may hold up
+        to the bound plus one batch's new mentions); a fresh run or resume
+        decides it on first use, from the refreshed signature table."""
+        if self.on_driver is None:
+            self.on_driver = links_on_driver(self.cat, "linked_cc_sigs")
+        return self.on_driver
 
     def inc(self, stage: str) -> DataFrame:
         """Reader of the rows ``stage`` appended in this call, opened on first
@@ -418,29 +411,33 @@ class _Fold:
         )
 
     def step(self, st: Stage) -> None:
-        """Run one stage by the rule; its timing covers the commit and a
-        driver increment's compute."""
+        """Run one stage by the rule; its timing covers an increment's
+        compute and the commit.  A rebuild computed on the driver (a
+        ``pyarrow.Table``) is held whole (``whole``) for the stages after
+        it."""
         cat, name = self.cat, st.name
         kw = {
             "inputs": st.inputs, "partition_by": st.partition_by,
             "extra_inputs": self.extra.get(name), "meta": self.meta.get(name),
         }
+        t0 = time.perf_counter()
         rows = None
         if st.increment and self.incremental(name, st.inputs):
             if not cat.is_complete(name, st.inputs, kw["extra_inputs"]):
                 rows = st.increment(self)
-        t0 = time.perf_counter()
-        if callable(rows):
-            rows = rows()
         if rows is not None:
             self.incs[name] = cat.append(name, rows, **kw)
             if not isinstance(rows, DataFrame):
                 self.held[name] = rows
             name += "+append"
-        elif st.own_commit:
-            st.build(self)
         else:
-            self.tables[name] = cat.run(name, lambda: st.build(self), **kw)
+            def build():
+                table = st.build(self)
+                if not isinstance(table, DataFrame):
+                    self.whole[st.name] = table
+                return table
+
+            self.tables[name] = cat.run(name, build, **kw)
         self.timings[name] = round(time.perf_counter() - t0, 3)
 
     def check(self) -> int:
@@ -500,9 +497,9 @@ class _LazyTables(Mapping):
         self._cache: dict[str, DataFrame] = dict(seed or {})
 
     def __getitem__(self, key: str) -> DataFrame:
+        if key not in self._stages:
+            raise KeyError(key)
         if key not in self._cache:
-            if key not in self._stages:
-                raise KeyError(key)
             self._cache[key] = self._cat.read(key)
         return self._cache[key]
 
@@ -518,11 +515,12 @@ class PipelineResult:
     """``tables`` maps each of the nine published stages to a reader of its
     committed checkpoint: the readers opened during the run, and for the
     stages the run appended to, a reader opened on first access (a file
-    listing, no job) of whatever that stage has committed then.
-    ``executed`` lists what the call committed, in commit order: ``<stage>``
-    for a rebuild, ``<stage>+append`` for an increment, and the commits a
-    stage makes before its own (the signature table and CC rounds before
-    ``linked``, ``nodes_mtc`` before ``nodes``) where they happened."""
+    listing, no job) of whatever that stage has committed then; the two
+    unpublished stages, ``linked_cc_sigs`` and ``nodes_mtc``, are not in
+    it.  ``executed`` lists what the call committed, in commit order, the
+    two unpublished stages included: ``<stage>`` for a rebuild,
+    ``<stage>+append`` for an increment, and the distributed linker's CC
+    rounds (``linked_cc_iter*``, ``linked_cc_final``) before ``linked``."""
 
     tables: Mapping[str, DataFrame]
     catalog: StageCatalog
@@ -607,28 +605,27 @@ DRIVER_BATCH_MAX_DOCS = INCREMENT_DOCS_PER_PARTITION
 # The edges stage builds on the driver (``kg.graph.edges_local``) while the
 # triples manifest holds at most this many rows (``_edges``).  Measured with
 # ``tools/append_profile.py --seed 3 --edges-tiles 1 40 --bound 0
-# 1000000000000 --ops 3`` on a 4-core VM (local[4], 1 GB driver heap, as
-# perfbench runs): the edges stage alone, rebuilt from an ``append_growth``
-# catalog (base and two appends) whose triples are tiled K times (doc_ids
-# suffixed per copy, one file per core), the two sides interleaved, median
-# of 3 rebuilds after one warm-up.  CPU s of the process tree / wall s /
-# the Python driver's peak resident MB (about 200 before each build; a
-# Spark row's peak is what the driver build before it left, returned
-# within the op).  The 3.3M row is from an earlier run with ``--edges-tiles
-# 1 40 160`` while sessions pinned the malloc and Arrow pools to keep freed
-# memory, so its driver peak is not comparable to the rows above it:
+# 1000000000000 --ops 3``, and the 3.3M row with ``--edges-tiles 160``, on
+# a 4-core VM (local[4], 1 GB driver heap, as perfbench runs): the edges
+# stage alone, rebuilt from an ``append_growth`` catalog (base and two
+# appends) whose triples are tiled K times (doc_ids suffixed per copy, one
+# file per core), the two sides interleaved, median of 3 rebuilds after
+# one warm-up.  CPU s of the process tree / wall s / the Python driver's
+# peak resident MB (about 200 before each build; a Spark row's peak is
+# what the driver build before it left, returned within the op):
 #      triples      edges       spark                driver
 #       20,446     20,101    2.77 /  0.73 /   217    0.60 / 0.08 /  217
 #      817,840    804,040    9.54 /  2.73 /   594    1.85 / 1.05 /  960
-#    3,271,360  3,216,160   38.46 / 10.99 / 1454    6.71 / 4.33 / 2307
+#    3,271,360  3,216,160   33.59 /  9.33 /   318    7.92 / 4.66 / 2173
 # Both sides committed the same edges (order-insensitive digest) at every
-# size.  The driver uses 4.6-5.7x less CPU and less wall at every size, so
+# size.  The driver uses 4.2-5.7x less CPU and less wall at every size, so
 # the bound is set by its memory, which Spark neither manages nor spills:
 # the driver build rose 720-780 MB over its start at 817,840 triples,
-# about 0.9 KB per triple, some 0.9 GB over the baseline at the bound, more
-# than the 0.55 GB ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` allows.  The
-# bound stays at 1M: it holds the driver near 1.1 GB resident in all, and
-# ``append_growth`` (about 20k triples) sits far below it.
+# about 0.9 KB per triple (1.9-2.2 GB at 3.3M, about 0.6 KB), some 0.9 GB
+# over the baseline at the bound, more than the 0.55 GB
+# ``kg.linking.DRIVER_LINK_MAX_MENTIONS`` allows.  The bound stays at 1M:
+# it holds the driver near 1.1 GB resident in all, and ``append_growth``
+# (about 20k triples) sits far below it.
 DRIVER_EDGES_MAX_TRIPLES = 1_000_000
 
 

@@ -122,32 +122,33 @@ def test_noop_reappend_never_touches_kernel(
 
 
 def test_a_non_delta_refresh_rebuilds_the_table(spark, tmp_path, kernel_spy):
-    """Without ``increment`` a refresh signs the whole mention list and
-    writes it over the table, never appends to it: with a committed row
-    the list lacks (stale) and with a plain superset alike.  A DataFrame of
-    the same mentions gives the same rows; only the delta mode signs just
-    the never-seen mentions."""
+    """Without a catalog ``signature_base`` signs the whole mention list,
+    and the table written from those rows holds exactly the list: with a
+    committed row the list lacks (stale) and with a plain superset alike.
+    A DataFrame of the same mentions gives the same rows.  Only the delta
+    against a committed table signs just the never-seen mentions, and
+    gives None when there are none; nothing is committed either way."""
     from kg.catalog import StageCatalog
 
     cat = StageCatalog(spark, str(tmp_path / "sigs"))
-    L.signature_base(["北京", "上海", "广州"], cat, stage_name="sigs", anchor={"m": "a"})
-    assert cat.executed == ["sigs"]
-    for current, anchor in ((["北京", "上海", "南京"], "b"), (["北京", "上海", "南京", "深圳"], "c")):
+    cat.write("sigs", L.signature_base(["北京", "上海", "广州"]))
+    for current in (["北京", "上海", "南京"], ["北京", "上海", "南京", "深圳"]):
         del kernel_spy[:]
-        table = L.signature_base(current, cat, stage_name="sigs", anchor={"m": anchor})
+        rows = L.signature_base(current)
         assert kernel_spy == [len(current)]  # the whole list, not only the new mentions
-        assert cat.executed[-1] == "sigs"
-        assert cat.manifest("sigs")["inputs"]["m"] == anchor
+        assert sorted(rows.column("mention").to_pylist()) == sorted(current)
+        cat.write("sigs", rows)
         assert cat.manifest("sigs")["rows"] == len(current)
         df = spark.createDataFrame([(m,) for m in current], "mention string")
-        on_spark = L.signature_base(df, StageCatalog(spark, str(tmp_path / anchor)), stage_name="sigs")
-        assert _rows(table) == _rows(on_spark)
-    assert "sigs+append" not in cat.executed
+        assert _rows(cat.read("sigs")) == _rows(L.signature_base(df))
     del kernel_spy[:]
-    L.signature_base(["深圳", "杭州"], cat, stage_name="sigs", anchor={"m": "d"}, increment=True)
+    delta = L.signature_base(["深圳", "杭州"], cat, stage_name="sigs")
     assert kernel_spy == [1]
-    assert cat.executed[-1] == "sigs+append"
-    assert cat.manifest("sigs")["rows"] == 5
+    assert delta.column("mention").to_pylist() == ["杭州"]
+    df = spark.createDataFrame([("深圳",), ("杭州",)], "mention string")
+    assert L.signature_base(df, cat, stage_name="sigs").equals(delta)
+    assert L.signature_base(["北京", "深圳"], cat, stage_name="sigs") is None
+    assert cat.executed == [] and cat.manifest("sigs")["rows"] == 4
 
 
 def test_held_mentions_are_signed_on_the_driver_only_below_the_link_bound(

@@ -78,7 +78,7 @@ EDGE_TEXTS = [
 def test_driver_linker_equals_distributed(spark, tmp_path, monkeypatch, reference_link):
     df = spark.createDataFrame([(t,) for t in EDGE_TEXTS], "mention string")
     cat = StageCatalog(spark, str(tmp_path / "edge"))
-    L.signature_base(df, catalog=cat, stage_name="sigs")
+    cat.run("sigs", lambda: L.signature_base(df))
     assert L.links_on_driver(cat, "sigs")
     cat.write("driver", L.link_committed(cat, "sigs", True, stage_prefix="cc"))
     driver = _map(cat.read("driver"))
@@ -213,18 +213,19 @@ def test_append_below_the_bound_runs_no_job_in_linked_or_nodes(
 
 @pytest.fixture()
 def sig_spy(monkeypatch):
-    """Record each signature refresh's mode, the mentions signed (by the
-    Spark kernel or on the driver), and which stages the linked stage
-    reads whole."""
+    """Record each signature refresh's mode (True for a delta against the
+    committed table), the mentions signed (by the Spark kernel or on the
+    driver), and which stages the signature and linked stages read
+    whole."""
     calls = {"increment": [], "kernel_rows": [], "reads": []}
     in_linked = []
     real_base, real_kernel = P.signature_base, L.mention_shingle_buckets
     real_rows = L.signature_rows
-    real_linked, real_read = P._run_linked_stage, StageCatalog.read
+    real_step, real_read = P._Fold.step, StageCatalog.read
 
-    def base(*a, **kw):
-        calls["increment"].append(kw.get("increment", False))
-        return real_base(*a, **kw)
+    def base(distinct, catalog=None, stage_name=None):
+        calls["increment"].append(catalog is not None)
+        return real_base(distinct, catalog, stage_name)
 
     def kernel(df):
         calls["kernel_rows"].append(df.count())
@@ -234,10 +235,12 @@ def sig_spy(monkeypatch):
         calls["kernel_rows"].append(len(mentions))
         return real_rows(mentions)
 
-    def linked(*a, **kw):
+    def step(fold, st):
+        if st.name not in ("linked_cc_sigs", "linked"):
+            return real_step(fold, st)
         in_linked.append(True)
         try:
-            return real_linked(*a, **kw)
+            return real_step(fold, st)
         finally:
             in_linked.pop()
 
@@ -249,7 +252,7 @@ def sig_spy(monkeypatch):
     monkeypatch.setattr(P, "signature_base", base)
     monkeypatch.setattr(L, "mention_shingle_buckets", kernel)
     monkeypatch.setattr(L, "signature_rows", rows)
-    monkeypatch.setattr(P, "_run_linked_stage", linked)
+    monkeypatch.setattr(P._Fold, "step", step)
     monkeypatch.setattr(StageCatalog, "read", read)
     return calls
 

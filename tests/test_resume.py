@@ -4,7 +4,7 @@ stages with unchanged inputs are NOT recomputed, final tables identical."""
 import os
 import shutil
 
-from kg.pipeline import run_pipeline
+from kg.pipeline import _NAMES, STAGES, run_pipeline
 from kg.synth import docs_to_df, synth_docs
 
 from conftest import BATCH_BOUND, EDGES_BOUND, LINK_BOUND, at_both_bounds
@@ -14,7 +14,9 @@ ALL_STAGES = [
     "extract",
     "mentions",
     "triples",
+    "linked_cc_sigs",
     "linked",
+    "nodes_mtc",
     "nodes",
     "edges",
     "keyphrases",
@@ -22,15 +24,27 @@ ALL_STAGES = [
 ]
 
 
+def test_every_stage_input_is_an_earlier_stage():
+    """``_fold`` runs ``STAGES`` in order, so each stage's inputs come
+    before it; the published tables are the stages but the signature
+    table and the counts, which only linked and nodes read."""
+    seen = set()
+    for st in STAGES:
+        assert set(st.inputs) <= seen, st.name
+        seen.add(st.name)
+    assert [st.name for st in STAGES] == ALL_STAGES
+    assert list(_NAMES) == [s for s in ALL_STAGES if s not in ("linked_cc_sigs", "nodes_mtc")]
+    assert len(_NAMES) == 9
+
+
 def _table_rows(df):
     return sorted(map(str, df.collect()))
 
 
 def _main_stages(executed):
-    """Drop the commits a stage makes before its own through the same
-    catalog: the signature table and CC rounds (linked_cc_*) of linked, and
-    the counts (nodes_mtc) of nodes."""
-    return [s for s in executed if not s.startswith("linked_cc") and s != "nodes_mtc"]
+    """Drop the CC round commits (linked_cc_iter*, linked_cc_final) the
+    distributed linker makes through the same catalog."""
+    return [s for s in executed if not s.startswith(("linked_cc_iter", "linked_cc_final"))]
 
 
 def test_resume_skips_completed_and_recomputes_suffix(

@@ -128,7 +128,7 @@ def tail(cat: StageCatalog, texts: list[str], seed: int = 5) -> None:
     new = set(rng.sample(texts, max(1, len(texts) // 100)))
     base = [t for t in texts if t not in new]
     df = cat.spark.createDataFrame([(m,) for m in base], "mention string")
-    L.signature_base(df, catalog=cat, stage_name="sigs", anchor={"mentions": "pre"})
+    cat.write("sigs", L.signature_base(df))
     cat.run("linked", lambda: L.link_committed(cat, "sigs", True, "cc"), inputs=["sigs"])
     tags = ("nr", "ns", "nt")
     counts = [(m, t, rng.randint(1, 50)) for m in base for t in rng.sample(tags, rng.randint(1, 2))]
@@ -152,9 +152,8 @@ def tail(cat: StageCatalog, texts: list[str], seed: int = 5) -> None:
     print(f"tail n={len(texts)}: base {len(texts) - len(new)}, new {len(new)}, "
           f"batch rows {rows.num_rows}, driver before {driver_peak_mb():.0f} MB", flush=True)
     old_map = step("old map", lambda: linked_map(cat))
-    step("signature delta", lambda: L.signature_base(
-        sorted(set(batch)), catalog=cat, stage_name="sigs", anchor={"mentions": "post"},
-        increment=True,
+    step("signature delta", lambda: cat.append(
+        "sigs", L.signature_base(sorted(set(batch)), catalog=cat, stage_name="sigs")
     ))
     step("link", lambda: cat.write(
         "linked", L.link_committed(cat, "sigs", True, "cc"), inputs=["sigs"]
@@ -191,7 +190,7 @@ def main(n: int, corpus: str, path: str, rounds: int) -> None:
         if path == "tail":
             return tail(cat, texts)
         df = spark.createDataFrame([(m,) for m in texts], "mention string")
-        L.signature_base(df, catalog=cat, stage_name="sigs")
+        cat.write("sigs", L.signature_base(df))
         per_mention, largest = bucket_load(cat, "sigs")
         runs: list[tuple[float, float, float, float]] = []
         digest = ""
